@@ -15,12 +15,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: merged wide feature table over documents at sf0.001 —
-    scan → JVM extractor stages → composite-key merge (the Spark recast
-    of pliers Graph.run + merge_results)."""
+    one scan → the Arrow page-feature stage keyed by doc_id (the Spark
+    recast of pliers Graph.run + merge_results)."""
     import pliers_spark.queries  # noqa: F401 (registers queries)
-    from pliers_spark.flagship import flagship_features
+    from pliers_spark.pages_pipeline import extract_document_features
+    from pliers_spark.session import load_table
 
-    return flagship_features(spark, "/root/testdata/sf0.001")
+    # spread: the parquet is sub-MB → 1 split; fan the scan out to the
+    # cores before the CPU-heavy extraction stage
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents", spread=True)
+    return extract_document_features(docs)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

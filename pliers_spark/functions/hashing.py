@@ -86,41 +86,6 @@ def minhash_permute_sql(h30_expr: str, a: int, b: int) -> str:
     return f"(({a} * {h30_expr} + {b}) % {MINHASH_PRIME})"
 
 
-def minhash_signature_array(shingle_col: Column, num_hashes: int) -> Column:
-    """Per-ROW MinHash signature as one ``array<long>`` column, for
-    pipelines that must stay shuffle-free (e.g. an inline feature
-    projection). One ``aggregate`` pass over the shingle array: each
-    shingle is md5-hashed ONCE, then folded into all K family minima
-    via ``zip_with`` against a literal parameter array. Returning a
-    single array (instead of K top-level columns) matters: interpreted
-    higher-order expressions get no common-subexpression elimination,
-    so K separate columns would re-run the whole fold K times.
-    Prefer ``operators.dedup.minhash_signatures`` (explode + partial
-    agg, whole-stage codegen) when a 1-row-per-doc shuffle is fine."""
-    params = minhash_params(num_hashes)
-    prm = F.array(*[
-        F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params
-    ])
-    sentinel = F.lit(1 << 62).cast("long")
-    init = F.array_repeat(F.lit(None).cast("long"), num_hashes)
-    # md5 runs in ITS OWN transform pass so the fold's lambda variable
-    # ``h`` is an already-computed value — embedding md5 in the merge
-    # body would re-hash the shingle once per family (K× the work).
-    base = F.transform(shingle_col, lambda s: md5_int(s).bitwiseAND(F.lit(MINHASH_MASK30)))
-    return F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            prm,
-            lambda m, pr: F.least(
-                F.coalesce(m, sentinel),
-                F.pmod(h * pr["a"] + pr["b"], F.lit(MINHASH_PRIME)),
-            ),
-        ),
-    )
-
-
 def band_key(signature_cols: list[Column], band: int, rows_per_band: int) -> Column:
     """LSH band key: hash of the band's signature slice. Documents
     agreeing on any full band land in the same candidate bucket."""

@@ -76,8 +76,9 @@ def token_membership_count(col: Column | str, words: list[str]) -> Column:
     ``size(filter(tokenize(c), isin(words)))`` but ~50x faster: higher-order
     array functions are *interpreted* per element (no codegen —
     ArrayFilter.eval walks a boxed expression tree), while regexp_count
-    stays inside whole-stage codegen. This is the hot path of the flagship
-    extraction stage at 100 TB."""
+    stays inside whole-stage codegen. It serves the per-query extractors
+    and the JVM reference of the page-feature stage; the flagships run
+    the Arrow stage in pages_pipeline instead."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(F.trim(c), F.lit(_member_pattern(words)))
 

@@ -1599,17 +1599,20 @@ def q_snapshot_asof(spark, sf_dir):
     only snapshot 2's files are scanned. The oracle is the pure
     relational meaning of each read, so a stale manifest, a leaked
     file, or a wrong delta walk all hash-mismatch. The table lives
-    under spark-warehouse/ and is rebuilt idempotently per run
+    under the session's ``spark.sql.warehouse.dir`` and is rebuilt
+    idempotently per run
     (sources/snapshots.py; reference anchor: pliers has no versioned
     store — this is the engine-level Iceberg contract the 10^12-page
     crawl table needs)."""
     import os
     import shutil
+    from urllib.parse import urlparse
 
     from pliers_spark.sources.snapshots import SnapshotTable
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join("/root/repo/spark-warehouse", f"_asof_demo_{tag}")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    root = os.path.join(warehouse, f"_asof_demo_{tag}")
     shutil.rmtree(root, ignore_errors=True)
     t = SnapshotTable(root)
     d = _docs(spark, sf_dir).select("doc_id", "n_chars")

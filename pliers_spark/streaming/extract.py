@@ -1,10 +1,10 @@
 """Streaming feature extraction over incrementally-arriving page files.
 
 The north-star pipeline's extract stage (``pages_pipeline.
-extract_page_features``) is narrow maps only — projections, no shuffle
-— so the SAME stage runs unchanged under Structured Streaming: new
-crawl-snapshot parquet files landing in the input directory are picked
-up by the file source, pushed through the identical Column expressions,
+extract_page_features_arrow``) is one narrow ``mapInPandas`` stage — no
+shuffle — so the SAME stage runs unchanged under Structured Streaming:
+new crawl-snapshot parquet files landing in the input directory are
+picked up by the file source, pushed through the identical Arrow stage,
 and appended to the sink. Batch ≡ streaming output by construction
 (pinned in tests/test_streaming.py); the file-source checkpoint gives
 exactly-once file accounting, which is the streaming analog of the
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pages_pipeline import extract_page_features
+from ..pages_pipeline import extract_page_features_arrow
 
 
 def streaming_page_features(
@@ -37,4 +37,4 @@ def streaming_page_features(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    return extract_page_features(stream)
+    return extract_page_features_arrow(stream)

@@ -5,11 +5,26 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _hypothesis_home(tmp_path_factory):
+    """Hypothesis keeps its example database and unicode cache under a
+    tmp home instead of ./.hypothesis in the checkout."""
+    try:
+        from hypothesis.configuration import set_hypothesis_home_dir
+    except ImportError:
+        return
+    set_hypothesis_home_dir(str(tmp_path_factory.mktemp("hypothesis")))
+
+
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from pliers_spark.session import get_spark
 
-    s = get_spark("pliers-spark-tests", cpus=4, shuffle_partitions=4)
+    # a tmp warehouse: tables a query roots under spark.sql.warehouse.dir
+    # never land in the checkout
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = get_spark("pliers-spark-tests", cpus=4, shuffle_partitions=4,
+                  extra_conf={"spark.sql.warehouse.dir": warehouse})
     yield s
     s.stop()
 

@@ -302,28 +302,6 @@ def test_minhash_lsh_bucket_cap_bounds_degenerate_bands(spark):
     assert uncapped >= 50 * 49 / 2
 
 
-def test_minhash_array_variant_equals_grouped(spark, docs):
-    """The per-row array formulation (hashing.minhash_signature_array,
-    used by the inline pages feature projection) is bit-equal to the
-    explode+partial-agg formulation (dedup.minhash_signatures) — same
-    base md5, same Carter-Wegman parameters, different plan shape."""
-    from pliers_spark.functions.hashing import minhash_signature_array, shingles
-    from pliers_spark.functions import text as T
-    import pyspark.sql.functions as F
-
-    K = 8
-    arr = docs.select(
-        "doc_id",
-        minhash_signature_array(shingles(T.tokenize(F.col("text")), 2), K).alias("sig"),
-    )
-    a = {r["doc_id"]: list(r["sig"]) for r in arr.collect()}
-    g = {
-        r["doc_id"]: [r[f"mh_{k}"] for k in range(K)]
-        for r in D.minhash_signatures(docs, "text", "doc_id", K, 2).collect()
-    }
-    assert a == g
-
-
 def test_repetition_signals_golden(spark):
     from pliers_spark.operators.quality import repetition_signals
 

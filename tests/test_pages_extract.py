@@ -1,13 +1,17 @@
 """Differential test: the Arrow (mapInPandas) extraction stage must be
 value-identical to the JVM-expression stage — same schema, same rows,
-floats allclose. The flagship pipeline picks between the two on a flag
-(pages_pipeline.pages_flagship(arrow_extract=...)), so they are pinned
-together here on the synthetic pages table.
+floats allclose. The Arrow stage is the engine's only implementation of
+the six page features (both flagships run it); the JVM stage is the
+reference it is pinned to here, on the synthetic pages table, the
+sf0.001/sf0.01 documents tables and adversarial text.
 """
 
 import math
 
+import pytest
+
 from pliers_spark.pages_pipeline import (
+    extract_document_features,
     extract_page_features,
     extract_page_features_arrow,
 )
@@ -133,27 +137,31 @@ def test_windowed_features_skew_safe_path_equal(spark, tmp_path):
     assert a == b and len(a) > 100
 
 
+def _write_hot_pages(spark, path):
+    """One hot url (200 snapshots) and five cold urls (3 snapshots each)."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [("https://hot.example.com/", base + dt.timedelta(hours=9 * k),
+             f"snapshot {k} of the hot page with fast slow words", "en")
+            for k in range(200)]
+    rows += [(f"https://cold{u}.example.com/", base + dt.timedelta(days=40 * k),
+              f"cold page {u} version {k}", "en")
+             for u in range(5) for k in range(3)]
+    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string, lang string")
+    df.write.parquet(path)
+    return df
+
+
 def test_flagship_auto_skew_routing_bit_equal(spark, tmp_path):
     """A hot-domain corpus (one url above the census threshold) must
     auto-route through the skew-split window operators AND produce a
     bit-identical feature table to the plain path."""
-    import datetime as dt
-
     from pliers_spark.operators.asof import detect_heavy_hitters
     from pliers_spark.pages_pipeline import pages_flagship
 
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    for k in range(200):  # hot url: 200 snapshots
-        rows.append(("https://hot.example.com/", base + dt.timedelta(hours=9 * k),
-                     f"snapshot {k} of the hot page with fast slow words", "en"))
-    for u in range(5):    # cold urls: 3 snapshots each
-        for k in range(3):
-            rows.append((f"https://cold{u}.example.com/", base + dt.timedelta(days=40 * k),
-                         f"cold page {u} version {k}", "en"))
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string, lang string")
     p = str(tmp_path / "hot_pages.parquet")
-    df.write.parquet(p)
+    df = _write_hot_pages(spark, p)
 
     hh = detect_heavy_hitters(df.select("url"), ["url"], threshold_rows=50)
     assert [r.url for r in hh.collect()] == ["https://hot.example.com/"]
@@ -216,6 +224,16 @@ def test_canonical_url_malformed_passthrough(spark):
         assert got[i] == raw, (raw, got[i])
 
 
+ADVERSARIAL_TEXTS = [
+    None, "", "The the cat", "foo\xa0bar", " x ", "\t\n",
+    "word " * 127 + "the",          # stopword_ratio = 1/128 half-tie
+    "Dr. Smith AND dr. smith", "a\x0bb c", "  lead and trail  ",
+    "the and of in to",             # all stopwords
+    # \x1c-\x1f split a Python str but not a Java \s token
+    "the\x1ccat\x1dsat \x1eon\x1f the mat", "\x1c\x1d", " \u2003The\u2003cat ",
+]
+
+
 def test_arrow_extract_matches_jvm_on_adversarial_text(spark):
     """r5 review fixes pinned: the Arrow stage must equal the JVM stage
     on the inputs the synthetic corpus never exercises — null text
@@ -225,14 +243,8 @@ def test_arrow_extract_matches_jvm_on_adversarial_text(spark):
     banker's rounding), and vertical-tab/edge whitespace."""
     import datetime as dt
 
-    texts = [
-        None, "", "The the cat", "foo\xa0bar", " x ", "\t\n",
-        "word " * 127 + "the",          # stopword_ratio = 1/128 half-tie
-        "Dr. Smith AND dr. smith", "a\x0bb c", "  lead and trail  ",
-        "the and of in to",             # all stopwords
-    ]
     rows = [(f"u{i:02d}", dt.datetime(2024, 1, 1), "en", t)
-            for i, t in enumerate(texts)]
+            for i, t in enumerate(ADVERSARIAL_TEXTS)]
     df = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, lang string, text string"
     )
@@ -277,3 +289,107 @@ def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
         tuple(str(r[c]) for c in sorted(df_.columns)) for r in df_.collect()
     )
     assert k(plain) == k(safe)
+
+
+# ---------------------------------------------------------------------------
+# the documents flagship (entry()): the Arrow stage keyed by doc_id
+
+
+def _jvm_document_features(docs):
+    """The JVM reference composition of the documents flagship: the six
+    per-feature ``functions/text`` expressions over one scan."""
+    import pyspark.sql.functions as F
+
+    from pliers_spark.functions import text as T
+
+    return docs.select(
+        "doc_id",
+        "lang",
+        T.text_length("text").cast("long").alias("text_length"),
+        T.token_count("text").cast("long").alias("n_tokens"),
+        T.num_unique_words("text").cast("long").alias("n_unique"),
+        F.round(T.stopword_ratio("text"), 6).alias("stopword_ratio"),
+        T.quality_score("text").alias("quality"),
+        T.langid_best("text").alias("lang_pred"),
+    )
+
+
+def _assert_documents_equal(docs):
+    """Same schema; ints and strings exact, doubles bit-equal."""
+    want, got = _jvm_document_features(docs), extract_document_features(docs)
+    assert got.schema == want.schema
+
+    def bits(df):
+        return sorted(
+            (tuple(v.hex() if isinstance(v, float) else v for v in r) for r in df.collect()),
+            key=repr,
+        )
+
+    w, g = bits(want), bits(got)
+    assert len(w) == docs.count() > 0
+    assert g == w, [(a, b) for a, b in zip(g, w) if a != b][:5]
+
+
+def test_document_features_match_jvm_on_adversarial_text(spark):
+    docs = spark.createDataFrame(
+        [(i, t, "en") for i, t in enumerate(ADVERSARIAL_TEXTS)],
+        "doc_id long, text string, lang string",
+    )
+    _assert_documents_equal(docs)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_document_features_match_jvm_on_sf_documents(spark, sf):
+    from pliers_spark.session import load_table
+
+    _assert_documents_equal(load_table(spark, f"/root/testdata/{sf}", "documents"))
+
+
+# ---------------------------------------------------------------------------
+# tools/submit_job.py --checkpoint: checkpointed extraction, same back half
+
+
+def test_submit_job_checkpoint_equals_flagship(spark, tmp_path, monkeypatch):
+    """The --checkpoint composition equals pages_flagship row for row on a
+    hot-url table, and runs the same back half: the census engages the
+    split path (asof_join_split) and the leakage gate audits the plan."""
+    import functools
+    import os
+
+    import pliers_spark.pages_pipeline as PP
+    from pliers_spark.operators import asof as asof_mod
+    from pliers_spark.plans import leakage
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import submit_job
+
+    p = str(tmp_path / "pages")
+    _write_hot_pages(spark, p)
+
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows_of(PP.pages_flagship(spark, p, heavy_hitter_threshold=50))
+
+    calls = []
+
+    def spy(name, fn):
+        def wrapped(*a, **k):
+            calls.append(name)
+            return fn(*a, **k)
+        return wrapped
+
+    # submit_job has no threshold option: lower the back half's default so
+    # the 200-snapshot url counts as hot
+    monkeypatch.setattr(PP, "asof_feature_table", functools.partial(
+        PP.asof_feature_table, heavy_hitter_threshold=50))
+    for mod, name in [(asof_mod, "detect_heavy_hitters"), (asof_mod, "asof_join_split"),
+                      (leakage, "assert_leakage_free")]:
+        monkeypatch.setattr(mod, name, spy(name, getattr(mod, name)))
+
+    args = submit_job.parse_args(
+        ["--input", p, "--output", str(tmp_path / "features"),
+         "--checkpoint", "--num-buckets", "4"])
+    got = submit_job.checkpointed_flagship(spark, p, args)
+    assert calls == ["detect_heavy_hitters", "assert_leakage_free", "asof_join_split"]
+    assert rows_of(got) == want and len(want) > 0

@@ -8,7 +8,11 @@ windowed stages.
 
 import pyspark.sql.functions as F
 
-from pliers_spark.pages_pipeline import extract_page_features, pages_flagship, windowed_page_features
+from pliers_spark.pages_pipeline import (
+    extract_page_features_arrow,
+    pages_flagship,
+    windowed_page_features,
+)
 
 
 def plan_of(df) -> str:
@@ -26,13 +30,15 @@ def formatted(df) -> str:
 
 
 def test_html_column_pruned(spark, pages_path):
-    """ReadSchema of the flagship scan must exclude the html binary."""
+    """ReadSchema of the flagship scan must exclude the html binary, and
+    the plain flagship runs the Arrow extraction stage exactly once."""
     out = pages_flagship(spark, pages_path)
     plan = formatted(out)
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans, plan
     for line in scans:
         assert "html" not in line, line
+    assert plan_of(out).count("MapInPandas") == 1, plan_of(out)
 
 
 def test_filter_pushed_to_scan(spark, pages):
@@ -42,12 +48,12 @@ def test_filter_pushed_to_scan(spark, pages):
 
 
 def test_extraction_is_shuffle_free(spark, pages):
-    plan = plan_of(extract_page_features(pages))
-    assert "Exchange" not in plan  # narrow maps only
+    plan = plan_of(extract_page_features_arrow(pages))
+    assert "Exchange" not in plan  # one narrow mapInPandas stage
 
 
 def test_windowed_stage_single_shuffle(spark, pages):
-    feats = windowed_page_features(extract_page_features(pages))
+    feats = windowed_page_features(extract_page_features_arrow(pages))
     plan = plan_of(feats)
     # sessionize + two lag windows share partitioning → exactly one
     # hashpartitioning exchange on url
@@ -629,22 +635,21 @@ def test_round3_queries_plan_shapes(spark):
 
 def test_flagship_paths_scale_lint_clean(spark, pages_path):
     """VERDICT r4 item 8: the scale linter sweeps registered queries;
-    the north-rule path (pages flagship + the sf-dir flagship entry)
+    the north-rule path (pages flagship + the documents flagship entry)
     must carry the same structural guarantee — no single-task operator
     over non-contracted input anywhere in either plan tree."""
-    from pliers_spark.flagship import flagship_features
+    import __spark_entry__ as E
     from pliers_spark.plans.scale_lint import assert_scale_safe
 
     assert_scale_safe(pages_flagship(spark, pages_path))
-    assert_scale_safe(flagship_features(spark, "/root/testdata/sf0.001"))
+    assert_scale_safe(E.entry(spark))
 
 
 def test_incremental_and_windowed_paths_scale_lint_clean(spark, pages):
     """The checkpoint/resume page path and the skew-safe windowed stage
     are flagship variants a cluster run composes — lint them too."""
-    from pliers_spark.pages_pipeline import extract_page_features, windowed_page_features
     from pliers_spark.plans.scale_lint import assert_scale_safe
 
-    feats = extract_page_features(pages)
+    feats = extract_page_features_arrow(pages)
     assert_scale_safe(windowed_page_features(feats))
     assert_scale_safe(windowed_page_features(feats, skew_safe=True))

@@ -29,21 +29,21 @@ SF_DIR = "/root/testdata/sf0.01"
 def pliers_mods():
     from reference_throughput import install_stubs
 
-    before = set(sys.modules)
-    install_stubs()
+    undo = install_stubs()
     sys.path.insert(0, "/root/reference")
+    # the finally also runs when the skip fires, so later test modules in
+    # this same pytest process never see a fake nltk/scipy in sys.modules
     try:
-        from pliers.extractors import LengthExtractor
-        from pliers.filters import LowerCasingFilter, PunctuationRemovalFilter
-        from pliers.stimuli import TextStim
-    except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference not importable: {e}")
-    yield TextStim, LengthExtractor, LowerCasingFilter, PunctuationRemovalFilter
-    # drop the import stubs + pliers so later test modules in this same
-    # pytest process never see a fake nltk/scipy in sys.modules
-    for name in set(sys.modules) - before:
-        del sys.modules[name]
-    sys.path.remove("/root/reference")
+        try:
+            from pliers.extractors import LengthExtractor
+            from pliers.filters import LowerCasingFilter, PunctuationRemovalFilter
+            from pliers.stimuli import TextStim
+        except Exception as e:  # pragma: no cover
+            pytest.skip(f"reference not importable: {e}")
+        yield TextStim, LengthExtractor, LowerCasingFilter, PunctuationRemovalFilter
+    finally:
+        undo()
+        sys.path.remove("/root/reference")
 
 
 @pytest.fixture(scope="module")
@@ -209,11 +209,12 @@ def test_merge_results_wide_and_long_match_engine(spark, pliers_mods, docs_pdf):
     wide = merge_results(results, format="wide", extractor_names="column_prefix")
     long = merge_results(results, format="long", extractor_names="column")
 
-    from pliers_spark.flagship import flagship_features
+    from pliers_spark.pages_pipeline import extract_document_features
+    from pliers_spark.session import load_table
 
     ours = {
         r.doc_id: r
-        for r in flagship_features(spark, SF_DIR).collect()
+        for r in extract_document_features(load_table(spark, SF_DIR, "documents")).collect()
         if r.doc_id in set(sub["doc_id"])
     }
 
@@ -244,18 +245,18 @@ def test_merge_results_wide_and_long_match_engine(spark, pliers_mods, docs_pdf):
 def pliers_image_mods():
     from reference_throughput import install_stubs
 
-    before = set(sys.modules)
-    install_stubs()
+    undo = install_stubs()
     sys.path.insert(0, "/root/reference")
     try:
-        from pliers.extractors import BrightnessExtractor, VibranceExtractor
-        from pliers.stimuli import ImageStim
-    except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference image extractors not importable: {e}")
-    yield ImageStim, BrightnessExtractor, VibranceExtractor
-    for name in set(sys.modules) - before:
-        del sys.modules[name]
-    sys.path.remove("/root/reference")
+        try:
+            from pliers.extractors import BrightnessExtractor, VibranceExtractor
+            from pliers.stimuli import ImageStim
+        except Exception as e:  # pragma: no cover
+            pytest.skip(f"reference image extractors not importable: {e}")
+        yield ImageStim, BrightnessExtractor, VibranceExtractor
+    finally:
+        undo()
+        sys.path.remove("/root/reference")
 
 
 def test_image_features_match_actual_pliers(spark, pliers_image_mods):

@@ -174,7 +174,7 @@ def test_streaming_extract_matches_batch_and_is_incremental(spark, tmp_path):
     accounting via the stream checkpoint)."""
     import shutil
 
-    from pliers_spark.pages_pipeline import extract_page_features
+    from pliers_spark.pages_pipeline import extract_page_features_arrow
     from pliers_spark.streaming.extract import streaming_page_features
     from pliers_spark.synthgen import write_pages
 
@@ -200,7 +200,7 @@ def test_streaming_extract_matches_batch_and_is_incremental(spark, tmp_path):
         return spark.read.parquet(out)
 
     got1 = run_trigger("stream_extract_1")
-    batch1 = extract_page_features(spark.read.parquet(str(land)))
+    batch1 = extract_page_features_arrow(spark.read.parquet(str(land)))
     assert sorted(map(tuple, got1.collect())) == sorted(map(tuple, batch1.collect()))
     n1 = got1.count()
 
@@ -209,7 +209,7 @@ def test_streaming_extract_matches_batch_and_is_incremental(spark, tmp_path):
     p2 = write_pages(str(tmp_path / "b2.parquet"), n_urls=15, max_snapshots=2, seed=99)
     shutil.copy(p2, land / "batch2.parquet")
     got2 = run_trigger("stream_extract_2")
-    batch2 = extract_page_features(spark.read.parquet(str(land)))
+    batch2 = extract_page_features_arrow(spark.read.parquet(str(land)))
     assert got2.count() == batch2.count() > n1
     assert sorted(map(tuple, got2.collect())) == sorted(map(tuple, batch2.collect()))
 

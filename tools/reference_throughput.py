@@ -51,6 +51,15 @@ class _Any:
 
 
 def install_stubs():
+    """Stub the optional heavy deps in ``sys.modules``. Returns an undo
+    callable that puts ``sys.modules`` back as it was before the call."""
+    before = dict(sys.modules)
+
+    def undo():
+        for name in set(sys.modules) - set(before):
+            del sys.modules[name]
+        sys.modules.update(before)
+
     for name in [
         "nltk",
         "nltk.sentiment",
@@ -126,6 +135,7 @@ def install_stubs():
 
     tqdm = _stub("tqdm")
     tqdm.tqdm = _Tqdm
+    return undo
 
 
 def main():

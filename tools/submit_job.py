@@ -17,7 +17,9 @@ The script never sets a master itself — spark-submit owns cluster
 placement — and only tunes confs that are safe to set per-app (AQE,
 Arrow). With ``--checkpoint`` the extraction stage runs through the
 resumable per-partition manifest (plans/checkpoint.py): re-running the
-same command after a failure skips completed url-hash buckets.
+same command after a failure skips completed url-hash buckets. Either
+way the rest of the job is ``pages_pipeline.asof_feature_table``, the
+flagship's own back half (census, windows, leakage gate, spine, as-of).
 """
 
 from __future__ import annotations
@@ -44,10 +46,35 @@ def parse_args(argv):
     return p.parse_args(argv)
 
 
+def checkpointed_flagship(spark, input_path, args):
+    """``pages_flagship`` with its extraction run bucket by bucket through
+    the resumable checkpoint manifest; the back half reads the
+    checkpointed features."""
+    from pyspark.sql import functions as F
+
+    from pliers_spark.pages_pipeline import asof_feature_table, extract_page_features_arrow
+    from pliers_spark.plans.checkpoint import CheckpointedRun
+
+    pages = spark.read.parquet(input_path)
+    ck = CheckpointedRun(
+        stage_id="extract_v1",
+        out_dir=args.output.rstrip("/") + "_extract",
+        num_buckets=args.num_buckets,
+    )
+    ran = ck.run(
+        spark,
+        pages,
+        extract_page_features_arrow,
+        F.pmod(F.xxhash64("url"), F.lit(args.num_buckets)).cast("int"),
+        input_snapshot_id=args.snapshot_id,
+    )
+    print(f"checkpoint: executed {ran} buckets this run", file=sys.stderr)
+    return asof_feature_table(pages, ck.read_output(spark), args.spine_step_hours)
+
+
 def main(argv=None):
     args = parse_args(argv)
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.appName("pliers_spark.pages_flagship")
@@ -57,13 +84,7 @@ def main(argv=None):
         .getOrCreate()
     )
 
-    from pliers_spark.pages_pipeline import (
-        extract_page_features_arrow,
-        pages_flagship,
-        windowed_page_features,
-    )
-    from pliers_spark.operators.asof import asof_join
-    from pliers_spark.operators import temporal as TP
+    from pliers_spark.pages_pipeline import pages_flagship
 
     input_path = args.input
     if args.synth_urls:
@@ -77,29 +98,7 @@ def main(argv=None):
 
     t0 = time.time()
     if args.checkpoint:
-        from pliers_spark.plans.checkpoint import CheckpointedRun
-
-        pages = spark.read.parquet(input_path)
-        ck = CheckpointedRun(
-            stage_id="extract_v1",
-            out_dir=args.output.rstrip("/") + "_extract",
-            num_buckets=args.num_buckets,
-        )
-        ran = ck.run(
-            spark,
-            pages,
-            extract_page_features_arrow,
-            F.pmod(F.xxhash64("url"), F.lit(args.num_buckets)).cast("int"),
-            input_snapshot_id=args.snapshot_id,
-        )
-        print(f"checkpoint: executed {ran} buckets this run", file=sys.stderr)
-        feats = windowed_page_features(ck.read_output(spark))
-        spine = TP.resample_grid(
-            spark.read.parquet(input_path).select("url", "warc_ts"),
-            ["url"], "warc_ts", args.spine_step_hours * 3600,
-        ).withColumnRenamed("warc_ts", "t")
-        value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
-        out = asof_join(spine, feats, ["url"], "t", "warc_ts", value_cols)
+        out = checkpointed_flagship(spark, input_path, args)
     else:
         out = pages_flagship(spark, input_path, spine_step_hours=args.spine_step_hours)
 
