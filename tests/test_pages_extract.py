@@ -138,13 +138,39 @@ def test_windowed_features_skew_safe_path_equal(spark, tmp_path):
 
 
 def _write_hot_pages(spark, path):
-    """One hot url (200 snapshots) and five cold urls (3 snapshots each)."""
+    """One hot url (177 snapshots) and five cold urls (3 snapshots each).
+
+    The hot url spans four of the skew path's 90-day buckets (UTC starts
+    2023-12-19, 2024-03-18, 2024-06-16, 2024-09-14), so every carry
+    crosses a boundary: a session continues from bucket 1 into bucket 2
+    (2.5-day gap); bucket 2 ends on a null-text snapshot, whose null
+    lag values bucket 3's first row must carry; that first row sits
+    exactly on bucket 3's start instant; bucket 2 opens a new session
+    mid-bucket (37.5-day gap) and bucket 4's first row opens one across
+    the boundary (85-day gap). The first row of buckets 2-4 is the
+    latest snapshot at a weekly spine point (the grid starts at
+    2024-01-01), so its carried values reach the as-of output."""
     import datetime as dt
 
-    base = dt.datetime(2024, 1, 1)
-    rows = [("https://hot.example.com/", base + dt.timedelta(hours=9 * k),
-             f"snapshot {k} of the hot page with fast slow words", "en")
-            for k in range(200)]
+    utc = dt.timezone.utc
+    base = dt.datetime(2024, 1, 1, tzinfo=utc)
+    day = dt.timedelta(days=1)
+    hot_ts = [base + dt.timedelta(hours=9 * k) for k in range(120)]  # bucket 1
+    hot_ts += [dt.datetime(2024, 3, 1, tzinfo=utc), dt.datetime(2024, 3, 17, 12, tzinfo=utc)]
+    first2 = dt.datetime(2024, 3, 20, tzinfo=utc)  # bucket 2, same session
+    hot_ts += [first2] + [first2 + (6 + k) * day for k in range(40)]
+    last2 = dt.datetime(2024, 6, 10, 12, tzinfo=utc)  # bucket 2's last row
+    start3 = dt.datetime(2024, 6, 16, tzinfo=utc)  # bucket 3's start instant
+    hot_ts += [last2, start3] + [start3 + (2 + k) * day for k in range(10)]
+    first4 = dt.datetime(2024, 9, 20, tzinfo=utc)
+    hot_ts += [first4, first4 + 4 * day]
+    bucket_s = 90 * 86400
+    assert len({int(t.timestamp()) // bucket_s for t in hot_ts}) == 4
+    assert int(start3.timestamp()) % bucket_s == 0
+    rows = [("https://hot.example.com/", t,
+             None if t == last2 else f"snapshot {k} of the hot page with fast slow words",
+             "en")
+            for k, t in enumerate(hot_ts)]
     rows += [(f"https://cold{u}.example.com/", base + dt.timedelta(days=40 * k),
               f"cold page {u} version {k}", "en")
              for u in range(5) for k in range(3)]
