@@ -148,7 +148,8 @@ def skip_id3v2(data: bytes, off: int = 0) -> int:
     sz = 0
     for b in data[off + 6 : off + 10]:
         sz = (sz << 7) | (b & 0x7F)
-    return 10 + sz
+    footer = 10 if data[off + 5] & 0x10 else 0  # ID3v2.4 footer flag
+    return 10 + sz + footer
 
 
 def index_frames(data: bytes, strict: bool = True) -> list[FrameHeader]:
@@ -198,6 +199,10 @@ class _Bits:
         self.pos = 0
 
     def read(self, k: int) -> int:
+        if self.pos + k > len(self.data) * 8:
+            raise Mp3FormatError(
+                f"read of {k} bits at bit {self.pos} overruns a {len(self.data)}-byte buffer"
+            )
         v = 0
         for _ in range(k):
             byte = self.data[self.pos >> 3]
@@ -544,6 +549,15 @@ def decode_granule_spectrum(bits: _Bits, g: GranuleInfo,
     every nonzero value."""
     start = bits.pos
     budget = g.part2_3_length
+    # big_values and part2_3_length are raw side-info fields: reject a
+    # corrupt granule up front instead of indexing past the spectrum or
+    # the frame's main data
+    if 2 * g.big_values > 576:
+        raise Mp3FormatError(f"big_values {g.big_values} exceeds 288 pairs")
+    if start + budget > len(bits.data) * 8:
+        raise Mp3FormatError(
+            f"part2_3_length {budget} exceeds the {len(bits.data)}-byte main data"
+        )
     s1, s2 = SLEN1[g.scalefac_compress], SLEN2[g.scalefac_compress]
     for _ in range(11):
         if s1:
@@ -696,6 +710,8 @@ def mp3_stream_stats(data: bytes) -> dict:
         reservoir_ledger(data, frames) if frames[0].is_mpeg1 else []
     )
     sr = frames[0].sample_rate
+    if any(f.sample_rate != sr for f in frames):
+        raise Mp3FormatError("frames disagree on sample rate (spliced or corrupt stream)")
     return {
         "n_frames": len(frames),
         "sample_rate": sr,

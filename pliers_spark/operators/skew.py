@@ -23,9 +23,25 @@ For skewed *joins* the engine relies on AQE's skew-join splitting
 on the time-range union-split of the as-of operator
 (``operators/asof.py::asof_join_split``) where salting would break
 sort-merge continuity.
+
+For skewed *windows* (a hot entity's whole timeline in one task) the
+timeline is split into time buckets, partitioned by (entity, bucket):
+
+- ``timesplit_windows`` — lag-1, forward fill and gap sessionization,
+  any mix of them, in ONE scan decomposition: a Window pass inside each
+  bucket, one row per bucket carrying its tail, a Window over that
+  small frame for every carry, one join back;
+- ``rolling_timesplit`` — trailing range aggregates, whose frame
+  reaches back in time rather than one row, via ghost rows copied into
+  the next bucket.
+
+Each is bit-equal to its plain window (oracle-gated queries
+``lag_split``, ``sessionize_split``, ``ffill_split``, ``rolling_split``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -55,190 +71,110 @@ def salted_count_distinct(
     )
 
 
-def lag1_timesplit(
+def timesplit_windows(
     df: DataFrame,
     entity_cols: list[str],
     ts_col: str,
-    value_col: str,
     bucket_seconds: int,
-    out_col: str | None = None,
+    *,
+    lag1: Sequence[str] = (),
+    ffill: Sequence[str] = (),
+    session_gap: float | None = None,
 ) -> DataFrame:
-    """Skew-defused lag-1: exactly ``F.lag(value).over(partitionBy(entity)
-    .orderBy(ts))`` but with the hot entity's timeline **split into time
-    buckets** so no single task owns a hot domain's whole history.
+    """Skew-defused lag-1, forward fill and gap sessionization in one
+    carry pass: exactly ``temporal.lag_features(..., [1])``,
+    ``temporal.ffill`` and ``temporal.sessionize`` (same output names:
+    ``{c}_lag1``, ``{c}_ffill``, ``session_id``, appended in that
+    order: session, lags, fills), but with each entity's timeline split
+    into time buckets so no single task owns a hot entity's whole
+    history (SURVEY.md §7.3: "windowed stages need range-splitting by
+    warc_ts with boundary overlap").
 
-    The as-of skew path (operators/asof.py::asof_join_split) solves this
-    for joins; windowed features have the same failure mode — a domain
-    with 10^8 snapshots makes `partitionBy(url)` a straggler. Remedy
-    (SURVEY.md §7.3: "windowed stages need range-splitting by warc_ts
-    with boundary overlap"):
+    Every feature is a prefix scan over the entity's timeline, so one
+    two-level scan decomposition serves all of them:
 
-    1. lag within (entity, time_bucket) — parallel across buckets;
-    2. per (entity, bucket): one `max_by` row (the bucket's last value)
-       — a partial-aggregating shuffle to a frame with ONE row per
-       (entity, bucket), where a window by entity is trivially cheap;
-    3. the first row of each bucket takes the previous non-empty
-       bucket's last value (empty buckets never materialize, so
-       `lag` over the per-bucket frame IS the previous non-empty one).
+    1. one Window pass over (entity, bucket): row number, the lags, the
+       forward fills and the new-session flags (a bucket's first row
+       has no in-bucket predecessor, so its flag is left to step 3)
+       with their running count;
+    2. one ``groupBy(entity, bucket)`` over that output — first ts,
+       a ``max_by`` struct of the last row (its ts, lag values and
+       in-bucket fills = the bucket's last non-null values), and the
+       bucket's in-bucket new-session count. It reuses step 1's
+       partitioning, and its output has ONE row per (entity, bucket);
+    3. one Window over entity on that small frame: the previous
+       non-empty bucket's tail (empty buckets never materialize), the
+       latest non-null value of any earlier bucket, whether the
+       bucket's first row starts a session, and the exclusive prefix
+       sum of session starts (the bucket's session-id offset);
+    4. one join back on (entity, bucket): the first row of a bucket
+       takes the carried lag (a null value lagged mid-bucket stays
+       null), a fill is the in-bucket fill or else the carry (it is
+       null exactly on the rows before the bucket's first non-null
+       value), and session_id = offset + first-row start + in-bucket
+       running count.
 
-    Exactness requires ``ts`` unique per entity (the engine's snapshot
-    tables guarantee it; equality vs the plain window is pinned by a
-    driver oracle and tests). Generalizes to lag-k by carrying the last
-    k rows per bucket (array agg) — k=1 is the flagship's need.
+    The bucket is ``floor(epoch µs / bucket µs)``, one expression for
+    every feature — exact while |µs| < 2^53 (years 1685 to 2255), so a
+    sub-second timestamp or a row exactly on a bucket's start instant
+    lands in one bucket for all of them. Exactness requires ``ts``
+    unique per entity (the engine's snapshot tables guarantee it);
+    equality with the plain windows is pinned by the ``lag_split``/
+    ``sessionize_split``/``ffill_split`` driver oracles and
+    tests/test_temporal.py.
     """
-    out_col = out_col or f"{value_col}_lag1"
-    # µs-precise bucketing (unix_timestamp truncates to whole seconds and
-    # would mis-bucket sub-second data — see operators/_util.epoch_micros)
-    b = F.floor(epoch_micros(df, ts_col) / F.lit(bucket_seconds * 1_000_000)).alias("_tb")
-    dfb = df.withColumn("_tb", b)
+    keys = [*entity_cols, "_tb"]
+    sess = session_gap is not None
+    us = epoch_micros(df, ts_col)
+    dfb = df.withColumns({
+        "_tb": F.floor(us / F.lit(bucket_seconds * 1_000_000)),
+        "_s": epoch_seconds(df, ts_col),  # the gap arithmetic of temporal.sessionize
+    })
 
-    w_in = Window.partitionBy(*entity_cols, "_tb").orderBy(ts_col)
-    lag_in = F.lag(value_col).over(w_in)
+    # 1. inside each bucket
+    w_in = Window.partitionBy(*keys).orderBy(ts_col)
+    w_run = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    inner = {"_rn": F.row_number().over(w_in)}
+    inner.update({f"_lag_{c}": F.lag(c).over(w_in) for c in lag1})
+    inner.update({f"_ff_{c}": F.last(c, ignorenulls=True).over(w_run) for c in ffill})
+    if sess:  # null on the bucket's first row -> 0; step 3 decides that row
+        gap = F.col("_s") - F.lag("_s").over(w_in)
+        inner["_new"] = F.when(gap > session_gap, 1).otherwise(0)
+    rows = dfb.withColumns(inner)
+    if sess:
+        rows = rows.withColumn("_run", F.sum("_new").over(w_run))
 
-    tails = dfb.groupBy(*entity_cols, "_tb").agg(
-        F.max_by(value_col, ts_col).alias("_last_val")
+    # 2. one row per bucket
+    tail = F.struct("_s", *lag1, *[f"_ff_{c}" for c in ffill])
+    aggs = [F.min("_s").alias("_first_s"), F.max_by(tail, ts_col).alias("_tail")]
+    if sess:
+        aggs.append(F.sum("_new").alias("_n_new"))
+    buckets = rows.groupBy(*keys).agg(*aggs)
+
+    # 3. every carry, over the bucket frame
+    w_b = Window.partitionBy(*entity_cols).orderBy("_tb")
+    w_before = w_b.rowsBetween(Window.unboundedPreceding, -1)
+    carry = buckets.withColumn("_prev", F.lag("_tail").over(w_b)).withColumns(
+        {f"_carry_{c}": F.last(f"_tail._ff_{c}", ignorenulls=True).over(w_before) for c in ffill}
     )
-    w_t = Window.partitionBy(*entity_cols).orderBy("_tb")
-    prev_tail = tails.withColumn("_prev_val", F.lag("_last_val").over(w_t)).drop("_last_val")
+    if sess:
+        prev_s = F.col("_prev._s")
+        starts = prev_s.isNull() | (F.col("_first_s") - prev_s > session_gap)
+        carry = carry.withColumn("_first_new", F.when(starts, 1).otherwise(0))
+        n_starts = F.sum(F.col("_first_new") + F.col("_n_new")).over(w_before)
+        carry = carry.withColumn("_off", F.coalesce(n_starts, F.lit(0)))
 
-    # substitute the carried value ONLY on the bucket's first row — a null
-    # *value* lagged mid-bucket must stay null (coalesce would corrupt it)
-    out = (
-        dfb.withColumn("_lag_in", lag_in)
-        .withColumn("_rn_in", F.row_number().over(w_in))
-        .join(prev_tail, entity_cols + ["_tb"], "left")
-        .withColumn(
-            out_col,
-            F.when(F.col("_rn_in") == 1, F.col("_prev_val")).otherwise(F.col("_lag_in")),
-        )
-        .drop("_tb", "_lag_in", "_rn_in", "_prev_val")
-    )
-    return out
-
-
-def sessionize_timesplit(
-    df: DataFrame,
-    entity_cols: list[str],
-    ts_col: str,
-    gap_seconds: float,
-    bucket_seconds: int,
-    session_col: str = "session_id",
-) -> DataFrame:
-    """Skew-defused gap sessionization: exactly
-    ``temporal.sessionize`` (1-based running count of session starts per
-    entity) but with the hot entity's history split across time buckets.
-
-    A running sum is prefix-dependent, so the split is two-level
-    (the classic scan decomposition):
-
-    1. within (entity, bucket): session-start flags — the first row of a
-       bucket compares against the PREVIOUS bucket's last timestamp,
-       carried through a one-row-per-bucket frame (same carry as
-       ``lag1_timesplit``); then a within-bucket running sum;
-    2. per (entity, bucket): total new sessions in the bucket; an
-       exclusive cumulative sum over the tiny bucket-level frame gives
-       each bucket's session-id offset;
-    3. session_id = bucket offset + within-bucket running count.
-
-    Equality with the plain window is pinned by the `sessionize_split`
-    driver oracle and a unit test.
-    """
-    # µs-precise seconds: gap comparison must see sub-second deltas exactly,
-    # matching temporal.sessionize (unix_timestamp truncates to whole seconds)
-    secs = epoch_seconds(df, ts_col)
-    dfb = df.withColumn("_tb", F.floor(secs / F.lit(bucket_seconds)))
-
-    w_in = Window.partitionBy(*entity_cols, "_tb").orderBy(ts_col)
-    prev_in = F.lag(secs).over(w_in)
-
-    # carry: previous non-empty bucket's last event time per entity
-    tails = dfb.groupBy(*entity_cols, "_tb").agg(F.max(secs).alias("_last_s"))
-    w_t = Window.partitionBy(*entity_cols).orderBy("_tb")
-    carry = tails.withColumn("_prev_s", F.lag("_last_s").over(w_t)).drop("_last_s")
-
-    flagged = (
-        dfb.join(carry, entity_cols + ["_tb"], "left")
-        .withColumn("_prev", F.coalesce(prev_in, F.col("_prev_s")))
-        .withColumn(
-            "_is_new",
-            F.when(
-                F.col("_prev").isNull() | ((secs - F.col("_prev")) > gap_seconds), F.lit(1)
-            ).otherwise(F.lit(0)),
-        )
-    )
-    run_in = F.sum("_is_new").over(w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-    # bucket-level offsets: exclusive prefix sum of per-bucket new-session counts
-    per_bucket = flagged.groupBy(*entity_cols, "_tb").agg(F.sum("_is_new").alias("_n_new"))
-    w_off = Window.partitionBy(*entity_cols).orderBy("_tb").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = per_bucket.withColumn(
-        "_off", F.coalesce(F.sum("_n_new").over(w_off), F.lit(0))
-    ).drop("_n_new")
-
-    out = (
-        flagged.withColumn("_run_in", run_in)
-        .join(offsets, entity_cols + ["_tb"], "left")
-        .withColumn(session_col, (F.col("_off") + F.col("_run_in")).cast("long"))
-        .drop("_tb", "_prev_s", "_prev", "_is_new", "_run_in", "_off")
-    )
-    return out
-
-
-def ffill_timesplit(
-    df: DataFrame,
-    entity_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    bucket_seconds: int,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Skew-defused forward-fill: exactly ``temporal.ffill`` (latest
-    non-null earlier value, frame ends at currentRow) with the hot
-    entity's timeline split across time buckets.
-
-    Carry construction: per (entity, bucket) take the bucket's last
-    NON-NULL value (``max_by`` over the non-null subset); a bucket can
-    be all-null, so the carry itself forward-fills over the tiny
-    one-row-per-bucket frame before shifting to the next bucket. Within
-    a bucket, ``coalesce(ffill_in, carry)`` is exact because ffill_in
-    is null precisely on the prefix of rows before the bucket's first
-    non-null value — the rows whose answer lives in an earlier bucket.
-    """
-    out_col = out_col or f"{value_col}_ffill"
-    secs = epoch_seconds(df, ts_col)
-    dfb = df.withColumn("_tb", F.floor(secs / F.lit(bucket_seconds)))
-
-    w_in = Window.partitionBy(*entity_cols, "_tb").orderBy(ts_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ffill_in = F.last(value_col, ignorenulls=True).over(w_in)
-
-    # bucket's last non-null value (null when the bucket is all-null)
-    tails = dfb.groupBy(*entity_cols, "_tb").agg(
-        F.max_by(value_col, F.when(F.col(value_col).isNotNull(), F.col(ts_col))).alias(
-            "_last_nn"
-        )
-    )
-    # forward-fill the carry itself across buckets, then shift by one:
-    # carry(b) = last non-null value in any bucket strictly before b
-    w_t = (
-        Window.partitionBy(*entity_cols)
-        .orderBy("_tb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = tails.withColumn(
-        "_carry", F.last("_last_nn", ignorenulls=True).over(w_t)
-    ).drop("_last_nn")
-
-    out = (
-        dfb.withColumn("_ffill_in", ffill_in)
-        .join(carry, entity_cols + ["_tb"], "left")
-        .withColumn(out_col, F.coalesce(F.col("_ffill_in"), F.col("_carry")))
-        .drop("_tb", "_ffill_in", "_carry")
-    )
-    return out
+    # 4. one join back
+    out = rows.join(carry.drop("_first_s", "_tail", "_n_new"), keys, "left")
+    feats = {}
+    if sess:
+        feats["session_id"] = (F.col("_off") + F.col("_first_new") + F.col("_run")).cast("long")
+    first = F.col("_rn") == 1
+    for c in lag1:
+        feats[f"{c}_lag1"] = F.when(first, F.col(f"_prev.{c}")).otherwise(F.col(f"_lag_{c}"))
+    for c in ffill:
+        feats[f"{c}_ffill"] = F.coalesce(F.col(f"_ff_{c}"), F.col(f"_carry_{c}"))
+    return out.withColumns(feats).select(*df.columns, *feats)
 
 
 def rolling_timesplit(

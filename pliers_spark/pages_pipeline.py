@@ -249,22 +249,26 @@ def extract_page_features(pages: DataFrame) -> DataFrame:
 def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFrame:
     """Per-url temporal features — one shuffle on url, leakage-safe frames.
 
-    ``skew_safe=True`` routes every window through the time-bucket-split
-    operators (``operators/skew.py``) so no single task ever owns a hot
-    domain's full history — bit-equal output (each split op is
-    oracle-gated, and tests/test_incremental.py::equality covers the
-    composition). Use it when the heavy-hitter census
-    (``asof.detect_heavy_hitters``) reports domains above the task-size
-    budget; the plain path is faster when no key is hot.
+    ``skew_safe=True`` computes the same session and lag columns with
+    ``operators/skew.py::timesplit_windows`` — one time-bucket carry
+    pass, so no single task ever owns a hot domain's full history —
+    bit-equal output (the operator is oracle-gated, and
+    tests/test_pages_extract.py pins the composition: the skew-safe
+    stage and the auto, plain and forced flagships on a hot url whose
+    sessions and null lags cross bucket boundaries). Use it when the
+    heavy-hitter census (``asof.detect_heavy_hitters``) reports domains
+    above the task-size budget; the plain path is faster when no key is
+    hot.
     """
     gap_s = SESSION_GAP_DAYS * 86400
     if skew_safe:
-        from .operators.skew import lag1_timesplit, sessionize_timesplit
+        from .operators.skew import timesplit_windows
 
         bucket_s = 90 * 86400  # ~1 quarter per task for the hottest domain
-        out = sessionize_timesplit(feats, ["url"], "warc_ts", gap_s, bucket_s)
-        out = lag1_timesplit(out, ["url"], "warc_ts", "text_length", bucket_s)
-        out = lag1_timesplit(out, ["url"], "warc_ts", "quality", bucket_s)
+        out = timesplit_windows(
+            feats, ["url"], "warc_ts", bucket_s,
+            lag1=("text_length", "quality"), session_gap=gap_s,
+        )
     else:
         out = TP.sessionize(feats, ["url"], "warc_ts", gap_seconds=gap_s)
         out = TP.lag_features(out, ["url"], "warc_ts", "text_length", [1])
@@ -331,7 +335,7 @@ def asof_feature_table(
     ).withColumnRenamed("warc_ts", "t")
     value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
     if skew_safe:
-        # the heavy-hitter census engaged the timesplit WINDOW operators;
+        # the heavy-hitter census engaged the timesplit WINDOW operator;
         # the final as-of join must not reintroduce the hot url as one
         # unsplit sort group — route it through the time-range-split twin
         # (bit-equal; same boundary-carry contract the window ops use)

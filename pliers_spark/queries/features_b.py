@@ -833,13 +833,13 @@ def q_ann_lsh_topk(spark, sf_dir):
 )
 def q_lag_split(spark, sf_dir):
     """Skew-defused lag-1 (time-bucket split + boundary carry,
-    operators/skew.py::lag1_timesplit). The oracle IS the plain window
+    operators/skew.py::timesplit_windows). The oracle IS the plain window
     lag — proving the split path bit-equal, the same pattern as
     `salted_unique_tokens` and `asof_join_split`."""
-    from pliers_spark.operators.skew import lag1_timesplit
+    from pliers_spark.operators.skew import timesplit_windows
 
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    out = lag1_timesplit(ev, ["user_id"], "ts", "value", bucket_seconds=6 * 3600)
+    out = timesplit_windows(ev, ["user_id"], "ts", 6 * 3600, lag1=("value",))
     return out.select("user_id", "ts", "value_lag1")
 
 
@@ -860,14 +860,12 @@ def q_lag_split(spark, sf_dir):
 )
 def q_sessionize_split(spark, sf_dir):
     """Skew-defused sessionization (two-level scan decomposition over
-    time buckets, operators/skew.py::sessionize_timesplit); the oracle
+    time buckets, operators/skew.py::timesplit_windows); the oracle
     is the plain single-window sessionize — bit-equal."""
-    from pliers_spark.operators.skew import sessionize_timesplit
+    from pliers_spark.operators.skew import timesplit_windows
 
     ev = _events(spark, sf_dir).select("user_id", "ts")
-    out = sessionize_timesplit(
-        ev, ["user_id"], "ts", gap_seconds=_SESSION_GAP_S, bucket_seconds=12 * 3600
-    )
+    out = timesplit_windows(ev, ["user_id"], "ts", 12 * 3600, session_gap=_SESSION_GAP_S)
     return out.select("user_id", "ts", "session_id")
 
 
@@ -886,16 +884,16 @@ def q_sessionize_split(spark, sf_dir):
 )
 def q_ffill_split(spark, sf_dir):
     """Skew-defused forward-fill (time-bucket split + non-null carry,
-    operators/skew.py::ffill_timesplit); oracle = plain window ffill
+    operators/skew.py::timesplit_windows); oracle = plain window ffill
     over the same null-punched series."""
-    from pliers_spark.operators.skew import ffill_timesplit
+    from pliers_spark.operators.skew import timesplit_windows
 
     ev = _events(spark, sf_dir).select(
         "user_id",
         "ts",
         F.when(F.col("event_type") == "view", F.lit(None)).otherwise(F.col("value")).alias("value"),
     )
-    out = ffill_timesplit(ev, ["user_id"], "ts", "value", bucket_seconds=12 * 3600)
+    out = timesplit_windows(ev, ["user_id"], "ts", 12 * 3600, ffill=("value",))
     return out.select("user_id", "ts", F.col("value_ffill"))
 
 

@@ -477,6 +477,64 @@ def test_sfband_sets_per_granule_region_bounds(monkeypatch):
         M.set_tables(None)
 
 
+def _granule(**kw):
+    """A long-block mono granule, zero tables, overridable fields."""
+    base = dict(part2_3_length=0, big_values=0, global_gain=210,
+                scalefac_compress=0, window_switching=0, block_type=0,
+                mixed_block=0, table_select=(0, 0, 0), subblock_gain=(0, 0, 0),
+                region0_count=0, region1_count=0, preflag=0, scalefac_scale=0,
+                count1table_select=0)
+    return M.GranuleInfo(**{**base, **kw})
+
+
+def test_big_values_over_576_lines_is_format_error():
+    """big_values is a raw 9-bit field (up to 511 pairs = 1022 lines):
+    a corrupt granule used to index past the 576-line spectrum and die
+    with a raw IndexError."""
+    tabs = _synthetic_tables()
+    with pytest.raises(M.Mp3FormatError, match="big_values"):
+        M.decode_granule_spectrum(M._Bits(bytes(187)), _granule(big_values=400), tabs)
+    # 288 pairs = exactly 576 lines is still legal
+    xs = M.decode_granule_spectrum(M._Bits(bytes(187)), _granule(big_values=288), tabs)
+    assert xs.shape == (576,) and not xs.any()
+
+
+def test_part2_3_budget_past_main_data_is_format_error():
+    """A part2_3_length larger than the frame's main data is rejected
+    before any bit is read, and a raw read past the buffer is a format
+    error too (it used to surface as IndexError)."""
+    with pytest.raises(M.Mp3FormatError, match="part2_3_length"):
+        M.decode_granule_spectrum(
+            M._Bits(bytes(10)), _granule(part2_3_length=81), _synthetic_tables()
+        )
+    bits = M._Bits(b"\xff")
+    assert bits.read(8) == 0xFF
+    with pytest.raises(M.Mp3FormatError, match="overruns"):
+        bits.read(1)
+
+
+def test_id3v2_footer_flag_is_skipped():
+    """An ID3v2.4 tag with the footer flag (0x10) is 10 bytes longer
+    than its syncsafe size says; a mid-stream one used to leave the
+    strict walk 10 bytes short of the next sync."""
+    frame = _header_bytes(5, 0, 0, 3) + bytes(204)
+    tag = b"ID3\x04\x00\x10" + bytes([0, 0, 0, 4]) + bytes(4) + b"3DI" + bytes(7)
+    assert M.skip_id3v2(tag) == len(tag) == 24
+    frames = M.index_frames(frame + tag + frame)
+    assert [f.offset for f in frames] == [0, 208 + 24]
+
+
+def test_stream_stats_rejects_mixed_sample_rates():
+    """A spliced stream whose frames disagree on sample rate has no
+    single duration: reject it instead of dividing every frame's
+    samples by the first frame's rate."""
+    f441 = _header_bytes(5, 0, 0, 3) + bytes(204)  # 44.1 kHz, 208 bytes
+    f48 = _header_bytes(5, 1, 0, 3) + bytes(188)   # 48 kHz, 192 bytes
+    assert M.mp3_stream_stats(f441 + f441)["sample_rate"] == 44100
+    with pytest.raises(M.Mp3FormatError, match="sample rate"):
+        M.mp3_stream_stats(f441 + f48)
+
+
 def test_kmeans_binned_dp_guard_under_k_distinct():
     from pliers_spark.queries.stats_16 import _k1d_weighted_dp
 

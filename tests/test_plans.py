@@ -60,6 +60,18 @@ def test_windowed_stage_single_shuffle(spark, pages):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
+def test_skew_safe_windowed_stage_one_carry_pass(spark, pages):
+    """The skew-safe stage computes session and both lags in ONE
+    time-bucket carry pass: one self-join, so the Arrow extraction runs
+    twice (rows and bucket tails), and four exchanges: one (url, bucket)
+    shuffle per side, the bucket frame's shuffle on url and the carry
+    join's broadcast."""
+    plan = plan_of(windowed_page_features(extract_page_features_arrow(pages), skew_safe=True))
+    assert plan.count("MapInPandas") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+    assert plan.count("Exchange") == 4, plan
+
+
 def test_dictionary_join_is_broadcast(spark):
     from pliers_spark.operators.dictionary import dictionary_lookup
 

@@ -136,11 +136,12 @@ def test_temporal_trim_rebase(ev):
 
 
 def test_lag1_timesplit_equals_plain_lag(spark):
-    """Time-bucket-split lag-1 == plain window lag, including null
-    values mid-stream and entities spanning many/missing buckets."""
+    """Time-bucket-split lag-1 (``timesplit_windows(lag1=...)``) == plain
+    window lag, including null values mid-stream and entities spanning
+    many/missing buckets."""
     import datetime as dt
 
-    from pliers_spark.operators.skew import lag1_timesplit
+    from pliers_spark.operators.skew import timesplit_windows
     from pliers_spark.operators.temporal import lag_features
 
     base = dt.datetime(2024, 1, 1)
@@ -160,7 +161,7 @@ def test_lag1_timesplit_equals_plain_lag(spark):
     }
     got = {
         (r.user_id, r.ts): r.value_lag1
-        for r in lag1_timesplit(df, ["user_id"], "ts", "value", bucket_seconds=3600).collect()
+        for r in timesplit_windows(df, ["user_id"], "ts", 3600, lag1=("value",)).collect()
     }
     assert got == want and len(got) == 507
 
@@ -168,7 +169,7 @@ def test_lag1_timesplit_equals_plain_lag(spark):
 def test_sessionize_timesplit_equals_plain(spark):
     import datetime as dt
 
-    from pliers_spark.operators.skew import sessionize_timesplit
+    from pliers_spark.operators.skew import timesplit_windows
     from pliers_spark.operators.temporal import sessionize
 
     base = dt.datetime(2024, 1, 1)
@@ -188,8 +189,8 @@ def test_sessionize_timesplit_equals_plain(spark):
     }
     got = {
         (r.user_id, r.ts): r.session_id
-        for r in sessionize_timesplit(
-            df, ["user_id"], "ts", gap_seconds=4 * 3600, bucket_seconds=3600
+        for r in timesplit_windows(
+            df, ["user_id"], "ts", 3600, session_gap=4 * 3600
         ).collect()
     }
     assert got == want and len(got) == 409
@@ -199,7 +200,7 @@ def test_ffill_timesplit_equals_plain(spark):
     """Includes all-null buckets (carry must ffill across them)."""
     import datetime as dt
 
-    from pliers_spark.operators.skew import ffill_timesplit
+    from pliers_spark.operators.skew import timesplit_windows
     from pliers_spark.operators.temporal import ffill
 
     base = dt.datetime(2024, 1, 1)
@@ -218,9 +219,52 @@ def test_ffill_timesplit_equals_plain(spark):
     }
     got = {
         (r.user_id, r.ts): r.value_ffill
-        for r in ffill_timesplit(df, ["user_id"], "ts", "value", bucket_seconds=3600).collect()
+        for r in timesplit_windows(df, ["user_id"], "ts", 3600, ffill=("value",)).collect()
     }
     assert got == want and len(got) == 308
+
+
+def test_timesplit_windows_all_features_in_one_call(spark):
+    """Session, two lags and two fills from ONE timesplit_windows call
+    equal the three plain temporal operators — with null values mid-
+    bucket and on buckets' first rows (a null first row must take the
+    carried fill, and its own null must be the next row's lag), rows on
+    a bucket's start instant, and gaps over the session threshold both
+    inside a bucket and across a boundary."""
+    import datetime as dt
+
+    from pliers_spark.operators.skew import timesplit_windows
+    from pliers_spark.operators.temporal import ffill, lag_features, sessionize
+
+    base = dt.datetime(2024, 1, 1)  # a 4 h bucket's start instant
+    rows, buckets = [], set()
+    for uid, n in [("hot", 240), ("cold", 6)]:
+        for k in range(n):
+            # 20-min steps with a 200-min jump every 25 rows: the jumps
+            # open sessions inside a bucket and across a boundary
+            m = 20 * k + 180 * (k // 25)
+            head = (uid, m // 240) not in buckets  # first row of its bucket
+            buckets.add((uid, m // 240))
+            a = None if (head and m // 240 % 2) or k % 7 == 5 else float(k)
+            b = None if (k // 15) % 3 == 1 else k  # null runs spanning buckets
+            rows.append((uid, base + dt.timedelta(minutes=m), a, b))
+    df = spark.createDataFrame(rows, "user_id string, ts timestamp, a double, b long")
+    key = ["user_id"]
+
+    plain = sessionize(df, key, "ts", gap_seconds=2 * 3600)
+    plain = lag_features(lag_features(plain, key, "ts", "a", [1]), key, "ts", "b", [1])
+    plain = ffill(ffill(plain, key, "ts", "a"), key, "ts", "b")
+    split = timesplit_windows(
+        df, key, "ts", 4 * 3600, lag1=("a", "b"), ffill=("a", "b"), session_gap=2 * 3600
+    )
+    assert split.columns == df.columns + [
+        "session_id", "a_lag1", "b_lag1", "a_ffill", "b_ffill"]
+    by_key = lambda out: {
+        (r.user_id, r.ts): tuple(r[c] for c in split.columns) for r in out.collect()
+    }
+    got, want = by_key(split), by_key(plain)
+    assert got == want and len(got) == 246
+    assert max(v[4] for v in got.values()) == 10  # each jump opens a session
 
 
 def test_rolling_timesplit_equals_plain(spark):
@@ -254,17 +298,13 @@ def test_rolling_timesplit_equals_plain(spark):
 
 
 def test_timesplit_subsecond_timestamps(spark):
-    """Sub-second data: the split ops must agree with their plain twins at
+    """Sub-second data: the split ops (rolling_timesplit and each
+    timesplit_windows feature) must agree with their plain twins at
     µs precision (regression: unix_timestamp truncation made rolling
     frames read same-second FUTURE rows and mis-split sub-second gaps)."""
     import datetime as dt
 
-    from pliers_spark.operators.skew import (
-        ffill_timesplit,
-        lag1_timesplit,
-        rolling_timesplit,
-        sessionize_timesplit,
-    )
+    from pliers_spark.operators.skew import rolling_timesplit, timesplit_windows
     from pliers_spark.operators.temporal import ffill, lag_features, rolling_agg, sessionize
 
     base = dt.datetime(2024, 1, 1)
@@ -297,9 +337,7 @@ def test_timesplit_subsecond_timestamps(spark):
     }
     got = {
         (r.user_id, r.ts): r.session_id
-        for r in sessionize_timesplit(
-            df, ["user_id"], "ts", gap_seconds=0.6, bucket_seconds=5
-        ).collect()
+        for r in timesplit_windows(df, ["user_id"], "ts", 5, session_gap=0.6).collect()
     }
     assert got == want
 
@@ -309,7 +347,7 @@ def test_timesplit_subsecond_timestamps(spark):
     }
     got = {
         (r.user_id, r.ts): r.value_lag1
-        for r in lag1_timesplit(df, ["user_id"], "ts", "value", bucket_seconds=5).collect()
+        for r in timesplit_windows(df, ["user_id"], "ts", 5, lag1=("value",)).collect()
     }
     assert got == want
 
@@ -319,6 +357,6 @@ def test_timesplit_subsecond_timestamps(spark):
     }
     got = {
         (r.user_id, r.ts): r.value_ffill
-        for r in ffill_timesplit(df, ["user_id"], "ts", "value", bucket_seconds=5).collect()
+        for r in timesplit_windows(df, ["user_id"], "ts", 5, ffill=("value",)).collect()
     }
     assert got == want
