@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 
 from pliers_spark.operators.census import census_collect
 
+# The audited driver-side bound on one query batch that _adc_scores and
+# exact_l2_topk fetch and broadcast (the corpus is never collected): a
+# larger query set raises CensusBoundExceeded — split it into batches.
+MAX_QUERY_ROWS = 1_000_000
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, z: acc + z)
@@ -693,7 +698,7 @@ def _adc_scores(
     subdim = cb.shape[2]
     qrows = census_collect(
         queries.select(q_id_col, vec_col).orderBy(q_id_col),
-        1_000_000, "broadcast query-set fetch (bounded query batch, never the corpus)",
+        MAX_QUERY_ROWS, "broadcast query-set fetch (bounded query batch, never the corpus)",
     )
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     qu = _scale_u(np.asarray([r[1] for r in qrows], dtype=np.float64))
@@ -949,7 +954,7 @@ def exact_l2_topk(
     one corpus pass, rank window on q_id."""
     qrows = census_collect(
         queries.select(q_id_col, vec_col).orderBy(q_id_col),
-        1_000_000, "broadcast query-set fetch (bounded query batch, never the corpus)",
+        MAX_QUERY_ROWS, "broadcast query-set fetch (bounded query batch, never the corpus)",
     )
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     qu = _scale_u(np.asarray([r[1] for r in qrows], dtype=np.float64))

@@ -13,13 +13,19 @@ pages/sec at two parallelism levels. Every stage is shuffle-accounted:
 3. as-of join: ONE shuffle of the (small) spine + the already
    url-partitioned features (union+window strategy).
 
+When the heavy-hitter census finds a hot url, the skew path replaces
+stages 2 and 3: the time-bucket split operators resolve sessions, lags
+and the as-of match on the pruned ``(url, warc_ts)`` skeleton, and the
+features attach with one join on keys unique per row. Both paths run
+the extraction once.
+
 The ``html`` binary column is never referenced — column pruning keeps
 it out of the scan entirely (asserted in tests/test_plans.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import text as T
@@ -27,6 +33,7 @@ from .operators import temporal as TP
 from .operators.asof import asof_join
 
 SESSION_GAP_DAYS = 30.0
+_SKEW_BUCKET_S = 90 * 86400  # ~1 quarter per task for the hottest domain
 
 _FEATURE_SCHEMA = (
     "text_length int, n_tokens int, n_unique int, stopword_ratio double, "
@@ -196,8 +203,6 @@ def extract_page_features(pages: DataFrame) -> DataFrame:
     split/length arithmetic. Higher-order array lambdas (F.filter /
     F.aggregate) are deliberately absent — they are *interpreted* per
     element (no codegen) and profiled ~50x slower on this exact stage."""
-    from pyspark.sql import Column
-
     lower_text = F.col("_ltext")
 
     def isin_count(words: list[str]) -> Column:
@@ -246,6 +251,12 @@ def extract_page_features(pages: DataFrame) -> DataFrame:
     )
 
 
+def _quality_delta(quality: Column, quality_lag1: Column) -> Column:
+    """Change in quality since the previous snapshot, rounded like the
+    extracted ratios — one expression behind both windowed paths."""
+    return F.round(quality - quality_lag1, 6)
+
+
 def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFrame:
     """Per-url temporal features — one shuffle on url, leakage-safe frames.
 
@@ -253,30 +264,26 @@ def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFra
     ``operators/skew.py::timesplit_windows`` — one time-bucket carry
     pass, so no single task ever owns a hot domain's full history —
     bit-equal output (the operator is oracle-gated, and
-    tests/test_pages_extract.py pins the composition: the skew-safe
-    stage and the auto, plain and forced flagships on a hot url whose
-    sessions and null lags cross bucket boundaries). Use it when the
-    heavy-hitter census (``asof.detect_heavy_hitters``) reports domains
-    above the task-size budget; the plain path is faster when no key is
-    hot.
+    tests/test_pages_extract.py pins the skew-safe stage to the plain
+    one). This is the per-row table; the skew-safe flagship does not
+    call it, it resolves the same session and lag references on the
+    ``(url, warc_ts)`` skeleton instead (:func:`asof_feature_table`).
     """
     gap_s = SESSION_GAP_DAYS * 86400
     if skew_safe:
         from .operators.skew import timesplit_windows
 
-        bucket_s = 90 * 86400  # ~1 quarter per task for the hottest domain
         out = timesplit_windows(
-            feats, ["url"], "warc_ts", bucket_s,
+            feats, ["url"], "warc_ts", _SKEW_BUCKET_S,
             lag1=("text_length", "quality"), session_gap=gap_s,
         )
     else:
         out = TP.sessionize(feats, ["url"], "warc_ts", gap_seconds=gap_s)
         out = TP.lag_features(out, ["url"], "warc_ts", "text_length", [1])
         out = TP.lag_features(out, ["url"], "warc_ts", "quality", [1])
-    out = out.withColumn(
-        "quality_delta", F.round(F.col("quality") - F.col("quality_lag1"), 6)
+    return out.withColumn(
+        "quality_delta", _quality_delta(F.col("quality"), F.col("quality_lag1"))
     )
-    return out
 
 
 def pages_flagship(
@@ -307,15 +314,19 @@ def asof_feature_table(
     """The flagship's back half over already-extracted page features:
     heavy-hitter census → windowed features → leakage gate → weekly
     spine → as-of join. ``pages`` supplies the url/warc_ts columns the
-    census and the spine scan (pruned — they never re-run extraction).
+    census, the spine and the skew path's skeleton scan (pruned — they
+    never re-run extraction).
 
     ``skew_safe=None`` (default) makes the choice data-driven: a
     heavy-hitter census over the url column (one cheap pruned-scan
     aggregate; operators/asof.detect_heavy_hitters) engages the
-    time-bucket-split window operators when any url's snapshot count
-    exceeds ``heavy_hitter_threshold`` — no single task then owns a hot
-    domain's full history. Pass True/False to force either path (the
-    two are bit-equal; pinned by tests/test_pages_extract.py)."""
+    time-bucket-split path when any url's snapshot count exceeds
+    ``heavy_hitter_threshold`` — no single task then owns a hot domain's
+    full history. Pass True/False to force either path (the two are
+    bit-equal; pinned by tests/test_pages_extract.py).
+
+    The plain path windows the extracted rows and as-of joins them; the
+    skew path is :func:`_skew_safe_asof`. Both read ``extracted`` once."""
     if skew_safe is None:
         from .operators.asof import detect_heavy_hitters
 
@@ -324,28 +335,83 @@ def asof_feature_table(
                 pages.select("url"), ["url"], heavy_hitter_threshold
             ).take(1)
         )
-    feats = windowed_page_features(extracted, skew_safe=skew_safe)
+    spine = TP.resample_grid(
+        pages.select("url", "warc_ts"), ["url"], "warc_ts", spine_step_hours * 3600
+    ).withColumnRenamed("warc_ts", "t")
+    if skew_safe:
+        return _skew_safe_asof(pages, extracted, spine)
+    feats = windowed_page_features(extracted)
     # build-time gate: no window frame in the feature plan may read the
     # future (north rule; plans/leakage.py audits the optimized plan)
     from .plans.leakage import assert_leakage_free
 
     assert_leakage_free(feats)
-    spine = TP.resample_grid(
-        pages.select("url", "warc_ts"), ["url"], "warc_ts", spine_step_hours * 3600
-    ).withColumnRenamed("warc_ts", "t")
     value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
-    if skew_safe:
-        # the heavy-hitter census engaged the timesplit WINDOW operator;
-        # the final as-of join must not reintroduce the hot url as one
-        # unsplit sort group — route it through the time-range-split twin
-        # (bit-equal; same boundary-carry contract the window ops use)
-        from .operators.asof import asof_join_split
-
-        return asof_join_split(
-            spine, feats, ["url"], "t", "warc_ts", value_cols,
-            split_seconds=90 * 86400.0,
-        )
     return asof_join(spine, feats, ["url"], "t", "warc_ts", value_cols)
+
+
+def _skew_safe_asof(pages: DataFrame, extracted: DataFrame, spine: DataFrame) -> DataFrame:
+    """The skew path of :func:`asof_feature_table`, with the plain
+    path's columns in the same order and bit-equal values.
+
+    1. skeleton windows: ``timesplit_windows`` over the pruned
+       ``(url, warc_ts)`` scan gives each snapshot its session id and
+       its predecessor's timestamp (``warc_ts_lag1``); the leakage gate
+       audits this frame;
+    2. skeleton match: ``asof_join_split`` gives each spine point its
+       matched snapshot, that snapshot's session id and predecessor;
+    3. demand rows: one explode per spine point into the matched
+       snapshot (role 0) and its predecessor (role 1);
+    4. attach: one right join of ``extracted`` on ``(url, ts)``, then
+       ``groupBy(url, t)`` folds the two roles back into one row.
+
+    Both shuffle keys are unique per row, so no hot url remains as one
+    task, and the extraction runs once. Exactness requires ``warc_ts``
+    unique per url, as the windows do; on a duplicated snapshot the
+    groupBy still returns one row per spine point."""
+    from .operators.asof import asof_join_split
+    from .operators.skew import timesplit_windows
+    from .plans.leakage import assert_leakage_free
+
+    sk = timesplit_windows(
+        pages.select("url", "warc_ts"), ["url"], "warc_ts", _SKEW_BUCKET_S,
+        lag1=("warc_ts",), session_gap=SESSION_GAP_DAYS * 86400,
+    )
+    assert_leakage_free(sk)
+    # the final as-of join must not reintroduce the hot url as one
+    # unsplit sort group: the time-range-split twin (bit-equal; same
+    # boundary-carry contract the window ops use)
+    match = asof_join_split(
+        spine, sk, ["url"], "t", "warc_ts", ["session_id", "warc_ts_lag1"],
+        split_seconds=float(_SKEW_BUCKET_S),
+    )
+    demand = match.select(
+        "url", "t", "session_id", "matched_ts",
+        F.explode(F.array(
+            F.struct(F.col("matched_ts").alias("ts"), F.lit(0).alias("role")),
+            F.struct(F.col("warc_ts_lag1").alias("ts"), F.lit(1).alias("role")),
+        )).alias("_d"),
+    ).select("url", "t", "session_id", "matched_ts", "_d.*")
+    values = [c for c in extracted.columns if c not in ("url", "warc_ts")]
+    role = F.col("role")
+    rows = (
+        extracted.withColumnRenamed("warc_ts", "ts")
+        .join(demand, ["url", "ts"], "right")
+        .groupBy("url", "t")
+        .agg(
+            F.max(F.when(role == 0, F.struct(*values, "session_id", "matched_ts"))).alias("_m"),
+            F.max(F.when(role == 1, F.struct("text_length", "quality"))).alias("_p"),
+        )
+    )
+    return rows.select(
+        "url", "t",
+        *[F.col(f"_m.{c}").alias(c) for c in values],
+        F.col("_m.session_id").alias("session_id"),
+        F.col("_p.text_length").alias("text_length_lag1"),
+        F.col("_p.quality").alias("quality_lag1"),
+        _quality_delta(F.col("_m.quality"), F.col("_p.quality")).alias("quality_delta"),
+        F.col("_m.matched_ts").alias("matched_ts"),
+    )
 
 
 def incremental_page_features(

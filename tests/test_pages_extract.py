@@ -317,6 +317,83 @@ def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
     assert k(plain) == k(safe)
 
 
+def _bits(df):
+    """Rows sorted, doubles as hex so equality is bit-equality."""
+    return sorted(
+        (tuple(v.hex() if isinstance(v, float) else v for v in r) for r in df.collect()),
+        key=repr,
+    )
+
+
+def _assert_skew_flagship_bit_equal(spark, path):
+    """Forced-skew flagship == plain flagship: schema, and rows with
+    doubles compared bit for bit."""
+    from pliers_spark.pages_pipeline import pages_flagship
+
+    plain = pages_flagship(spark, path, skew_safe=False)
+    forced = pages_flagship(spark, path, skew_safe=True)
+    assert forced.schema == plain.schema
+    want, got = _bits(plain), _bits(forced)
+    assert len(want) > 0
+    assert got == want, [(a, b) for a, b in zip(got, want) if a != b][:5]
+    return plain
+
+
+def test_skew_flagship_bit_equal_on_hot_pages(spark, tmp_path):
+    p = str(tmp_path / "hot_pages")
+    _write_hot_pages(spark, p)
+    _assert_skew_flagship_bit_equal(spark, p)
+
+
+def test_skew_flagship_bit_equal_on_adversarial_snapshots(spark, tmp_path):
+    """A hot url whose snapshots cycle through ADVERSARIAL_TEXTS, 8 days
+    apart with one 40-day gap, over four 90-day buckets: null text is
+    both the as-of match of a spine point and a lag predecessor."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    texts = ADVERSARIAL_TEXTS * 3
+    ts = [base + dt.timedelta(days=8 * k + (40 if k >= 20 else 0)) for k in range(len(texts))]
+    rows = [("https://hot.example.com/", t, x, "en") for t, x in zip(ts, texts)]
+    rows += [("https://cold.example.com/", base + dt.timedelta(days=50 * k), "cold page", "en")
+             for k in range(3)]
+    p = str(tmp_path / "adversarial_pages")
+    spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, text string, lang string"
+    ).write.parquet(p)
+    out = _assert_skew_flagship_bit_equal(spark, p).collect()
+    assert any(r.text_length is None for r in out)
+    first = min(r.matched_ts for r in out)  # both urls start at base
+    assert any(r.text_length_lag1 is None and r.matched_ts > first for r in out)
+
+
+def test_flagship_duplicate_snapshot_one_row_per_spine_point(spark, tmp_path):
+    """Hostile input: one (url, warc_ts) snapshot of the hot url appears
+    twice. Both paths still return exactly one row per spine point, on
+    the same (url, t) keys — the skew path's attach join fans the
+    duplicate out, and its groupBy(url, t) must fold it back."""
+    import datetime as dt
+
+    import pyspark.sql.functions as F
+
+    from pliers_spark.pages_pipeline import pages_flagship
+
+    df = _write_hot_pages(spark, str(tmp_path / "hot_pages"))
+    dup = df.where(
+        (F.col("url") == "https://hot.example.com/")
+        & (F.col("warc_ts") == dt.datetime(2024, 3, 20, tzinfo=dt.timezone.utc))
+    ).withColumn("text", F.lit("a duplicated snapshot"))
+    assert dup.count() == 1
+    p = str(tmp_path / "dup_pages")
+    df.unionByName(dup).write.parquet(p)
+    keys = {}
+    for skew in (False, True):
+        got = [(r.url, r.t) for r in pages_flagship(spark, p, skew_safe=skew).collect()]
+        assert len(got) == len(set(got)) > 0, skew
+        keys[skew] = sorted(got)
+    assert keys[False] == keys[True]
+
+
 # ---------------------------------------------------------------------------
 # the documents flagship (entry()): the Arrow stage keyed by doc_id
 
@@ -344,14 +421,7 @@ def _assert_documents_equal(docs):
     """Same schema; ints and strings exact, doubles bit-equal."""
     want, got = _jvm_document_features(docs), extract_document_features(docs)
     assert got.schema == want.schema
-
-    def bits(df):
-        return sorted(
-            (tuple(v.hex() if isinstance(v, float) else v for v in r) for r in df.collect()),
-            key=repr,
-        )
-
-    w, g = bits(want), bits(got)
+    w, g = _bits(want), _bits(got)
     assert len(w) == docs.count() > 0
     assert g == w, [(a, b) for a, b in zip(g, w) if a != b][:5]
 

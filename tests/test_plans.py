@@ -72,6 +72,15 @@ def test_skew_safe_windowed_stage_one_carry_pass(spark, pages):
     assert plan.count("Exchange") == 4, plan
 
 
+def test_skew_safe_flagship_extracts_once(spark, pages_path):
+    """The skew-safe flagship resolves sessions, lags and the as-of
+    match on the (url, warc_ts) skeleton and attaches the features with
+    one join, so the Arrow extraction runs exactly once, as on the
+    plain path."""
+    plan = plan_of(pages_flagship(spark, pages_path, skew_safe=True))
+    assert plan.count("MapInPandas") == 1, plan
+
+
 def test_dictionary_join_is_broadcast(spark):
     from pliers_spark.operators.dictionary import dictionary_lookup
 
@@ -654,6 +663,7 @@ def test_flagship_paths_scale_lint_clean(spark, pages_path):
     from pliers_spark.plans.scale_lint import assert_scale_safe
 
     assert_scale_safe(pages_flagship(spark, pages_path))
+    assert_scale_safe(pages_flagship(spark, pages_path, skew_safe=True))
     assert_scale_safe(E.entry(spark))
 
 

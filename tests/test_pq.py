@@ -148,3 +148,26 @@ def test_exact_l2_topk_matches_numpy_and_recall_is_one_on_self_index(spark):
     # encode is lossless and recall must be 1.0
     rec = pq_recall(df, q, m=8, ksub=15, k=3).collect()
     assert all(r.recall == 1.0 for r in rec), rec
+
+
+def test_query_batch_bound_raises_from_both_fetches(spark, monkeypatch):
+    """The broadcast query fetch of _adc_scores and exact_l2_topk shares
+    one audited bound, similarity.MAX_QUERY_ROWS: a query set above it
+    raises CensusBoundExceeded from both, never a driver-side collect."""
+    import pytest
+
+    from pliers_spark.operators import similarity as S
+    from pliers_spark.operators.census import CensusBoundExceeded
+
+    df = _mk(spark, np.random.RandomState(5).randn(6, 4).round(3).tolist())
+    q = df.where(F.col("vec_id") < 3)
+    monkeypatch.setattr(S, "MAX_QUERY_ROWS", 2)
+    codes = pq_encode(df, m=2, ksub=2)
+    with pytest.raises(CensusBoundExceeded, match="query-set fetch"):
+        S.exact_l2_topk(df, q, k=2)
+    with pytest.raises(CensusBoundExceeded, match="query-set fetch"):
+        S._adc_scores(codes, df, q, "vec_id", "embedding", "vec_id", 2, 2)
+    # at the bound both run
+    q2 = df.where(F.col("vec_id") < 2)
+    assert S.exact_l2_topk(df, q2, k=2).count() == 4
+    assert S._adc_scores(codes, df, q2, "vec_id", "embedding", "vec_id", 2, 2).count() > 0
