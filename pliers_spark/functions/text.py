@@ -66,9 +66,12 @@ def _member_pattern(words: list[str]) -> str:
     """Java-regex pattern matching any whitespace-delimited token from
     ``words``. Each word is \\Q..\\E-quoted; the left separator is consumed
     while the right is a lookahead, so adjacent hits ("the the") both count.
+    The end anchor is ``\\z``: Java's ``$`` also matches before a final
+    line terminator (\\x85, U+2028, U+2029), so it would count the token
+    "the\\x85" as "the".
     """
     alts = "|".join("\\Q" + w + "\\E" for w in words)
-    return r"(?:^|\s)(?:" + alts + r")(?=\s|$)"
+    return r"(?:^|\s)(?:" + alts + r")(?=\s|\z)"
 
 
 def token_membership_count(col: Column | str, words: list[str]) -> Column:
@@ -85,9 +88,11 @@ def token_membership_count(col: Column | str, words: list[str]) -> Column:
 
 def strip_ws(col: Column | str) -> Column:
     """Python ``str.strip()`` parity: remove leading/trailing *whitespace*
-    (Spark's ``trim`` strips only spaces, not \\n/\\t)."""
+    (Spark's ``trim`` strips only spaces, not \\n/\\t). The end anchor is
+    ``\\z``, not ``$``, which in Java also matches before a final line
+    terminator: "a \\x85" keeps its inner space."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.regexp_replace(c, r"^\s+", ""), r"\s+$", "")
+    return F.regexp_replace(F.regexp_replace(c, r"^\s+", ""), r"\s+\z", "")
 
 
 def text_length(col: Column | str) -> Column:

@@ -25,6 +25,8 @@ it out of the scan entirely (asserted in tests/test_plans.py).
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,79 +62,74 @@ def extract_document_features(docs: DataFrame) -> DataFrame:
 
 def _extract_features(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
     """The six features as ONE vectorized Arrow stage (partition-parallel
-    pandas over Arrow batches, never per-row Python); ``keys`` pass
-    through unchanged.
+    over Arrow batches, never per-row Python); ``keys`` pass through
+    unchanged.
 
     :func:`extract_page_features` is the JVM-expression reference it
     reproduces bit for bit; tests/test_pages_extract.py pins the two
-    together. All per-token work is a single explode + C-level
-    bincounts over per-distinct-word membership masks — no Python row
-    loop. Measured 6.1x faster than the JVM expression stage on 350k
-    synthetic pages at ``local[4]`` (6.5 s vs 40.0 s): JVM string ops
-    (lower/split/regex) run per row there, while here lowering and set
-    membership run once per distinct word."""
+    together. Each batch's text becomes one Arrow ``large_string`` array
+    (int64 offsets: a batch of huge pages cannot overflow them), and
+    every step works on the whole batch:
+
+    - the strip and the split are Arrow kernels whose whitespace is
+      exactly Java's ``\\s``;
+    - ASCII letters and ``\\s`` are single UTF-8 bytes, which never occur
+      inside a multi-byte character, so a byte lookup table summed per
+      row over the offsets gives the JVM's per-character counts;
+    - the token stream is dictionary-encoded, so lowering and set
+      membership run once per distinct word, and the per-row sums and
+      the case-sensitive distinct count are C-level bincount/lexsort."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     stop_set = frozenset(T.ENGLISH_STOPWORDS)
     profiles = [(lang, frozenset(ws)) for lang, ws in T.LANG_PROFILES.items()]
     lang_names = np.array([lang for lang, _ in profiles])
 
-    # JVM-parity constants (r5 review fixes): Java regex \s is the ASCII
-    # class [ \t\n\x0b\f\r] (NOT Unicode whitespace — pandas' bare
-    # .str.split()/.str.strip() would treat \xa0 etc. as separators and
-    # silently diverge from the codegen path on real crawl text), and
-    # F.round is HALF_UP while np.round is banker's (half-to-even) — a
-    # dyadic half-tie like 1/128 rounds differently. One rule: the JVM
-    # expression path defines the feature semantics; this stage
-    # reproduces it bit-for-bit (pinned by tests/test_pages_extract.py's
-    # adversarial equality sweep).
+    # JVM-parity rules: Java regex \s is the ASCII class [ \t\n\x0b\f\r]
+    # (NOT Unicode whitespace: NBSP, \x1c-\x1f, \x85 and the U+2000
+    # block stay inside a token), which is what utf8_trim(_WS) strips and
+    # ascii_split_whitespace splits on; and F.round is HALF_UP while
+    # np.round is banker's (half-to-even) — a dyadic half-tie like 1/128
+    # rounds differently. The JVM expression path defines the feature
+    # semantics; tests/test_pages_extract.py's adversarial sweeps pin it.
     _WS = " \t\n\x0b\f\r"
-    _SPLIT_RE = "[" + _WS + "]+"
-    _NONWS_RE = "[^" + _WS + "]"
-    # every char Python str.split() treats as whitespace but Java \s does
-    # not (NBSP, \x1c-\x1f, \x85, the U+2000 block, ...): rows free of
-    # these are split with the C fast path; only flagged rows pay the
-    # regex split that reproduces Java semantics exactly
-    _EXTRA_WS = "".join(
-        chr(c) for c in range(0x10000)
-        if chr(c).isspace() and chr(c) not in _WS
-    )
-    _EXTRA_WS_RE = "[" + _EXTRA_WS + "]"
+    is_alpha = np.zeros(256, dtype=np.uint8)
+    is_alpha[[ord(c) for c in string.ascii_letters]] = 1
+    is_ws = np.zeros(256, dtype=np.uint8)
+    is_ws[[ord(c) for c in _WS]] = 1
 
     def _round6_half_up(x):
         return np.floor(x * 1e6 + 0.5) / 1e6  # non-negative inputs only
 
+    def _byte_class_count(a, table):
+        """Per-row count of the bytes ``table`` marks in ``a``, a
+        ``large_string`` array fresh from ``pa.array`` (offset 0)."""
+        _, off, data = a.buffers()
+        off = np.frombuffer(off, dtype=np.int64)[: len(a) + 1]
+        # a 0 sentinel byte makes every start offset a valid index, also
+        # that of an empty or null last row
+        hits = np.append(table[np.frombuffer(data, dtype=np.uint8)[: off[-1]]], np.uint8(0))
+        n = np.add.reduceat(hits, off[:-1], dtype=np.int64)
+        n[off[1:] == off[:-1]] = 0  # reduceat gives hits[start] for an empty row
+        return n
+
     def batches(it):
         for pdf in it:
-            s = pdf["text"]
-            idx = np.arange(len(pdf))
-            s.index = idx
-            null_mask = s.isna().values
-            # str.strip(chars) is the C fast path for the exact ASCII
-            # class — no regex pass needed for the strip
-            stripped = s.str.strip(_WS)
-            extra = stripped.str.contains(_EXTRA_WS_RE, regex=True, na=False)
-            tokens = stripped.str.split()  # C fast path (Unicode ws)
-            if extra.values.any():
-                # rows with non-ASCII whitespace re-split under the exact
-                # Java \s class (e.g. NBSP stays INSIDE its token there)
-                tokens = tokens.copy()
-                tokens[extra] = stripped[extra].str.split(_SPLIT_RE, regex=True)
-            ex = tokens.explode()
-            empty_any = (stripped.values == "").any()
-            if null_mask.any() or empty_any or extra.values.any():
-                ex = ex.dropna()
-                ex = ex[ex != ""]  # regex split of '' yields [''] — not a token
-            # factorize the token stream: lowering and set membership run
-            # once per VOCABULARY entry (Heaps-bounded), then fan back out
-            # by integer code — measured ~2x over per-token str ops; the
-            # per-row sums and the CASE-SENSITIVE distinct count (JVM
-            # array_distinct semantics) are C-level bincount/lexsort
-            codes, uniq = pd.factorize(ex.values)
-            uniq_low = pd.Index(uniq).str.lower()
-            ii = ex.index.values.astype("int64")
-            nrow = len(pdf)
+            a = pa.array(pdf["text"], type=pa.large_string(), from_pandas=True)
+            nrow = len(a)
+            null_mask = a.is_null().to_numpy(zero_copy_only=False)
+            stripped = pc.utf8_trim(a, _WS)
+            text_length = pc.utf8_length(stripped).fill_null(0).to_numpy()
+            tokens = pc.ascii_split_whitespace(stripped)
+            ii = pc.list_parent_indices(tokens).to_numpy()
+            words = pc.dictionary_encode(tokens.flatten())
+            # an empty stripped row splits to [''] — not a token
+            keep = text_length[ii] > 0
+            codes, ii = words.indices.to_numpy()[keep], ii[keep]
+            uniq_low = pd.Index(words.dictionary.to_pandas()).str.lower()
 
             def _row_hits(member_u):
                 sel = np.asarray(member_u)[codes]
@@ -145,12 +142,12 @@ def _extract_features(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
             first = np.ones(len(o), dtype=bool)
             first[1:] = (i2[1:] != i2[:-1]) | (c2[1:] != c2[:-1])
             n_unique = np.bincount(i2[first], minlength=nrow)
-            n_tokens = tokens.str.len().fillna(0).astype("int64").values
-            n_tokens = np.where(stripped.fillna("").values == "", 0, n_tokens)
+            n_tokens = np.bincount(ii, minlength=nrow)
             denom = np.maximum(n_tokens, 1)
             sw_ratio = sw_hits / denom
-            alpha = (s.str.count(r"[A-Za-z]") / np.maximum(s.str.len(), 1)).values
-            mtl = s.str.count(_NONWS_RE).values / denom
+            n_chars = pc.utf8_length(a).fill_null(0).to_numpy()
+            alpha = _byte_class_count(a, is_alpha) / np.maximum(n_chars, 1)
+            mtl = (n_chars - _byte_class_count(a, is_ws)) / denom
             quality = _round6_half_up(
                 0.25 * np.minimum(n_tokens / 50.0, 1.0)
                 + 0.25 * alpha
@@ -164,7 +161,6 @@ def _extract_features(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
             # null text -> null features (JVM null propagation); argmax
             # over all-NaN rows picks index 0 = the JVM when-chain's
             # first-profile fallback, so lang_pred needs no masking
-            text_length = stripped.str.len().values
             if null_mask.any():
                 out_int = lambda v: pd.array(
                     np.where(null_mask, np.nan, np.asarray(v, dtype="float64")),

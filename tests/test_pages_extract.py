@@ -9,6 +9,8 @@ sf0.001/sf0.01 documents tables and adversarial text.
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from pliers_spark.pages_pipeline import (
     extract_document_features,
@@ -53,6 +55,8 @@ def test_arrow_extract_handles_empty_and_whitespace_text(spark):
             ("u1", "2024-01-01 00:00:00", "", "en"),
             ("u2", "2024-01-01 00:00:00", "   \n\t ", "en"),
             ("u3", "2024-01-01 00:00:00", "the the the", "en"),
+            # one row per partition here: a batch whose text is all null
+            ("u4", "2024-01-01 00:00:00", None, "en"),
         ],
         "url string, warc_ts string, text string, lang string",
     ).selectExpr("url", "cast(warc_ts as timestamp) warc_ts", "text", "lang")
@@ -257,7 +261,39 @@ ADVERSARIAL_TEXTS = [
     "the and of in to",             # all stopwords
     # \x1c-\x1f split a Python str but not a Java \s token
     "the\x1ccat\x1dsat \x1eon\x1f the mat", "\x1c\x1d", " \u2003The\u2003cat ",
+    # non-ASCII, astral and fullwidth letters are multi-byte UTF-8: the
+    # byte-class counts must see none of them as [A-Za-z] or \s
+    "café Ünïcödé", "日本語", "\U0001f600 \U0001d400x", "ＡＢＣ ａｂｃ the",
+    "wo\x85rd",
+    # a trailing line terminator is no Java `$`: the last token is
+    # "the\x85", not the stopword "the", and the strip keeps the space
+    "a the\x85", "a \x85",
+    # mean token length 1.5; counting any one \s char as non-whitespace
+    # makes it 2.0 and flips quality's length term
+    "a \t\n\x0b\f\rab",
+    "The\tquick brown\xa0fox and the lazy dog " * 140,   # 5,180 chars
+    # a letter-final row, then empty and null last rows: a batch's last
+    # byte still counts when the rows after it are empty
+    "Привет мир the", "", None,
 ]
+
+
+def _jvm_and_arrow_features(spark, texts):
+    """The six features of ``texts`` (url ``u00``, ``u01``, ...) from the
+    JVM reference and from the Arrow stage, each as url -> tuple."""
+    import datetime as dt
+
+    rows = [(f"u{i:02d}", dt.datetime(2024, 1, 1), "en", t)
+            for i, t in enumerate(texts)]
+    df = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, lang string, text string"
+    )
+    cols = ["text_length", "n_tokens", "n_unique",
+            "stopword_ratio", "quality", "lang_pred"]
+    return tuple(
+        {r["url"]: tuple(r[c] for c in cols) for r in stage(df).collect()}
+        for stage in (extract_page_features, extract_page_features_arrow)
+    )
 
 
 def test_arrow_extract_matches_jvm_on_adversarial_text(spark):
@@ -267,24 +303,36 @@ def test_arrow_extract_matches_jvm_on_adversarial_text(spark):
     case-sensitive), Unicode whitespace like NBSP (Java \\s is ASCII —
     \\xa0 is NOT a separator), exact half-tie ratios (HALF_UP, not
     banker's rounding), and vertical-tab/edge whitespace."""
-    import datetime as dt
-
-    rows = [(f"u{i:02d}", dt.datetime(2024, 1, 1), "en", t)
-            for i, t in enumerate(ADVERSARIAL_TEXTS)]
-    df = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, lang string, text string"
-    )
-    cols = ["text_length", "n_tokens", "n_unique",
-            "stopword_ratio", "quality", "lang_pred"]
-    jvm = {r["url"]: tuple(r[c] for c in cols)
-           for r in extract_page_features(df).collect()}
-    arr = {r["url"]: tuple(r[c] for c in cols)
-           for r in extract_page_features_arrow(df).collect()}
+    jvm, arr = _jvm_and_arrow_features(spark, ADVERSARIAL_TEXTS)
     assert jvm == arr
     # the half-tie row rounds HALF_UP on both sides
     assert jvm["u06"][3] == 0.007813
     # null text: null features, first-profile lang fallback — both paths
     assert jvm["u00"][:5] == (None,) * 5
+
+
+# Java \s, the non-ASCII whitespace Python's str.split() knows but Java
+# does not, ASCII and accented letters, CJK and one astral character
+_HOSTILE_CHARS = " \t\n\x0b\f\r\xa0\u2003\x1c\x1d\x1e\x1f\x85aZzéÜ日本\U0001d400"
+
+
+_hostile_piece = st.one_of(
+    st.text(_HOSTILE_CHARS, max_size=6),
+    st.sampled_from(["the", "The", "and", "de", "的"]),
+)
+_hostile_text = st.one_of(
+    st.none(), st.just(""), st.lists(_hostile_piece, max_size=8).map("".join)
+)
+
+
+@settings(max_examples=25, deadline=None, database=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(texts=st.lists(_hostile_text, min_size=40, max_size=60))
+def test_arrow_extract_matches_jvm_on_generated_hostile_text(spark, texts):
+    """Generated lists of hostile texts, null and empty rows anywhere in
+    them: the Arrow stage equals the JVM reference on every row."""
+    jvm, arr = _jvm_and_arrow_features(spark, texts)
+    assert jvm == arr
 
 
 def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
