@@ -27,10 +27,11 @@ sort-merge continuity.
 For skewed *windows* (a hot entity's whole timeline in one task) the
 timeline is split into time buckets, partitioned by (entity, bucket):
 
-- ``timesplit_windows`` — lag-1, forward fill and gap sessionization,
-  any mix of them, in ONE scan decomposition: a Window pass inside each
-  bucket, one row per bucket carrying its tail, a Window over that
-  small frame for every carry, one join back;
+- ``timesplit_windows`` — lag-1, lag-2, forward fill, the entity's
+  first value and gap sessionization, any mix of them, in ONE scan
+  decomposition: a Window pass inside each bucket, one row per bucket
+  carrying its head and tail, a Window over that small frame for every
+  carry, one join back;
 - ``rolling_timesplit`` — trailing range aggregates, whose frame
   reaches back in time rather than one row, via ghost rows copied into
   the next bucket.
@@ -78,17 +79,21 @@ def timesplit_windows(
     bucket_seconds: int,
     *,
     lag1: Sequence[str] = (),
+    lag2: Sequence[str] = (),
     ffill: Sequence[str] = (),
+    first: Sequence[str] = (),
     session_gap: float | None = None,
 ) -> DataFrame:
-    """Skew-defused lag-1, forward fill and gap sessionization in one
-    carry pass: exactly ``temporal.lag_features(..., [1])``,
-    ``temporal.ffill`` and ``temporal.sessionize`` (same output names:
-    ``{c}_lag1``, ``{c}_ffill``, ``session_id``, appended in that
-    order: session, lags, fills), but with each entity's timeline split
-    into time buckets so no single task owns a hot entity's whole
-    history (SURVEY.md §7.3: "windowed stages need range-splitting by
-    warc_ts with boundary overlap").
+    """Skew-defused lag-1, lag-2, forward fill, entity-first value and
+    gap sessionization in one carry pass: exactly
+    ``temporal.lag_features(..., [1])``, ``temporal.lag_features(...,
+    [2])``, ``temporal.ffill``, ``first(c)`` over the running frame and
+    ``temporal.sessionize`` (output names ``{c}_lag1``, ``{c}_lag2``,
+    ``{c}_ffill``, ``{c}_first``, ``session_id``, appended in the order
+    session, lag-1s, lag-2s, fills, firsts), but with each entity's
+    timeline split into time buckets so no single task owns a hot
+    entity's whole history (SURVEY.md §7.3: "windowed stages need
+    range-splitting by warc_ts with boundary overlap").
 
     Every feature is a prefix scan over the entity's timeline, so one
     two-level scan decomposition serves all of them:
@@ -98,21 +103,27 @@ def timesplit_windows(
        has no in-bucket predecessor, so its flag is left to step 3)
        with their running count;
     2. one ``groupBy(entity, bucket)`` over that output — first ts,
-       a ``max_by`` struct of the last row (its ts, lag values and
-       in-bucket fills = the bucket's last non-null values), and the
-       bucket's in-bucket new-session count. It reuses step 1's
-       partitioning, and its output has ONE row per (entity, bucket);
-    3. one Window over entity on that small frame: the previous
-       non-empty bucket's tail (empty buckets never materialize), the
-       latest non-null value of any earlier bucket, whether the
-       bucket's first row starts a session, and the exclusive prefix
-       sum of session starts (the bucket's session-id offset);
+       a ``min_by`` struct of the first row's values, a ``max_by``
+       struct of the last row (its ts, row number, lag values, its
+       in-bucket lag-1s and in-bucket fills = the bucket's last
+       non-null values), and the bucket's in-bucket new-session count.
+       It reuses step 1's partitioning, and its output has ONE row per
+       (entity, bucket);
+    3. one Window over entity on that small frame: the tails of the
+       previous two non-empty buckets (empty buckets never
+       materialize), the latest non-null value of any earlier bucket,
+       the first bucket's first row, whether the bucket's first row
+       starts a session, and the exclusive prefix sum of session
+       starts (the bucket's session-id offset);
     4. one join back on (entity, bucket): the first row of a bucket
-       takes the carried lag (a null value lagged mid-bucket stays
-       null), a fill is the in-bucket fill or else the carry (it is
-       null exactly on the rows before the bucket's first non-null
-       value), and session_id = offset + first-row start + in-bucket
-       running count.
+       takes the carried lag-1 (a null value lagged mid-bucket stays
+       null); its lag-2 is the previous tail's in-bucket lag-1, or,
+       when that bucket holds one row, the tail two buckets back; the
+       second row's lag-2 is the previous tail's value; a fill is the
+       in-bucket fill or else the carry (it is null exactly on the
+       rows before the bucket's first non-null value); a first value
+       is the carried first row's; and session_id = offset + first-row
+       start + in-bucket running count.
 
     The bucket is ``floor(epoch µs / bucket µs)``, one expression for
     every feature — exact while |µs| < 2^53 (years 1685 to 2255), so a
@@ -134,8 +145,10 @@ def timesplit_windows(
     # 1. inside each bucket
     w_in = Window.partitionBy(*keys).orderBy(ts_col)
     w_run = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lagged = list(dict.fromkeys([*lag1, *lag2]))
     inner = {"_rn": F.row_number().over(w_in)}
-    inner.update({f"_lag_{c}": F.lag(c).over(w_in) for c in lag1})
+    inner.update({f"_lag_{c}": F.lag(c).over(w_in) for c in lagged})
+    inner.update({f"_lag2_{c}": F.lag(c, 2).over(w_in) for c in lag2})
     inner.update({f"_ff_{c}": F.last(c, ignorenulls=True).over(w_run) for c in ffill})
     if sess:  # null on the bucket's first row -> 0; step 3 decides that row
         gap = F.col("_s") - F.lag("_s").over(w_in)
@@ -145,8 +158,11 @@ def timesplit_windows(
         rows = rows.withColumn("_run", F.sum("_new").over(w_run))
 
     # 2. one row per bucket
-    tail = F.struct("_s", *lag1, *[f"_ff_{c}" for c in ffill])
+    depth2 = ["_rn", *[f"_lag_{c}" for c in lag2]] if lag2 else []
+    tail = F.struct("_s", *lagged, *depth2, *[f"_ff_{c}" for c in ffill])
     aggs = [F.min("_s").alias("_first_s"), F.max_by(tail, ts_col).alias("_tail")]
+    if first:
+        aggs.append(F.min_by(F.struct(*first), ts_col).alias("_head"))
     if sess:
         aggs.append(F.sum("_new").alias("_n_new"))
     buckets = rows.groupBy(*keys).agg(*aggs)
@@ -157,6 +173,11 @@ def timesplit_windows(
     carry = buckets.withColumn("_prev", F.lag("_tail").over(w_b)).withColumns(
         {f"_carry_{c}": F.last(f"_tail._ff_{c}", ignorenulls=True).over(w_before) for c in ffill}
     )
+    if lag2:
+        carry = carry.withColumn("_prev2", F.lag("_tail", 2).over(w_b))
+    if first:
+        w_upto = w_b.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        carry = carry.withColumn("_first", F.first("_head").over(w_upto))
     if sess:
         prev_s = F.col("_prev._s")
         starts = prev_s.isNull() | (F.col("_first_s") - prev_s > session_gap)
@@ -165,15 +186,22 @@ def timesplit_windows(
         carry = carry.withColumn("_off", F.coalesce(n_starts, F.lit(0)))
 
     # 4. one join back
-    out = rows.join(carry.drop("_first_s", "_tail", "_n_new"), keys, "left")
+    out = rows.join(carry.drop("_first_s", "_tail", "_head", "_n_new"), keys, "left")
     feats = {}
     if sess:
         feats["session_id"] = (F.col("_off") + F.col("_first_new") + F.col("_run")).cast("long")
-    first = F.col("_rn") == 1
+    rn = F.col("_rn")
     for c in lag1:
-        feats[f"{c}_lag1"] = F.when(first, F.col(f"_prev.{c}")).otherwise(F.col(f"_lag_{c}"))
+        feats[f"{c}_lag1"] = F.when(rn == 1, F.col(f"_prev.{c}")).otherwise(F.col(f"_lag_{c}"))
+    for c in lag2:
+        carried = F.when(F.col("_prev._rn") > 1, F.col(f"_prev._lag_{c}")).otherwise(
+            F.col(f"_prev2.{c}"))
+        feats[f"{c}_lag2"] = (F.when(rn == 1, carried).when(rn == 2, F.col(f"_prev.{c}"))
+                              .otherwise(F.col(f"_lag2_{c}")))
     for c in ffill:
         feats[f"{c}_ffill"] = F.coalesce(F.col(f"_ff_{c}"), F.col(f"_carry_{c}"))
+    for c in first:
+        feats[f"{c}_first"] = F.col(f"_first.{c}")
     return out.withColumns(feats).select(*df.columns, *feats)
 
 

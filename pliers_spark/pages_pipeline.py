@@ -1,8 +1,8 @@
 """The north-rule flagship job over ``pages(url, warc_ts, html, text, lang)``:
 
   scan (html pruned) → per-snapshot feature extraction (one vectorized
-  Arrow stage) → per-url windowed features (sessionize, lag, ffill) →
-  point-in-time as-of join onto a query spine → feature table.
+  Arrow stage) → per-url windowed features (sessionize, lag) →
+  point-in-time as-of features on a weekly spine → feature table.
 
 This is the job the scaling evidence (BENCH/BASELINE.md) measures in
 pages/sec at two parallelism levels. Every stage is shuffle-accounted:
@@ -10,14 +10,17 @@ pages/sec at two parallelism levels. Every stage is shuffle-accounted:
 1. extraction: ZERO shuffles (one narrow ``mapInPandas`` stage);
 2. windowed features: ONE shuffle on url (all window specs share the
    same partitioning, so Catalyst reuses one Exchange);
-3. as-of join: ONE shuffle of the (small) spine + the already
-   url-partitioned features (union+window strategy).
+3. as-of features: ZERO shuffles. The spine is each url's own grid from
+   its first ``warc_ts``, so no spine frame is built and nothing is
+   joined: in the same window pass each snapshot also lags the whole
+   previous row and reads the url's first ``warc_ts``, then one narrow
+   explode emits the spine points the snapshot decides.
 
 When the heavy-hitter census finds a hot url, the skew path replaces
-stages 2 and 3: the time-bucket split operators resolve sessions, lags
-and the as-of match on the pruned ``(url, warc_ts)`` skeleton, and the
-features attach with one join on keys unique per row. Both paths run
-the extraction once.
+stages 2 and 3: one time-bucket carry pass resolves sessions and the
+two predecessors on the pruned ``(url, warc_ts)`` skeleton, the same
+explode emits the spine points, and the features attach with one join
+on keys unique per row. Both paths run the extraction once.
 
 The ``html`` binary column is never referenced — column pruning keeps
 it out of the scan entirely (asserted in tests/test_plans.py).
@@ -27,12 +30,12 @@ from __future__ import annotations
 
 import string
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import text as T
 from .operators import temporal as TP
-from .operators.asof import asof_join
+from .operators._util import epoch_seconds
 
 SESSION_GAP_DAYS = 30.0
 _SKEW_BUCKET_S = 90 * 86400  # ~1 quarter per task for the hottest domain
@@ -261,9 +264,10 @@ def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFra
     pass, so no single task ever owns a hot domain's full history —
     bit-equal output (the operator is oracle-gated, and
     tests/test_pages_extract.py pins the skew-safe stage to the plain
-    one). This is the per-row table; the skew-safe flagship does not
-    call it, it resolves the same session and lag references on the
-    ``(url, warc_ts)`` skeleton instead (:func:`asof_feature_table`).
+    one). This is the per-row table. The plain flagship windows its
+    extracted rows with it; the skew-safe flagship does not call it, it
+    resolves the same session and lag references on the ``(url,
+    warc_ts)`` skeleton instead (:func:`asof_feature_table`).
     """
     gap_s = SESSION_GAP_DAYS * 86400
     if skew_safe:
@@ -308,10 +312,19 @@ def asof_feature_table(
     heavy_hitter_threshold: int = 1_000_000,
 ) -> DataFrame:
     """The flagship's back half over already-extracted page features:
-    heavy-hitter census → windowed features → leakage gate → weekly
-    spine → as-of join. ``pages`` supplies the url/warc_ts columns the
-    census, the spine and the skew path's skeleton scan (pruned — they
+    heavy-hitter census → windowed features → leakage gate → as-of
+    feature table on the weekly spine. ``pages`` supplies the url/warc_ts
+    columns the census and the skew path's skeleton scan (pruned — they
     never re-run extraction).
+
+    The spine is each url's grid t0 + k·step from its first to its last
+    ``warc_ts``, and a spine point takes the latest snapshot at or
+    before it. Neither is built as a frame nor joined: each snapshot
+    emits the grid points it decides (:func:`_owned_points`), so the
+    feature table follows the url's one ordered window pass with a
+    narrow explode. Rows with a null ``warc_ts`` are dropped first: a
+    snapshot with no time has no place on the timeline (the spine grid
+    never counted them either).
 
     ``skew_safe=None`` (default) makes the choice data-driven: a
     heavy-hitter census over the url column (one cheap pruned-scan
@@ -321,8 +334,10 @@ def asof_feature_table(
     full history. Pass True/False to force either path (the two are
     bit-equal; pinned by tests/test_pages_extract.py).
 
-    The plain path windows the extracted rows and as-of joins them; the
-    skew path is :func:`_skew_safe_asof`. Both read ``extracted`` once."""
+    The plain path windows the extracted rows and lags each whole row
+    in the same window, so a point owned by the previous snapshot takes
+    that row as is; the skew path is :func:`_skew_safe_asof`. Both read
+    ``extracted`` once."""
     if skew_safe is None:
         from .operators.asof import detect_heavy_hitters
 
@@ -331,61 +346,114 @@ def asof_feature_table(
                 pages.select("url"), ["url"], heavy_hitter_threshold
             ).take(1)
         )
-    spine = TP.resample_grid(
-        pages.select("url", "warc_ts"), ["url"], "warc_ts", spine_step_hours * 3600
-    ).withColumnRenamed("warc_ts", "t")
+    timed = F.col("warc_ts").isNotNull()
+    pages, extracted = pages.where(timed), extracted.where(timed)
+    step_s = spine_step_hours * 3600
     if skew_safe:
-        return _skew_safe_asof(pages, extracted, spine)
+        return _skew_safe_asof(pages, extracted, step_s)
     feats = windowed_page_features(extracted)
+    value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
+    w = Window.partitionBy("url").orderBy("warc_ts")
+    rows = feats.select(
+        "url", "warc_ts", F.struct(*value_cols, F.col("warc_ts").alias("matched_ts")).alias("_row")
+    ).withColumns({
+        "_prev": F.lag("_row").over(w),
+        "_t0": F.first("warc_ts").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    })
     # build-time gate: no window frame in the feature plan may read the
     # future (north rule; plans/leakage.py audits the optimized plan)
     from .plans.leakage import assert_leakage_free
 
-    assert_leakage_free(feats)
-    value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
-    return asof_join(spine, feats, ["url"], "t", "warc_ts", value_cols)
+    assert_leakage_free(rows)
+    pts = _owned_points(rows, F.col("_prev.matched_ts"), F.col("_t0"), step_s)
+    match = F.when(F.col("_own"), F.col("_row")).otherwise(F.col("_prev"))
+    return pts.select("url", "t", *[match[c].alias(c) for c in [*value_cols, "matched_ts"]])
 
 
-def _skew_safe_asof(pages: DataFrame, extracted: DataFrame, spine: DataFrame) -> DataFrame:
+def _owned_points(rows: DataFrame, prev_ts: Column, t0: Column, step_seconds: int) -> DataFrame:
+    """One output row per spine point, each emitted by the snapshot row
+    that decides it: ``rows`` plus the point ``t`` and ``_own``.
+
+    Over a url's snapshots ts_1 <= ts_2 <= ..., with t0 = ts_1 and
+    S = ``step_seconds``, the spine point t_k = t0 + k·S takes the
+    snapshot i with ts_i <= t_k < ts_{i+1}. Row j, whose predecessor is
+    ``prev_ts`` (null on the url's first row), emits every k with
+    ⌊(ts_{j-1} − t0)/S⌋ < k <= ⌊(ts_j − t0)/S⌋ (from k = 0 on the first
+    row): the points strictly inside (ts_{j-1}, ts_j), which belong to
+    row j−1, and t = ts_j itself when it lies on the grid, which belongs
+    to row j (``_own``). Every point up to the url's last snapshot comes
+    out exactly once; on a duplicated ``(url, warc_ts)`` only the first
+    row of the run emits, since the later ones span an empty interval.
+
+    The bounds are integer µs; ``t`` is ``t0 + k × INTERVAL S
+    SECONDS``, the arithmetic of ``temporal.resample_grid``'s
+    ``sequence``, so it keeps ``warc_ts``'s timestamp type."""
+    step_us = step_seconds * 1_000_000
+
+    def since_t0(ts: Column) -> Column:
+        return F.unix_micros(ts.cast("timestamp_ltz")) - F.unix_micros(t0.cast("timestamp_ltz"))
+
+    lo = F.coalesce(F.expr(f"_a div {step_us}") + 1, F.lit(0))
+    hi = F.expr(f"_b div {step_us}")
+    k = F.col("_k")
+    return (
+        rows.withColumns({"_a": since_t0(prev_ts), "_b": since_t0(F.col("warc_ts"))})
+        .select("*", F.explode(F.when(lo <= hi, F.sequence(lo, hi))).alias("_k"))
+        .withColumns({
+            "t": t0 + F.expr(f"INTERVAL {step_seconds} SECONDS") * k,
+            "_own": k * step_us == F.col("_b"),
+        })
+        .drop("_a", "_b", "_k")
+    )
+
+
+def _skew_safe_asof(pages: DataFrame, extracted: DataFrame, step_seconds: int) -> DataFrame:
     """The skew path of :func:`asof_feature_table`, with the plain
     path's columns in the same order and bit-equal values.
 
-    1. skeleton windows: ``timesplit_windows`` over the pruned
-       ``(url, warc_ts)`` scan gives each snapshot its session id and
-       its predecessor's timestamp (``warc_ts_lag1``); the leakage gate
-       audits this frame;
-    2. skeleton match: ``asof_join_split`` gives each spine point its
-       matched snapshot, that snapshot's session id and predecessor;
+    1. skeleton windows: one ``timesplit_windows`` carry pass over the
+       pruned ``(url, warc_ts)`` scan gives each snapshot its session
+       id, its two predecessors' timestamps and the url's first
+       timestamp; the leakage gate audits this frame;
+    2. skeleton match: each snapshot emits the spine points it decides
+       (:func:`_owned_points`), with the matched snapshot, that
+       snapshot's predecessor and its session id — a point owned by the
+       previous snapshot takes ``session_id`` minus the session start
+       between the two, so no lag of the session id is needed;
     3. demand rows: one explode per spine point into the matched
        snapshot (role 0) and its predecessor (role 1);
     4. attach: one right join of ``extracted`` on ``(url, ts)``, then
        ``groupBy(url, t)`` folds the two roles back into one row.
 
-    Both shuffle keys are unique per row, so no hot url remains as one
-    task, and the extraction runs once. Exactness requires ``warc_ts``
-    unique per url, as the windows do; on a duplicated snapshot the
-    groupBy still returns one row per spine point."""
-    from .operators.asof import asof_join_split
+    Every shuffle is keyed by (url, time bucket) or by keys unique per
+    row, so no hot url remains as one task, and the extraction runs
+    once. Exactness requires ``warc_ts`` unique per url, as the windows
+    do; on a duplicated snapshot the groupBy still returns one row per
+    spine point."""
     from .operators.skew import timesplit_windows
     from .plans.leakage import assert_leakage_free
 
+    gap_s = SESSION_GAP_DAYS * 86400
     sk = timesplit_windows(
         pages.select("url", "warc_ts"), ["url"], "warc_ts", _SKEW_BUCKET_S,
-        lag1=("warc_ts",), session_gap=SESSION_GAP_DAYS * 86400,
+        lag1=("warc_ts",), lag2=("warc_ts",), first=("warc_ts",), session_gap=gap_s,
     )
     assert_leakage_free(sk)
-    # the final as-of join must not reintroduce the hot url as one
-    # unsplit sort group: the time-range-split twin (bit-equal; same
-    # boundary-carry contract the window ops use)
-    match = asof_join_split(
-        spine, sk, ["url"], "t", "warc_ts", ["session_id", "warc_ts_lag1"],
-        split_seconds=float(_SKEW_BUCKET_S),
+    pts = _owned_points(sk, F.col("warc_ts_lag1"), F.col("warc_ts_first"), step_seconds)
+    own = F.col("_own")
+    starts = epoch_seconds(sk, "warc_ts") - epoch_seconds(sk, "warc_ts_lag1") > gap_s
+    match = pts.select(
+        "url", "t",
+        F.when(own, F.col("session_id"))
+        .otherwise(F.col("session_id") - F.when(starts, 1).otherwise(0)).alias("session_id"),
+        F.when(own, F.col("warc_ts")).otherwise(F.col("warc_ts_lag1")).alias("matched_ts"),
+        F.when(own, F.col("warc_ts_lag1")).otherwise(F.col("warc_ts_lag2")).alias("pred_ts"),
     )
     demand = match.select(
         "url", "t", "session_id", "matched_ts",
         F.explode(F.array(
             F.struct(F.col("matched_ts").alias("ts"), F.lit(0).alias("role")),
-            F.struct(F.col("warc_ts_lag1").alias("ts"), F.lit(1).alias("role")),
+            F.struct(F.col("pred_ts").alias("ts"), F.lit(1).alias("role")),
         )).alias("_d"),
     ).select("url", "t", "session_id", "matched_ts", "_d.*")
     values = [c for c in extracted.columns if c not in ("url", "warc_ts")]

@@ -337,12 +337,13 @@ def test_arrow_extract_matches_jvm_on_generated_hostile_text(spark, texts):
 
 def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
     """r5 review fix: when the heavy-hitter census engages the timesplit
-    window operators, the final as-of join must also run in its
-    time-range-split form — the hot url must not come back as one
-    unsplit sort group in the join. Pinned structurally: the skew-safe
-    plan partitions the fill window by (url, chunk), visible as a
-    '_chunk' window partition spec, and the two paths stay bit-equal."""
+    window operators, the as-of resolution must also stay split — the
+    hot url must not come back as one unsplit sort group. Pinned
+    structurally: every per-snapshot Window in the skew-safe plan (one
+    ordered by warc_ts) is partitioned by (url, _tb), the time bucket,
+    and the two paths stay bit-equal."""
     import datetime as dt
+    import re
 
     rows = []
     for d in range(1, 25):
@@ -358,7 +359,13 @@ def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
     df.write.parquet(p)
     plain = pages_flagship(spark, p, skew_safe=False)
     safe = pages_flagship(spark, p, skew_safe=True)
-    assert "_chunk" in safe._jdf.queryExecution().optimizedPlan().toString()
+    plan = safe._jdf.queryExecution().optimizedPlan().toString()
+    # "Window [exprs], [partition spec], [order spec]"
+    specs = re.findall(r"Window \[.*\], \[([^\[\]]*)\], \[([^\[\]]*)\]$", plan, re.M)
+    per_snapshot = [part for part, order in specs if order.startswith("warc_ts#")]
+    assert per_snapshot, plan
+    for part in per_snapshot:
+        assert re.fullmatch(r"url#\d+, _tb#\d+L", part), (part, plan)
     k = lambda df_: sorted(
         tuple(str(r[c]) for c in sorted(df_.columns)) for r in df_.collect()
     )
@@ -442,6 +449,89 @@ def test_flagship_duplicate_snapshot_one_row_per_spine_point(spark, tmp_path):
     assert keys[False] == keys[True]
 
 
+def test_flagship_drops_snapshots_without_time(spark, tmp_path):
+    """A row with a null warc_ts has no place on the timeline: both
+    paths drop it before the windows, so url u's first real snapshot
+    opens session 1 with null lags, and url v, whose only row has no
+    time, emits no rows."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = [("u", base + dt.timedelta(days=d), f"page u day {d}", "en") for d in (0, 3, 20)]
+    rows += [("u", None, "a snapshot with no time", "en"), ("v", None, "no time", "en")]
+    p = str(tmp_path / "untimed_pages")
+    spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, text string, lang string"
+    ).write.parquet(p)
+    out = _assert_skew_flagship_bit_equal(spark, p).collect()
+    assert {r.url for r in out} == {"u"} and len(out) == 3
+    first = min(out, key=lambda r: r.t)
+    assert first.session_id == 1 and first.text_length_lag1 is None
+    assert first.quality_lag1 is None and first.matched_ts == first.t
+
+
+_STEP_S = 10
+_US = 1_000_000
+# one snapshot gap: zero (a duplicate), whole steps (every snapshot then
+# sits on a grid instant), 1 µs off one, less than a step, or many
+# steps, in µs
+_gap = st.one_of(
+    st.just(0),
+    st.integers(1, 4).map(lambda k: k * _STEP_S * _US),
+    st.sampled_from([1, _STEP_S * _US - 1, _STEP_S * _US + 1]),
+    st.integers(1, _STEP_S * _US - 1),
+    st.integers(_STEP_S * _US, 40 * _STEP_S * _US),
+)
+
+
+@settings(max_examples=25, deadline=None, database=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(
+    timelines=st.lists(
+        st.tuples(st.integers(-3 * 86400 * _US, 3 * 86400 * _US),
+                  st.lists(_gap, max_size=12)),
+        min_size=1, max_size=4,
+    ),
+    ts_type=st.sampled_from(["timestamp", "timestamp_ntz"]),
+)
+def test_owned_points_equal_spine_asof(spark, timelines, ts_type):
+    """Each snapshot emitting the grid points it decides gives exactly
+    the weekly-spine-plus-as-of result, ``(url, t, matched_ts)`` row for
+    row: generated timelines around 1970 (so before it too) at µs
+    precision, single-snapshot urls, duplicates, snapshots on grid
+    instants, and gaps below and far above one step, with ``warc_ts``
+    typed ``timestamp`` or ``timestamp_ntz``."""
+    import itertools
+
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from pliers_spark.operators.asof import asof_join
+    from pliers_spark.operators.temporal import resample_grid
+    from pliers_spark.pages_pipeline import _owned_points
+
+    rows = [(f"u{i}", us) for i, (start, gaps) in enumerate(timelines)
+            for us in itertools.accumulate(gaps, initial=start)]
+    df = spark.createDataFrame(rows, "url string, us long").select(
+        "url", F.timestamp_micros("us").cast(ts_type).alias("warc_ts"))
+
+    spine = resample_grid(df, ["url"], "warc_ts", _STEP_S).withColumnRenamed("warc_ts", "t")
+    want = asof_join(spine, df, ["url"], "t", "warc_ts", [])
+
+    w = Window.partitionBy("url").orderBy("warc_ts")
+    snaps = df.withColumns({
+        "_prev": F.lag("warc_ts").over(w),
+        "_t0": F.first("warc_ts").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    })
+    got = _owned_points(snaps, F.col("_prev"), F.col("_t0"), _STEP_S).select(
+        "url", "t", F.when(F.col("_own"), F.col("warc_ts")).otherwise(F.col("_prev"))
+        .alias("matched_ts"))
+
+    assert got.schema["t"].dataType == df.schema["warc_ts"].dataType
+    key = lambda out: sorted(tuple(r) for r in out.select("url", "t", "matched_ts").collect())
+    assert key(got) == key(want)
+
+
 # ---------------------------------------------------------------------------
 # the documents flagship (entry()): the Arrow stage keyed by doc_id
 
@@ -496,12 +586,13 @@ def test_document_features_match_jvm_on_sf_documents(spark, sf):
 def test_submit_job_checkpoint_equals_flagship(spark, tmp_path, monkeypatch):
     """The --checkpoint composition equals pages_flagship row for row on a
     hot-url table, and runs the same back half: the census engages the
-    split path (asof_join_split) and the leakage gate audits the plan."""
+    split path (timesplit_windows) and the leakage gate audits the plan."""
     import functools
     import os
 
     import pliers_spark.pages_pipeline as PP
     from pliers_spark.operators import asof as asof_mod
+    from pliers_spark.operators import skew as skew_mod
     from pliers_spark.plans import leakage
 
     monkeypatch.syspath_prepend(os.path.join(os.path.dirname(__file__), "..", "tools"))
@@ -527,7 +618,7 @@ def test_submit_job_checkpoint_equals_flagship(spark, tmp_path, monkeypatch):
     # the 200-snapshot url counts as hot
     monkeypatch.setattr(PP, "asof_feature_table", functools.partial(
         PP.asof_feature_table, heavy_hitter_threshold=50))
-    for mod, name in [(asof_mod, "detect_heavy_hitters"), (asof_mod, "asof_join_split"),
+    for mod, name in [(asof_mod, "detect_heavy_hitters"), (skew_mod, "timesplit_windows"),
                       (leakage, "assert_leakage_free")]:
         monkeypatch.setattr(mod, name, spy(name, getattr(mod, name)))
 
@@ -535,5 +626,5 @@ def test_submit_job_checkpoint_equals_flagship(spark, tmp_path, monkeypatch):
         ["--input", p, "--output", str(tmp_path / "features"),
          "--checkpoint", "--num-buckets", "4"])
     got = submit_job.checkpointed_flagship(spark, p, args)
-    assert calls == ["detect_heavy_hitters", "assert_leakage_free", "asof_join_split"]
+    assert calls == ["detect_heavy_hitters", "timesplit_windows", "assert_leakage_free"]
     assert rows_of(got) == want and len(want) > 0

@@ -72,6 +72,18 @@ def test_skew_safe_windowed_stage_one_carry_pass(spark, pages):
     assert plan.count("Exchange") == 4, plan
 
 
+def test_plain_flagship_one_shuffle_no_join(spark, pages_path):
+    """The plain flagship builds no spine and runs no as-of join: each
+    snapshot emits the spine points it decides in a narrow explode after
+    the url's one window pass. One scan, one Arrow stage, one
+    hashpartitioning Exchange on url, no Join operator."""
+    plan = plan_of(pages_flagship(spark, pages_path, skew_safe=False))
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange") == plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Join" not in plan, plan
+
+
 def test_skew_safe_flagship_extracts_once(spark, pages_path):
     """The skew-safe flagship resolves sessions, lags and the as-of
     match on the (url, warc_ts) skeleton and attaches the features with

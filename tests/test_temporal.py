@@ -267,6 +267,62 @@ def test_timesplit_windows_all_features_in_one_call(spark):
     assert max(v[4] for v in got.values()) == 10  # each jump opens a session
 
 
+def test_timesplit_windows_lag2_and_first_equal_plain(spark):
+    """Lag-2 and the entity's first value from one timesplit_windows
+    call equal ``F.lag(c, 2)`` and a running ``first(c)``: a bucket
+    holding one row (the next bucket's first row takes its lag-2 from
+    two buckets back), runs of empty buckets, null values (also on the
+    entity's first row, on a single-row bucket and on a bucket's last
+    row), rows on a bucket's start instant and sub-second timestamps."""
+    import datetime as dt
+    import random
+
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from pliers_spark.operators.skew import timesplit_windows
+
+    base = dt.datetime(2024, 1, 1)  # a 5 s bucket's start instant
+    rnd = random.Random(7)
+    rows = []
+    # ms offsets: buckets 0 (four rows), 1 (one row, on its start
+    # instant), 4 and 5 (one row each, after two empty buckets), 6, ...
+    fixed = [0, 250, 1250.5, 4999.999, 5000, 21000, 26000.001, 30000, 30250, 31000]
+    for uid, offsets in [("hot", fixed), ("cold", [3, 9000, 9000.25])]:
+        for k, ms in enumerate(offsets):
+            v = None if (uid, k) in {("hot", 5), ("hot", 3), ("cold", 0)} else float(k)
+            rows.append((uid, base + dt.timedelta(milliseconds=ms), v))
+    t = base + dt.timedelta(seconds=40)
+    for k in range(300):  # gaps from 1 ms to 12 s: dense, single-row and empty buckets
+        t += dt.timedelta(microseconds=rnd.choice([1_000, 250_000, 4_000_000, 12_000_000])
+                          + rnd.randrange(1000))
+        rows.append(("hot", t, None if k % 7 == 3 else float(k)))
+    df = spark.createDataFrame(rows, "user_id string, ts timestamp, v double")
+
+    w = Window.partitionBy("user_id").orderBy("ts")
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    plain = df.withColumns({
+        "v_lag1": F.lag("v").over(w),
+        "v_lag2": F.lag("v", 2).over(w),
+        "ts_lag2": F.lag("ts", 2).over(w),
+        "v_first": F.first("v").over(w_run),
+        "ts_first": F.first("ts").over(w_run),
+    })
+    split = timesplit_windows(
+        df, ["user_id"], "ts", 5, lag1=("v",), lag2=("v", "ts"), first=("v", "ts")
+    )
+    assert split.columns == plain.columns
+    by_key = lambda out: {(r.user_id, r.ts): tuple(r) for r in out.collect()}
+    got, want = by_key(split), by_key(plain)
+    assert got == want and len(got) == len(rows)
+    # 26.000001 s opens bucket 5 after the one-row buckets 4 (21 s, null)
+    # and 1 (5 s, two empty buckets earlier): its lag-2 is the 5 s row
+    hot = got[("hot", base + dt.timedelta(milliseconds=26000.001))]
+    assert hot[4:6] == (4.0, base + dt.timedelta(seconds=5))
+    assert {v[6:] for k, v in got.items() if k[0] == "cold"} == {
+        (None, base + dt.timedelta(milliseconds=3))}
+
+
 def test_rolling_timesplit_equals_plain(spark):
     import datetime as dt
 

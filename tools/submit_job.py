@@ -19,7 +19,7 @@ Arrow). With ``--checkpoint`` the extraction stage runs through the
 resumable per-partition manifest (plans/checkpoint.py): re-running the
 same command after a failure skips completed url-hash buckets. Either
 way the rest of the job is ``pages_pipeline.asof_feature_table``, the
-flagship's own back half (census, windows, leakage gate, spine, as-of).
+flagship's own back half (census, windows, leakage gate, as-of spine points).
 """
 
 from __future__ import annotations
