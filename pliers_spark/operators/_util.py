@@ -11,17 +11,28 @@ def is_timestamp(df: DataFrame, col: str) -> bool:
     return isinstance(df.schema[col].dataType, (TimestampType, TimestampNTZType))
 
 
+def ts_micros(col: Column, dtype) -> Column:
+    """Exact integer epoch microseconds of a timestamp column, whatever
+    the session time zone: a ``timestamp`` is an instant already, and a
+    ``timestamp_ntz`` wall-clock value is read as UTC. Casting the NTZ
+    value to ``timestamp_ltz`` instead would read it in the session
+    zone, so every difference across a DST change would be off by an
+    hour."""
+    if isinstance(dtype, TimestampNTZType):
+        return F.timestamp_diff("MICROSECOND", F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'"), col)
+    return F.unix_micros(col)
+
+
 def epoch_micros(df: DataFrame, col: str) -> Column:
-    """Exact integer microseconds for timestamps (NTZ interpreted as UTC —
-    sessions pin spark.sql.session.timeZone=UTC); pass-through µs scaling
-    for numeric columns."""
+    """Exact integer microseconds for timestamps (:func:`ts_micros`);
+    pass-through µs scaling for numeric columns."""
     if is_timestamp(df, col):
-        return F.unix_micros(F.col(col).cast("timestamp_ltz"))
+        return ts_micros(F.col(col), df.schema[col].dataType)
     return (F.col(col).cast("double") * F.lit(1_000_000.0)).cast("long")
 
 
 def epoch_seconds(df: DataFrame, col: str) -> Column:
     """Epoch seconds as double (µs-precise)."""
     if is_timestamp(df, col):
-        return F.unix_micros(F.col(col).cast("timestamp_ltz")) / F.lit(1_000_000.0)
+        return epoch_micros(df, col) / F.lit(1_000_000.0)
     return F.col(col).cast("double")

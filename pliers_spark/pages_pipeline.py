@@ -7,7 +7,8 @@
 This is the job the scaling evidence (BENCH/BASELINE.md) measures in
 pages/sec at two parallelism levels. Every stage is shuffle-accounted:
 
-1. extraction: ZERO shuffles (one narrow ``mapInPandas`` stage);
+1. extraction: ZERO shuffles (one narrow ``mapInArrow`` stage: Arrow
+   record batches in and out, no pandas frame on either side);
 2. windowed features: ONE shuffle on url (all window specs share the
    same partitioning, so Catalyst reuses one Exchange);
 3. as-of features: ZERO shuffles. The spine is each url's own grid from
@@ -29,13 +30,16 @@ it out of the scan entirely (asserted in tests/test_plans.py).
 from __future__ import annotations
 
 import string
+import sys
 
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import text as T
 from .operators import temporal as TP
-from .operators._util import epoch_seconds
+from .operators._util import epoch_seconds, ts_micros
 
 SESSION_GAP_DAYS = 30.0
 _SKEW_BUCKET_S = 90 * 86400  # ~1 quarter per task for the hottest domain
@@ -64,130 +68,169 @@ def extract_document_features(docs: DataFrame) -> DataFrame:
 
 
 def _extract_features(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
-    """The six features as ONE vectorized Arrow stage (partition-parallel
-    over Arrow batches, never per-row Python); ``keys`` pass through
-    unchanged.
+    """The six features as ONE vectorized ``mapInArrow`` stage
+    (partition-parallel over Arrow record batches, never per-row Python
+    and no pandas frame on either side of the boundary); ``keys`` pass
+    through as the batch's own Arrow arrays. :func:`_feature_batch` is
+    the per-batch body.
 
     :func:`extract_page_features` is the JVM-expression reference it
     reproduces bit for bit; tests/test_pages_extract.py pins the two
-    together. Each batch's text becomes one Arrow ``large_string`` array
-    (int64 offsets: a batch of huge pages cannot overflow them), and
-    every step works on the whole batch:
+    together."""
+    key_schema = ", ".join(f"{k} {df.schema[k].dataType.simpleString()}" for k in keys)
+    return df.select(*keys, "text").mapInArrow(
+        lambda batches: _feature_batches(batches, keys),
+        schema=f"{key_schema}, {_FEATURE_SCHEMA}",
+    )
+
+
+# Java regex \s is the ASCII class [ \t\n\x0b\f\r] (NOT Unicode
+# whitespace: NBSP, \x1c-\x1f, \x85 and the U+2000 block stay inside a
+# token), which is what utf8_trim(_WS) strips and ascii_split_whitespace
+# splits on.
+_WS = " \t\n\x0b\f\r"
+_STOPWORDS = frozenset(T.ENGLISH_STOPWORDS)
+_PROFILES = [(lang, frozenset(ws)) for lang, ws in T.LANG_PROFILES.items()]
+
+
+def _byte_table(chars: str) -> np.ndarray:
+    table = np.zeros(256, dtype=np.uint8)
+    table[[ord(c) for c in chars]] = 1
+    return table
+
+
+_IS_ALPHA = _byte_table(string.ascii_letters)
+_IS_WS = _byte_table(_WS)
+
+# Spark's cloudpickle ships this module's functions (the stage's batch
+# body) by value, so Python workers run them without importing this
+# package; only numpy, pandas and pyarrow must be installed there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _feature_batches(batches, keys: tuple[str, ...]):
+    """The stage's function: :func:`_feature_batch` over one task's
+    record batches."""
+    _keep_archive_listings()
+    for rb in batches:
+        yield _feature_batch(rb, keys)
+
+
+def _keep_archive_listings():
+    """The Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, and on CPython 3.11 that makes every
+    ``zipimporter`` re-read its archive's whole directory. A worker holds
+    one per package it imported from pyspark.zip and the spark-core jar,
+    so each task would spend ~0.15-0.3 s re-reading them before its
+    first batch. The archives already on a worker's path (Spark's own, and the job's
+    ``--py-files``) do not change while the worker lives, so their
+    importers keep their listings from here on; an archive that appears
+    later gets a new importer, which re-reads as before."""
+    import zipimport
+
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches = lambda: None
+
+
+def _byte_class_count(a, table):
+    """Per-row count of the bytes ``table`` marks in ``a``, a
+    ``large_string`` array that may be a slice of a longer one: its
+    offsets start at ``a.offset`` and its bytes at ``off[0]``."""
+    if not len(a):
+        return np.zeros(0, dtype=np.int64)
+    _, off, data = a.buffers()
+    off = np.frombuffer(off, dtype=np.int64)[a.offset : a.offset + len(a) + 1]
+    raw = np.frombuffer(data, dtype=np.uint8) if data else np.zeros(0, dtype=np.uint8)
+    # a 0 sentinel byte makes every start offset a valid index, also
+    # that of an empty or null last row
+    hits = np.append(table[raw[off[0] : off[-1]]], np.uint8(0))
+    n = np.add.reduceat(hits, off[:-1] - off[0], dtype=np.int64)
+    n[off[1:] == off[:-1]] = 0  # reduceat gives hits[start] for an empty row
+    return n
+
+
+def _round6_half_up(x):
+    return np.floor(x * 1e6 + 0.5) / 1e6  # non-negative inputs only
+
+
+def _feature_batch(rb, keys: tuple[str, ...]):
+    """One Arrow record batch of ``keys`` + ``text`` → the same keys
+    (the batch's arrays, untouched) + the six features.
+
+    The text becomes one ``large_string`` array (int64 offsets: a batch
+    of huge pages cannot overflow them), and every step works on the
+    whole batch:
 
     - the strip and the split are Arrow kernels whose whitespace is
       exactly Java's ``\\s``;
-    - ASCII letters and ``\\s`` are single UTF-8 bytes, which never occur
-      inside a multi-byte character, so a byte lookup table summed per
-      row over the offsets gives the JVM's per-character counts;
+    - ASCII letters and ``\\s`` are single UTF-8 bytes, which never
+      occur inside a multi-byte character, so a byte lookup table
+      summed per row over the offsets gives the JVM's per-character
+      counts;
     - the token stream is dictionary-encoded, so lowering and set
-      membership run once per distinct word, and the per-row sums and
-      the case-sensitive distinct count are C-level bincount/lexsort."""
-    import numpy as np
+      membership run once per distinct word, the per-row sums are
+      bincounts, and the case-sensitive distinct count is one
+      ``np.unique`` over a single (row, word) key;
+    - outputs are Arrow arrays masked by the null text rows: null text
+      gives null features (JVM null propagation).
+
+    F.round is HALF_UP while np.round is banker's (half-to-even), so a
+    dyadic half-tie like 1/128 needs :func:`_round6_half_up`. The JVM
+    expression path defines the feature semantics;
+    tests/test_pages_extract.py's adversarial sweeps pin it."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    stop_set = frozenset(T.ENGLISH_STOPWORDS)
-    profiles = [(lang, frozenset(ws)) for lang, ws in T.LANG_PROFILES.items()]
-    lang_names = np.array([lang for lang, _ in profiles])
+    a = rb.column("text").cast(pa.large_string())
+    nrow = len(a)
+    null_mask = a.is_null().to_numpy(zero_copy_only=False)
+    stripped = pc.utf8_trim(a, _WS)
+    text_length = pc.utf8_length(stripped).fill_null(0).to_numpy()
+    tokens = pc.ascii_split_whitespace(stripped)
+    ii = pc.list_parent_indices(tokens).to_numpy()
+    words = pc.dictionary_encode(tokens.flatten())
+    # an empty stripped row splits to [''] — not a token
+    keep = text_length[ii] > 0
+    codes, ii = words.indices.to_numpy()[keep], ii[keep]
+    uniq_low = pd.Index(words.dictionary.to_pandas()).str.lower()
 
-    # JVM-parity rules: Java regex \s is the ASCII class [ \t\n\x0b\f\r]
-    # (NOT Unicode whitespace: NBSP, \x1c-\x1f, \x85 and the U+2000
-    # block stay inside a token), which is what utf8_trim(_WS) strips and
-    # ascii_split_whitespace splits on; and F.round is HALF_UP while
-    # np.round is banker's (half-to-even) — a dyadic half-tie like 1/128
-    # rounds differently. The JVM expression path defines the feature
-    # semantics; tests/test_pages_extract.py's adversarial sweeps pin it.
-    _WS = " \t\n\x0b\f\r"
-    is_alpha = np.zeros(256, dtype=np.uint8)
-    is_alpha[[ord(c) for c in string.ascii_letters]] = 1
-    is_ws = np.zeros(256, dtype=np.uint8)
-    is_ws[[ord(c) for c in _WS]] = 1
+    def _row_hits(member_u):
+        sel = np.asarray(member_u)[codes]
+        return np.bincount(ii[sel], minlength=nrow)
 
-    def _round6_half_up(x):
-        return np.floor(x * 1e6 + 0.5) / 1e6  # non-negative inputs only
-
-    def _byte_class_count(a, table):
-        """Per-row count of the bytes ``table`` marks in ``a``, a
-        ``large_string`` array fresh from ``pa.array`` (offset 0)."""
-        _, off, data = a.buffers()
-        off = np.frombuffer(off, dtype=np.int64)[: len(a) + 1]
-        # a 0 sentinel byte makes every start offset a valid index, also
-        # that of an empty or null last row
-        hits = np.append(table[np.frombuffer(data, dtype=np.uint8)[: off[-1]]], np.uint8(0))
-        n = np.add.reduceat(hits, off[:-1], dtype=np.int64)
-        n[off[1:] == off[:-1]] = 0  # reduceat gives hits[start] for an empty row
-        return n
-
-    def batches(it):
-        for pdf in it:
-            a = pa.array(pdf["text"], type=pa.large_string(), from_pandas=True)
-            nrow = len(a)
-            null_mask = a.is_null().to_numpy(zero_copy_only=False)
-            stripped = pc.utf8_trim(a, _WS)
-            text_length = pc.utf8_length(stripped).fill_null(0).to_numpy()
-            tokens = pc.ascii_split_whitespace(stripped)
-            ii = pc.list_parent_indices(tokens).to_numpy()
-            words = pc.dictionary_encode(tokens.flatten())
-            # an empty stripped row splits to [''] — not a token
-            keep = text_length[ii] > 0
-            codes, ii = words.indices.to_numpy()[keep], ii[keep]
-            uniq_low = pd.Index(words.dictionary.to_pandas()).str.lower()
-
-            def _row_hits(member_u):
-                sel = np.asarray(member_u)[codes]
-                return np.bincount(ii[sel], minlength=nrow)
-
-            sw_hits = _row_hits(uniq_low.isin(stop_set))
-            lang_hits = {lang: _row_hits(uniq_low.isin(ws)) for lang, ws in profiles}
-            o = np.lexsort((codes, ii))
-            i2, c2 = ii[o], codes[o]
-            first = np.ones(len(o), dtype=bool)
-            first[1:] = (i2[1:] != i2[:-1]) | (c2[1:] != c2[:-1])
-            n_unique = np.bincount(i2[first], minlength=nrow)
-            n_tokens = np.bincount(ii, minlength=nrow)
-            denom = np.maximum(n_tokens, 1)
-            sw_ratio = sw_hits / denom
-            n_chars = pc.utf8_length(a).fill_null(0).to_numpy()
-            alpha = _byte_class_count(a, is_alpha) / np.maximum(n_chars, 1)
-            mtl = (n_chars - _byte_class_count(a, is_ws)) / denom
-            quality = _round6_half_up(
-                0.25 * np.minimum(n_tokens / 50.0, 1.0)
-                + 0.25 * alpha
-                + 0.25 * np.minimum(sw_ratio * 5.0, 1.0)
-                + 0.25 * ((mtl >= 2.0) & (mtl <= 12.0)).astype(float)
-            )
-            scores = np.stack(
-                [lang_hits[lang] / denom - j * 1e-9 for j, (lang, _) in enumerate(profiles)],
-                axis=1,
-            )
-            # null text -> null features (JVM null propagation); argmax
-            # over all-NaN rows picks index 0 = the JVM when-chain's
-            # first-profile fallback, so lang_pred needs no masking
-            if null_mask.any():
-                out_int = lambda v: pd.array(
-                    np.where(null_mask, np.nan, np.asarray(v, dtype="float64")),
-                    dtype="Int32",
-                )
-                out_dbl = lambda v: np.where(null_mask, np.nan, v)
-            else:  # common case: no nulls — plain int32, no masking pass
-                out_int = lambda v: np.asarray(v).astype("int32")
-                out_dbl = lambda v: v
-            yield pd.DataFrame(
-                {
-                    **{k: pdf[k].values for k in keys},
-                    "text_length": out_int(text_length),
-                    "n_tokens": out_int(n_tokens),
-                    "n_unique": out_int(n_unique),
-                    "stopword_ratio": out_dbl(_round6_half_up(sw_ratio)),
-                    "quality": out_dbl(quality),
-                    "lang_pred": lang_names[np.argmax(scores, axis=1)],
-                }
-            )
-
-    key_schema = ", ".join(f"{k} {df.schema[k].dataType.simpleString()}" for k in keys)
-    return df.select(*keys, "text").mapInPandas(
-        batches, schema=f"{key_schema}, {_FEATURE_SCHEMA}"
+    sw_hits = _row_hits(uniq_low.isin(_STOPWORDS))
+    lang_hits = [_row_hits(uniq_low.isin(ws)) for _, ws in _PROFILES]
+    n_words = max(len(words.dictionary), 1)
+    row_words = np.unique(ii.astype(np.int64) * n_words + codes)
+    n_unique = np.bincount(row_words // n_words, minlength=nrow)
+    n_tokens = np.bincount(ii, minlength=nrow)
+    denom = np.maximum(n_tokens, 1)
+    sw_ratio = sw_hits / denom
+    n_chars = pc.utf8_length(a).fill_null(0).to_numpy()
+    alpha = _byte_class_count(a, _IS_ALPHA) / np.maximum(n_chars, 1)
+    mtl = (n_chars - _byte_class_count(a, _IS_WS)) / denom
+    quality = _round6_half_up(
+        0.25 * np.minimum(n_tokens / 50.0, 1.0)
+        + 0.25 * alpha
+        + 0.25 * np.minimum(sw_ratio * 5.0, 1.0)
+        + 0.25 * ((mtl >= 2.0) & (mtl <= 12.0)).astype(float)
+    )
+    scores = np.stack([h / denom - j * 1e-9 for j, h in enumerate(lang_hits)], axis=1)
+    mask = null_mask if null_mask.any() else None
+    feats = {
+        "text_length": pa.array(text_length.astype(np.int32), mask=mask),
+        "n_tokens": pa.array(n_tokens.astype(np.int32), mask=mask),
+        "n_unique": pa.array(n_unique.astype(np.int32), mask=mask),
+        "stopword_ratio": pa.array(_round6_half_up(sw_ratio), mask=mask),
+        "quality": pa.array(quality, mask=mask),
+        # a null row scores 0 - j·1e-9, so argmax picks index 0 = the
+        # JVM when-chain's first-profile fallback, unmasked
+        "lang_pred": pa.array([lang for lang, _ in _PROFILES]).take(np.argmax(scores, axis=1)),
+    }
+    return pa.RecordBatch.from_arrays(
+        [*(rb.column(k) for k in keys), *feats.values()], names=[*keys, *feats]
     )
 
 
@@ -322,9 +365,11 @@ def asof_feature_table(
     before it. Neither is built as a frame nor joined: each snapshot
     emits the grid points it decides (:func:`_owned_points`), so the
     feature table follows the url's one ordered window pass with a
-    narrow explode. Rows with a null ``warc_ts`` are dropped first: a
-    snapshot with no time has no place on the timeline (the spine grid
-    never counted them either).
+    narrow explode. Rows with a null ``url`` or ``warc_ts`` are dropped
+    first, before the census: a snapshot with no time has no place on
+    the timeline (the spine grid never counted them either), and one
+    with no url belongs to no timeline — grouped as one "null url" it
+    would merge unrelated pages, and count as a heavy hitter.
 
     ``skew_safe=None`` (default) makes the choice data-driven: a
     heavy-hitter census over the url column (one cheap pruned-scan
@@ -338,6 +383,8 @@ def asof_feature_table(
     in the same window, so a point owned by the previous snapshot takes
     that row as is; the skew path is :func:`_skew_safe_asof`. Both read
     ``extracted`` once."""
+    placed = F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
+    pages, extracted = pages.where(placed), extracted.where(placed)
     if skew_safe is None:
         from .operators.asof import detect_heavy_hitters
 
@@ -346,8 +393,6 @@ def asof_feature_table(
                 pages.select("url"), ["url"], heavy_hitter_threshold
             ).take(1)
         )
-    timed = F.col("warc_ts").isNotNull()
-    pages, extracted = pages.where(timed), extracted.where(timed)
     step_s = spine_step_hours * 3600
     if skew_safe:
         return _skew_safe_asof(pages, extracted, step_s)
@@ -385,13 +430,15 @@ def _owned_points(rows: DataFrame, prev_ts: Column, t0: Column, step_seconds: in
     out exactly once; on a duplicated ``(url, warc_ts)`` only the first
     row of the run emits, since the later ones span an empty interval.
 
-    The bounds are integer µs; ``t`` is ``t0 + k × INTERVAL S
-    SECONDS``, the arithmetic of ``temporal.resample_grid``'s
-    ``sequence``, so it keeps ``warc_ts``'s timestamp type."""
+    The bounds are integer µs whatever the session time zone
+    (``_util.ts_micros``); ``t`` is ``t0 + k × INTERVAL S SECONDS``, the
+    arithmetic of ``temporal.resample_grid``'s ``sequence``, so it keeps
+    ``warc_ts``'s timestamp type."""
     step_us = step_seconds * 1_000_000
+    ts_type = rows.schema["warc_ts"].dataType
 
     def since_t0(ts: Column) -> Column:
-        return F.unix_micros(ts.cast("timestamp_ltz")) - F.unix_micros(t0.cast("timestamp_ltz"))
+        return ts_micros(ts, ts_type) - ts_micros(t0, ts_type)
 
     lo = F.coalesce(F.expr(f"_a div {step_us}") + 1, F.lit(0))
     hi = F.expr(f"_b div {step_us}")

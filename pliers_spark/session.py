@@ -10,7 +10,16 @@ the driver entrypoint all run the same configuration. Targets: a
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from a high initial value;
 - broadcast threshold left at default (10 MB) — dimension tables
-  (lexicons, vocabularies) are explicitly ``F.broadcast``-ed anyway.
+  (lexicons, vocabularies) are explicitly ``F.broadcast``-ed anyway;
+- no per-call call-site capture: with DataFrame debugging on, PySpark 4
+  walks the Python stack and sends it to the JVM on every ``F.col`` /
+  ``withColumns`` call, several py4j round trips each, which is most of
+  the cost of building a flagship plan.
+
+:data:`ENGINE_CONF` holds the settings every engine session needs,
+wherever it runs; ``tools/submit_job.py`` builds its session from it.
+:func:`get_spark` adds the local-mode ones (master, cores, driver
+memory, split size, no UI).
 """
 
 from __future__ import annotations
@@ -20,6 +29,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
 
 
 def get_spark(
@@ -35,26 +55,22 @@ def get_spark(
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    conf = {
+        **ENGINE_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # local bench inputs are single ~100-200MB files; without a lower
         # split size the scan caps at 1-2 tasks and nothing downstream can
         # scale. On a real cluster with many files the default is fine.
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
+        "spark.sql.files.maxPartitionBytes": "8m",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    return (
+        SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+        .config(map=conf)
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
 
 
 _UNITS = {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}

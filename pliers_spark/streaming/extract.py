@@ -1,7 +1,7 @@
 """Streaming feature extraction over incrementally-arriving page files.
 
 The north-star pipeline's extract stage (``pages_pipeline.
-extract_page_features_arrow``) is one narrow ``mapInPandas`` stage — no
+extract_page_features_arrow``) is one narrow ``mapInArrow`` stage — no
 shuffle — so the SAME stage runs unchanged under Structured Streaming:
 new crawl-snapshot parquet files landing in the input directory are
 picked up by the file source, pushed through the identical Arrow stage,

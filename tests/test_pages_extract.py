@@ -1,4 +1,4 @@
-"""Differential test: the Arrow (mapInPandas) extraction stage must be
+"""Differential test: the Arrow (mapInArrow) extraction stage must be
 value-identical to the JVM-expression stage — same schema, same rows,
 floats allclose. The Arrow stage is the engine's only implementation of
 the six page features (both flagships run it); the JVM stage is the
@@ -278,6 +278,97 @@ ADVERSARIAL_TEXTS = [
 ]
 
 
+def test_feature_batch_on_sliced_input():
+    """The per-batch body of the Arrow stage on batches that are slices
+    of longer ones (nonzero array offsets, bytes not starting at 0), with
+    the text typed ``string`` and ``large_string``, on an all-null batch
+    and on zero-row batches: every result equals the result of the same
+    rows in a fresh, unsliced batch."""
+    import pyarrow as pa
+
+    from pliers_spark.pages_pipeline import _feature_batch
+
+    def fresh(rb):
+        return pa.RecordBatch.from_pylist(rb.to_pylist(), schema=rb.schema)
+
+    n = len(ADVERSARIAL_TEXTS)
+    for text_type in (pa.string(), pa.large_string()):
+        for texts in (ADVERSARIAL_TEXTS, [None] * n):
+            rb = pa.RecordBatch.from_arrays(
+                [pa.array([f"u{i:02d}" for i in range(n)]), pa.array(texts, type=text_type)],
+                names=["url", "text"],
+            )
+            whole = _feature_batch(rb, ("url",))
+            assert whole.num_rows == n
+            for k, m in [(0, n), (1, n - 1), (3, 7), (7, 3), (n - 4, 4), (n - 1, 1), (5, 0)]:
+                part = rb.slice(k, m)
+                got = _feature_batch(part, ("url",))
+                assert got.equals(_feature_batch(fresh(part), ("url",))), (text_type, k, m)
+                assert got.equals(whole.slice(k, m)), (text_type, k, m)
+        empty = _feature_batch(pa.RecordBatch.from_pylist([], schema=rb.schema), ("url",))
+        assert empty.num_rows == 0 and empty.schema == whole.schema
+
+
+def test_feature_batch_runs_without_the_package(tmp_path):
+    """Spark ships the Arrow stage's body by value: pickled as Spark
+    pickles it, it runs in a Python process that cannot import
+    pliers_spark (a worker started outside the checkout, with no
+    --py-files), and gives the same batch."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    from pyspark import cloudpickle
+
+    from pliers_spark.pages_pipeline import _feature_batch
+
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(["u0", "u1", "u2"]), pa.array(["The cat sat", None, "a \x85"])],
+        names=["url", "text"],
+    )
+    code = ("import pickle, sys; f, rb = pickle.load(sys.stdin.buffer); "
+            "sys.stdout.buffer.write(pickle.dumps(f(rb, ('url',))))")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", code], input=cloudpickle.dumps((_feature_batch, rb)),
+                         capture_output=True, cwd=tmp_path, env=env)
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    assert pickle.loads(out.stdout).equals(_feature_batch(rb, ("url",)))
+
+
+def test_feature_batches_keep_archive_listings(tmp_path, monkeypatch):
+    """The stage's function stops the per-task
+    ``importlib.invalidate_caches()`` of the Python worker from
+    re-reading the archives already on its path: a file added to such
+    an archive afterwards stays unseen, while an archive that appears
+    later is read as usual."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from pliers_spark.pages_pipeline import _feature_batches
+
+    def archive(name):
+        path = str(tmp_path / name)
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr("a.py", "")
+        return path
+
+    old = archive("old.zip")
+    monkeypatch.setitem(sys.path_importer_cache, old, zipimport.zipimporter(old))
+    assert list(_feature_batches(iter([]), ("url",))) == []
+    new = archive("new.zip")
+    monkeypatch.setitem(sys.path_importer_cache, new, zipimport.zipimporter(new))
+    for path in (old, new):
+        with zipfile.ZipFile(path, "a") as z:
+            z.writestr("b.py", "")
+    importlib.invalidate_caches()
+    assert sys.path_importer_cache[old].find_spec("b") is None
+    assert sys.path_importer_cache[new].find_spec("b") is not None
+
+
 def _jvm_and_arrow_features(spark, texts):
     """The six features of ``texts`` (url ``u00``, ``u01``, ...) from the
     JVM reference and from the Arrow stage, each as url -> tuple."""
@@ -468,6 +559,79 @@ def test_flagship_drops_snapshots_without_time(spark, tmp_path):
     first = min(out, key=lambda r: r.t)
     assert first.session_id == 1 and first.text_length_lag1 is None
     assert first.quality_lag1 is None and first.matched_ts == first.t
+
+
+def test_flagship_drops_snapshots_without_url(spark, tmp_path, monkeypatch):
+    """A row with a null url belongs to no timeline: both paths drop it
+    before the census, so the four null-url rows neither come out as
+    one merged "null url" timeline (the plain path's window would group
+    them) nor count as a heavy hitter at threshold 4 (url u has 3)."""
+    import datetime as dt
+
+    import pliers_spark.pages_pipeline as PP
+
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = [("u", base + dt.timedelta(days=d), f"page u day {d}", "en") for d in (0, 3, 20)]
+    rows += [(None, base + dt.timedelta(days=d), f"orphan page {d}", "en")
+             for d in (1, 30, 60, 90)]
+    p = str(tmp_path / "urlless_pages")
+    spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, text string, lang string"
+    ).write.parquet(p)
+    out = _assert_skew_flagship_bit_equal(spark, p).collect()
+    assert {r.url for r in out} == {"u"} and len(out) == 3
+
+    engaged = []
+    skew_path = PP._skew_safe_asof
+    monkeypatch.setattr(PP, "_skew_safe_asof", lambda *a: engaged.append(1) or skew_path(*a))
+    assert len(PP.pages_flagship(spark, p, heavy_hitter_threshold=4).collect()) == 3
+    assert not engaged
+
+
+def test_flagship_independent_of_session_time_zone(spark, tmp_path):
+    """``timestamp_ntz`` snapshots across New York's 2024 DST changes
+    give the same feature table, bit for bit, under the UTC and the
+    America/New_York session zones, on both paths. Url a crosses the
+    November fall-back with an exact 30-day gap (not a new session:
+    the gap must exceed 30 days) and then has a snapshot on a grid
+    instant (t0 + 5 weeks, so it matches itself); url b crosses the
+    March spring-forward with a gap of 30 days and 30 minutes (a new
+    session) and then has a snapshot on t0 + 5 weeks. Read in the New
+    York zone, each difference across a change is off by an hour."""
+    import datetime as dt
+
+    from pliers_spark.pages_pipeline import pages_flagship
+
+    d = dt.timedelta
+    a0, b0 = dt.datetime(2024, 10, 20, 12), dt.datetime(2024, 2, 20, 12)
+    rows = [("a", a0 + g, f"page a {i} the cat", "en")
+            for i, g in enumerate([d(0), d(days=30), d(weeks=5), d(days=40)])]
+    rows += [("b", b0 + g, f"page b {i} and a dog", "en")
+             for i, g in enumerate([d(0), d(days=30, minutes=30), d(weeks=5), d(weeks=6, days=1)])]
+    p = str(tmp_path / "ntz_pages")
+    spark.createDataFrame(
+        rows, "url string, warc_ts timestamp_ntz, text string, lang string"
+    ).write.parquet(p)
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    out = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            for skew in (False, True):
+                out[tz, skew] = _bits(pages_flagship(spark, p, skew_safe=skew))
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = pages_flagship(spark, p, skew_safe=False).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    for key, got in out.items():
+        assert got == out["UTC", False], key
+
+    at = {(r.url, r.t): r for r in utc}
+    assert at["a", a0 + d(weeks=5)].matched_ts == a0 + d(weeks=5)
+    assert at["b", b0 + d(weeks=5)].matched_ts == b0 + d(weeks=5)
+    assert at["a", a0 + d(weeks=5)].session_id == 1
+    assert at["b", b0 + d(weeks=5)].session_id == 2
 
 
 _STEP_S = 10

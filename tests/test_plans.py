@@ -38,7 +38,7 @@ def test_html_column_pruned(spark, pages_path):
     assert scans, plan
     for line in scans:
         assert "html" not in line, line
-    assert plan_of(out).count("MapInPandas") == 1, plan_of(out)
+    assert plan_of(out).count("MapInArrow") == 1, plan_of(out)
 
 
 def test_filter_pushed_to_scan(spark, pages):
@@ -49,7 +49,7 @@ def test_filter_pushed_to_scan(spark, pages):
 
 def test_extraction_is_shuffle_free(spark, pages):
     plan = plan_of(extract_page_features_arrow(pages))
-    assert "Exchange" not in plan  # one narrow mapInPandas stage
+    assert "Exchange" not in plan  # one narrow mapInArrow stage
 
 
 def test_windowed_stage_single_shuffle(spark, pages):
@@ -67,7 +67,7 @@ def test_skew_safe_windowed_stage_one_carry_pass(spark, pages):
     shuffle per side, the bucket frame's shuffle on url and the carry
     join's broadcast."""
     plan = plan_of(windowed_page_features(extract_page_features_arrow(pages), skew_safe=True))
-    assert plan.count("MapInPandas") == 2, plan
+    assert plan.count("MapInArrow") == 2, plan
     assert plan.count("Exchange hashpartitioning") == 3, plan
     assert plan.count("Exchange") == 4, plan
 
@@ -79,7 +79,7 @@ def test_plain_flagship_one_shuffle_no_join(spark, pages_path):
     hashpartitioning Exchange on url, no Join operator."""
     plan = plan_of(pages_flagship(spark, pages_path, skew_safe=False))
     assert plan.count("FileScan") == 1, plan
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange") == plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
 
@@ -90,7 +90,38 @@ def test_skew_safe_flagship_extracts_once(spark, pages_path):
     one join, so the Arrow extraction runs exactly once, as on the
     plain path."""
     plan = plan_of(pages_flagship(spark, pages_path, skew_safe=True))
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+
+
+def test_flagship_build_py4j_budget(spark, pages_path, monkeypatch):
+    """Building (not running) either flagship plan stays within a budget
+    of py4j commands sent to the JVM, about 1.25x the count with
+    PySpark's per-call call-site capture off (plain 517, skew-safe 1,009
+    on this fixture). With the capture on, every ``F.col`` /
+    ``withColumns`` call also walks the Python stack and sends it to the
+    JVM: 1,177 and 2,329 commands. Proxy releases (``m d`` commands) are
+    not counted: they follow the timing of Python's garbage collector."""
+    import pyspark.errors.utils
+
+    # a fresh process reads the setting from the session on its first
+    # API call; drop the cached answer so this test reads it the same way
+    monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    for skew_safe, budget in ((False, 650), (True, 1260)):
+        pages_flagship(spark, pages_path, skew_safe=skew_safe)  # warm-up
+        sent.clear()
+        monkeypatch.setattr(client, "send_command", counting)
+        pages_flagship(spark, pages_path, skew_safe=skew_safe)
+        monkeypatch.setattr(client, "send_command", send)
+        assert len(sent) <= budget, (skew_safe, len(sent))
 
 
 def test_dictionary_join_is_broadcast(spark):

@@ -14,8 +14,10 @@ Local smoke (generates a synthetic pages table first):
         tools/submit_job.py --synth-urls 5000 --output /tmp/features
 
 The script never sets a master itself — spark-submit owns cluster
-placement — and only tunes confs that are safe to set per-app (AQE,
-Arrow). With ``--checkpoint`` the extraction stage runs through the
+placement, cores and memory — and builds its session from
+``session.ENGINE_CONF``, the engine settings every session shares (AQE,
+Arrow and its batch size, the UTC session zone, no per-call call-site
+capture). With ``--checkpoint`` the extraction stage runs through the
 resumable per-partition manifest (plans/checkpoint.py): re-running the
 same command after a failure skips completed url-hash buckets. Either
 way the rest of the job is ``pages_pipeline.asof_feature_table``, the
@@ -76,11 +78,11 @@ def main(argv=None):
     args = parse_args(argv)
     from pyspark.sql import SparkSession
 
+    from pliers_spark.session import ENGINE_CONF
+
     spark = (
         SparkSession.builder.appName("pliers_spark.pages_flagship")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 
