@@ -18,10 +18,12 @@ pages/sec at two parallelism levels. Every stage is shuffle-accounted:
    explode emits the spine points the snapshot decides.
 
 When the heavy-hitter census finds a hot url, the skew path replaces
-stages 2 and 3: one time-bucket carry pass resolves sessions and the
-two predecessors on the pruned ``(url, warc_ts)`` skeleton, the same
-explode emits the spine points, and the features attach with one join
-on keys unique per row. Both paths run the extraction once.
+stages 2 and 3 in the same shape: the extracted row, packed in one
+struct, goes through one time-bucket carry pass that gives each
+snapshot its session, its two predecessors' rows and the url's first
+``warc_ts``, and the same explode emits the spine points. Nothing is
+re-attached afterwards, and both sides of the carry pass's self-join
+share one exchange, so both paths run the extraction once.
 
 The ``html`` binary column is never referenced — column pruning keeps
 it out of the scan entirely (asserted in tests/test_plans.py).
@@ -308,9 +310,11 @@ def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFra
     bit-equal output (the operator is oracle-gated, and
     tests/test_pages_extract.py pins the skew-safe stage to the plain
     one). This is the per-row table. The plain flagship windows its
-    extracted rows with it; the skew-safe flagship does not call it, it
-    resolves the same session and lag references on the ``(url,
-    warc_ts)`` skeleton instead (:func:`asof_feature_table`).
+    extracted rows with it; the skew-safe flagship does not call it:
+    it carries the whole row as one struct through the same operator
+    (:func:`_skew_safe_asof`). Here the carried columns are separate,
+    so column pruning narrows the bucket-tail side of the operator's
+    self-join and the two sides run the Arrow extraction once each.
     """
     gap_s = SESSION_GAP_DAYS * 86400
     if skew_safe:
@@ -356,9 +360,8 @@ def asof_feature_table(
 ) -> DataFrame:
     """The flagship's back half over already-extracted page features:
     heavy-hitter census → windowed features → leakage gate → as-of
-    feature table on the weekly spine. ``pages`` supplies the url/warc_ts
-    columns the census and the skew path's skeleton scan (pruned — they
-    never re-run extraction).
+    feature table on the weekly spine. ``pages`` supplies the url
+    column the census scans (pruned — it never re-runs extraction).
 
     The spine is each url's grid t0 + k·step from its first to its last
     ``warc_ts``, and a spine point takes the latest snapshot at or
@@ -381,8 +384,9 @@ def asof_feature_table(
 
     The plain path windows the extracted rows and lags each whole row
     in the same window, so a point owned by the previous snapshot takes
-    that row as is; the skew path is :func:`_skew_safe_asof`. Both read
-    ``extracted`` once."""
+    that row as is; the skew path (:func:`_skew_safe_asof`) does the
+    same through a time-bucket carry pass. Both read ``extracted``
+    once."""
     placed = F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
     pages, extracted = pages.where(placed), extracted.where(placed)
     if skew_safe is None:
@@ -395,7 +399,7 @@ def asof_feature_table(
         )
     step_s = spine_step_hours * 3600
     if skew_safe:
-        return _skew_safe_asof(pages, extracted, step_s)
+        return _skew_safe_asof(extracted, step_s)
     feats = windowed_page_features(extracted)
     value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
     w = Window.partitionBy("url").orderBy("warc_ts")
@@ -431,9 +435,12 @@ def _owned_points(rows: DataFrame, prev_ts: Column, t0: Column, step_seconds: in
     row of the run emits, since the later ones span an empty interval.
 
     The bounds are integer µs whatever the session time zone
-    (``_util.ts_micros``); ``t`` is ``t0 + k × INTERVAL S SECONDS``, the
-    arithmetic of ``temporal.resample_grid``'s ``sequence``, so it keeps
-    ``warc_ts``'s timestamp type."""
+    (``_util.ts_micros``), and so is ``t``: exactly t0 + k·S µs, added
+    with ``timestampadd(MICROSECOND, ...)``, which keeps ``warc_ts``'s
+    timestamp type. ``t0 + k × INTERVAL S SECONDS`` would add whole days
+    on the session zone's wall clock, so across a DST change a
+    ``timestamp`` point would land an hour off the instant its owner was
+    decided by, and could take a snapshot later than itself."""
     step_us = step_seconds * 1_000_000
     ts_type = rows.schema["warc_ts"].dataType
 
@@ -447,81 +454,67 @@ def _owned_points(rows: DataFrame, prev_ts: Column, t0: Column, step_seconds: in
         rows.withColumns({"_a": since_t0(prev_ts), "_b": since_t0(F.col("warc_ts"))})
         .select("*", F.explode(F.when(lo <= hi, F.sequence(lo, hi))).alias("_k"))
         .withColumns({
-            "t": t0 + F.expr(f"INTERVAL {step_seconds} SECONDS") * k,
+            "t": F.timestamp_add("MICROSECOND", k * step_us, t0),
             "_own": k * step_us == F.col("_b"),
         })
         .drop("_a", "_b", "_k")
     )
 
 
-def _skew_safe_asof(pages: DataFrame, extracted: DataFrame, step_seconds: int) -> DataFrame:
+def _skew_safe_asof(extracted: DataFrame, step_seconds: int) -> DataFrame:
     """The skew path of :func:`asof_feature_table`, with the plain
-    path's columns in the same order and bit-equal values.
+    path's columns in the same order and bit-equal values — and the
+    plain path's shape: the whole extracted row travels through the
+    windows, so nothing is re-attached afterwards.
 
-    1. skeleton windows: one ``timesplit_windows`` carry pass over the
-       pruned ``(url, warc_ts)`` scan gives each snapshot its session
-       id, its two predecessors' timestamps and the url's first
+    1. carry: every value column is packed into one struct ``_v``, and
+       one ``timesplit_windows`` pass gives each snapshot its session
+       id, the struct and timestamp of its predecessor (lag-1), the
+       struct of the snapshot before that (lag-2) and the url's first
        timestamp; the leakage gate audits this frame;
-    2. skeleton match: each snapshot emits the spine points it decides
-       (:func:`_owned_points`), with the matched snapshot, that
-       snapshot's predecessor and its session id — a point owned by the
-       previous snapshot takes ``session_id`` minus the session start
-       between the two, so no lag of the session id is needed;
-    3. demand rows: one explode per spine point into the matched
-       snapshot (role 0) and its predecessor (role 1);
-    4. attach: one right join of ``extracted`` on ``(url, ts)``, then
-       ``groupBy(url, t)`` folds the two roles back into one row.
+    2. match: each snapshot emits the spine points it decides
+       (:func:`_owned_points`); a point it owns takes its own row and
+       its predecessor as the lag source, a point owned by the
+       predecessor takes the predecessor's row and lag-2, and
+       ``session_id`` minus the session start between the two, so no
+       lag of the session id is needed.
 
-    Every shuffle is keyed by (url, time bucket) or by keys unique per
-    row, so no hot url remains as one task, and the extraction runs
-    once. Exactness requires ``warc_ts`` unique per url, as the windows
-    do; on a duplicated snapshot the groupBy still returns one row per
-    spine point."""
+    Every shuffle is keyed by (url, time bucket) or by url on the
+    one-row-per-bucket frame, so no hot url remains as one task. The
+    extraction runs once: the carry pass joins its rows to their bucket
+    tails, and because both sides carry the struct itself, not fields
+    that column pruning could narrow on one side, the plans below their
+    ``(url, _tb)`` exchanges are identical and adaptive execution
+    reuses one exchange for both. Exactness requires ``warc_ts`` unique
+    per url, as the windows do; on a duplicated snapshot only the first
+    row of the run emits, so each spine point still comes out once."""
     from .operators.skew import timesplit_windows
     from .plans.leakage import assert_leakage_free
 
     gap_s = SESSION_GAP_DAYS * 86400
-    sk = timesplit_windows(
-        pages.select("url", "warc_ts"), ["url"], "warc_ts", _SKEW_BUCKET_S,
-        lag1=("warc_ts",), lag2=("warc_ts",), first=("warc_ts",), session_gap=gap_s,
-    )
-    assert_leakage_free(sk)
-    pts = _owned_points(sk, F.col("warc_ts_lag1"), F.col("warc_ts_first"), step_seconds)
-    own = F.col("_own")
-    starts = epoch_seconds(sk, "warc_ts") - epoch_seconds(sk, "warc_ts_lag1") > gap_s
-    match = pts.select(
-        "url", "t",
-        F.when(own, F.col("session_id"))
-        .otherwise(F.col("session_id") - F.when(starts, 1).otherwise(0)).alias("session_id"),
-        F.when(own, F.col("warc_ts")).otherwise(F.col("warc_ts_lag1")).alias("matched_ts"),
-        F.when(own, F.col("warc_ts_lag1")).otherwise(F.col("warc_ts_lag2")).alias("pred_ts"),
-    )
-    demand = match.select(
-        "url", "t", "session_id", "matched_ts",
-        F.explode(F.array(
-            F.struct(F.col("matched_ts").alias("ts"), F.lit(0).alias("role")),
-            F.struct(F.col("pred_ts").alias("ts"), F.lit(1).alias("role")),
-        )).alias("_d"),
-    ).select("url", "t", "session_id", "matched_ts", "_d.*")
     values = [c for c in extracted.columns if c not in ("url", "warc_ts")]
-    role = F.col("role")
-    rows = (
-        extracted.withColumnRenamed("warc_ts", "ts")
-        .join(demand, ["url", "ts"], "right")
-        .groupBy("url", "t")
-        .agg(
-            F.max(F.when(role == 0, F.struct(*values, "session_id", "matched_ts"))).alias("_m"),
-            F.max(F.when(role == 1, F.struct("text_length", "quality"))).alias("_p"),
-        )
+    rows = timesplit_windows(
+        extracted.select("url", "warc_ts", F.struct(*values).alias("_v")),
+        ["url"], "warc_ts", _SKEW_BUCKET_S,
+        lag1=("_v", "warc_ts"), lag2=("_v",), first=("warc_ts",), session_gap=gap_s,
     )
-    return rows.select(
+    assert_leakage_free(rows)
+    pts = _owned_points(rows, F.col("warc_ts_lag1"), F.col("warc_ts_first"), step_seconds)
+
+    def pick(own: str, prev: str) -> Column:
+        return F.when(F.col("_own"), F.col(own)).otherwise(F.col(prev))
+
+    starts = epoch_seconds(rows, "warc_ts") - epoch_seconds(rows, "warc_ts_lag1") > gap_s
+    match, pred = pick("_v", "_v_lag1"), pick("_v_lag1", "_v_lag2")
+    return pts.select(
         "url", "t",
-        *[F.col(f"_m.{c}").alias(c) for c in values],
-        F.col("_m.session_id").alias("session_id"),
-        F.col("_p.text_length").alias("text_length_lag1"),
-        F.col("_p.quality").alias("quality_lag1"),
-        _quality_delta(F.col("_m.quality"), F.col("_p.quality")).alias("quality_delta"),
-        F.col("_m.matched_ts").alias("matched_ts"),
+        *[match[c].alias(c) for c in values],
+        F.when(F.col("_own"), F.col("session_id"))
+        .otherwise(F.col("session_id") - F.when(starts, 1).otherwise(0)).alias("session_id"),
+        pred["text_length"].alias("text_length_lag1"),
+        pred["quality"].alias("quality_lag1"),
+        _quality_delta(match["quality"], pred["quality"]).alias("quality_delta"),
+        pick("warc_ts", "warc_ts_lag1").alias("matched_ts"),
     )
 
 
@@ -582,15 +575,20 @@ def html_to_text(pages: DataFrame, html_col: str = "html", out_col: str = "extra
     to read it, so everything downstream keeps the scan pruned to the
     narrow columns.
     """
+    from pyspark.sql.functions import PandasUDFType, pandas_udf
+
+    extract = pandas_udf(_html_text_batches, "string", PandasUDFType.SCALAR_ITER)
+    return pages.withColumn(out_col, extract(F.col(html_col)))
+
+
+def _html_text_batches(batches):
+    """The converter's function over one task's batches of ``html``
+    (pandas Series of bytes); it keeps the archive listings
+    (:func:`_keep_archive_listings`) as the feature stage does."""
     import html as _html
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from pyspark.sql.functions import PandasUDFType
-
-    @pandas_udf("string", PandasUDFType.SCALAR)
-    def _extract(s):
+    _keep_archive_listings()
+    for s in batches:
         txt = s.str.decode("utf-8", errors="replace")  # vectorized, null-safe
         txt = (
             # (?s): script/style bodies span newlines in real HTML — without
@@ -605,9 +603,7 @@ def html_to_text(pages: DataFrame, html_col: str = "html", out_col: str = "extra
         if amp.any():
             txt = txt.copy()
             txt.loc[amp] = txt.loc[amp].map(_html.unescape)
-        return txt.str.replace(r"\s+", " ", regex=True).str.strip()
-
-    return pages.withColumn(out_col, _extract(F.col(html_col)))
+        yield txt.str.replace(r"\s+", " ", regex=True).str.strip()
 
 
 def url_features(pages: DataFrame, url_col: str = "url",

@@ -343,12 +343,31 @@ def test_feature_batches_keep_archive_listings(tmp_path, monkeypatch):
     re-reading the archives already on its path: a file added to such
     an archive afterwards stays unseen, while an archive that appears
     later is read as usual."""
+    from pliers_spark.pages_pipeline import _feature_batches
+
+    _assert_keeps_archive_listings(
+        tmp_path, monkeypatch, lambda: list(_feature_batches(iter([]), ("url",))) == [])
+
+
+def test_html_text_batches_keep_archive_listings(tmp_path, monkeypatch):
+    """The html converter's function keeps the archive listings as the
+    feature stage's does, and still converts its batches."""
+    import pandas as pd
+
+    from pliers_spark.pages_pipeline import _html_text_batches
+
+    def convert():
+        out = list(_html_text_batches(iter([pd.Series([b"<p>a &amp; b</p>", None])])))
+        return len(out) == 1 and out[0].tolist()[0] == "a & b" and pd.isna(out[0][1])
+
+    _assert_keeps_archive_listings(tmp_path, monkeypatch, convert)
+
+
+def _assert_keeps_archive_listings(tmp_path, monkeypatch, run):
     import importlib
     import sys
     import zipfile
     import zipimport
-
-    from pliers_spark.pages_pipeline import _feature_batches
 
     def archive(name):
         path = str(tmp_path / name)
@@ -358,7 +377,7 @@ def test_feature_batches_keep_archive_listings(tmp_path, monkeypatch):
 
     old = archive("old.zip")
     monkeypatch.setitem(sys.path_importer_cache, old, zipimport.zipimporter(old))
-    assert list(_feature_batches(iter([]), ("url",))) == []
+    assert run()
     new = archive("new.zip")
     monkeypatch.setitem(sys.path_importer_cache, new, zipimport.zipimporter(new))
     for path in (old, new):
@@ -513,6 +532,37 @@ def test_skew_flagship_bit_equal_on_adversarial_snapshots(spark, tmp_path):
     assert any(r.text_length_lag1 is None and r.matched_ts > first for r in out)
 
 
+def test_skew_flagship_bit_equal_when_lag2_spans_two_buckets(spark, tmp_path):
+    """A url whose only snapshot in one 90-day bucket (2024-03-18 to
+    2024-06-16) is the predecessor of the next bucket's first row: the
+    spine points between the two are owned by that lone snapshot, so
+    their lag-1 values come from the previous bucket's last snapshot,
+    two buckets back from the row that emits them. Both gaps around the
+    lone snapshot open a new session. (``timestamp_ntz``, bucketed as
+    UTC, so the collected values compare as given.)"""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    ts = [base + dt.timedelta(days=10 * k) for k in range(7)]  # bucket 1, ends 2024-03-01
+    lone = dt.datetime(2024, 5, 1)
+    ts += [lone, dt.datetime(2024, 6, 20), dt.datetime(2024, 6, 27)]
+    bucket = [(t - dt.datetime(1970, 1, 1)) // dt.timedelta(days=90) for t in ts]
+    assert bucket[5:] == [219, 219, 220, 221, 221]
+    rows = [("https://hot.example.com/", t, " ".join(["page"] * (k + 1)), "en")
+            for k, t in enumerate(ts)]
+    rows.append(("https://cold.example.com/", base, "cold page", "en"))
+    p = str(tmp_path / "lone_snapshot_pages")
+    spark.createDataFrame(
+        rows, "url string, warc_ts timestamp_ntz, text string, lang string"
+    ).write.parquet(p)
+    out = _assert_skew_flagship_bit_equal(spark, p).collect()
+    owned = [r for r in out if r.url.startswith("https://hot") and lone < r.t < ts[8]]
+    assert owned, out
+    for r in owned:
+        assert r.matched_ts == lone and r.text_length == 8 * 5 - 1
+        assert r.text_length_lag1 == 7 * 5 - 1 and r.session_id == 2
+
+
 def test_flagship_duplicate_snapshot_one_row_per_spine_point(spark, tmp_path):
     """Hostile input: one (url, warc_ts) snapshot of the hot url appears
     twice. Both paths still return exactly one row per spine point, on
@@ -589,49 +639,67 @@ def test_flagship_drops_snapshots_without_url(spark, tmp_path, monkeypatch):
 
 
 def test_flagship_independent_of_session_time_zone(spark, tmp_path):
-    """``timestamp_ntz`` snapshots across New York's 2024 DST changes
-    give the same feature table, bit for bit, under the UTC and the
-    America/New_York session zones, on both paths. Url a crosses the
-    November fall-back with an exact 30-day gap (not a new session:
+    """Snapshots across New York's 2024 DST changes give the same
+    feature table, bit for bit, under the UTC and the America/New_York
+    session zones, on both paths, whether ``warc_ts`` is a wall-clock
+    ``timestamp_ntz`` or an instant (``timestamp``, given in UTC), and
+    no spine point takes a snapshot later than itself. Url a crosses
+    the November fall-back with an exact 30-day gap (not a new session:
     the gap must exceed 30 days) and then has a snapshot on a grid
     instant (t0 + 5 weeks, so it matches itself); url b crosses the
     March spring-forward with a gap of 30 days and 30 minutes (a new
     session) and then has a snapshot on t0 + 5 weeks. Read in the New
-    York zone, each difference across a change is off by an hour."""
+    York zone, each difference across a change is off by an hour, and
+    so is a point placed by adding whole days on its wall clock: on
+    the instants, b's point t0 + 5 weeks would land an hour before the
+    snapshot that matches it."""
+    for ts_type in ("timestamp_ntz", "timestamp"):
+        _assert_flagship_zone_free(spark, str(tmp_path / ts_type), ts_type)
+
+
+def _assert_flagship_zone_free(spark, path, ts_type):
     import datetime as dt
+
+    import pyspark.sql.functions as F
 
     from pliers_spark.pages_pipeline import pages_flagship
 
     d = dt.timedelta
-    a0, b0 = dt.datetime(2024, 10, 20, 12), dt.datetime(2024, 2, 20, 12)
+    tz = dt.timezone.utc if ts_type == "timestamp" else None
+    a0 = dt.datetime(2024, 10, 20, 12, tzinfo=tz)
+    b0 = dt.datetime(2024, 2, 20, 12, tzinfo=tz)
     rows = [("a", a0 + g, f"page a {i} the cat", "en")
             for i, g in enumerate([d(0), d(days=30), d(weeks=5), d(days=40)])]
     rows += [("b", b0 + g, f"page b {i} and a dog", "en")
              for i, g in enumerate([d(0), d(days=30, minutes=30), d(weeks=5), d(weeks=6, days=1)])]
-    p = str(tmp_path / "ntz_pages")
     spark.createDataFrame(
-        rows, "url string, warc_ts timestamp_ntz, text string, lang string"
-    ).write.parquet(p)
+        rows, f"url string, warc_ts {ts_type}, text string, lang string"
+    ).write.parquet(path)
 
     zone = spark.conf.get("spark.sql.session.timeZone")
     out = {}
     try:
-        for tz in ("UTC", "America/New_York"):
-            spark.conf.set("spark.sql.session.timeZone", tz)
+        for session_tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", session_tz)
             for skew in (False, True):
-                out[tz, skew] = _bits(pages_flagship(spark, p, skew_safe=skew))
+                got = pages_flagship(spark, path, skew_safe=skew)
+                leaks = got.where(F.col("matched_ts") > F.col("t")).count()
+                assert leaks == 0, (ts_type, session_tz, skew)
+                out[session_tz, skew] = _bits(got)
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        utc = pages_flagship(spark, p, skew_safe=False).collect()
+        utc = pages_flagship(spark, path, skew_safe=False).select(
+            "url", "session_id", *[F.col(c).cast("string").alias(c) for c in ("t", "matched_ts")]
+        ).collect()
     finally:
         spark.conf.set("spark.sql.session.timeZone", zone)
     for key, got in out.items():
-        assert got == out["UTC", False], key
+        assert got == out["UTC", False], (ts_type, key)
 
     at = {(r.url, r.t): r for r in utc}
-    assert at["a", a0 + d(weeks=5)].matched_ts == a0 + d(weeks=5)
-    assert at["b", b0 + d(weeks=5)].matched_ts == b0 + d(weeks=5)
-    assert at["a", a0 + d(weeks=5)].session_id == 1
-    assert at["b", b0 + d(weeks=5)].session_id == 2
+    a5, b5 = (str((x + d(weeks=5)).replace(tzinfo=None)) for x in (a0, b0))
+    assert at["a", a5].matched_ts == a5 and at["b", b5].matched_ts == b5
+    assert at["a", a5].session_id == 1
+    assert at["b", b5].session_id == 2
 
 
 _STEP_S = 10

@@ -84,22 +84,44 @@ def test_plain_flagship_one_shuffle_no_join(spark, pages_path):
     assert "Join" not in plan, plan
 
 
+def final_plan(df) -> str:
+    """The adaptive plan that ran: execute ``df``, then keep the final
+    plan (the initial one follows it in the string). Exchange reuse
+    happens when adaptive execution creates the query stages, so only
+    this plan shows which subtrees really ran once."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan[:500]
+    return plan.split("== Initial Plan ==")[0]
+
+
 def test_skew_safe_flagship_extracts_once(spark, pages_path):
-    """The skew-safe flagship resolves sessions, lags and the as-of
-    match on the (url, warc_ts) skeleton and attaches the features with
-    one join, so the Arrow extraction runs exactly once, as on the
-    plain path."""
-    plan = plan_of(pages_flagship(spark, pages_path, skew_safe=True))
+    """The skew-safe flagship carries the whole extracted row, packed in
+    one struct, through one time-bucket carry pass: no skeleton scan,
+    no attach join, no fold. Both sides of the carry pass's self-join
+    read the same ``(url, _tb)`` exchange, so in the plan that ran the
+    scan and the Arrow extraction appear once, one exchange is reused,
+    the only Join is the carry join, and no aggregate is keyed on the
+    spine point (url, t)."""
+    import re
+
+    plan = final_plan(pages_flagship(spark, pages_path, skew_safe=True))
+    assert plan.count("FileScan") == 1, plan
     assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("ReusedExchange") >= 1, plan
+    assert plan.count("Join") == 1, plan
+    keys = re.findall(r"Aggregate\(keys?=\[([^\]]*)\]", plan)
+    assert keys, plan
+    assert not [k for k in keys if re.search(r"\bt#", k)], plan
 
 
 def test_flagship_build_py4j_budget(spark, pages_path, monkeypatch):
     """Building (not running) either flagship plan stays within a budget
     of py4j commands sent to the JVM, about 1.25x the count with
-    PySpark's per-call call-site capture off (plain 517, skew-safe 1,009
+    PySpark's per-call call-site capture off (plain 516, skew-safe 853
     on this fixture). With the capture on, every ``F.col`` /
     ``withColumns`` call also walks the Python stack and sends it to the
-    JVM: 1,177 and 2,329 commands. Proxy releases (``m d`` commands) are
+    JVM: 1,166 and 2,113 commands. Proxy releases (``m d`` commands) are
     not counted: they follow the timing of Python's garbage collector."""
     import pyspark.errors.utils
 
@@ -115,7 +137,7 @@ def test_flagship_build_py4j_budget(spark, pages_path, monkeypatch):
             sent.append(command)
         return send(command, *args, **kwargs)
 
-    for skew_safe, budget in ((False, 650), (True, 1260)):
+    for skew_safe, budget in ((False, 650), (True, 1070)):
         pages_flagship(spark, pages_path, skew_safe=skew_safe)  # warm-up
         sent.clear()
         monkeypatch.setattr(client, "send_command", counting)
