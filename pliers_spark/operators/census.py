@@ -7,11 +7,11 @@ unpartitioned Window over the raw rows — which moves EVERY row to one
 task ("No Partition Defined for Window operation").  At 10^12 rows that
 is a guaranteed OOM, not a slowdown.
 
-The fix (the ``harrells_c`` pattern, queries/stats_17.py): contract the
-raw grain to a **value census** first — ``groupBy(value).count()`` is
-one map-side-combined shuffle whose output is bounded by the number of
-DISTINCT values (for the engine's integer features: doc lengths, token
-counts, day numbers — thousands, not trillions).  All rank arithmetic
+The fix: contract the raw grain to a **value census** first —
+``groupBy(value).count()`` is one map-side-combined shuffle whose
+output is bounded by the number of DISTINCT values (for the engine's
+integer features: doc lengths, token counts, day numbers — thousands,
+not trillions).  All rank arithmetic
 then runs on the census rows; per-row ranks are recovered (when needed
 at all) by a **broadcast** join back on the value.  Every unpartitioned
 Window in this module therefore consumes a post-aggregation frame,

@@ -11,8 +11,8 @@ Mergeability is guaranteed by keeping only decomposable aggregates in
 integer space: ``count`` and a ``sum`` of once-rounded micro-unit
 values (int64), so re-aggregation is exact and order-independent —
 the day total from hour partials is bit-identical to the day total
-from raw, which the DuckDB oracle (which *does* compute every level
-from raw) proves on every run. Averages are derived at read time from
+from raw (tests/test_rollup.py compares every coarse level with a
+direct aggregation of raw). Averages are derived at read time from
 (sum, count), never stored.
 
 The shared DAG is cut at the hour level with an eager
@@ -123,27 +123,3 @@ def merge_rollup(
             F.sum("sum_value_fp").alias("sum_value_fp"),
         )
     )
-
-
-def multires_rollup_sql(
-    table: str = "events",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    levels: tuple[str, ...] = LEVELS,
-) -> str:
-    """DuckDB oracle: every level aggregated DIRECTLY from raw — green
-    equality is the proof that the engine's partial-merge reuse is
-    exact (int64 sums commute; a float path would not hash-match)."""
-    lvl_selects = [
-        f"""SELECT '{lv}' AS resolution,
-       date_trunc('{lv}', {ts_col})::TIMESTAMP AS bucket_start,
-       count(*)::BIGINT AS n_events,
-       sum(v_fp)::BIGINT AS sum_value_fp
-FROM raw GROUP BY 2"""
-        for lv in levels
-    ]
-    body = "\nUNION ALL\n".join(lvl_selects)
-    return f"""WITH raw AS (
-  SELECT {ts_col}, CAST(round({value_col} * 1000000.0) AS BIGINT) AS v_fp
-  FROM {table})
-{body}"""

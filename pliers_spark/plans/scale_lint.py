@@ -5,8 +5,8 @@ Partition Defined for Window operation" warning) or a constant-grouped
 ``applyInPandas`` moves EVERY row of its input to one task.  That is
 safe by construction only when the input is a bounded *census* frame —
 the output of an aggregation that contracted raw grain to a
-statistically bounded number of cells (the harrells/ks pattern:
-``queries/stats_17.py``).  Nothing used to gate that invariant: a
+statistically bounded number of cells (the census pattern of
+``operators/census.py``).  Nothing used to gate that invariant: a
 future query could put a global window on a raw-grain frame, pass
 correctness at sf0.01, and hide a single-task scale-killer.
 

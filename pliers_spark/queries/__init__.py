@@ -2,7 +2,6 @@
 queries.py into domain modules; identical QUERIES/ORACLES surface).
 """
 from ._registry import QUERIES, ORACLES, query, _docs, _events
-from . import _registry
 from . import core_parity
 from . import temporal_core
 from . import relational
@@ -13,7 +12,6 @@ from . import encoder_nlp
 from . import audio_librosa
 from . import curation_a
 from . import curation_b
-from . import stats_01
 from . import stats_02
 from . import stats_03
 from . import stats_04
@@ -26,16 +24,3 @@ from . import stats_10
 from . import stats_11
 from . import stats_12
 from . import stats_13
-from . import stats_14
-from . import stats_15
-from . import stats_16
-from . import stats_17
-
-# preserve the monolith's attribute surface: every top-level name that
-# was reachable as pliers_spark.queries.X is still reachable (tests
-# import helpers like _LEXICON_ROWS, _RBO_W, _NDCG_W directly).
-for _m in [_registry, core_parity, temporal_core, relational, dedup_sim, features_a, features_b, encoder_nlp, audio_librosa, curation_a, curation_b, stats_01, stats_02, stats_03, stats_04, stats_05, stats_06, stats_07, stats_08, stats_09, stats_10, stats_11, stats_12, stats_13, stats_14, stats_15, stats_16, stats_17]:
-    for _k in dir(_m):
-        if not _k.startswith('__') and _k not in globals():
-            globals()[_k] = getattr(_m, _k)
-del _m, _k

@@ -3,7 +3,8 @@
 
 Queries: token_count_bpe, token_fertility, edu_classifier, pii_scrub,
     boilerplate_removal, yin_f0, chroma_stft, curation_pipeline,
-    mfcc_energy, tempogram
+    mfcc_energy, tempogram, hash_split, rate_sample, stratified_sample,
+    mixture_sample, kn_perplexity
 """
 from __future__ import annotations
 
@@ -330,8 +331,6 @@ def q_curation_pipeline(spark, sf_dir):
     split assignment. Catalyst pipelines the scrub/split projections
     into the rank filter; two window shuffles (hash, lang) total -- the
     shape a 100 TB cleaning pass actually runs."""
-    from pliers_spark.queries import _PII_RULES  # self-import safe at call time
-
     d = _docs(spark, sf_dir)
     w_rep = Window.partitionBy(md5_int(F.col("text"))).orderBy("doc_id")
     reps = d.withColumn("rn", F.row_number().over(w_rep)).where(F.col("rn") == 1)
@@ -409,3 +408,111 @@ def _decontaminate_sql() -> str:
     from pliers_spark.operators.curation import decontaminate_sql
 
     return decontaminate_sql()
+
+
+
+# --------------------------------------------------------------------------
+# sampling: leak-proof splits, rate/stratified/mixture sampling
+# (operators/sampling.py, operators/curation.py)
+
+def _hash_split_sql() -> str:
+    from pliers_spark.operators.sampling import hash_split_sql
+
+    return hash_split_sql("documents", "doc_id", "doc_id, lang")
+
+
+
+@query("hash_split", _hash_split_sql())
+def q_hash_split(spark, sf_dir):
+    """Deterministic train/valid/test split (98/1/1) by id hash — the
+    reproducible-corpus-construction split convention (C4/The Pile): a
+    pure projection (zero shuffle, no RNG), every row's split
+    recomputable from its id alone (operators/sampling.hash_split)."""
+    from pliers_spark.operators.sampling import hash_split
+
+    return hash_split(_docs(spark, sf_dir).select("doc_id", "lang"), "doc_id")
+
+
+
+def _rate_sample_sql() -> str:
+    from pliers_spark.operators.sampling import rate_sample_sql
+
+    return f"""WITH s AS ({rate_sample_sql('documents', 'doc_id', 250000, seed=3)})
+       SELECT doc_id, lang, source FROM s"""
+
+
+
+@query("rate_sample", _rate_sample_sql())
+def q_rate_sample(spark, sf_dir):
+    """Seeded Bernoulli-by-hash down-sampling gate (keep 25%): a plain
+    deterministic filter that pushes below wide operators and is stable
+    under task retries — the smoke-slice / ablation-corpus sampler
+    (operators/sampling.rate_sample)."""
+    from pliers_spark.operators.sampling import rate_sample
+
+    return rate_sample(
+        _docs(spark, sf_dir).select("doc_id", "lang", "source"), "doc_id", 250000, seed=3
+    )
+
+
+
+def _stratified_sql() -> str:
+    from pliers_spark.operators.sampling import stratified_sample_sql
+
+    return stratified_sample_sql("documents", ["lang", "source"], "doc_id", 5)
+
+
+
+@query("stratified_sample", _stratified_sql())
+def q_stratified_sample(spark, sf_dir):
+    """Exact-k-per-stratum sample (5 per lang×source), winners = the k
+    smallest (hash(id), id) per stratum — deterministic and
+    layout-independent, unlike 'first k seen'. One shuffle on the
+    strata key (operators/sampling.stratified_sample)."""
+    from pliers_spark.operators.sampling import stratified_sample
+
+    return stratified_sample(_docs(spark, sf_dir), ["lang", "source"], "doc_id", 5)
+
+
+
+def _mixture_sql() -> str:
+    from pliers_spark.operators.curation import mixture_sample_sql
+
+    return mixture_sample_sql()
+
+
+
+@query("mixture_sample", _mixture_sql())
+def q_mixture_sample(spark, sf_dir):
+    """Data-mixture balancing across the `source` column (equalize to
+    the smallest group): group census → broadcast rates → narrow
+    integer-hash filter; kept rows carry group/min weights. The corpus
+    scan itself never shuffles (operators/curation.mixture_sample)."""
+    from pliers_spark.operators.curation import mixture_sample
+
+    return mixture_sample(_docs(spark, sf_dir))
+
+
+
+# --------------------------------------------------------------------------
+# Kneser-Ney LM scoring (operators/lm.py)
+
+def _kn_sql() -> str:
+    from pliers_spark.operators.lm import kneser_ney_score_sql
+
+    return kneser_ney_score_sql()
+
+
+
+@query("kn_perplexity", _kn_sql())
+def q_kn_perplexity(spark, sf_dir):
+    """Interpolated Kneser-Ney bigram LM scoring + perplexity — the
+    KenLM smoothing family, i.e. the model class CCNet's actual quality
+    filter uses (operators/lm.kneser_ney_score; Kneser & Ney 1995,
+    Chen & Goodman 1999). Same shuffle structure as `lm_score` (vocab
+    top-k, ONE bigram-grain model agg — the continuation-type counts
+    ride the same grain — broadcast model, per-doc reduction); per-type
+    log-probs in once-rounded integer micro-nats."""
+    from pliers_spark.operators.lm import kneser_ney_score
+
+    return kneser_ney_score(_docs(spark, sf_dir))

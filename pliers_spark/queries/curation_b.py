@@ -100,13 +100,6 @@ def q_sequence_pack(spark, sf_dir):
 
 
 
-def _mixture_sql() -> str:
-    from pliers_spark.operators.curation import mixture_sample_sql
-
-    return mixture_sample_sql()
-
-
-
 def _temperature_sql() -> str:
     from pliers_spark.operators.curation import temperature_sample_sql
 
@@ -316,13 +309,6 @@ def q_pq_recall(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_recall(emb, emb.where(F.col("vec_id") < 8), k=5)
-
-
-
-def _rollup_sql() -> str:
-    from pliers_spark.operators.rollup import multires_rollup_sql
-
-    return multires_rollup_sql()
 
 
 
@@ -2495,7 +2481,3 @@ def q_ecdf_normalize(spark, sf_dir):
         F.round(F.percent_rank().over(w) * F.lit(1e6), 0)
         .cast("long").alias("pr_fp"),
     )
-
-
-
-_NEG_K = 4

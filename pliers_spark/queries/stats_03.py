@@ -1,7 +1,7 @@
 """Registry module (split from the former queries.py monolith; same
 @query/ORACLES contract as every sibling).
 
-Queries: kn_perplexity, burrows_delta, item_cosine, cdc_chunks, ucb_arms,
+Queries: burrows_delta, item_cosine, cdc_chunks, ucb_arms,
     dbscan_clusters, ari_nmi, triangle_coeffs, covariate_balance,
     wasserstein_1d, texttiling_gaps, degree_assortativity,
     mann_kendall_sen, kruskal_wallis, cmh_odds, doremi_step, ann_hubness,
@@ -17,29 +17,7 @@ from .features_a import _simhash_pairs_cte
 
 
 # --------------------------------------------------------------------------
-# batch 25: Kneser-Ney LM scoring, Burrows' Delta stylometry, item-item cosine
-
-def _kn_sql() -> str:
-    from pliers_spark.operators.lm import kneser_ney_score_sql
-
-    return kneser_ney_score_sql()
-
-
-
-@query("kn_perplexity", _kn_sql())
-def q_kn_perplexity(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram LM scoring + perplexity — the
-    KenLM smoothing family, i.e. the model class CCNet's actual quality
-    filter uses (operators/lm.kneser_ney_score; Kneser & Ney 1995,
-    Chen & Goodman 1999). Same shuffle structure as `lm_score` (vocab
-    top-k, ONE bigram-grain model agg — the continuation-type counts
-    ride the same grain — broadcast model, per-doc reduction); per-type
-    log-probs in once-rounded integer micro-nats."""
-    from pliers_spark.operators.lm import kneser_ney_score
-
-    return kneser_ney_score(_docs(spark, sf_dir))
-
-
+# batch 25: Burrows' Delta stylometry, item-item cosine
 
 _DELTA_TOPM = 50
 

@@ -558,8 +558,9 @@ def q_kmv_rollup(spark, sf_dir):
     """Mergeable distinct-count rollup: per-DAY KMV bottom-k sketches of
     active users, merged day→week by taking the k smallest of the
     unioned sketch values — the weekly estimate touches ONLY k×7 sketch
-    rows, never the raw events again (the `rollup_multires` pattern for
-    COUNT DISTINCT, which plain partial sums can't roll up). Audited
+    rows, never the raw events again (the `rollup.multires_rollup`
+    pattern for COUNT DISTINCT, which plain partial sums can't roll
+    up). Audited
     against the exact weekly distinct count; if every constituent day
     stayed under k the merged sketch is provably exact and the estimate
     collapses to it. Plan: one distinct (day, user-hash) census, two

@@ -1,12 +1,12 @@
 """Registry module (split from the former queries.py monolith; same
 @query/ORACLES contract as every sibling).
 
-Queries: wl_colors, hill_numbers, simpsons_paradox, zorder_locality,
-    gini_stump, histogram_quantile_audit, regression_influence,
-    risk_coverage, rolling_distinct_users, hill_tail_index,
-    energy_distance, bradley_terry, mcnemar_test, chao_shen_entropy,
-    borda_copeland, fisher_lda, jarque_bera, attribute_assortativity,
-    word_burstiness, word_dispersion_dp
+Queries: wl_colors, hill_numbers, zorder_locality, gini_stump,
+    histogram_quantile_audit, regression_influence, risk_coverage,
+    rolling_distinct_users, hill_tail_index, energy_distance,
+    bradley_terry, mcnemar_test, chao_shen_entropy, fisher_lda,
+    jarque_bera, attribute_assortativity, word_burstiness,
+    word_dispersion_dp
 """
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from ._registry import F, T, Window, _docs, _events, load_table, md5_int_sql, qu
 
 
 # --------------------------------------------------------------------------
-# batch 62: WL graph colors, Hill diversity numbers, Simpson's paradox audit
+# batch 62: WL graph colors, Hill diversity numbers
 
 _WL_ROUNDS = 3
 
@@ -170,79 +170,6 @@ def q_hill_numbers(spark, sf_dir):
         F.round(
             (F.col("n").cast("double") * (F.col("n") - 1)) / F.col("c2").cast("double"), 6
         ).alias("hill_q2"),
-    )
-
-
-
-@query(
-    "simpsons_paradox",
-    """WITH base AS (
-         SELECT source, len(string_split(trim(text), ' '))::BIGINT AS x,
-                n_chars::BIGINT AS y
-         FROM documents),
-       grp AS (
-         SELECT source, count(*)::BIGINT AS n, sum(x)::BIGINT AS sx,
-                sum(y)::BIGINT AS sy,
-                sum(x::HUGEINT * y::HUGEINT) AS sxy,
-                sum(x::HUGEINT * x::HUGEINT) AS sxx
-         FROM base GROUP BY source),
-       pool AS (
-         SELECT sum(n)::BIGINT AS n, sum(sx)::BIGINT AS sx, sum(sy)::BIGINT AS sy,
-                sum(sxy) AS sxy, sum(sxx) AS sxx
-         FROM grp)
-       SELECT g.source, g.n AS n_docs,
-              round((g.n * g.sxy - g.sx::HUGEINT * g.sy)::DOUBLE
-                    / (g.n * g.sxx - g.sx::HUGEINT * g.sx)::DOUBLE, 6) AS slope,
-              round((p.n * p.sxy - p.sx::HUGEINT * p.sy)::DOUBLE
-                    / (p.n * p.sxx - p.sx::HUGEINT * p.sx)::DOUBLE, 6) AS pooled_slope,
-              (sign((g.n * g.sxy - g.sx::HUGEINT * g.sy)::DOUBLE)
-               <> sign((p.n * p.sxy - p.sx::HUGEINT * p.sy)::DOUBLE)) AS reversed
-       FROM grp g CROSS JOIN pool p
-       WHERE (g.n * g.sxx - g.sx::HUGEINT * g.sx) > 0""",
-)
-def q_simpsons_paradox(spark, sf_dir):
-    """Simpson's-paradox audit (Simpson, JRSS-B 1951): per-source OLS
-    slope of chars~tokens vs the pooled slope, flagging sources whose
-    within-group trend REVERSES the aggregate trend — the aggregation
-    bias that invalidates corpus-level regressions built on
-    `heteroscedasticity_bp`'s fit when group composition confounds.
-    Slope numerators/denominators are exact HUGEINT (n·Σxy − Σx·Σy),
-    so the reversal flag is the sign of an exact integer — no float
-    threshold anywhere; the reported slopes are one division each.
-    One census per grain, pooled stats from the group census (map-side
-    merge, no second scan)."""
-    d = _docs(spark, sf_dir)
-    dec = "decimal(38,0)"
-    base = d.select(
-        "source",
-        F.size(T.tokenize(F.col("text"))).cast("long").alias("x"),
-        F.col("n_chars").cast("long").alias("y"),
-    )
-    grp = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x").cast(dec) * F.col("y").cast(dec)).cast(dec).alias("sxy"),
-        F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).cast(dec).alias("sxx"),
-    ).stableCheckpoint(eager=True)
-    pool = grp.agg(
-        F.sum("n").cast("long").alias("pn"), F.sum("sx").cast("long").alias("psx"),
-        F.sum("sy").cast("long").alias("psy"),
-        F.sum("sxy").cast(dec).alias("psxy"), F.sum("sxx").cast(dec).alias("psxx"),
-    )
-    j = grp.crossJoin(F.broadcast(pool))
-    gnum = (F.col("n") * F.col("sxy") - F.col("sx").cast(dec) * F.col("sy")).cast(dec)
-    gden = (F.col("n") * F.col("sxx") - F.col("sx").cast(dec) * F.col("sx")).cast(dec)
-    pnum = (F.col("pn") * F.col("psxy") - F.col("psx").cast(dec) * F.col("psy")).cast(dec)
-    pden = (F.col("pn") * F.col("psxx") - F.col("psx").cast(dec) * F.col("psx")).cast(dec)
-    return (
-        j.where(gden > 0)
-        .select(
-            "source", F.col("n").alias("n_docs"),
-            F.round(gnum.cast("double") / gden.cast("double"), 6).alias("slope"),
-            F.round(pnum.cast("double") / pden.cast("double"), 6).alias("pooled_slope"),
-            (F.signum(gnum.cast("double")) != F.signum(pnum.cast("double"))).alias("reversed"),
-        )
     )
 
 
@@ -566,7 +493,7 @@ def q_regression_influence(spark, sf_dir):
     h_i = 1/n + (x_i−x̄)²/Sxx and Cook's distance D_i = r_i²·h_i /
     (p·s²·(1−h_i)²) (Cook, Technometrics 1977), top-20 most influential
     documents — the single-pass influence screen that says WHICH rows
-    `heteroscedasticity_bp` / `simpsons_paradox` anomalies come from
+    `heteroscedasticity_bp` anomalies come from
     (a handful of giant boilerplate docs can steer the whole corpus
     fit). Everything derives from ONE census of exact HUGEINT
     sufficient statistics broadcast to a second narrow pass; per-row
@@ -1242,106 +1169,7 @@ def q_chao_shen_entropy(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# batch 67: rank aggregation, Fisher LDA, Jarque-Bera
-
-
-@query(
-    "borda_copeland",
-    """WITH m AS (
-         SELECT source,
-                sum(n_chars)::BIGINT AS s_len,
-                count(*)::BIGINT AS n,
-                count(DISTINCT lang)::BIGINT AS n_lang
-         FROM documents GROUP BY source),
-       v AS (
-         SELECT m.source, m.n,
-                len(list_distinct(flatten(list(string_split(trim(d.text), ' ')))))::BIGINT
-                  AS vocab,
-                max(m.s_len) AS s_len, max(m.n_lang) AS n_lang
-         FROM m JOIN documents d USING (source)
-         GROUP BY m.source, m.n),
-       ranked AS (
-         SELECT source,
-                row_number() OVER (ORDER BY s_len * 1.0 / n DESC, source) AS r1,
-                row_number() OVER (ORDER BY vocab DESC, source) AS r2,
-                row_number() OVER (ORDER BY n_lang DESC, source) AS r3,
-                count(*) OVER () AS s
-         FROM v),
-       borda AS (
-         SELECT source, r1, r2, r3,
-                (3 * s - r1 - r2 - r3)::BIGINT AS borda_score, s
-         FROM ranked),
-       cop AS (
-         SELECT a.source,
-                sum(CASE WHEN (CASE WHEN a.r1 < b.r1 THEN 1 ELSE 0 END)
-                          + (CASE WHEN a.r2 < b.r2 THEN 1 ELSE 0 END)
-                          + (CASE WHEN a.r3 < b.r3 THEN 1 ELSE 0 END) >= 2
-                         THEN 1 ELSE 0 END)::BIGINT AS copeland_wins
-         FROM borda a JOIN borda b ON a.source <> b.source
-         GROUP BY a.source)
-       SELECT b.source, b.r1 AS rank_len, b.r2 AS rank_vocab, b.r3 AS rank_langs,
-              b.borda_score, c.copeland_wins
-       FROM borda b JOIN cop c USING (source)""",
-)
-def q_borda_copeland(spark, sf_dir):
-    """Rank aggregation across three per-source quality criteria (mean
-    doc length, vocabulary size, language breadth) by Borda count
-    (Borda 1781: points = Σ(S − rank)) and Copeland pairwise majority
-    (Copeland 1951: wins = #opponents beaten on ≥2 of 3 criteria) —
-    the social-choice machinery behind multi-metric source selection
-    when no single score is trusted (`max_coverage`/`dsir_weights`
-    pick by one objective; this reconciles several). All ranks are
-    deterministic row_numbers (ties → source) over S rows; the
-    Copeland join is S×S on the tiny rank table. Complements
-    `rbo_rankings`, which MEASURES ranking agreement — this RESOLVES
-    disagreement into one order."""
-    d = _docs(spark, sf_dir)
-    m = d.groupBy("source").agg(
-        F.sum("n_chars").cast("long").alias("s_len"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.count_distinct("lang").cast("long").alias("n_lang"),
-    )
-    vocab = (
-        d.select("source", F.explode(T.tokenize(F.col("text"))).alias("w"))
-        .groupBy("source").agg(F.count_distinct("w").cast("long").alias("vocab"))
-    )
-    v = m.join(vocab, "source").stableCheckpoint(eager=True)
-    wn = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked = v.select(
-        "source",
-        F.row_number().over(
-            Window.orderBy(F.desc(F.col("s_len") * 1.0 / F.col("n")), "source")
-        ).alias("r1"),
-        F.row_number().over(Window.orderBy(F.desc("vocab"), "source")).alias("r2"),
-        F.row_number().over(Window.orderBy(F.desc("n_lang"), "source")).alias("r3"),
-        F.count(F.lit(1)).over(wn).alias("s"),
-    )
-    borda = ranked.select(
-        "source", "r1", "r2", "r3",
-        (3 * F.col("s") - F.col("r1") - F.col("r2") - F.col("r3")).cast("long").alias("borda_score"),
-    ).stableCheckpoint(eager=True)
-    cop = (
-        borda.alias("a").join(borda.alias("b"), F.col("a.source") != F.col("b.source"))
-        .groupBy(F.col("a.source").alias("source"))
-        .agg(
-            F.sum(
-                (
-                    (F.col("a.r1") < F.col("b.r1")).cast("int")
-                    + (F.col("a.r2") < F.col("b.r2")).cast("int")
-                    + (F.col("a.r3") < F.col("b.r3")).cast("int")
-                    >= 2
-                ).cast("long")
-            ).cast("long").alias("copeland_wins")
-        )
-    )
-    return borda.join(cop, "source").select(
-        "source",
-        F.col("r1").cast("long").alias("rank_len"),
-        F.col("r2").cast("long").alias("rank_vocab"),
-        F.col("r3").cast("long").alias("rank_langs"),
-        "borda_score", "copeland_wins",
-    )
-
+# batch 67: Fisher LDA, Jarque-Bera
 
 
 @query(

@@ -3,17 +3,11 @@
 
 Queries: densest_subgraph, label_propagation, huber_location,
     luhn_summary, soundex_blocking, gini_over_time, log_loss,
-    eigenvector_centrality, kish_weights, triplet_eval, cka_alignment,
-    mmr_select, auc_delong_ci, cochran_q, prequential_logloss,
-    shuffle_quality, dup_cross_source_matrix, seasonal_kendall, runs_test,
-    friedman_test
+    eigenvector_centrality, kish_weights
 """
 from __future__ import annotations
 
-from ._registry import D, F, T, Window, _docs, _events, load_table, md5_int, md5_int_sql, query
-from pliers_spark.operators.census import census_collect
-from .dedup_sim import _DOT_SQL, _NORM_A, _NORM_Q, _SIMHASH_BITS
-from .features_a import _simhash_pairs_cte
+from ._registry import F, T, Window, _docs, _events, load_table, query
 
 
 
@@ -770,983 +764,4 @@ def q_kish_weights(spark, sf_dir):
         F.round(F.col("w_micro") / 1e6, 6).alias("weight"),
         F.round(ess, 6).alias("kish_ess"),
         F.round(ess / F.col("nt"), 6).alias("ess_ratio"),
-    )
-
-
-
-# --------------------------------------------------------------------------
-# batch 72: embedding triplet eval, linear CKA view alignment
-
-
-@query(
-    "triplet_eval",
-    f"""WITH e AS (SELECT vec_id, embedding, label FROM embeddings),
-       trip AS (
-         SELECT e.vec_id AS a_id, e.label,
-                lead(vec_id) OVER (PARTITION BY label ORDER BY vec_id) AS p_id,
-                CASE
-                  WHEN lead(label, 1) OVER w <> label THEN lead(vec_id, 1) OVER w
-                  WHEN lead(label, 2) OVER w <> label THEN lead(vec_id, 2) OVER w
-                  WHEN lead(label, 3) OVER w <> label THEN lead(vec_id, 3) OVER w
-                END AS n_id
-         FROM e WINDOW w AS (ORDER BY vec_id)),
-       ok AS (SELECT * FROM trip WHERE p_id IS NOT NULL AND n_id IS NOT NULL),
-       scored AS (
-         SELECT ok.label,
-                round({_DOT_SQL.replace('q.embedding', 'p.embedding')}
-                      / ({_NORM_A} * {_NORM_Q.replace('q.embedding', 'p.embedding')}), 6)
-                  AS cos_ap,
-                round({_DOT_SQL.replace('q.embedding', 'n.embedding')}
-                      / ({_NORM_A} * {_NORM_Q.replace('q.embedding', 'n.embedding')}), 6)
-                  AS cos_an
-         FROM ok JOIN e a ON a.vec_id = ok.a_id
-                 JOIN e p ON p.vec_id = ok.p_id
-                 JOIN e n ON n.vec_id = ok.n_id)
-       SELECT label, count(*)::BIGINT AS n_triplets,
-              sum(CASE WHEN cos_ap > cos_an THEN 1 ELSE 0 END)::BIGINT AS n_correct,
-              round(sum(CASE WHEN cos_ap > cos_an THEN 1 ELSE 0 END)::DOUBLE
-                    / count(*), 6) AS triplet_accuracy
-       FROM scored GROUP BY label""",
-)
-def q_triplet_eval(spark, sf_dir):
-    """Triplet evaluation of embedding quality (the FaceNet/sentence-
-    embedding eval, Schroff et al. 2015): for each anchor, a
-    deterministic positive (next vec of the SAME label) and negative
-    (nearest following vec of a DIFFERENT label within 3 steps — pure
-    window leads, no RNG, no all-pairs), score cos(a,p) > cos(a,n).
-    Per-label accuracy is the class-conditioned answer to "does the
-    embedding respect its labels", upstream of trusting `semantic_dedup`
-    / `ann_ivf_topk` bucket routing. Cosines follow the engine-pinned
-    sequential-fold dot product rounded at 6dp; three vec joins per
-    triplet, all window-driven."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    wl = Window.partitionBy("label").orderBy("vec_id")
-    # CENSUS GRAIN (r4): the global lead(1..3) becomes a range-bucketed
-    # global row_number (operators/census.py) + three uniform equi-joins
-    # on rank arithmetic — no unpartitioned window over raw rows.
-    from pliers_spark.operators.census import scalable_row_number
-
-    m = scalable_row_number(emb.select("vec_id", "label"), "vec_id", out="rn")
-    nbrs = m
-    for j in (1, 2, 3):
-        nb = m.select(
-            (F.col("rn") - j).alias("rn"),
-            F.col("label").alias(f"l{j}"),
-            F.col("vec_id").alias(f"v{j}"),
-        )
-        nbrs = nbrs.join(nb, "rn", "left")
-    n_id = F.when(F.col("l1") != F.col("label"), F.col("v1"))
-    for j in (2, 3):
-        n_id = n_id.when(F.col(f"l{j}") != F.col("label"), F.col(f"v{j}"))
-    neg = nbrs.select(F.col("vec_id").alias("a_id"), n_id.alias("n_id"))
-    trip = (
-        emb.select(
-            F.col("vec_id").alias("a_id"), "label",
-            F.lead("vec_id").over(wl).alias("p_id"),
-        )
-        .join(neg, "a_id")
-        .where(F.col("p_id").isNotNull() & F.col("n_id").isNotNull())
-    )
-    e = emb.select("vec_id", "embedding")
-    j = (
-        trip.join(e.selectExpr("vec_id AS a_id", "embedding AS va"), "a_id")
-        .join(e.selectExpr("vec_id AS p_id", "embedding AS vp"), "p_id")
-        .join(e.selectExpr("vec_id AS n_id", "embedding AS vn"), "n_id")
-    )
-    from pliers_spark.operators.similarity import _dot, _norm
-
-    cos_ap = F.round(_dot(F.col("va"), F.col("vp")) / (_norm(F.col("va")) * _norm(F.col("vp"))), 6)
-    cos_an = F.round(_dot(F.col("va"), F.col("vn")) / (_norm(F.col("va")) * _norm(F.col("vn"))), 6)
-    scored = j.select("label", cos_ap.alias("cos_ap"), cos_an.alias("cos_an"))
-    return scored.groupBy("label").agg(
-        F.count(F.lit(1)).cast("long").alias("n_triplets"),
-        F.sum((F.col("cos_ap") > F.col("cos_an")).cast("long")).cast("long").alias("n_correct"),
-        F.round(
-            F.sum((F.col("cos_ap") > F.col("cos_an")).cast("long")).cast("double")
-            / F.count(F.lit(1)), 6,
-        ).alias("triplet_accuracy"),
-    )
-
-
-
-_CKA_D = 32  # view split: dims 1..32 vs 33..64
-
-
-
-@query(
-    "cka_alignment",
-    f"""WITH q AS (
-         SELECT vec_id,
-                list_transform(embedding[1:{_CKA_D}],
-                               x -> round(x * 1000)::BIGINT) AS xv,
-                list_transform(embedding[{_CKA_D + 1}:{2 * _CKA_D}],
-                               x -> round(x * 1000)::BIGINT) AS yv
-         FROM embeddings),
-       pairs AS (
-         SELECT i.i, j.j,
-                sum(q.xv[i.i] * q.yv[j.j])::BIGINT AS sxy,
-                sum(q.xv[i.i] * q.xv[j.j])::BIGINT AS sxx,
-                sum(q.yv[i.i] * q.yv[j.j])::BIGINT AS syy
-         FROM q, generate_series(1, {_CKA_D}) i(i), generate_series(1, {_CKA_D}) j(j)
-         GROUP BY 1, 2),
-       marg AS (
-         SELECT i.i, sum(q.xv[i.i])::BIGINT AS sx, sum(q.yv[i.i])::BIGINT AS sy
-         FROM q, generate_series(1, {_CKA_D}) i(i) GROUP BY 1),
-       nn AS (SELECT count(*)::BIGINT AS n FROM q),
-       cov AS (
-         SELECT p.i, p.j,
-                round((nn.n * p.sxy - mi.sx::HUGEINT * mj.sy)::DOUBLE
-                      / nn.n / nn.n * 1e6)::BIGINT AS cxy,
-                round((nn.n * p.sxx - mi.sx::HUGEINT * mj.sx)::DOUBLE
-                      / nn.n / nn.n * 1e6)::BIGINT AS cxx,
-                round((nn.n * p.syy - mi.sy::HUGEINT * mj.sy)::DOUBLE
-                      / nn.n / nn.n * 1e6)::BIGINT AS cyy
-         FROM pairs p JOIN marg mi ON mi.i = p.i JOIN marg mj ON mj.i = p.j
-         CROSS JOIN nn),
-       f2 AS (
-         SELECT sum(cxy::HUGEINT * cxy) AS f_xy,
-                sum(cxx::HUGEINT * cxx) AS f_xx,
-                sum(cyy::HUGEINT * cyy) AS f_yy
-         FROM cov)
-       SELECT round(f_xy::DOUBLE / sqrt(f_xx::DOUBLE * f_yy::DOUBLE), 6) AS linear_cka,
-              (SELECT n FROM nn) AS n_vectors, {_CKA_D}::BIGINT AS view_dims
-       FROM f2""",
-)
-def q_cka_alignment(spark, sf_dir):
-    """Linear CKA (centered kernel alignment) between the two HALVES of
-    the embedding space (Kornblith et al., ICML 2019):
-    ‖Cov(X,Y)‖²_F / (‖Cov(X,X)‖_F·‖Cov(Y,Y)‖_F) over milli-quantized
-    coordinates — the representation-similarity score used to compare
-    layers/models, here answering "do the two coordinate blocks encode
-    the same geometry" (CKA→1 means half the dimensions are redundant
-    and `jl_projection`-style compression is nearly free). All feature
-    sums and cross-products are exact int64 from one pass over the
-    D²-cell grid; covariance entries round once to micro-units, the
-    three Frobenius sums are exact HUGEINT, and the final ratio
-    converts each exact integer to double once (identical nearest-even
-    on both engines). The Spark plan mirrors the relational grid (the
-    mapInPandas partial-Gram is the documented production variant for
-    D ≫ 32)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    dec = "decimal(38,0)"
-    q = emb.select(
-        F.transform(
-            F.slice("embedding", 1, _CKA_D), lambda x: F.round(x * 1000, 0).cast("long")
-        ).alias("xv"),
-        F.transform(
-            F.slice("embedding", _CKA_D + 1, _CKA_D), lambda x: F.round(x * 1000, 0).cast("long")
-        ).alias("yv"),
-    ).stableCheckpoint(eager=True)
-    ii = spark.range(1, _CKA_D + 1).select(F.col("id").cast("int").alias("i"))
-    jj = spark.range(1, _CKA_D + 1).select(F.col("id").cast("int").alias("j"))
-    g = q.crossJoin(F.broadcast(ii)).crossJoin(F.broadcast(jj))
-    pairs = g.groupBy("i", "j").agg(
-        F.sum(F.element_at("xv", F.col("i")) * F.element_at("yv", F.col("j"))).cast("long").alias("sxy"),
-        F.sum(F.element_at("xv", F.col("i")) * F.element_at("xv", F.col("j"))).cast("long").alias("sxx"),
-        F.sum(F.element_at("yv", F.col("i")) * F.element_at("yv", F.col("j"))).cast("long").alias("syy"),
-    )
-    marg = q.crossJoin(F.broadcast(ii)).groupBy("i").agg(
-        F.sum(F.element_at("xv", F.col("i"))).cast("long").alias("sx"),
-        F.sum(F.element_at("yv", F.col("i"))).cast("long").alias("sy"),
-    )
-    nn = q.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    cov = (
-        pairs.join(F.broadcast(marg.selectExpr("i", "sx AS sx_i", "sy AS sy_i")), "i")
-        .join(F.broadcast(marg.selectExpr("i AS j", "sx AS sx_j", "sy AS sy_j")), "j")
-        .crossJoin(F.broadcast(nn))
-    )
-
-    def c_micro(splus, ma, mb):
-        return F.round(
-            (F.col("n") * F.col(splus) - F.col(ma).cast(dec) * F.col(mb)).cast("double")
-            / F.col("n") / F.col("n") * 1e6,
-            0,
-        ).cast("long")
-
-    covm = cov.select(
-        c_micro("sxy", "sx_i", "sy_j").alias("cxy"),
-        c_micro("sxx", "sx_i", "sx_j").alias("cxx"),
-        c_micro("syy", "sy_i", "sy_j").alias("cyy"),
-    )
-    f2 = covm.agg(
-        F.sum(F.col("cxy").cast(dec) * F.col("cxy").cast(dec)).cast(dec).alias("f_xy"),
-        F.sum(F.col("cxx").cast(dec) * F.col("cxx").cast(dec)).cast(dec).alias("f_xx"),
-        F.sum(F.col("cyy").cast(dec) * F.col("cyy").cast(dec)).cast(dec).alias("f_yy"),
-    )
-    return f2.crossJoin(F.broadcast(nn)).select(
-        F.round(
-            F.col("f_xy").cast("double")
-            / F.sqrt(F.col("f_xx").cast("double") * F.col("f_yy").cast("double")),
-            6,
-        ).alias("linear_cka"),
-        F.col("n").alias("n_vectors"),
-        F.lit(_CKA_D).cast("long").alias("view_dims"),
-    )
-
-
-
-# --------------------------------------------------------------------------
-# batch 73: MMR selection, DeLong AUC CI, Cochran's Q
-
-_MMR_K = 5
-
-_MMR_CAND = 20
-
-_MMR_LAMBDA_MICRO = 700000  # lambda = 0.7
-
-_MMR_QID = 0
-
-
-
-def _mmr_base_sql() -> str:
-    dot_aq = _DOT_SQL
-    return f"""q AS MATERIALIZED (SELECT embedding FROM embeddings WHERE vec_id = {_MMR_QID}),
-       cand AS MATERIALIZED (
-         SELECT a.vec_id,
-                a.embedding,
-                round({dot_aq} / ({_NORM_A} * {_NORM_Q}), 6) AS rel
-         FROM embeddings a CROSS JOIN q
-         WHERE a.vec_id <> {_MMR_QID}
-         ORDER BY round({dot_aq} / ({_NORM_A} * {_NORM_Q}), 6) DESC, a.vec_id
-         LIMIT {_MMR_CAND}),
-       sim AS MATERIALIZED (
-         SELECT a.vec_id AS ca, q.vec_id AS cb,
-                round(list_sum(list_transform(range(1, len(a.embedding)+1),
-                        i -> a.embedding[i]::DOUBLE * q.embedding[i]::DOUBLE))
-                      / ({_NORM_A}
-                         * sqrt(list_sum(list_transform(q.embedding,
-                              x -> x::DOUBLE * x::DOUBLE)))), 6) AS s
-         FROM cand a JOIN cand q ON a.vec_id <> q.vec_id)"""
-
-
-
-def _mmr_sql() -> str:
-    # NOTE: sel{r} must append THE argmax of score{r}; express it as
-    # prev UNION (top-1 of score{r})
-    rounds = []
-    for r in range(1, _MMR_K + 1):
-        if r == 1:
-            rounds.append(
-                f"""sel1 AS MATERIALIZED (
-         SELECT vec_id, rel, 1::BIGINT AS pick_order FROM cand
-         ORDER BY round(1e6 * rel)::BIGINT DESC, vec_id LIMIT 1)"""
-            )
-        else:
-            prev = f"sel{r - 1}"
-            rounds.append(
-                f"""score{r} AS MATERIALIZED (
-         SELECT c.vec_id, c.rel,
-                {_MMR_LAMBDA_MICRO} * round(1e6 * c.rel)::BIGINT
-              - {1000000 - _MMR_LAMBDA_MICRO}
-                * (SELECT max(round(1e6 * s.s)::BIGINT) FROM sim s
-                   JOIN {prev} p ON p.vec_id = s.cb WHERE s.ca = c.vec_id) AS sc
-         FROM cand c ANTI JOIN {prev} p2 ON p2.vec_id = c.vec_id),
-       top{r} AS MATERIALIZED (
-         SELECT vec_id, rel, {r}::BIGINT AS pick_order FROM score{r}
-         ORDER BY sc DESC, vec_id LIMIT 1),
-       sel{r} AS MATERIALIZED (
-         SELECT * FROM {prev} UNION ALL SELECT * FROM top{r})"""
-            )
-    return (
-        "WITH " + _mmr_base_sql() + ",\n       " + ",\n       ".join(rounds)
-        + f"""
-       SELECT vec_id, pick_order, rel FROM sel{_MMR_K}"""
-    )
-
-
-
-@query("mmr_select", _mmr_sql())
-def q_mmr_select(spark, sf_dir):
-    """Maximal Marginal Relevance selection (Carbonell & Goldstein,
-    SIGIR 1998 — the diversity re-ranker in every RAG/retrieval stack):
-    greedily pick 5 of the top-20 candidates for query vec 0,
-    maximizing λ·relevance − (1−λ)·max-similarity-to-already-picked
-    (λ=0.7). Candidate gating (top-20 by query cosine) bounds the
-    pairwise sim matrix at 20² regardless of corpus size — the
-    standard two-stage retrieve-then-rerank shape. Cosines use the
-    engine-pinned fold and round at 6dp ONCE; every greedy round then
-    compares exact integer micro-scores with vec_id ties, so the pick
-    sequence is deterministic cross-engine (unrolled MATERIALIZED
-    oracle, the `bradley_terry` discipline)."""
-    from pliers_spark.operators.similarity import _dot, _norm
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.where(F.col("vec_id") == _MMR_QID).select(F.col("embedding").alias("qe"))
-    cand = (
-        emb.where(F.col("vec_id") != _MMR_QID)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id", "embedding",
-            F.round(
-                _dot(F.col("embedding"), F.col("qe"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qe"))), 6,
-            ).alias("rel"),
-        )
-        .orderBy(F.desc(F.round(F.col("rel") * 1e6, 0).cast("long")), "vec_id")
-        .limit(_MMR_CAND)
-        .stableCheckpoint(eager=True)
-    )
-    a, b2 = cand.alias("a"), cand.alias("b")
-    sim = (
-        a.join(b2, F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("ca"), F.col("b.vec_id").alias("cb"),
-            F.round(
-                _dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (_norm(F.col("a.embedding")) * _norm(F.col("b.embedding"))), 6,
-            ).alias("s"),
-        )
-        .stableCheckpoint(eager=True)
-    )
-    rows = [
-        (int(r.vec_id), float(r.rel))
-        for r in census_collect(cand.select("vec_id", "rel"), 20, "MMR candidate census")
-    ]
-    sims = {
-        (int(r.ca), int(r.cb)): float(r.s)
-        for r in census_collect(sim, 380, "MMR pairwise census (20\u00b719)")
-    }
-    selected = []
-    remaining = dict(rows)
-    for r in range(1, _MMR_K + 1):
-        if r == 1:
-            pick = max(remaining, key=lambda v: (round(1e6 * remaining[v]), -v))
-        else:
-            def score(v):
-                mx = max(round(1e6 * sims[(v, s)]) for s, _, _ in selected)
-                return _MMR_LAMBDA_MICRO * round(1e6 * remaining[v]) - (1000000 - _MMR_LAMBDA_MICRO) * mx
-            pick = max(remaining, key=lambda v: (score(v), -v))
-        selected.append((pick, r, remaining.pop(pick)))
-    return spark.createDataFrame(
-        [(v, o, round(rel, 6)) for v, o, rel in selected],
-        "vec_id long, pick_order long, rel double",
-    )
-
-
-
-@query(
-    "auc_delong_ci",
-    """WITH scored AS (
-         SELECT round(n_chars * 1e6 / (n_chars + 500))::BIGINT AS p,
-                CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-         FROM documents),
-       census AS (
-         SELECT p, sum(y)::BIGINT AS pos_eq, sum(1 - y)::BIGINT AS neg_eq
-         FROM scored GROUP BY p),
-       cum AS (
-         SELECT p, pos_eq, neg_eq,
-                coalesce(sum(pos_eq) OVER (ORDER BY p
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pos_lt,
-                coalesce(sum(neg_eq) OVER (ORDER BY p
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS neg_lt
-         FROM census),
-       cnt AS (SELECT sum(pos_eq)::BIGINT AS m, sum(neg_eq)::BIGINT AS n FROM census),
-       v10 AS (
-         -- per-positive component in HALF-units: 2*neg_below + neg_ties
-         SELECT sum(pos_eq * (2 * neg_lt + neg_eq))::BIGINT AS s1,
-                sum(pos_eq::HUGEINT * (2 * neg_lt + neg_eq)::HUGEINT
-                               * (2 * neg_lt + neg_eq)::HUGEINT) AS s2
-         FROM cum),
-       v01 AS (
-         SELECT sum(neg_eq * (2 * (c.m - pos_lt - pos_eq) + pos_eq))::BIGINT AS s1,
-                sum(neg_eq::HUGEINT
-                    * (2 * (c.m - pos_lt - pos_eq) + pos_eq)::HUGEINT
-                    * (2 * (c.m - pos_lt - pos_eq) + pos_eq)::HUGEINT) AS s2
-         FROM cum CROSS JOIN cnt c)
-       SELECT round(v10.s1::DOUBLE / (2.0 * c.m * c.n), 6) AS auc,
-              round((
-                (c.m * v10.s2 - v10.s1::HUGEINT * v10.s1)::DOUBLE
-                  / c.m / (c.m - 1) / (4.0 * c.n * c.n) / c.m
-              + (c.n * v01.s2 - v01.s1::HUGEINT * v01.s1)::DOUBLE
-                  / c.n / (c.n - 1) / (4.0 * c.m * c.m) / c.n), 6) AS var_auc,
-              round(v10.s1::DOUBLE / (2.0 * c.m * c.n)
-                    - 1.96 * sqrt(
-                (c.m * v10.s2 - v10.s1::HUGEINT * v10.s1)::DOUBLE
-                  / c.m / (c.m - 1) / (4.0 * c.n * c.n) / c.m
-              + (c.n * v01.s2 - v01.s1::HUGEINT * v01.s1)::DOUBLE
-                  / c.n / (c.n - 1) / (4.0 * c.m * c.m) / c.n), 6) AS ci_lo,
-              round(v10.s1::DOUBLE / (2.0 * c.m * c.n)
-                    + 1.96 * sqrt(
-                (c.m * v10.s2 - v10.s1::HUGEINT * v10.s1)::DOUBLE
-                  / c.m / (c.m - 1) / (4.0 * c.n * c.n) / c.m
-              + (c.n * v01.s2 - v01.s1::HUGEINT * v01.s1)::DOUBLE
-                  / c.n / (c.n - 1) / (4.0 * c.m * c.m) / c.n), 6) AS ci_hi
-       FROM v10 CROSS JOIN v01 CROSS JOIN cnt c""",
-)
-def q_auc_delong_ci(spark, sf_dir):
-    """AUC with DeLong's nonparametric confidence interval (DeLong,
-    DeLong & Clarke-Pearson, Biometrics 1988): Var(AUC) = S₁₀/m +
-    S₀₁/n from the per-positive/per-negative placement components —
-    the CI that `roc_auc` alone cannot give, and the statistically
-    correct way to say whether two quality filters' AUCs actually
-    differ. Components live in integer HALF-units (2·below + ties) via
-    one score-value census with class-conditional cumulatives — no
-    per-pair work, ties handled exactly; sums and squared sums are
-    exact HUGEINT; AUC, variance and the ±1.96σ bounds are single
-    identical float expressions."""
-    d = _docs(spark, sf_dir)
-    dec = "decimal(38,0)"
-    scored = d.select(
-        F.round(F.col("n_chars") * 1e6 / (F.col("n_chars") + 500), 0).cast("long").alias("p"),
-        (F.col("lang") == "en").cast("long").alias("y"),
-    )
-    census = scored.groupBy("p").agg(
-        F.sum("y").cast("long").alias("pos_eq"),
-        F.sum(1 - F.col("y")).cast("long").alias("neg_eq"),
-    )
-    wcum = Window.orderBy("p").rowsBetween(Window.unboundedPreceding, -1)
-    cum = census.select(
-        "p", "pos_eq", "neg_eq",
-        F.coalesce(F.sum("pos_eq").over(wcum), F.lit(0)).alias("pos_lt"),
-        F.coalesce(F.sum("neg_eq").over(wcum), F.lit(0)).alias("neg_lt"),
-    ).stableCheckpoint(eager=True)
-    cnt = cum.agg(
-        F.sum("pos_eq").cast("long").alias("m"), F.sum("neg_eq").cast("long").alias("n")
-    )
-    h10 = (2 * F.col("neg_lt") + F.col("neg_eq")).cast(dec)
-    v10 = cum.agg(
-        F.sum(F.col("pos_eq") * h10).cast("long").alias("s1_10"),
-        F.sum(F.col("pos_eq").cast(dec) * h10 * h10).cast(dec).alias("s2_10"),
-    )
-    jc = cum.crossJoin(F.broadcast(cnt))
-    h01 = (2 * (F.col("m") - F.col("pos_lt") - F.col("pos_eq")) + F.col("pos_eq")).cast(dec)
-    v01 = jc.agg(
-        F.sum(F.col("neg_eq") * h01).cast("long").alias("s1_01"),
-        F.sum(F.col("neg_eq").cast(dec) * h01 * h01).cast(dec).alias("s2_01"),
-    )
-    j = v10.crossJoin(F.broadcast(v01)).crossJoin(F.broadcast(cnt))
-    d_ = lambda c: F.col(c).cast("double")  # noqa: E731
-    auc = d_("s1_10") / (F.lit(2.0) * F.col("m") * F.col("n"))
-    var = (
-        (F.col("m") * F.col("s2_10") - F.col("s1_10").cast(dec) * F.col("s1_10")).cast("double")
-        / F.col("m") / (F.col("m") - 1) / (F.lit(4.0) * F.col("n") * F.col("n")) / F.col("m")
-        + (F.col("n") * F.col("s2_01") - F.col("s1_01").cast(dec) * F.col("s1_01")).cast("double")
-        / F.col("n") / (F.col("n") - 1) / (F.lit(4.0) * F.col("m") * F.col("m")) / F.col("n")
-    )
-    return j.select(
-        F.round(auc, 6).alias("auc"),
-        F.round(var, 6).alias("var_auc"),
-        F.round(auc - F.lit(1.96) * F.sqrt(var), 6).alias("ci_lo"),
-        F.round(auc + F.lit(1.96) * F.sqrt(var), 6).alias("ci_hi"),
-    )
-
-
-
-@query(
-    "cochran_q",
-    """WITH preds AS (
-         SELECT CASE WHEN (n_chars > 500) = (lang = 'en') THEN 1 ELSE 0 END AS xa,
-                CASE WHEN contains(concat(' ', lower(text), ' '), ' the ')
-                          = (lang = 'en') THEN 1 ELSE 0 END AS xb,
-                CASE WHEN contains(concat(' ', lower(text), ' '), ' and ')
-                          = (lang = 'en') THEN 1 ELSE 0 END AS xc
-         FROM documents),
-       st AS (
-         SELECT sum(xa)::BIGINT AS ga, sum(xb)::BIGINT AS gb, sum(xc)::BIGINT AS gc,
-                sum(xa + xb + xc)::BIGINT AS sl,
-                sum((xa + xb + xc)::HUGEINT * (xa + xb + xc)) AS sl2
-         FROM preds)
-       SELECT ga AS correct_a, gb AS correct_b, gc AS correct_c,
-              CASE WHEN 3 * sl - sl2 > 0
-                   THEN round(3 * 2 * ((ga::HUGEINT*ga + gb::HUGEINT*gb + gc::HUGEINT*gc)
-                              - sl::HUGEINT * sl / 3.0)::DOUBLE
-                              / (3 * sl - sl2)::DOUBLE, 6)
-              END AS cochran_q
-       FROM st""",
-)
-def q_cochran_q(spark, sf_dir):
-    """Cochran's Q test (Cochran, Biometrika 1950) across THREE matched
-    binary classifiers on the same documents — length>500, contains
-    'the', contains 'and' — the k-classifier generalization of
-    `mcnemar_test` (Q reduces to McNemar at k=2): are the three
-    accuracy rates jointly distinguishable, before any pairwise
-    comparison is licensed? Q = k(k−1)·(ΣG_j² − (ΣG)²/k)/(k·ΣL −
-    ΣL²) from exact integer column sums G and row sums L in ONE pass;
-    NULL when every document has the same number of correct rules
-    (degenerate denominator)."""
-    d = _docs(spark, sf_dir)
-    dec = "decimal(38,0)"
-    en = F.col("lang") == "en"
-    xa = ((F.col("n_chars") > 500) == en).cast("long")
-    xb = (F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" ")).contains(" the ") == en).cast("long")
-    xc = (F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" ")).contains(" and ") == en).cast("long")
-    rows_l = (xa + xb + xc).cast("long")
-    st = d.select(xa.alias("xa"), xb.alias("xb"), xc.alias("xc"), rows_l.alias("l")).agg(
-        F.sum("xa").cast("long").alias("ga"), F.sum("xb").cast("long").alias("gb"),
-        F.sum("xc").cast("long").alias("gc"),
-        F.sum("l").cast("long").alias("sl"),
-        F.sum(F.col("l").cast(dec) * F.col("l").cast(dec)).cast(dec).alias("sl2"),
-    )
-    g2 = (
-        F.col("ga").cast(dec) * F.col("ga") + F.col("gb").cast(dec) * F.col("gb")
-        + F.col("gc").cast(dec) * F.col("gc")
-    )
-    q = (
-        F.lit(6.0)
-        * (g2.cast("double") - F.col("sl").cast(dec).cast("double") * F.col("sl") / 3.0)
-        / (3 * F.col("sl") - F.col("sl2")).cast("double")
-    )
-    return st.select(
-        F.col("ga").alias("correct_a"), F.col("gb").alias("correct_b"),
-        F.col("gc").alias("correct_c"),
-        F.when((3 * F.col("sl") - F.col("sl2")).cast("double") > 0, F.round(q, 6)).alias("cochran_q"),
-    )
-
-
-
-# --------------------------------------------------------------------------
-# batch 74: prequential log loss, shuffle-quality audit, cross-source dups
-
-
-@query(
-    "prequential_logloss",
-    """WITH toks AS (
-         SELECT doc_id,
-                unnest(range(len(string_split(trim(text), ' '))))::BIGINT AS pos,
-                unnest(string_split(trim(text), ' ')) AS token
-         FROM documents),
-       vv AS (SELECT count(DISTINCT token)::BIGINT AS v FROM toks),
-       seq AS (
-         SELECT token,
-                row_number() OVER (ORDER BY doc_id, pos) AS t,
-                row_number() OVER (PARTITION BY token ORDER BY doc_id, pos) AS k
-         FROM toks),
-       terms AS (
-         SELECT round(-1e6 * ln(((k - 1) + 0.5)
-                                / ((t - 1) + vv.v / 2.0)))::BIGINT AS b
-         FROM seq CROSS JOIN vv)
-       SELECT count(*)::BIGINT AS n_tokens,
-              (SELECT v FROM vv) AS vocab,
-              round(sum(b) / 1e6, 6) AS total_nats,
-              round(sum(b) / 1e6 / count(*), 6) AS nats_per_token
-       FROM terms""",
-)
-def q_prequential_logloss(spark, sf_dir):
-    """Prequential (online) log loss of the Krichevsky-Trofimov add-½
-    estimator over the token stream in corpus order (KT 1981; the
-    minimax sequential code): token t's loss is −ln((k_before+½)/
-    (N_before+V/2)) with k its prior occurrences — the COMPRESSION
-    cost of the corpus under an adaptive unigram code, the honest
-    single-number answer to "how much information does this corpus
-    actually carry" (static entropy `chao_shen_entropy` ignores
-    adaptation; `word_burstiness` shows adaptation exists). Prior
-    counts come from TWO row_number windows sharing the (doc_id, pos)
-    order — no per-prefix rescans; per-token terms round once to
-    micro-units. CENSUS GRAIN (r4): the global stream position t uses
-    the range-bucketed row_number (operators/census.py, bucketing on
-    doc_id, tie-break pos); k stays a token-partitioned window."""
-    from pliers_spark.operators.census import scalable_row_number
-
-    d = _docs(spark, sf_dir)
-    toks = d.select("doc_id", F.posexplode(T.tokenize(F.col("text"))).alias("pos", "token"))
-    vv = toks.agg(F.count_distinct("token").cast("long").alias("v"))
-    seq = scalable_row_number(toks, "doc_id", out="t", tiebreak=("pos",)).select(
-        "token",
-        "t",
-        F.row_number().over(Window.partitionBy("token").orderBy("doc_id", "pos")).alias("k"),
-    )
-    terms = seq.crossJoin(F.broadcast(vv)).select(
-        F.round(
-            F.lit(-1e6)
-            * F.log(
-                ((F.col("k") - 1) + 0.5) / ((F.col("t") - 1) + F.col("v") / 2.0)
-            ),
-            0,
-        ).cast("long").alias("b")
-    )
-    return terms.crossJoin(F.broadcast(vv)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        F.max("v").alias("vocab"),
-        F.round(F.sum("b") / 1e6, 6).alias("total_nats"),
-        F.round(F.sum("b") / 1e6 / F.count(F.lit(1)), 6).alias("nats_per_token"),
-    )
-
-
-
-@query(
-    "shuffle_quality",
-    f"""WITH ordered AS (
-         SELECT source,
-                row_number() OVER (
-                  ORDER BY {md5_int_sql("concat('sh:', doc_id::VARCHAR)")}, doc_id)
-                  AS rn
-         FROM documents),
-       adj AS (
-         SELECT CASE WHEN lag(source) OVER (ORDER BY rn) IS NULL THEN NULL
-                     WHEN source = lag(source) OVER (ORDER BY rn)
-                     THEN 1 ELSE 0 END AS same
-         FROM ordered),
-       obs AS (SELECT sum(same)::BIGINT AS same_cnt,
-                      count(same)::BIGINT AS n_adj
-               FROM adj WHERE same IS NOT NULL),
-       census AS (SELECT source, count(*)::BIGINT AS c FROM documents GROUP BY source),
-       tot AS (SELECT sum(c)::BIGINT AS n,
-                      sum(c::HUGEINT * (c - 1)::HUGEINT) AS c2 FROM census)
-       SELECT obs.same_cnt, obs.n_adj,
-              round(obs.same_cnt::DOUBLE / obs.n_adj, 6) AS p_same_adjacent,
-              round(tot.c2::DOUBLE / (tot.n::HUGEINT * (tot.n - 1))::DOUBLE, 6)
-                AS p_same_expected,
-              round(obs.same_cnt::DOUBLE / obs.n_adj
-                    - tot.c2::DOUBLE / (tot.n::HUGEINT * (tot.n - 1))::DOUBLE, 6)
-                AS clumping_excess
-       FROM obs CROSS JOIN tot""",
-)
-def q_shuffle_quality(spark, sf_dir):
-    """Training-shuffle quality audit: order the corpus by the
-    deterministic shuffle key md5('sh:'||doc_id) (the reproducible
-    shuffle `hash_split`/`hash_sample` build on), then compare the
-    ADJACENT-pair same-source rate against the exchangeability
-    expectation Σc(c−1)/(N(N−1)). A sound hash shuffle lands at the
-    expectation; clumping_excess ≫ 0 means consecutive training
-    batches over-sample one source — the sequence-level bias that
-    per-batch mixture audits (`mixture_epochs`) cannot see. One sort
-    by the hash key + one lag window; expectation from the source
-    census, all exact integers until two divisions. CENSUS GRAIN (r4):
-    the shuffle-order rank is the range-bucketed global row_number
-    (operators/census.py) and adjacency is a uniform self-join on the
-    dense rank (rn ↔ rn−1) — no unpartitioned window over raw rows."""
-    from pliers_spark.operators.census import scalable_row_number
-
-    d = _docs(spark, sf_dir)
-    dec = "decimal(38,0)"
-    key = md5_int(F.concat(F.lit("sh:"), F.col("doc_id").cast("string")))
-    ordered = scalable_row_number(
-        d.select("source", key.alias("_k"), "doc_id"), "_k", out="rn",
-        tiebreak=("doc_id",),
-    ).select("source", "rn")
-    prev = ordered.select((F.col("rn") + 1).alias("rn"), F.col("source").alias("prev_source"))
-    adj = (
-        ordered.join(prev, "rn")
-        .select((F.col("source") == F.col("prev_source")).cast("long").alias("same"))
-        .where(F.col("same").isNotNull())
-    )
-    obs = adj.agg(
-        F.sum("same").cast("long").alias("same_cnt"),
-        F.count("same").cast("long").alias("n_adj"),
-    )
-    census = d.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    tot = census.agg(
-        F.sum("c").cast("long").alias("n"),
-        F.sum(F.col("c").cast(dec) * (F.col("c") - 1).cast(dec)).cast(dec).alias("c2"),
-    )
-    j = obs.crossJoin(F.broadcast(tot))
-    p_obs = F.col("same_cnt").cast("double") / F.col("n_adj")
-    p_exp = F.col("c2").cast("double") / (
-        F.col("n").cast(dec) * (F.col("n") - 1).cast(dec)
-    ).cast("double")
-    return j.select(
-        "same_cnt", "n_adj",
-        F.round(p_obs, 6).alias("p_same_adjacent"),
-        F.round(p_exp, 6).alias("p_same_expected"),
-        F.round(p_obs - p_exp, 6).alias("clumping_excess"),
-    )
-
-
-
-def _dup_cross_sql() -> str:
-    return (
-        f"WITH RECURSIVE {_simhash_pairs_cte()},\n"
-        """       lab AS (SELECT doc_id, source FROM documents),
-       m AS (
-         SELECT least(la.source, lb.source) AS src_a,
-                greatest(la.source, lb.source) AS src_b,
-                count(*)::BIGINT AS n_dup_pairs,
-                sum(CASE WHEN p.hamming = 0 THEN 1 ELSE 0 END)::BIGINT AS n_exactish
-         FROM nd_pairs p JOIN lab la ON la.doc_id = p.id_a
-                         JOIN lab lb ON lb.doc_id = p.id_b
-         GROUP BY 1, 2)
-       SELECT src_a, src_b, n_dup_pairs, n_exactish,
-              (src_a <> src_b) AS cross_source
-       FROM m"""
-    )
-
-
-
-@query("dup_cross_source_matrix", _dup_cross_sql())
-def q_dup_cross_source_matrix(spark, sf_dir):
-    """Cross-source near-duplicate matrix: the SimHash near-dup pair
-    list (banded once, the `linkage_profile` gate) aggregated by
-    unordered source pair — the mirror-site detector. A heavy
-    OFF-diagonal cell means two sources republish the same content
-    (syndication/mirrors): dedup should then canonicalize BY CLUSTER
-    across sources, and `loo_source_value`-style marginal source
-    valuations are double-counting. Diagonal cells are within-source
-    boilerplate (`word_dispersion_dp`'s culprits). One broadcast-dim
-    join from pair ids to sources, one groupBy over unordered pairs."""
-    docs = _docs(spark, sf_dir)
-    pairs = D.simhash_near_dup_pairs(
-        docs, "text", "doc_id", bits=_SIMHASH_BITS, bands=4, max_hamming=3
-    )
-    lab = F.broadcast(docs.select("doc_id", "source"))
-    j = (
-        pairs.join(lab.selectExpr("doc_id AS id_a", "source AS sa"), "id_a")
-        .join(lab.selectExpr("doc_id AS id_b", "source AS sb"), "id_b")
-    )
-    return (
-        j.groupBy(
-            F.least("sa", "sb").alias("src_a"), F.greatest("sa", "sb").alias("src_b")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dup_pairs"),
-            F.sum((F.col("hamming") == 0).cast("long")).cast("long").alias("n_exactish"),
-        )
-        .select(
-            "src_a", "src_b", "n_dup_pairs", "n_exactish",
-            (F.col("src_a") != F.col("src_b")).alias("cross_source"),
-        )
-    )
-
-
-
-# --------------------------------------------------------------------------
-# batch 75: seasonal Mann-Kendall, runs test, Friedman test
-
-
-@query(
-    "seasonal_kendall",
-    """WITH cell AS (
-         SELECT extract(hour FROM ts)::BIGINT AS h,
-                date_diff('day', DATE '2024-01-01', ts::DATE)::BIGINT AS d,
-                count(*)::BIGINT AS x
-         FROM events GROUP BY 1, 2),
-       s_h AS (
-         SELECT a.h,
-                sum(CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END)::BIGINT AS s,
-                count(DISTINCT a.d)::BIGINT AS n
-         FROM cell a JOIN cell b ON a.h = b.h AND b.d > a.d
-         GROUP BY a.h),
-       ties AS (
-         SELECT h, sum(t::HUGEINT * (t - 1) * (2 * t + 5))::BIGINT AS tie_term
-         FROM (SELECT h, x, count(*)::BIGINT AS t FROM cell GROUP BY h, x)
-         GROUP BY h),
-       agg AS (
-         SELECT sum(s.s)::BIGINT AS s_tot,
-                sum(s.n::HUGEINT * (s.n - 1) * (2 * s.n + 5)
-                    - coalesce(t.tie_term, 0))::BIGINT AS var18
-         FROM s_h s LEFT JOIN ties t ON t.h = s.h)
-       SELECT s_tot, round(var18 / 18.0, 6) AS var_s,
-              round((s_tot - CASE WHEN s_tot > 0 THEN 1
-                                  WHEN s_tot < 0 THEN -1 ELSE 0 END)
-                    / sqrt(var18 / 18.0), 6) AS z
-       FROM agg""",
-)
-def q_seasonal_kendall(spark, sf_dir):
-    """Seasonal Mann-Kendall trend test (Hirsch & Slack, WRR 1984): the
-    Mann-Kendall S statistic computed WITHIN each hour-of-day slice of
-    the daily event counts and summed — so the diurnal cycle
-    (`seasonal_profile`) cannot masquerade as trend, the failure mode
-    of the plain `mann_kendall_sen` on periodic data. Per-slice S is
-    an exact integer pair census over the tiny day×hour grid (30 days
-    per slice — the quadratic stays inside the slice); the variance
-    uses the exact tie correction Σt(t−1)(2t+5); one continuity-
-    corrected z at the end."""
-    ev = _events(spark, sf_dir)
-    dec = "decimal(38,0)"
-    cell = ev.groupBy(
-        F.hour("ts").cast("long").alias("h"),
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).cast("long").alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x")).stableCheckpoint(eager=True)
-    a, b = cell.alias("a"), cell.alias("b")
-    s_h = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("b.d") > F.col("a.d")))
-        .groupBy(F.col("a.h").alias("h"))
-        .agg(
-            F.sum(
-                F.when(F.col("b.x") > F.col("a.x"), 1)
-                .when(F.col("b.x") < F.col("a.x"), -1)
-                .otherwise(0)
-            ).cast("long").alias("s"),
-            F.count_distinct(F.col("a.d")).cast("long").alias("n"),
-        )
-    )
-    ties = (
-        cell.groupBy("h", "x").agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .groupBy("h")
-        .agg(
-            F.sum(F.col("t").cast(dec) * (F.col("t") - 1) * (2 * F.col("t") + 5))
-            .cast("long").alias("tie_term")
-        )
-    )
-    agg = (
-        s_h.join(ties, "h", "left")
-        .agg(
-            F.sum("s").cast("long").alias("s_tot"),
-            F.sum(
-                F.col("n").cast(dec) * (F.col("n") - 1) * (2 * F.col("n") + 5)
-                - F.coalesce(F.col("tie_term"), F.lit(0))
-            ).cast("long").alias("var18"),
-        )
-    )
-    cont = F.when(F.col("s_tot") > 0, 1).when(F.col("s_tot") < 0, -1).otherwise(0)
-    return agg.select(
-        "s_tot",
-        F.round(F.col("var18") / 18.0, 6).alias("var_s"),
-        F.round((F.col("s_tot") - cont) / F.sqrt(F.col("var18") / 18.0), 6).alias("z"),
-    )
-
-
-
-@query(
-    "runs_test",
-    """WITH daily AS (
-         SELECT date_diff('day', DATE '2024-01-01', ts::DATE)::BIGINT AS d,
-                count(*)::BIGINT AS x
-         FROM events GROUP BY 1),
-       med AS (
-         SELECT x AS m FROM (
-           SELECT x, row_number() OVER (ORDER BY x, d) AS rn, count(*) OVER () AS n
-           FROM daily)
-         WHERE rn = (n + 1) // 2),
-       signs AS (
-         SELECT d, CASE WHEN x > (SELECT m FROM med) THEN 1 ELSE 0 END AS s
-         FROM daily WHERE x <> (SELECT m FROM med)),
-       flips AS (
-         SELECT s,
-                coalesce(CASE WHEN s <> lag(s) OVER (ORDER BY d)
-                              THEN 1 ELSE 0 END, 0) AS flip
-         FROM signs),
-       runs AS (
-         SELECT sum(flip)::BIGINT + 1 AS r,
-                sum(s)::BIGINT AS n1,
-                sum(1 - s)::BIGINT AS n2
-         FROM flips)
-       SELECT r AS n_runs, n1 AS n_above, n2 AS n_below,
-              round(2.0 * n1 * n2 / (n1 + n2) + 1, 6) AS expected_runs,
-              round((r - (2.0 * n1 * n2 / (n1 + n2) + 1))
-                    / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-                           / ((n1 + n2) * (n1 + n2)::DOUBLE * (n1 + n2 - 1))), 6) AS z
-       FROM runs""",
-)
-def q_runs_test(spark, sf_dir):
-    """Wald-Wolfowitz runs test (Ann. Math. Stat. 1940) on the daily
-    event-count series dichotomized at its exact median (median-equal
-    days dropped, the standard convention): too FEW runs of
-    above/below means level shifts or trend (`cusum_changepoint`'s
-    territory), too MANY means oscillation/negative autocorrelation —
-    the distribution-free randomness gate to run before trusting
-    i.i.d.-assuming monitors. Runs and margins are exact integers from
-    one lag window; E[R] and Var[R] are the closed forms in one
-    identical float expression."""
-    ev = _events(spark, sf_dir)
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).cast("long").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    wn = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    med = (
-        daily.select("x", F.row_number().over(Window.orderBy("x", "d")).alias("rn"),
-                     F.count(F.lit(1)).over(wn).alias("n"))
-        .where(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .select(F.col("x").alias("m"))
-    )
-    signs = (
-        daily.crossJoin(F.broadcast(med))
-        .where(F.col("x") != F.col("m"))
-        .select("d", (F.col("x") > F.col("m")).cast("long").alias("s"))
-    )
-    flips = signs.select(
-        "s",
-        F.coalesce(
-            (F.col("s") != F.lag("s").over(Window.orderBy("d"))).cast("long"), F.lit(0)
-        ).alias("flip"),
-    )
-    runs = flips.agg(
-        (F.sum("flip") + 1).cast("long").alias("r"),
-        F.sum("s").cast("long").alias("n1"),
-        F.sum(1 - F.col("s")).cast("long").alias("n2"),
-    )
-    d_ = lambda c: F.col(c).cast("double")  # noqa: E731
-    er = 2.0 * d_("n1") * d_("n2") / (F.col("n1") + F.col("n2")) + 1
-    vr = (
-        2.0 * d_("n1") * d_("n2") * (2.0 * d_("n1") * d_("n2") - F.col("n1") - F.col("n2"))
-        / (
-            (F.col("n1") + F.col("n2"))
-            * (F.col("n1") + F.col("n2")).cast("double")
-            * (F.col("n1") + F.col("n2") - 1)
-        )
-    )
-    return runs.select(
-        F.col("r").alias("n_runs"), F.col("n1").alias("n_above"), F.col("n2").alias("n_below"),
-        F.round(er, 6).alias("expected_runs"),
-        F.round((F.col("r") - er) / F.sqrt(vr), 6).alias("z"),
-    )
-
-
-
-@query(
-    "friedman_test",
-    """WITH days AS (SELECT DISTINCT date_diff('day', DATE '2024-01-01', ts::DATE)::BIGINT AS d
-                     FROM events),
-       types AS (SELECT DISTINCT event_type FROM events),
-       cnt AS (
-         SELECT date_diff('day', DATE '2024-01-01', ts::DATE)::BIGINT AS d,
-                event_type, count(*)::BIGINT AS x
-         FROM events GROUP BY 1, 2),
-       dense AS (
-         SELECT days.d, types.event_type, coalesce(cnt.x, 0)::BIGINT AS x
-         FROM days CROSS JOIN types
-         LEFT JOIN cnt ON cnt.d = days.d AND cnt.event_type = types.event_type),
-       ranked AS (
-         -- mid-ranks in HALF-units: 2*rank_lo + (ties - 1), exact integers
-         SELECT d, event_type,
-                2 * rank() OVER (PARTITION BY d ORDER BY x)
-                  + count(*) OVER (PARTITION BY d, x) - 1 AS r2
-         FROM dense),
-       rj AS (
-         SELECT event_type, sum(r2)::BIGINT AS r2_sum
-         FROM ranked GROUP BY event_type),
-       st AS (
-         SELECT count(*)::BIGINT AS k,
-                sum(r2_sum::HUGEINT * r2_sum) AS sum_r2_sq,
-                (SELECT count(*) FROM days)::BIGINT AS n
-         FROM rj)
-       SELECT rj.event_type, round(rj.r2_sum / 2.0 / st.n, 6) AS mean_rank,
-              round(12.0 / (st.n * st.k * (st.k + 1)) * st.sum_r2_sq::DOUBLE / 4.0
-                    - 3.0 * st.n * (st.k + 1), 6) AS friedman_chi2
-       FROM rj CROSS JOIN st""",
-)
-def q_friedman_test(spark, sf_dir):
-    """Friedman rank test (JASA 1937) for "do the event types keep the
-    same daily ordering?": within each day (block), rank the types by
-    count with exact HALF-UNIT mid-ranks (2·rank + ties − 1 — integer
-    tie handling, no float averaging), then χ²_F = 12/(nk(k+1))·ΣR_j²
-    − 3n(k+1). The repeated-measures complement to `kruskal_wallis`
-    (independent groups): days are blocks, so day-level volume shifts
-    cancel and only the within-day ORDERING is tested — the right
-    null for "did the event mix change" when traffic itself is
-    nonstationary. Zero-densified over the day×type grid; exact
-    integer rank sums; the uncorrected statistic (no tie-variance
-    denominator) is reported, ties being already exact in the ranks."""
-    ev = _events(spark, sf_dir)
-    dec = "decimal(38,0)"
-    cnt = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).cast("long").alias("d"),
-        "event_type",
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    days = cnt.select("d").distinct()
-    types = cnt.select("event_type").distinct()
-    dense = (
-        days.crossJoin(F.broadcast(types))
-        .join(cnt, ["d", "event_type"], "left")
-        .select("d", "event_type", F.coalesce("x", F.lit(0)).cast("long").alias("x"))
-    )
-    wd = Window.partitionBy("d").orderBy("x")
-    wt = Window.partitionBy("d", "x")
-    ranked = dense.select(
-        "d", "event_type",
-        (2 * F.rank().over(wd) + F.count(F.lit(1)).over(wt) - 1).cast("long").alias("r2"),
-    )
-    rj = ranked.groupBy("event_type").agg(F.sum("r2").cast("long").alias("r2_sum"))
-    st = rj.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(F.col("r2_sum").cast(dec) * F.col("r2_sum").cast(dec)).cast(dec).alias("sum_r2_sq"),
-    ).crossJoin(F.broadcast(days.agg(F.count(F.lit(1)).cast("long").alias("n"))))
-    return rj.crossJoin(F.broadcast(st)).select(
-        "event_type",
-        F.round(F.col("r2_sum") / 2.0 / F.col("n"), 6).alias("mean_rank"),
-        F.round(
-            12.0 / (F.col("n") * F.col("k") * (F.col("k") + 1))
-            * F.col("sum_r2_sq").cast("double") / 4.0
-            - 3.0 * F.col("n") * (F.col("k") + 1),
-            6,
-        ).alias("friedman_chi2"),
     )

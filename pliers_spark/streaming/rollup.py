@@ -5,9 +5,9 @@ maintains ONLY the finest tier (hour) — watermarked tumbling windows,
 int64 micro-unit sums, 'append' mode so each closed hour is emitted
 exactly once — and the coarser tiers (day, week) are batch
 re-aggregations of the materialized hour partials via
-:func:`pliers_spark.operators.rollup.coarsen`. Since the batch engine
-proves the partial-merge exact (the ``rollup_multires`` oracle
-aggregates from raw), the streaming path inherits correctness as long
+:func:`pliers_spark.operators.rollup.coarsen`. Since the batch partial-merge is
+exact (tests/test_rollup.py checks it against aggregates of raw), the
+streaming path inherits correctness as long
 as its hour tier matches the batch hour tier — which
 tests/test_streaming.py pins with a file replay.
 

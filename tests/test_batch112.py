@@ -1,4 +1,4 @@
-"""Batch 112: Poisson IRLS, two-proportion CI, dup token inflation."""
+"""Batch 112: Poisson IRLS."""
 
 import os
 from datetime import datetime
@@ -12,7 +12,6 @@ def _write(spark, tmp_path, name, rows, schema):
     return d
 
 
-DOCS = "doc_id long, text string, lang string, source string, n_chars long"
 EVENTS = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -37,40 +36,3 @@ def test_poisson_irls_rate_ratio(spark, tmp_path):
     assert r.n == 40
     assert r.coef_clickshare > 0.5
     assert r.rate_ratio > 2
-
-
-def test_two_proportion_ci_separated(spark, tmp_path):
-    """Variant 0 converts 90%, variant 1 converts 10%: CI excludes 0."""
-    from pliers_spark.queries import QUERIES
-
-    rows = []
-    eid = 0
-    for u in range(40):
-        conv = (u % 2 == 0 and u % 10 != 0) or (u % 2 == 1 and u % 10 == 1)
-        typ = "purchase" if conv else "view"
-        rows.append((eid, datetime(2024, 1, 1, 0, 0, u), u, typ, 1.0, "{}"))
-        eid += 1
-    sf = _write(spark, tmp_path, "events", rows, EVENTS)
-    r = QUERIES["two_proportion_ci"](spark, sf).collect()[0]
-    assert r.n1 == 20 and r.n2 == 20
-    assert r.diff > 0.5
-    assert r.ci_lo > 0
-    assert r.ci_lo < r.diff < r.ci_hi
-
-
-def test_dup_token_inflation(spark, tmp_path):
-    """Two identical 10-token docs + one unique 5-token doc:
-    inflation = 20/25."""
-    from pliers_spark.queries import QUERIES
-
-    ten = " ".join(["w"] * 10)
-    rows = [
-        (0, ten, "en", "s", len(ten)),
-        (1, ten.upper(), "en", "s", len(ten)),  # casefolded dup
-        (2, "a b c d e", "en", "s", 9),
-    ]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    r = QUERIES["dup_token_inflation"](spark, sf).collect()[0]
-    assert r.n_docs == 3 and r.n_dup_docs == 2
-    assert r.total_tokens == 25 and r.dup_tokens == 20
-    assert r.token_inflation == 0.8

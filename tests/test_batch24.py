@@ -31,7 +31,7 @@ def test_ndcg_bounds_and_ideal(spark):
 
 
 def test_ndcg_weights_are_exact_log2():
-    from pliers_spark.queries import _NDCG_W
+    from pliers_spark.queries.stats_02 import _NDCG_W
 
     for r, w in _NDCG_W.items():
         assert w == round(1e6 / math.log2(1 + r))

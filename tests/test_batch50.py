@@ -58,7 +58,8 @@ def test_demand_classes_quadrants(spark, tmp_path):
 def test_rbo_bounds_on_corpus(spark):
     """RBO partial sum and average overlap live in [0, ~0.2034] and
     [0, 1]; identical lists hit the maxima (x_d = d for all d)."""
-    from pliers_spark.queries import QUERIES, _RBO_W
+    from pliers_spark.queries import QUERIES
+    from pliers_spark.queries.stats_06 import _RBO_W
 
     max_rbo = round(sum(w * d for d, w in enumerate(_RBO_W, 1)), 6)
     out = QUERIES["rbo_rankings"](spark, "/root/testdata/sf0.001").collect()

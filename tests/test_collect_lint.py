@@ -62,20 +62,6 @@ WHITELIST: dict[tuple[str, str], tuple[int, str]] = {
         2, "agg(...)[0] per Newton round: 1-row score/information scalars"),
     ("queries/stats_13.py", "q_poisson_irls"): (
         2, "agg(...)[0] per IRLS round: 1-row scalars"),
-    ("queries/stats_15.py", "ent_fp"): (
-        1, "agg(...)[0][0]: 1-row scalar agg (entropy numerator)"),
-    ("queries/stats_15.py", "cond_ent_fp"): (
-        1, "agg(...)[0][0]: 1-row scalar agg"),
-    ("queries/stats_16.py", "q_count_model_aic"): (
-        2, "agg(...)[0]: 1-row moment scalars (n, s1, max) + lnfact sum"),
-    ("queries/stats_16.py", "q_fisher_exact"): (
-        1, "agg(...)[0]: 2×2 contingency scalars in 1 row"),
-    ("queries/stats_17.py", "q_sign_test"): (
-        1, "agg(...)[0]: 1-row scalar agg (n, pos)"),
-    ("queries/stats_17.py", "q_pacf_levinson"): (
-        2, "agg(...)[0] moments + per-lag 1-row autocovariance scalar"),
-    ("queries/stats_17.py", "q_erlang_c"): (
-        1, "agg(...)[0]: 1-row scalar agg (duty-cycle parameters)"),
     ("sources/layout.py", "check_sorted_contract"): (
         1, "agg(sum)[0]: 1-row violation count"),
     ("sources/snapshots.py", "delete_where"): (

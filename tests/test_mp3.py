@@ -535,17 +535,6 @@ def test_stream_stats_rejects_mixed_sample_rates():
         M.mp3_stream_stats(f441 + f48)
 
 
-def test_kmeans_binned_dp_guard_under_k_distinct():
-    from pliers_spark.queries.stats_16 import _k1d_weighted_dp
-
-    with pytest.raises(ValueError, match="distinct values"):
-        _k1d_weighted_dp([(5, 100), (9, 50)])
-    rows = _k1d_weighted_dp([(1, 10), (5, 20), (9, 30)])
-    assert [r[0] for r in rows] == [1, 2, 3]
-    assert sum(r[1] for r in rows) == 60
-    assert rows[0][2:4] == (1, 1) and rows[2][2:4] == (9, 9)
-
-
 # ---------------------------------------------------------------------------
 # fuzz: arbitrary bytes must terminate with a clean outcome (the hang
 # class the ID3 regression above belongs to)

@@ -3,11 +3,11 @@ parameters (Python globals: last assignment wins at import, earlier
 functions read the new value at call time). This bit twice in the
 queries monolith (`_B` bootstrap replicates; `_EMB_DIM` 4 -> 64). The
 round-3 package split scopes globals per module, which removes the
-rebinding hazard WITHIN the registry — but a name defined in two chunk
-modules would still make the merged `pliers_spark.queries.X` attribute
-surface ambiguous (first module wins), so the guard stays strict across
-the whole package. Fail at test time instead of at the correctness
-gate."""
+rebinding hazard WITHIN the registry — but query modules import each
+other's helpers by name (`from .dedup_sim import _STOPWORD_SQL_LIST`), so a
+name defined in two modules would make it depend on the import which
+definition a query gets; the guard stays strict across the whole
+package. Fail at test time instead of at the correctness gate."""
 
 import ast
 import glob
@@ -40,8 +40,7 @@ def test_no_duplicate_module_constants():
 def test_no_duplicate_query_function_names():
     """Two `def q_foo` with the same name would shadow silently (the
     @query decorator already guards the registry NAME, but a reused
-    function name with a new registry name hides the old function in
-    the merged package namespace)."""
+    function name makes a by-name import of either ambiguous)."""
     seen = {}
     dups = []
     for path, tree in _modules():

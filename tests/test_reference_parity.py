@@ -133,7 +133,8 @@ def test_dictionary_lookup_matches_reference(spark, pliers_mods):
     from pliers.extractors import DictionaryExtractor
     from pliers.stimuli import TextStim
 
-    from pliers_spark.queries import _LEXICON_ROWS, QUERIES
+    from pliers_spark.queries import QUERIES
+    from pliers_spark.queries.core_parity import _LEXICON_ROWS
 
     dictionary = pd.DataFrame(
         [(l, f, s) for (_, l, f, s) in _LEXICON_ROWS],
