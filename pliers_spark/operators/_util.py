@@ -23,12 +23,17 @@ def ts_micros(col: Column, dtype) -> Column:
     return F.unix_micros(col)
 
 
-def epoch_micros(df: DataFrame, col: str) -> Column:
+def micros(col: Column, dtype) -> Column:
     """Exact integer microseconds for timestamps (:func:`ts_micros`);
     pass-through µs scaling for numeric columns."""
-    if is_timestamp(df, col):
-        return ts_micros(F.col(col), df.schema[col].dataType)
-    return (F.col(col).cast("double") * F.lit(1_000_000.0)).cast("long")
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
+        return ts_micros(col, dtype)
+    return (col.cast("double") * F.lit(1_000_000.0)).cast("long")
+
+
+def epoch_micros(df: DataFrame, col: str) -> Column:
+    """:func:`micros` of a column of ``df``."""
+    return micros(F.col(col), df.schema[col].dataType)
 
 
 def epoch_seconds(df: DataFrame, col: str) -> Column:

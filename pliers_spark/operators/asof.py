@@ -5,26 +5,29 @@ Semantics (north rule, BASELINE.json): for each spine row
 row with ``right_ts <= t`` (inclusive tie — matches the reference's
 step-fill, which holds a value from its onset forward:
 ``pliers/utils/base.py:221-223``, i.e. ``allow_exact_matches=True``).
-No right row at or before ``t`` → NULLs (left-outer).
+No right row at or before ``t`` → NULLs (left-outer). The forward and
+nearest directions and a tolerance follow pandas ``merge_asof``.
 
 Two physical strategies, chosen for Spark's execution model:
 
-1. :func:`asof_join` (default) — **union + window forward-fill**, pure
-   JVM. Tag both sides, ``unionByName``, one shuffle on the entity key,
-   sort within partition by ``(ts, side)`` (right rows sort before spine
-   rows at equal ts ⇒ inclusive match), ``last(value, ignorenulls=True)``
-   over an unbounded-preceding frame, then keep spine rows. Properties:
+1. :func:`asof_join` — **union + window fill**, pure JVM, one operator
+   for the three directions (backward, forward, nearest). Tag both
+   sides, ``unionByName``, one shuffle on the entity key, sort within
+   partition by ``(ts, side)``, take the matched right row as ONE
+   struct per window frame (``last`` over the preceding frame,
+   ``first`` over the following one), then keep spine rows.
+   Properties:
    - exactly ONE shuffle, no Python boundary, whole-stage codegen;
    - no join explosion: cost is O((|L|+|R|) log within-partition);
    - skew: a hot entity is one sort group, not a join blow-up; AQE
      handles partition-level imbalance, :func:`detect_heavy_hitters`
-     reports entities that need time-range splitting.
+     reports entities that need time-range splitting
+     (:func:`asof_join_split`).
 
 2. :func:`asof_join_cogroup` — ``groupBy().cogroup().applyInPandas``
    with a per-group ``pandas.merge_asof`` (the sort-merge formulation
-   the north rule names). Arrow-vectorized, never per-row Python. Used
-   as the differential-testing twin of strategy 1 and for carrying many
-   value columns at once through one pass.
+   the north rule names), backward only. Arrow-vectorized, never
+   per-row Python. The differential-testing twin of strategy 1.
 
 At 100 TB: the right side (pages) is bucketed/sorted by
 ``(entity, ts)`` at write time (see ``plans/layout.py`` notes); both
@@ -37,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._util import micros
+
 
 def asof_join(
     spine: DataFrame,
@@ -46,84 +51,12 @@ def asof_join(
     right_ts: str,
     value_cols: list[str],
     matched_ts_col: str | None = "matched_ts",
-) -> DataFrame:
-    """Union + window-ffill as-of join (JVM-only, one shuffle).
-
-    Returns the spine columns plus ``value_cols`` (latest as-of values)
-    and optionally the matched right timestamp.
-    """
-    spine_extra = [c for c in spine.columns if c not in entity_cols and c != spine_ts]
-
-    left_tagged = spine.select(
-        *entity_cols,
-        F.col(spine_ts).alias("_ts"),
-        F.lit(1).alias("_side"),  # spine sorts after right rows at equal ts
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_v_{c}") for c in value_cols],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("_rts"),
-        *[F.col(c) for c in spine_extra],
-    )
-    right_tagged = right.select(
-        *entity_cols,
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        *[F.col(c).alias(f"_v_{c}") for c in value_cols],
-        F.col(right_ts).alias("_rts"),
-        *[F.lit(None).cast(spine.schema[c].dataType).alias(c) for c in spine_extra],
-    )
-
-    unioned = left_tagged.unionByName(right_tagged)
-    w = (
-        Window.partitionBy(*entity_cols)
-        .orderBy(F.col("_ts"), F.col("_side"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # ROW-ATOMIC fill (r5 review fix): take the latest right ROW as one
-    # struct, then project its fields. Per-column last(ignorenulls) would
-    # resurrect each column's latest NON-NULL value when a right value
-    # column is null — mixing columns from different right rows and
-    # disagreeing with merge_asof / the cogroup twin. The struct is null
-    # exactly for spine rows (side 1), so ignorenulls skips only those;
-    # a right row whose value fields are null is still a non-null struct
-    # and correctly shadows older rows.
-    row = F.when(
-        F.col("_side") == 0,
-        F.struct(
-            F.col("_rts").alias("_rts"),
-            *[F.col(f"_v_{c}").alias(c) for c in value_cols],
-        ),
-    )
-    last_row = F.last(row, ignorenulls=True).over(w)
-    filled = unioned.select(
-        *entity_cols,
-        F.col("_ts"),
-        F.col("_side"),
-        *spine_extra,
-        *[last_row[c].alias(c) for c in value_cols],
-        last_row["_rts"].alias("_matched_ts"),
-    )
-    out = filled.where(F.col("_side") == 1).drop("_side")
-    out = out.withColumnRenamed("_ts", spine_ts)
-    if matched_ts_col:
-        out = out.withColumnRenamed("_matched_ts", matched_ts_col)
-    else:
-        out = out.drop("_matched_ts")
-    return out
-
-
-def asof_join_directional(
-    spine: DataFrame,
-    right: DataFrame,
-    entity_cols: list[str],
-    spine_ts: str,
-    right_ts: str,
-    value_cols: list[str],
+    *,
     direction: str = "backward",
     tolerance_seconds: float | None = None,
-    matched_ts_col: str | None = "matched_ts",
 ) -> DataFrame:
-    """Union + window as-of join with pandas ``merge_asof`` direction
-    and tolerance semantics — same ONE-shuffle/no-Python shape as
-    :func:`asof_join`, generalized:
+    """Union + window as-of join (JVM-only, one shuffle) with pandas
+    ``merge_asof`` direction and tolerance semantics:
 
     - ``backward`` (default): latest right row with ``rt <= t``;
     - ``forward``: earliest right row with ``rt >= t``;
@@ -134,109 +67,92 @@ def asof_join_directional(
 
     ``tolerance_seconds`` nulls the value columns (and matched ts) when
     the chosen match is farther than the bound — pandas' ``tolerance``.
-    All distance arithmetic is exact integer microseconds
-    (``_util.epoch_micros``), never floats.
+    Distances are exact integer microseconds (``_util.micros``), never
+    floats, and are computed only for ``nearest`` or a tolerance. A
+    right row with a null timestamp is never matched, and a spine row
+    with a null timestamp matches nothing.
 
-    Physical shape: both directions come from TWO window frames over
-    the SAME per-entity sort (unbounded-preceding last + unbounded-
-    following first) — still exactly one shuffle, still whole-stage
-    codegen; ``nearest`` costs one extra window function, not an extra
-    exchange. Tie ordering puts right rows before spine rows, which
-    makes the preceding frame inclusive and the following frame
-    exclusive at equal ts: correct for ``backward`` and ``nearest``;
-    for ``forward`` the tag flips so the following frame is inclusive.
+    Returns the spine columns plus ``value_cols`` and, unless
+    ``matched_ts_col`` is None, the matched right timestamp.
+
+    Physical shape: one sort per entity, ordered by ``(ts, side)``.
+    Right rows sort before spine rows at equal ts, which makes the
+    preceding frame inclusive (backward, nearest); ``forward`` flips
+    the tag, so the following frame is inclusive instead. The right
+    row is ONE struct (null on spine rows), so each frame is one
+    window function however many value columns ride along, and the
+    match is row-atomic: per-column ``last(ignorenulls)`` would
+    resurrect a column's latest NON-NULL value when the latest right
+    row carries a null there, mixing columns from different right rows
+    and disagreeing with merge_asof and the cogroup twin. ``nearest``
+    costs one extra window function over the same sort, not an extra
+    exchange.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction}")
     spine_extra = [c for c in spine.columns if c not in entity_cols and c != spine_ts]
-    # right rows sort before spine rows at equal ts for backward/nearest
-    # (inclusive preceding frame); after them for forward (inclusive
-    # following frame).
-    right_side, spine_side = (0, 1) if direction != "forward" else (1, 0)
+    right_side, spine_side = (1, 0) if direction == "forward" else (0, 1)
 
     left_tagged = spine.select(
         *entity_cols,
         F.col(spine_ts).alias("_ts"),
         F.lit(spine_side).alias("_side"),
-        F.lit(1).alias("_is_spine"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_v_{c}") for c in value_cols],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("_rts"),
-        *[F.col(c) for c in spine_extra],
+        F.lit(None).alias("_r"),
+        *spine_extra,
     )
     right_tagged = right.select(
         *entity_cols,
         F.col(right_ts).alias("_ts"),
         F.lit(right_side).alias("_side"),
-        F.lit(0).alias("_is_spine"),
-        *[F.col(c).alias(f"_v_{c}") for c in value_cols],
-        F.col(right_ts).alias("_rts"),
+        F.when(
+            F.col(right_ts).isNotNull(),
+            F.struct(F.col(right_ts).alias("_rts"), *value_cols),
+        ).alias("_r"),
         *[F.lit(None).cast(spine.schema[c].dataType).alias(c) for c in spine_extra],
     )
     unioned = left_tagged.unionByName(right_tagged)
-    from ._util import epoch_micros
 
-    us = epoch_micros(unioned, "_ts")
-    order = Window.partitionBy(*entity_cols).orderBy(F.col("_ts"), F.col("_side"))
-    w_back = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_fwd = order.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    # row-atomic candidate rows on both frames (same rationale as
-    # asof_join): the struct is null for spine rows only, so each
-    # direction picks WHOLE right rows, never a per-column mix.
-    rrow = F.when(
-        F.col("_is_spine") == 0,
-        F.struct(
-            F.col("_rts").alias("_rts"),
-            epoch_micros(unioned, "_rts").alias("_rus"),
-            *[F.col(f"_v_{c}").alias(c) for c in value_cols],
-        ),
+    # a forward spine row with a null ts sorts last, after every
+    # candidate; backward/nearest ones sort first, before every one
+    ts_order = F.col("_ts").asc_nulls_last() if direction == "forward" else F.col("_ts")
+    order = Window.partitionBy(*entity_cols).orderBy(ts_order, F.col("_side"))
+    frames = {}
+    if direction != "forward":
+        w_back = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        frames["_b"] = F.last("_r", ignorenulls=True).over(w_back)
+    if direction != "backward":
+        w_fwd = order.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        frames["_f"] = F.first("_r", ignorenulls=True).over(w_fwd)
+    filled = (
+        unioned.select(*entity_cols, "_ts", "_side", *spine_extra,
+                       *[f.alias(name) for name, f in frames.items()])
+        .where(F.col("_side") == spine_side)
     )
-    cols = [*entity_cols, F.col("_ts"), F.col("_is_spine"), *spine_extra, us.alias("_us")]
-    if direction in ("backward", "nearest"):
-        b_row = F.last(rrow, ignorenulls=True).over(w_back)
-        cols += [b_row[c].alias(f"_b_{c}") for c in value_cols]
-        cols.append(b_row["_rts"].alias("_b_rts"))
-        cols.append(b_row["_rus"].alias("_b_us"))
-    if direction in ("forward", "nearest"):
-        f_row = F.first(rrow, ignorenulls=True).over(w_fwd)
-        cols += [f_row[c].alias(f"_f_{c}") for c in value_cols]
-        cols.append(f_row["_rts"].alias("_f_rts"))
-        cols.append(f_row["_rus"].alias("_f_us"))
-    filled = unioned.select(*cols).where(F.col("_is_spine") == 1).drop("_is_spine")
 
-    if direction == "backward":
-        use_back = F.lit(True)
-        dist = F.col("_us") - F.col("_b_us")
-    elif direction == "forward":
-        use_back = F.lit(False)
-        dist = F.col("_f_us") - F.col("_us")
-    else:
-        b_dist = F.col("_us") - F.col("_b_us")
-        f_dist = F.col("_f_us") - F.col("_us")
-        use_back = F.col("_b_us").isNotNull() & (
-            F.col("_f_us").isNull() | (b_dist <= f_dist)
+    m = F.col("_f" if direction == "forward" else "_b")
+    if direction == "nearest" or tolerance_seconds is not None:
+        us = micros(F.col("_ts"), unioned.schema["_ts"].dataType)
+        rts_type = right.schema[right_ts].dataType
+        b_dist = us - micros(F.col("_b._rts"), rts_type)
+        f_dist = micros(F.col("_f._rts"), rts_type) - us
+        if direction == "nearest":
+            use_back = F.col("_b").isNotNull() & (F.col("_f").isNull() | (b_dist <= f_dist))
+            m = F.when(use_back, F.col("_b")).otherwise(F.col("_f"))
+            dist = F.when(use_back, b_dist).otherwise(f_dist)
+        else:
+            dist = b_dist if direction == "backward" else f_dist
+        keep = dist.isNotNull() if tolerance_seconds is None else (
+            dist <= F.lit(int(round(tolerance_seconds * 1_000_000)))
         )
-        dist = F.when(use_back, b_dist).otherwise(f_dist)
-
-    within = F.lit(True) if tolerance_seconds is None else (
-        dist <= F.lit(int(round(tolerance_seconds * 1_000_000)))
+        m = F.when(keep, m)
+    matched = filled.select(
+        *entity_cols, F.col("_ts").alias(spine_ts), *spine_extra, m.alias("_m")
     )
-    keep = within & dist.isNotNull()
-
-    def pick(prefix_b: str, prefix_f: str):
-        if direction == "backward":
-            return F.col(prefix_b)
-        if direction == "forward":
-            return F.col(prefix_f)
-        return F.when(use_back, F.col(prefix_b)).otherwise(F.col(prefix_f))
-
-    out_cols = [*entity_cols, F.col("_ts").alias(spine_ts), *spine_extra]
-    out_cols += [
-        F.when(keep, pick(f"_b_{c}", f"_f_{c}")).alias(c) for c in value_cols
-    ]
-    if matched_ts_col:
-        out_cols.append(F.when(keep, pick("_b_rts", "_f_rts")).alias(matched_ts_col))
-    return filled.select(*out_cols)
+    return matched.select(
+        *entity_cols, spine_ts, *spine_extra,
+        *[F.col("_m")[c].alias(c) for c in value_cols],
+        *([F.col("_m._rts").alias(matched_ts_col)] if matched_ts_col else []),
+    )
 
 
 def asof_join_cogroup(

@@ -67,18 +67,6 @@ def with_census_ranks(
     return out.drop("_cum_lt")
 
 
-def census_rank2(df: DataFrame, col: str, out: str = "r2") -> DataFrame:
-    """(value, cnt, doubled tie-averaged rank) for each distinct value —
-    the drop-in replacement for ``2*rank() over (order by col) +
-    count(*) over (partition by col) - 1`` on raw rows."""
-    return with_census_ranks(value_counts(df, col), col, r2=out)
-
-
-def broadcast_ranks(df: DataFrame, ranks: DataFrame, col: str) -> DataFrame:
-    """Recover per-row rank columns: broadcast the (bounded) census."""
-    return df.join(F.broadcast(ranks), on=col, how="inner")
-
-
 def scalable_row_number(
     df: DataFrame,
     col: str,

@@ -77,12 +77,6 @@ def merge_features(frames: list[DataFrame], key_cols: list[str], how: str = "ful
     return reduce(lambda a, b: a.join(b, on=key_cols, how=how), frames)
 
 
-def union_results(frames: list[DataFrame]) -> DataFrame:
-    """UNION ALL of long frames (``pd.concat`` axis=0,
-    ``pliers/extractors/base.py:303``)."""
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-
-
 def to_sklearn(
     df: DataFrame,
     feature_cols: list[str] | None = None,

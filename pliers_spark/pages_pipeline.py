@@ -9,21 +9,19 @@ pages/sec at two parallelism levels. Every stage is shuffle-accounted:
 
 1. extraction: ZERO shuffles (one narrow ``mapInArrow`` stage: Arrow
    record batches in and out, no pandas frame on either side);
-2. windowed features: ONE shuffle on url (all window specs share the
-   same partitioning, so Catalyst reuses one Exchange);
+2. windowed features: ONE shuffle on url. The extracted row, packed in
+   one struct, gets its session, its two predecessors' rows and the
+   url's first ``warc_ts`` from window specs that share one
+   partitioning, so Catalyst reuses one Exchange;
 3. as-of features: ZERO shuffles. The spine is each url's own grid from
    its first ``warc_ts``, so no spine frame is built and nothing is
-   joined: in the same window pass each snapshot also lags the whole
-   previous row and reads the url's first ``warc_ts``, then one narrow
-   explode emits the spine points the snapshot decides.
+   joined: one narrow explode emits the spine points each snapshot
+   decides.
 
-When the heavy-hitter census finds a hot url, the skew path replaces
-stages 2 and 3 in the same shape: the extracted row, packed in one
-struct, goes through one time-bucket carry pass that gives each
-snapshot its session, its two predecessors' rows and the url's first
-``warc_ts``, and the same explode emits the spine points. Nothing is
-re-attached afterwards, and both sides of the carry pass's self-join
-share one exchange, so both paths run the extraction once.
+When the heavy-hitter census finds a hot url, one time-bucket carry
+pass fills the same columns in stage 2 instead; stage 3 is the same
+code. Both sides of the carry pass's self-join share one exchange, so
+both paths run the extraction once.
 
 The ``html`` binary column is never referenced — column pruning keeps
 it out of the scan entirely (asserted in tests/test_plans.py).
@@ -309,12 +307,12 @@ def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFra
     pass, so no single task ever owns a hot domain's full history —
     bit-equal output (the operator is oracle-gated, and
     tests/test_pages_extract.py pins the skew-safe stage to the plain
-    one). This is the per-row table. The plain flagship windows its
-    extracted rows with it; the skew-safe flagship does not call it:
-    it carries the whole row as one struct through the same operator
-    (:func:`_skew_safe_asof`). Here the carried columns are separate,
-    so column pruning narrows the bucket-tail side of the operator's
-    self-join and the two sides run the Arrow extraction once each.
+    one). This is the per-row table that
+    :func:`incremental_page_features` maintains; no flagship calls it
+    (:func:`asof_feature_table` carries the whole row as one struct
+    instead). Here the carried columns are separate, so column pruning
+    narrows the bucket-tail side of the operator's self-join and the
+    two sides run the Arrow extraction once each.
     """
     gap_s = SESSION_GAP_DAYS * 86400
     if skew_safe:
@@ -359,16 +357,16 @@ def asof_feature_table(
     heavy_hitter_threshold: int = 1_000_000,
 ) -> DataFrame:
     """The flagship's back half over already-extracted page features:
-    heavy-hitter census → windowed features → leakage gate → as-of
-    feature table on the weekly spine. ``pages`` supplies the url
-    column the census scans (pruned — it never re-runs extraction).
+    heavy-hitter census → windows → leakage gate → as-of feature table
+    on the weekly spine. ``pages`` supplies the url column the census
+    scans (pruned — it never re-runs extraction).
 
     The spine is each url's grid t0 + k·step from its first to its last
     ``warc_ts``, and a spine point takes the latest snapshot at or
     before it. Neither is built as a frame nor joined: each snapshot
     emits the grid points it decides (:func:`_owned_points`), so the
-    feature table follows the url's one ordered window pass with a
-    narrow explode. Rows with a null ``url`` or ``warc_ts`` are dropped
+    feature table follows the url's ordered window pass with a narrow
+    explode. Rows with a null ``url`` or ``warc_ts`` are dropped
     first, before the census: a snapshot with no time has no place on
     the timeline (the spine grid never counted them either), and one
     with no url belongs to no timeline — grouped as one "null url" it
@@ -382,11 +380,29 @@ def asof_feature_table(
     full history. Pass True/False to force either path (the two are
     bit-equal; pinned by tests/test_pages_extract.py).
 
-    The plain path windows the extracted rows and lags each whole row
-    in the same window, so a point owned by the previous snapshot takes
-    that row as is; the skew path (:func:`_skew_safe_asof`) does the
-    same through a time-bucket carry pass. Both read ``extracted``
-    once."""
+    The census picks only the operator that fills the carry columns.
+    With every value column packed into one struct ``_v``, it gives each
+    snapshot its session id, its predecessor's struct and timestamp
+    (lag-1), the struct before that (lag-2) and the url's first
+    timestamp: the plain path in one ``Window.partitionBy(url)``
+    pass, the skew path in one ``operators/skew.py::timesplit_windows``
+    carry pass, whose shuffles are all keyed by (url, time bucket) or
+    by url on the one-row-per-bucket frame. The rest is shared: the
+    leakage gate, then each snapshot emits the spine points it decides.
+    A point it owns takes its own row and its predecessor as the lag
+    source; a point owned by the predecessor takes the predecessor's
+    row and lag-2, and ``session_id`` minus the session start between
+    the two, so no lag of the session id is needed.
+
+    Both paths read ``extracted`` once: on the skew path both sides of
+    the carry pass's self-join carry the struct itself, not fields that
+    column pruning could narrow on one side, so adaptive execution
+    reuses one ``(url, _tb)`` exchange for both. Exactness requires
+    ``warc_ts`` unique per url, as the windows do; on a duplicated
+    snapshot only the first row of the run emits, so each spine point
+    still comes out once."""
+    from .plans.leakage import assert_leakage_free
+
     placed = F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
     pages, extracted = pages.where(placed), extracted.where(placed)
     if skew_safe is None:
@@ -397,26 +413,48 @@ def asof_feature_table(
                 pages.select("url"), ["url"], heavy_hitter_threshold
             ).take(1)
         )
-    step_s = spine_step_hours * 3600
+    gap_s = SESSION_GAP_DAYS * 86400
+    values = [c for c in extracted.columns if c not in ("url", "warc_ts")]
+    packed = extracted.select("url", "warc_ts", F.struct(*values).alias("_v"))
     if skew_safe:
-        return _skew_safe_asof(extracted, step_s)
-    feats = windowed_page_features(extracted)
-    value_cols = [c for c in feats.columns if c not in ("url", "warc_ts")]
-    w = Window.partitionBy("url").orderBy("warc_ts")
-    rows = feats.select(
-        "url", "warc_ts", F.struct(*value_cols, F.col("warc_ts").alias("matched_ts")).alias("_row")
-    ).withColumns({
-        "_prev": F.lag("_row").over(w),
-        "_t0": F.first("warc_ts").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    })
+        from .operators.skew import timesplit_windows
+
+        rows = timesplit_windows(
+            packed, ["url"], "warc_ts", _SKEW_BUCKET_S,
+            lag1=("_v", "warc_ts"), lag2=("_v",), first=("warc_ts",), session_gap=gap_s,
+        )
+    else:
+        w = Window.partitionBy("url").orderBy("warc_ts")
+        rows = TP.sessionize(packed, ["url"], "warc_ts", gap_seconds=gap_s).withColumns({
+            "_v_lag1": F.lag("_v").over(w),
+            "warc_ts_lag1": F.lag("warc_ts").over(w),
+            "_v_lag2": F.lag("_v", 2).over(w),
+            "warc_ts_first": F.first("warc_ts").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        })
     # build-time gate: no window frame in the feature plan may read the
     # future (north rule; plans/leakage.py audits the optimized plan)
-    from .plans.leakage import assert_leakage_free
-
     assert_leakage_free(rows)
-    pts = _owned_points(rows, F.col("_prev.matched_ts"), F.col("_t0"), step_s)
-    match = F.when(F.col("_own"), F.col("_row")).otherwise(F.col("_prev"))
-    return pts.select("url", "t", *[match[c].alias(c) for c in [*value_cols, "matched_ts"]])
+    pts = _owned_points(
+        rows, F.col("warc_ts_lag1"), F.col("warc_ts_first"), spine_step_hours * 3600
+    )
+
+    def pick(own: str, prev: str) -> Column:
+        return F.when(F.col("_own"), F.col(own)).otherwise(F.col(prev))
+
+    starts = epoch_seconds(rows, "warc_ts") - epoch_seconds(rows, "warc_ts_lag1") > gap_s
+    match, pred = pick("_v", "_v_lag1"), pick("_v_lag1", "_v_lag2")
+    return pts.select(
+        "url", "t",
+        *[match[c].alias(c) for c in values],
+        F.when(F.col("_own"), F.col("session_id"))
+        .otherwise(F.col("session_id") - F.when(starts, 1).otherwise(0)).alias("session_id"),
+        pred["text_length"].alias("text_length_lag1"),
+        pred["quality"].alias("quality_lag1"),
+        _quality_delta(match["quality"], pred["quality"]).alias("quality_delta"),
+        pick("warc_ts", "warc_ts_lag1").alias("matched_ts"),
+    )
 
 
 def _owned_points(rows: DataFrame, prev_ts: Column, t0: Column, step_seconds: int) -> DataFrame:
@@ -458,63 +496,6 @@ def _owned_points(rows: DataFrame, prev_ts: Column, t0: Column, step_seconds: in
             "_own": k * step_us == F.col("_b"),
         })
         .drop("_a", "_b", "_k")
-    )
-
-
-def _skew_safe_asof(extracted: DataFrame, step_seconds: int) -> DataFrame:
-    """The skew path of :func:`asof_feature_table`, with the plain
-    path's columns in the same order and bit-equal values — and the
-    plain path's shape: the whole extracted row travels through the
-    windows, so nothing is re-attached afterwards.
-
-    1. carry: every value column is packed into one struct ``_v``, and
-       one ``timesplit_windows`` pass gives each snapshot its session
-       id, the struct and timestamp of its predecessor (lag-1), the
-       struct of the snapshot before that (lag-2) and the url's first
-       timestamp; the leakage gate audits this frame;
-    2. match: each snapshot emits the spine points it decides
-       (:func:`_owned_points`); a point it owns takes its own row and
-       its predecessor as the lag source, a point owned by the
-       predecessor takes the predecessor's row and lag-2, and
-       ``session_id`` minus the session start between the two, so no
-       lag of the session id is needed.
-
-    Every shuffle is keyed by (url, time bucket) or by url on the
-    one-row-per-bucket frame, so no hot url remains as one task. The
-    extraction runs once: the carry pass joins its rows to their bucket
-    tails, and because both sides carry the struct itself, not fields
-    that column pruning could narrow on one side, the plans below their
-    ``(url, _tb)`` exchanges are identical and adaptive execution
-    reuses one exchange for both. Exactness requires ``warc_ts`` unique
-    per url, as the windows do; on a duplicated snapshot only the first
-    row of the run emits, so each spine point still comes out once."""
-    from .operators.skew import timesplit_windows
-    from .plans.leakage import assert_leakage_free
-
-    gap_s = SESSION_GAP_DAYS * 86400
-    values = [c for c in extracted.columns if c not in ("url", "warc_ts")]
-    rows = timesplit_windows(
-        extracted.select("url", "warc_ts", F.struct(*values).alias("_v")),
-        ["url"], "warc_ts", _SKEW_BUCKET_S,
-        lag1=("_v", "warc_ts"), lag2=("_v",), first=("warc_ts",), session_gap=gap_s,
-    )
-    assert_leakage_free(rows)
-    pts = _owned_points(rows, F.col("warc_ts_lag1"), F.col("warc_ts_first"), step_seconds)
-
-    def pick(own: str, prev: str) -> Column:
-        return F.when(F.col("_own"), F.col(own)).otherwise(F.col(prev))
-
-    starts = epoch_seconds(rows, "warc_ts") - epoch_seconds(rows, "warc_ts_lag1") > gap_s
-    match, pred = pick("_v", "_v_lag1"), pick("_v_lag1", "_v_lag2")
-    return pts.select(
-        "url", "t",
-        *[match[c].alias(c) for c in values],
-        F.when(F.col("_own"), F.col("session_id"))
-        .otherwise(F.col("session_id") - F.when(starts, 1).otherwise(0)).alias("session_id"),
-        pred["text_length"].alias("text_length_lag1"),
-        pred["quality"].alias("quality_lag1"),
-        _quality_delta(match["quality"], pred["quality"]).alias("quality_delta"),
-        pick("warc_ts", "warc_ts_lag1").alias("matched_ts"),
     )
 
 

@@ -339,8 +339,7 @@ def q_ucb_arms(spark, sf_dir):
     ambiguity), and rank arms by mean + √(2·ln N / n). This is the
     offline-replay readout behind every explore/exploit rollout
     analysis. Plan: one global rank pass for the median (at corpus
-    scale swap in the two-pass rank histogram, as group_quantiles
-    documents), one arm census with map-side partial agg, then
+    scale swap in the two-pass rank histogram), one arm census with map-side partial agg, then
     arm-grain math (a handful of rows); the transcendentals touch only
     the final once-rounded arm-grain expression."""
     ev = _events(spark, sf_dir)
@@ -1250,8 +1249,8 @@ def q_mann_kendall_sen(spark, sf_dir):
 )
 def q_kruskal_wallis(spark, sf_dir):
     """Kruskal-Wallis rank one-way ANOVA across event types (Kruskal &
-    Wallis, JASA 1952) — the nonparametric twin of
-    `seasonality_strength`'s parametric R²: H = 12/(N(N+1))·ΣRᵢ²/nᵢ −
+    Wallis, JASA 1952) — the nonparametric twin of a one-way ANOVA's
+    parametric R²: H = 12/(N(N+1))·ΣRᵢ²/nᵢ −
     3(N+1) with average-rank ties and the Σ(t³−t) tie correction.
     Ranks never touch a float: the DOUBLED average rank of a value is
     2·|{<v}| + |{=v}| + 1 — an exact integer from the value census —

@@ -145,7 +145,7 @@ def q_kmv_overlap(spark, sf_dir):
     """KMV Jaccard estimation between source vocabularies (Beyer et al.,
     SIGMOD 2007): the union's bottom-k hash sketch doubles as a uniform
     sample of A∪B, so |sketch ∩ A ∩ B| / k estimates J(A,B) — audited
-    against the exact Jaccard (`source_vocab_overlap`'s quantity). This
+    against the exact Jaccard of the two vocabularies. This
     is the mergeable scale path for pairwise corpus-overlap matrices
     where exact set intersection would shuffle the full vocabulary per
     pair. Plan: one distinct (source, hash) census; pair tagging joins
@@ -644,7 +644,7 @@ def q_diff_in_diff(spark, sf_dir):
     reports next to the naive post-mean gap. Four cell means from exact
     int64 sufficient stats; ONE identical double expression both
     engines. Plan: global rank for the cutoff (two-pass histogram at
-    scale, as documented in group_quantiles), one 4-cell census."""
+    scale), one 4-cell census."""
     from pliers_spark.operators._util import epoch_micros
 
     ev = _events(spark, sf_dir)

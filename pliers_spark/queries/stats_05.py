@@ -554,9 +554,8 @@ def q_rmst(spark, sf_dir):
     the cumulative sum is exact int64 (order-proof, unlike a float
     product), each day's survival exp()s the rounded cumsum once, and
     RMST sums the per-day micro-unit survivals exactly. A day with
-    hazard 1 zeroes survival from then on. Reuses `hazard_table`'s
-    risk-set construction (entities collapse to one row before the
-    30-row spine fans out)."""
+    hazard 1 zeroes survival from then on. The risk sets collapse
+    entities to one row before the 30-row spine fans out."""
     from pliers_spark.operators._util import epoch_micros
 
     ev = _events(spark, sf_dir)
@@ -1101,8 +1100,8 @@ def q_dispersion_index(spark, sf_dir):
     Poisson vs negative-binomial modeling and flags bursty/bot-like
     behavior (D ≫ 1 = a few users generate most events; the
     `token_burstiness` idea at the behavioral grain). The user×type
-    grid is densified with explicit zeros (the dense_counts spine
-    pattern) so absent combinations count; sufficient stats are exact
+    grid is densified with explicit zeros (a dense user×type spine)
+    so absent combinations count; sufficient stats are exact
     int64/HUGEINT; one ratio per type."""
     ev = _events(spark, sf_dir)
     users = ev.select("user_id").distinct()
@@ -1576,8 +1575,8 @@ def q_logrank_test(spark, sf_dir):
     days — the same order-proofing as every *_fp column), and
     χ² = (Σ(O−E))²/ΣV rounds at 4dp (a squared quotient amplifies
     ulps). This is THE standard two-group survival comparison —
-    completing the family: `hazard_table` (shape), `rmst` (magnitude),
-    log-rank (significance). Plan identical to hazard_table with a
+    completing the family: `kaplan_meier` (shape), `rmst` (magnitude),
+    log-rank (significance). Plan: `rmst`'s per-day risk sets with a
     group column."""
     from pliers_spark.operators._util import epoch_micros
 

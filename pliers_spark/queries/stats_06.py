@@ -716,8 +716,8 @@ def q_pareto_8020(spark, sf_dir):
     """Pareto concentration audit: the revenue share of the top-20% of
     customers AND the exact head count needed to reach 80% of revenue
     — the 80/20 readout behind account tiering and (for corpora) 'how
-    few domains produce most tokens' (`key_skew_report`'s business
-    twin). One customer census, one rank/cumsum window on the
+    few domains produce most tokens' (the heavy-hitter census's
+    business twin). One customer census, one rank/cumsum window on the
     customer grain; the 80% crossing uses the exact integer inequality
     5·cum ≥ 4·total (no ratio rounding); one division for the share."""
     o = load_table(spark, sf_dir, "orders")
@@ -1213,7 +1213,7 @@ def q_shapley_attribution(spark, sf_dir):
     ints, weights round once to ppm ints, and the per-channel sum is
     exact integer arithmetic — the fair-division answer to 'which
     touchpoint deserves the conversion', replacing first/last-touch
-    heuristics (`attribution`). The subset census is tiny (≤ 2^k rows
+    heuristics. The subset census is tiny (≤ 2^k rows
     for k event types) after one user-grain pass."""
     from pliers_spark.operators._util import epoch_micros
 

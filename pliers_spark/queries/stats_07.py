@@ -767,8 +767,7 @@ def q_kendall_tau_binned(spark, sf_dir):
     contingency table — Σ n_ij · n_i'j' over strictly greater /
     strictly lesser cells — so the O(n²) pair space collapses to 25²
     cell pairs after one aggregation. This is the scale form of τ
-    (exact for the binned ordinal variables; `spearman_rho` covers the
-    continuous ranks): all counts are exact integers, one sqrt at the
+    (exact for the binned ordinal variables): all counts are exact integers, one sqrt at the
     end. ntile ties are broken by doc_id on BOTH engines — without the
     total order, equal raw values straddle tile boundaries differently
     per engine and the 5×5 census drifts."""

@@ -274,8 +274,8 @@ def q_huber_location(spark, sf_dir):
     efficiency): weights w = min(1, k·s/|x−μ|) re-estimated from the
     exact nearest-rank median and MAD — the robust mean that a few
     giant boilerplate pages cannot drag, where the plain mean (also
-    reported) visibly moves. Pairs with `mad_scale` (robust scale) and
-    `regression_influence` (which rows did the dragging). Every round
+    reported) visibly moves. Pairs with `regression_influence` (which
+    rows did the dragging). Every round
     rounds its weights once to NANO-units and the iterate to integer
     micro-units, so the fixed-round result is bit-identical
     cross-engine (unrolled MATERIALIZED oracle, the `bradley_terry`

@@ -401,8 +401,7 @@ def q_wilcoxon_signed(spark, sf_dir):
     second-half-mean − first-half-mean in integer micro-units (sums of
     micro-ints, so both engines derive bit-identical diffs), zero
     diffs drop per the classical procedure, |d| gets exact HALF-UNIT
-    mid-ranks (2·rank + ties − 1 — same integer tie handling as
-    `friedman_test`), and z normalizes W⁺ by its null mean/variance.
+    mid-ranks (2·rank + ties − 1, exact integers), and z normalizes W⁺ by its null mean/variance.
     The PAIRED complement to `cvm_drift`/`ks_drift`: user identity is
     blocked out, so population-mix shifts don't masquerade as drift.
     Scale shape: one shuffle on user_id for the halves, one global

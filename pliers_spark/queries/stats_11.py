@@ -193,8 +193,8 @@ def q_stupid_backoff_loo(spark, sf_dir):
 def q_kaplan_meier(spark, sf_dir):
     """Kaplan-Meier product-limit survival curve (Kaplan & Meier, JASA
     1958) for view→purchase conversion with right-censoring at each
-    user's last event — the survival companion to `hazard_table`
-    (same risk sets) and `rmst`: S(t) = Π_{i≤t}(1 − d_i/n_i). The
+    user's last event — the survival companion to `rmst` (same risk
+    sets): S(t) = Π_{i≤t}(1 − d_i/n_i). The
     product is carried as a running SUM of micro-int-rounded
     ln(1−d/n) terms (ordered window — identical add sequence both
     engines) and exponentiated once; the d=n absorbing state pins
@@ -451,7 +451,7 @@ def _markov_er_sql(iterations: int = 10) -> str:
 def q_markov_entropy_rate(spark, sf_dir):
     """Entropy rate of the per-user event-type Markov chain (Shannon
     1948 §7: H = Σ_i π_i H(·|i)) — the single-number compressibility
-    of user behavior that `transition_entropy`'s per-user average
+    of user behavior that a per-user transition entropy average
     doesn't give: π is the chain's STATIONARY distribution, obtained
     by 10 fixed-point integer power-iteration rounds (nano-unit π,
     integer (π·c)//r flows — bit-identical to the oracle's unrolled
@@ -786,8 +786,8 @@ def q_gamma_poisson_eb(spark, sf_dir):
     μ/(v−μ), α = μβ — and each user's posterior mean (x+α)/(1+β)
     pulls low-activity users toward the population rate with weight
     β/(1+β); the equidispersed fallback (v ≤ μ: no overdispersion to
-    exploit) collapses to the global mean. Complements `shrunk_means`
-    (fixed-pseudo-count mean encoding): here the shrinkage STRENGTH
+    exploit) collapses to the global mean. Unlike a fixed-pseudo-count
+    mean encoding, here the shrinkage STRENGTH
     is learned from the data. Census moments are exact int64; each
     posterior is one mirrored IEEE expression. One user-grain reduce
     + a 1-row broadcast prior."""
@@ -1065,8 +1065,8 @@ def q_textrank_keywords(spark, sf_dir):
     """TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004):
     PageRank over the symmetrized token-adjacency graph (distinct
     in-document bigram pairs as edges), top-20 tokens by rank — the
-    graph-centrality alternative to `rake_keywords`/`ctfidf_terms`
-    frequency scoring. Reuses `operators.graph.pagerank`'s exact
+    graph-centrality alternative to `ctfidf_terms` frequency
+    scoring. Reuses `operators.graph.pagerank`'s exact
     fixed-point integer recurrence verbatim, so 10 rounds are
     bit-identical to the oracle's unrolled CTE chain. Plan: one
     position self-join (co-partitioned on doc) builds the
@@ -2204,8 +2204,8 @@ def q_von_neumann_ratio(spark, sf_dir):
     x_t)²/(n−1) ÷ Σ(x−x̄)²/n... emitted in the mean-square form VN =
     n·Σd²/((n−1)·Σ(x−x̄)²) with E[VN]=2 under independence — trend or
     positive autocorrelation drives it below 2, alternation above
-    (the quick randomness screen that complements `runs_test`'s
-    sign-based one and `ljung_box`'s lag spectrum). Numerator and the
+    (the quick randomness screen that complements `ljung_box`'s lag
+    spectrum). Numerator and the
     n²-scaled centered sum are exact int64; VN and its z-score are
     one mirrored expression. One lead window over day grain."""
     ev = _events(spark, sf_dir)

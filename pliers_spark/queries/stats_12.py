@@ -215,9 +215,9 @@ def q_granger_lag1(spark, sf_dir):
     the unrestricted 2-regressor OLS solved in closed form from the
     2×2 normal equations — every centered moment is the exact-integer
     n·Σab − ΣaΣb form (int128 products), so both engines evaluate one
-    identical rational expression; no iterative solver. Complements
-    `lead_lag_corr` (symmetric correlation) with the directional
-    regression test. One lag window over day grain + a single
+    identical rational expression; no iterative solver. The
+    directional regression test, where a cross-correlation is
+    symmetric. One lag window over day grain + a single
     moment reduce."""
     ev = _events(spark, sf_dir)
     d = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(

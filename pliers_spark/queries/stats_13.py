@@ -510,8 +510,7 @@ def q_spearman_footrule(spark, sf_dir):
     by-length and by-token-count document rankings (Spearman 1906;
     Diaconis & Graham 1977 prove F is within 2× of Kendall distance),
     normalized by its maximum ⌊n²/2⌋ into a [0,1] similarity — the
-    L1 rank-agreement companion to `spearman_rho` (L2) and
-    `rbo_rankings` (top-weighted). Ranks tie-break on doc_id in BOTH
+    L1 rank-agreement companion to `rbo_rankings` (top-weighted). Ranks tie-break on doc_id in BOTH
     orderings (exact integer row_numbers), so F is exact int64.
     Two rank windows + one reduce."""
     s = _docs(spark, sf_dir).select(
@@ -620,8 +619,8 @@ def q_herfindahl_index(spark, sf_dir):
 )
 def q_weekly_user_overlap(spark, sf_dir):
     """Week-over-week active-user set Jaccard (the audience-overlap
-    companion to `retention_cohorts`' fixed-cohort view and
-    `stickiness`'s DAU/MAU ratio — Jaccard treats churn AND
+    companion to `retention_cohorts`' fixed-cohort view — Jaccard
+    treats churn AND
     acquisition symmetrically): per week, |active ∩ previous| /
     |active ∪ previous| over distinct user sets on a dense week
     index. One (week, user) distinct census, one shifted self-join —
@@ -1325,7 +1324,7 @@ def q_record_highs(spark, sf_dir):
     running-maximum records in n days is H_n = Σ1/k in expectation
     with variance H_n − H_n⁽²⁾ — an upward trend inflates the record
     count (the distribution-free trend screen complementing
-    `mann_kendall_sen` and `runs_test`). Records are exact integer
+    `mann_kendall_sen`). Records are exact integer
     window comparisons; harmonic terms micro-round before summation.
     One day-grain window + a constant n-row range frame."""
     ev = _events(spark, sf_dir)
@@ -1394,8 +1393,7 @@ def q_turning_points(spark, sf_dir):
     of the daily count series — under IID the count is 2(n−2)/3 ±
     √((16n−29)/90); too FEW turns means trend/persistence, too MANY
     means alternation — the phase-based complement to
-    `von_neumann_ratio` (magnitude-based) and `runs_test`
-    (level-based). Plateau days (exact ties) are not strict extrema
+    `von_neumann_ratio` (magnitude-based). Plateau days (exact ties) are not strict extrema
     on either engine by construction. One lag/lead window + a
     reduce."""
     ev = _events(spark, sf_dir)

@@ -68,9 +68,8 @@ def q_asof_join_forward(spark, sf_dir):
     union+window plan — the backward operator's following-frame mirror."""
     spine = _user_grid(spark, sf_dir, 6)
     ev = _events(spark, sf_dir)
-    out = A.asof_join_directional(
-        spine, ev, ["user_id"], "t", "ts", ["value"],
-        direction="forward", matched_ts_col="matched_ts",
+    out = A.asof_join(
+        spine, ev, ["user_id"], "t", "ts", ["value"], direction="forward"
     )
     return out.select("user_id", "t", F.col("value").alias("next_value"), "matched_ts")
 
@@ -121,10 +120,9 @@ def q_asof_join_nearest(spark, sf_dir):
     is exact integer microseconds on both engines."""
     spine = _user_grid(spark, sf_dir, 6)
     ev = _events(spark, sf_dir)
-    out = A.asof_join_directional(
+    out = A.asof_join(
         spine, ev, ["user_id"], "t", "ts", ["value"],
         direction="nearest", tolerance_seconds=_ASOF_NEAREST_TOL_S,
-        matched_ts_col="matched_ts",
     )
     return out.select("user_id", "t", F.col("value").alias("near_value"), "matched_ts")
 

@@ -105,17 +105,15 @@ def test_heavy_hitter_census(spark, pages):
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 @pytest.mark.parametrize("tol", [None, 3 * 86400.0])
 def test_directional_matches_pandas_merge_asof(spark, fixture, direction, tol):
-    """Differential: asof_join_directional ≡ pandas.merge_asof for every
+    """Differential: asof_join ≡ pandas.merge_asof for every
     direction × tolerance combination on the module fixture."""
     import pandas as pd
 
-    from pliers_spark.operators.asof import asof_join_directional
-
     spine, right = fixture
     got = (
-        asof_join_directional(
-            spine, right, ["url"], "t", "warc_ts", ["v"],
-            direction=direction, tolerance_seconds=tol, matched_ts_col=None,
+        asof_join(
+            spine, right, ["url"], "t", "warc_ts", ["v"], None,
+            direction=direction, tolerance_seconds=tol,
         )
         .toPandas()
         .sort_values(["url", "t"])
@@ -133,14 +131,13 @@ def test_directional_matches_pandas_merge_asof(spark, fixture, direction, tol):
 
 
 def test_directional_backward_equals_default_strategy(fixture):
-    from pliers_spark.operators.asof import asof_join_directional
-
+    """The explicit backward direction ≡ the cogroup merge_asof twin,
+    matched timestamp included."""
     spine, right = fixture
-    a = asof_join(spine, right, ["url"], "t", "warc_ts", ["v"]).collect()
-    b = asof_join_directional(
-        spine, right, ["url"], "t", "warc_ts", ["v"], direction="backward"
+    a = asof_join(spine, right, ["url"], "t", "warc_ts", ["v"], direction="backward").collect()
+    b = asof_join_cogroup(
+        spine, right, ["url"], "t", "warc_ts", ["v"], matched_ts_col="matched_ts"
     ).collect()
-    key = lambda r: (r.url, r.t)
     assert sorted([(r.url, r.t, r.v, r.matched_ts) for r in a]) == sorted(
         [(r.url, r.t, r.v, r.matched_ts) for r in b]
     )
@@ -149,12 +146,8 @@ def test_directional_backward_equals_default_strategy(fixture):
 def test_directional_single_shuffle(spark, fixture):
     """nearest must still compile to ONE exchange (two frames over one
     sort), never a second shuffle or a Python stage."""
-    from pliers_spark.operators.asof import asof_join_directional
-
     spine, right = fixture
-    df = asof_join_directional(
-        spine, right, ["url"], "t", "warc_ts", ["v"], direction="nearest"
-    )
+    df = asof_join(spine, right, ["url"], "t", "warc_ts", ["v"], direction="nearest")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 2, plan  # 1 data + (AQE may add a read)
     assert "PythonUDF" not in plan, plan
@@ -199,18 +192,42 @@ def test_row_atomic_fill_with_null_value_columns(spark):
 def test_directional_row_atomic_with_null_values(spark):
     import datetime as dt
 
-    from pliers_spark.operators.asof import asof_join_directional
-
     t = lambda d: dt.datetime(2024, 1, d)
     right = spark.createDataFrame(
         [("e", t(1), 7.0), ("e", t(5), None)], "ent string, rts timestamp, a double"
     )
     spine = spark.createDataFrame([("e", t(3)), ("e", t(10))],
                                   "ent string, ts timestamp")
-    got = {r["ts"]: (r["a"], r["matched_ts"]) for r in asof_join_directional(
+    got = {r["ts"]: (r["a"], r["matched_ts"]) for r in asof_join(
         spine, right, ["ent"], "ts", "rts", ["a"], direction="backward").collect()}
     assert got[t(3)] == (7.0, t(1))
     assert got[t(10)] == (None, t(5))  # null NOT replaced by the t(1) value
-    fwd = {r["ts"]: (r["a"], r["matched_ts"]) for r in asof_join_directional(
+    fwd = {r["ts"]: (r["a"], r["matched_ts"]) for r in asof_join(
         spine, right, ["ent"], "ts", "rts", ["a"], direction="forward").collect()}
     assert fwd[t(3)] == (None, t(5))
+
+
+def test_null_timestamps_never_match(spark):
+    """A right row with a null timestamp is never a match, and a spine
+    row with a null timestamp matches nothing, in every direction (the
+    oracle's ASOF JOIN compares with NULL and finds no row)."""
+    import datetime as dt
+
+    t = lambda d: dt.datetime(2024, 1, d)
+    right = spark.createDataFrame(
+        [("e", None, 1.0), ("e", t(5), 2.0), ("f", None, 3.0)],
+        "ent string, rts timestamp, a double",
+    )
+    spine = spark.createDataFrame(
+        [("e", t(1)), ("e", t(9)), ("e", None), ("f", t(9))], "ent string, ts timestamp"
+    )
+    want = {
+        "backward": {("e", t(1)): None, ("e", t(9)): 2.0, ("e", None): None, ("f", t(9)): None},
+        "forward": {("e", t(1)): 2.0, ("e", t(9)): None, ("e", None): None, ("f", t(9)): None},
+        "nearest": {("e", t(1)): 2.0, ("e", t(9)): 2.0, ("e", None): None, ("f", t(9)): None},
+    }
+    for direction, expected in want.items():
+        got = asof_join(spine, right, ["ent"], "ts", "rts", ["a"], direction=direction)
+        rows = {(r.ent, r.ts): (r.a, r.matched_ts) for r in got.collect()}
+        assert {k: a for k, (a, _) in rows.items()} == expected, direction
+        assert all((a is None) == (m is None) for a, m in rows.values()), (direction, rows)

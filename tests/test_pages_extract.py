@@ -619,6 +619,7 @@ def test_flagship_drops_snapshots_without_url(spark, tmp_path, monkeypatch):
     import datetime as dt
 
     import pliers_spark.pages_pipeline as PP
+    from pliers_spark.operators import skew as skew_mod
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     rows = [("u", base + dt.timedelta(days=d), f"page u day {d}", "en") for d in (0, 3, 20)]
@@ -632,8 +633,9 @@ def test_flagship_drops_snapshots_without_url(spark, tmp_path, monkeypatch):
     assert {r.url for r in out} == {"u"} and len(out) == 3
 
     engaged = []
-    skew_path = PP._skew_safe_asof
-    monkeypatch.setattr(PP, "_skew_safe_asof", lambda *a: engaged.append(1) or skew_path(*a))
+    skew_windows = skew_mod.timesplit_windows
+    monkeypatch.setattr(skew_mod, "timesplit_windows",
+                        lambda *a, **k: engaged.append(1) or skew_windows(*a, **k))
     assert len(PP.pages_flagship(spark, p, heavy_hitter_threshold=4).collect()) == 3
     assert not engaged
 

@@ -171,6 +171,30 @@ def test_asof_join_single_shuffle_after_sources(spark, pages):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
+def test_asof_join_one_frame_function_per_direction(spark):
+    """The as-of join takes the matched right row as ONE struct per
+    window frame, however many value columns ride along: with three
+    value columns the executed Window node runs one ``last`` for
+    backward, one ``first`` for forward and one of each for nearest,
+    never one per column."""
+    import datetime as dt
+
+    from pliers_spark.operators.asof import asof_join
+
+    t = dt.datetime(2024, 1, 1)
+    right = spark.createDataFrame(
+        [("e", t, 1.0, "x", 2)], "ent string, rts timestamp, a double, b string, c int"
+    )
+    spine = spark.createDataFrame([("e", t)], "ent string, ts timestamp")
+    for direction, want in (("backward", (1, 0)), ("forward", (0, 1)), ("nearest", (1, 1))):
+        plan = plan_of(asof_join(
+            spine, right, ["ent"], "ts", "rts", ["a", "b", "c"], direction=direction
+        ))
+        windows = [line for line in plan.splitlines() if "Window [" in line]
+        assert len(windows) == 1, plan
+        assert (windows[0].count("last("), windows[0].count("first(")) == want, plan
+
+
 def test_stft_scan_prunes_to_needed_columns(spark, tmp_path):
     """The STFT stage must read only (entity, ts, value, tiebreak) from
     the source — props/event_type never reach the scan."""
