@@ -20,9 +20,11 @@ Two physical strategies, chosen for Spark's execution model:
    - exactly ONE shuffle, no Python boundary, whole-stage codegen;
    - no join explosion: cost is O((|L|+|R|) log within-partition);
    - skew: a hot entity is one sort group, not a join blow-up; AQE
-     handles partition-level imbalance, :func:`detect_heavy_hitters`
-     reports entities that need time-range splitting
-     (:func:`asof_join_split`).
+     handles partition-level imbalance, and :func:`asof_join_split`
+     time-range splits a hot entity. :func:`detect_heavy_hitters`
+     reports the entities that need splitting; the pages flagship
+     uses it to pick ``operators/skew.py::timesplit_windows`` for its
+     window step, and runs no as-of join.
 
 2. :func:`asof_join_cogroup` — ``groupBy().cogroup().applyInPandas``
    with a per-group ``pandas.merge_asof`` (the sort-merge formulation
@@ -236,10 +238,12 @@ def detect_heavy_hitters(
     df: DataFrame, entity_cols: list[str], threshold_rows: int = 1_000_000
 ) -> DataFrame:
     """Pre-pass heavy-hitter census: entities whose row count would
-    overwhelm a single window/cogroup task (hot domains in the crawl).
-    Cheap count-aggregate; callers route these through
-    :func:`asof_join_split` (time-range splitting) instead of salting —
-    salting would break as-of continuity."""
+    overwhelm a single window/cogroup task (hot domains in the crawl):
+    those with at least ``threshold_rows`` rows. Cheap count-aggregate;
+    hot entities take a time-range split instead of salting, which
+    would break window and as-of continuity — the pages flagship
+    (``pages_pipeline.asof_feature_table``) switches its window step to
+    ``operators/skew.py::timesplit_windows`` when any row comes out."""
     return (
         df.groupBy(*entity_cols)
         .agg(F.count(F.lit(1)).alias("n_rows"))

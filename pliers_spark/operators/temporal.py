@@ -22,7 +22,8 @@ All operators are pure Window/column expressions: one shuffle on the
 partition key, then map-side computation — the plan scales linearly in
 partitions and is skew-handled by AQE (hot keys are a data property;
 for windowed ops we cannot salt without breaking frame continuity, so
-hot entities are bounded by range-splitting in the as-of module).
+hot entities are bounded by time-bucket splitting in
+``operators/skew.py::timesplit_windows``).
 """
 
 from __future__ import annotations

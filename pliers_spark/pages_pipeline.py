@@ -42,6 +42,7 @@ from .operators import temporal as TP
 from .operators._util import epoch_seconds, ts_micros
 
 SESSION_GAP_DAYS = 30.0
+_SESSION_GAP_S = SESSION_GAP_DAYS * 86400
 _SKEW_BUCKET_S = 90 * 86400  # ~1 quarter per task for the hottest domain
 
 _FEATURE_SCHEMA = (
@@ -300,42 +301,70 @@ def _quality_delta(quality: Column, quality_lag1: Column) -> Column:
 
 
 def windowed_page_features(feats: DataFrame, skew_safe: bool = False) -> DataFrame:
-    """Per-url temporal features — one shuffle on url, leakage-safe frames.
+    """Per-url temporal features, one row per snapshot: the ``feats``
+    columns, ``session_id``, the previous snapshot's ``text_length`` and
+    ``quality`` and ``quality_delta`` — a projection of
+    :func:`_window_step`, the same step :func:`asof_feature_table` runs.
 
-    ``skew_safe=True`` computes the same session and lag columns with
-    ``operators/skew.py::timesplit_windows`` — one time-bucket carry
-    pass, so no single task ever owns a hot domain's full history —
-    bit-equal output (the operator is oracle-gated, and
-    tests/test_pages_extract.py pins the skew-safe stage to the plain
-    one). This is the per-row table that
-    :func:`incremental_page_features` maintains; no flagship calls it
-    (:func:`asof_feature_table` carries the whole row as one struct
-    instead). Here the carried columns are separate, so column pruning
-    narrows the bucket-tail side of the operator's self-join and the
-    two sides run the Arrow extraction once each.
+    ``skew_safe=True`` takes that step's time-bucket carry pass (no
+    single task owns a hot domain's full history); the output is
+    bit-equal to the plain url window pass (pinned by
+    tests/test_pages_extract.py). This is the per-row table that
+    :func:`incremental_page_features` maintains; no flagship calls it.
     """
-    gap_s = SESSION_GAP_DAYS * 86400
-    if skew_safe:
+    rows, v, prev = _window_step(feats, skew_safe), F.col("_v"), F.col("_v_lag1")
+    return rows.select(
+        *[c if c in ("url", "warc_ts") else v[c].alias(c) for c in feats.columns],
+        "session_id",
+        prev["text_length"].alias("text_length_lag1"),
+        prev["quality"].alias("quality_lag1"),
+        _quality_delta(v["quality"], prev["quality"]).alias("quality_delta"),
+    )
+
+
+def _window_step(extracted: DataFrame, skew: bool) -> DataFrame:
+    """The engine's one per-url window step over extracted snapshots:
+    ``url``, ``warc_ts``, every other column packed into one struct
+    ``_v``, and the carry columns — ``session_id``, the predecessor's
+    struct and timestamp (``_v_lag1``, ``warc_ts_lag1``), the struct
+    before that (``_v_lag2``) and the url's first timestamp
+    (``warc_ts_first``).
+
+    ``skew`` picks only the operator: one ``Window.partitionBy(url)``
+    pass (one shuffle on url), or one
+    ``operators/skew.py::timesplit_windows`` carry pass, whose shuffles
+    are all keyed by (url, time bucket) or by url on the
+    one-row-per-bucket frame. When the caller reads the whole lagged
+    structs, as the flagship does, both sides of that pass's self-join
+    carry the same columns, so adaptive execution reuses one
+    ``(url, _tb)`` exchange and the extraction runs once; the per-row
+    table reads two fields of ``_v_lag1``, so pruning narrows one side
+    and it extracts twice. Exactness requires ``warc_ts`` unique per
+    url, as the windows do."""
+    values = [c for c in extracted.columns if c not in ("url", "warc_ts")]
+    packed = extracted.select("url", "warc_ts", F.struct(*values).alias("_v"))
+    if skew:
         from .operators.skew import timesplit_windows
 
-        out = timesplit_windows(
-            feats, ["url"], "warc_ts", _SKEW_BUCKET_S,
-            lag1=("text_length", "quality"), session_gap=gap_s,
+        return timesplit_windows(
+            packed, ["url"], "warc_ts", _SKEW_BUCKET_S,
+            lag1=("_v", "warc_ts"), lag2=("_v",), first=("warc_ts",), session_gap=_SESSION_GAP_S,
         )
-    else:
-        out = TP.sessionize(feats, ["url"], "warc_ts", gap_seconds=gap_s)
-        out = TP.lag_features(out, ["url"], "warc_ts", "text_length", [1])
-        out = TP.lag_features(out, ["url"], "warc_ts", "quality", [1])
-    return out.withColumn(
-        "quality_delta", _quality_delta(F.col("quality"), F.col("quality_lag1"))
-    )
+    w = Window.partitionBy("url").orderBy("warc_ts")
+    return TP.sessionize(packed, ["url"], "warc_ts", gap_seconds=_SESSION_GAP_S).withColumns({
+        "_v_lag1": F.lag("_v").over(w),
+        "warc_ts_lag1": F.lag("warc_ts").over(w),
+        "_v_lag2": F.lag("_v", 2).over(w),
+        "warc_ts_first": F.first("warc_ts").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    })
 
 
 def pages_flagship(
     spark: SparkSession,
     pages_path: str,
     spine_step_hours: int = 24 * 7,
-    skew_safe: bool | None = None,
     heavy_hitter_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Full pipeline returning the point-in-time feature table: for each
@@ -344,8 +373,7 @@ def pages_flagship(
     :func:`asof_feature_table`, which holds the rest."""
     pages = spark.read.parquet(pages_path)
     return asof_feature_table(
-        pages, extract_page_features_arrow(pages), spine_step_hours,
-        skew_safe, heavy_hitter_threshold,
+        pages, extract_page_features_arrow(pages), spine_step_hours, heavy_hitter_threshold
     )
 
 
@@ -353,7 +381,6 @@ def asof_feature_table(
     pages: DataFrame,
     extracted: DataFrame,
     spine_step_hours: int = 24 * 7,
-    skew_safe: bool | None = None,
     heavy_hitter_threshold: int = 1_000_000,
 ) -> DataFrame:
     """The flagship's back half over already-extracted page features:
@@ -372,67 +399,29 @@ def asof_feature_table(
     with no url belongs to no timeline — grouped as one "null url" it
     would merge unrelated pages, and count as a heavy hitter.
 
-    ``skew_safe=None`` (default) makes the choice data-driven: a
-    heavy-hitter census over the url column (one cheap pruned-scan
-    aggregate; operators/asof.detect_heavy_hitters) engages the
-    time-bucket-split path when any url's snapshot count exceeds
-    ``heavy_hitter_threshold`` — no single task then owns a hot domain's
-    full history. Pass True/False to force either path (the two are
-    bit-equal; pinned by tests/test_pages_extract.py).
+    A heavy-hitter census over the url column (one cheap pruned-scan
+    aggregate; operators/asof.detect_heavy_hitters) picks the operator
+    of :func:`_window_step`: the time-bucket carry pass when any url has
+    at least ``heavy_hitter_threshold`` snapshots, so no single task
+    owns a hot domain's full history, else the url window pass. The two
+    are bit-equal (pinned by tests/test_pages_extract.py, which forces
+    the carry pass with ``heavy_hitter_threshold=1``).
 
-    The census picks only the operator that fills the carry columns.
-    With every value column packed into one struct ``_v``, it gives each
-    snapshot its session id, its predecessor's struct and timestamp
-    (lag-1), the struct before that (lag-2) and the url's first
-    timestamp: the plain path in one ``Window.partitionBy(url)``
-    pass, the skew path in one ``operators/skew.py::timesplit_windows``
-    carry pass, whose shuffles are all keyed by (url, time bucket) or
-    by url on the one-row-per-bucket frame. The rest is shared: the
-    leakage gate, then each snapshot emits the spine points it decides.
-    A point it owns takes its own row and its predecessor as the lag
-    source; a point owned by the predecessor takes the predecessor's
-    row and lag-2, and ``session_id`` minus the session start between
-    the two, so no lag of the session id is needed.
-
-    Both paths read ``extracted`` once: on the skew path both sides of
-    the carry pass's self-join carry the struct itself, not fields that
-    column pruning could narrow on one side, so adaptive execution
-    reuses one ``(url, _tb)`` exchange for both. Exactness requires
-    ``warc_ts`` unique per url, as the windows do; on a duplicated
-    snapshot only the first row of the run emits, so each spine point
-    still comes out once."""
+    After the window step the code is shared: the leakage gate, then
+    each snapshot emits the spine points it decides. A point it owns
+    takes its own row and its predecessor as the lag source; a point
+    owned by the predecessor takes the predecessor's row and lag-2, and
+    ``session_id`` minus the session start between the two, so no lag
+    of the session id is needed. Both paths read ``extracted`` once. On
+    a duplicated snapshot only the first row of the run emits, so each
+    spine point still comes out once."""
+    from .operators.asof import detect_heavy_hitters
     from .plans.leakage import assert_leakage_free
 
     placed = F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
     pages, extracted = pages.where(placed), extracted.where(placed)
-    if skew_safe is None:
-        from .operators.asof import detect_heavy_hitters
-
-        skew_safe = bool(
-            detect_heavy_hitters(
-                pages.select("url"), ["url"], heavy_hitter_threshold
-            ).take(1)
-        )
-    gap_s = SESSION_GAP_DAYS * 86400
-    values = [c for c in extracted.columns if c not in ("url", "warc_ts")]
-    packed = extracted.select("url", "warc_ts", F.struct(*values).alias("_v"))
-    if skew_safe:
-        from .operators.skew import timesplit_windows
-
-        rows = timesplit_windows(
-            packed, ["url"], "warc_ts", _SKEW_BUCKET_S,
-            lag1=("_v", "warc_ts"), lag2=("_v",), first=("warc_ts",), session_gap=gap_s,
-        )
-    else:
-        w = Window.partitionBy("url").orderBy("warc_ts")
-        rows = TP.sessionize(packed, ["url"], "warc_ts", gap_seconds=gap_s).withColumns({
-            "_v_lag1": F.lag("_v").over(w),
-            "warc_ts_lag1": F.lag("warc_ts").over(w),
-            "_v_lag2": F.lag("_v", 2).over(w),
-            "warc_ts_first": F.first("warc_ts").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        })
+    hot = detect_heavy_hitters(pages.select("url"), ["url"], heavy_hitter_threshold)
+    rows = _window_step(extracted, bool(hot.take(1)))
     # build-time gate: no window frame in the feature plan may read the
     # future (north rule; plans/leakage.py audits the optimized plan)
     assert_leakage_free(rows)
@@ -443,11 +432,11 @@ def asof_feature_table(
     def pick(own: str, prev: str) -> Column:
         return F.when(F.col("_own"), F.col(own)).otherwise(F.col(prev))
 
-    starts = epoch_seconds(rows, "warc_ts") - epoch_seconds(rows, "warc_ts_lag1") > gap_s
+    starts = epoch_seconds(rows, "warc_ts") - epoch_seconds(rows, "warc_ts_lag1") > _SESSION_GAP_S
     match, pred = pick("_v", "_v_lag1"), pick("_v_lag1", "_v_lag2")
     return pts.select(
         "url", "t",
-        *[match[c].alias(c) for c in values],
+        *[match[c].alias(c) for c in extracted.columns if c not in ("url", "warc_ts")],
         F.when(F.col("_own"), F.col("session_id"))
         .otherwise(F.col("session_id") - F.when(starts, 1).otherwise(0)).alias("session_id"),
         pred["text_length"].alias("text_length_lag1"),

@@ -19,7 +19,7 @@ Design (size-oblivious, idempotent):
   partition_hash, row_count, wall_ms, status)`` — output first,
   manifest last, so a crash mid-partition re-runs that partition;
 - on resume, completed partition keys are read from the manifest and
-  **anti-joined away** from the input before any compute;
+  their buckets are skipped before any compute;
 - lineage columns ride on the manifest, not the data (no per-row cost).
 
 The driver-side loop below iterates partition *groups* (buckets), not
@@ -33,7 +33,6 @@ custom commit protocol.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -99,16 +98,15 @@ class CheckpointedRun:
                 raise RuntimeError(f"simulated failure after {executed} partitions")
             t0 = time.time()
             part = bucketed.where(F.col("_bucket") == k).drop("_bucket")
-            out = transform(part)
             part_dir = os.path.join(self.out_dir, f"part={k}")
-            out.write.mode("overwrite").parquet(part_dir)
-            n = spark.read.parquet(part_dir).count()
-            row_hash = F.xxhash64(*[F.col(c).cast("string") for c in out.columns])
-            phash = (
-                out.select(row_hash.alias("_h"))
-                .agg(F.coalesce(F.expr("bit_xor(_h)"), F.lit(0)).alias("h"))
-                .first()["h"]
-            )
+            transform(part).write.mode("overwrite").parquet(part_dir)
+            # count and hash the written files in one pass: the stage
+            # itself runs once per bucket
+            written = spark.read.parquet(part_dir)
+            row_hash = F.xxhash64(*[F.col(c).cast("string") for c in written.columns])
+            n, phash = written.agg(
+                F.count(F.lit(1)), F.coalesce(F.bit_xor(row_hash), F.lit(0))
+            ).first()
             manifest_row = [
                 (self.stage_id, k, input_snapshot_id, int(phash), int(n),
                  int((time.time() - t0) * 1000), "done", run_id)

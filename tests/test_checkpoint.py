@@ -45,3 +45,25 @@ def test_resume_after_simulated_crash(spark, pages, tmp_path):
 
     # idempotence: a third run executes nothing
     assert run.run(spark, pages, transform, bucket_expr(n_buckets)) == 0
+
+
+def test_checkpointed_stage_runs_once_per_row(spark, pages, tmp_path):
+    """Every input row passes through the checkpointed stage exactly
+    once: the manifest's row count and hash are read from the written
+    files, not by running the stage again."""
+    rows_through = spark.sparkContext.accumulator(0)
+
+    def counted(df):
+        def through(batches):
+            for b in batches:
+                rows_through.add(b.num_rows)
+                yield b
+
+        out = transform(df)
+        return out.mapInArrow(through, out.schema)
+
+    run = CheckpointedRun("counted", str(tmp_path / "out"), num_buckets=4)
+    assert run.run(spark, pages, counted, bucket_expr(4)) == 4
+    n = pages.count()
+    assert rows_through.value == n
+    assert sum(r.row_count for r in run.metrics(spark).collect()) == n

@@ -183,6 +183,32 @@ def _write_hot_pages(spark, path):
     return df
 
 
+def test_windowed_features_equal_the_written_out_windows(spark, tmp_path):
+    """The per-row table on the hot-url fixture, on both paths, equals
+    its windows written out one by one: ``temporal.sessionize`` with the
+    30-day gap, one ``temporal.lag_features`` per lagged column and the
+    rounded quality delta. Schema (names, order, types, nullability)
+    and rows, doubles bit for bit."""
+    import pyspark.sql.functions as F
+
+    from pliers_spark.operators import temporal as TP
+    from pliers_spark.pages_pipeline import extract_page_features_arrow, windowed_page_features
+
+    p = str(tmp_path / "hot_pages")
+    _write_hot_pages(spark, p)
+    feats = extract_page_features_arrow(spark.read.parquet(p))
+    want = TP.sessionize(feats, ["url"], "warc_ts", gap_seconds=30 * 86400.0)
+    for c in ("text_length", "quality"):
+        want = TP.lag_features(want, ["url"], "warc_ts", c, [1])
+    want = want.withColumn("quality_delta", F.round(F.col("quality") - F.col("quality_lag1"), 6))
+    expected = _bits(want)
+    assert any(r[-1] is None for r in expected) and len(expected) == 192
+    for skew in (False, True):
+        got = windowed_page_features(feats, skew_safe=skew)
+        assert got.schema == want.schema, (skew, got.schema, want.schema)
+        assert _bits(got) == expected, skew
+
+
 def test_flagship_auto_skew_routing_bit_equal(spark, tmp_path):
     """A hot-domain corpus (one url above the census threshold) must
     auto-route through the skew-split window operators AND produce a
@@ -199,9 +225,9 @@ def test_flagship_auto_skew_routing_bit_equal(spark, tmp_path):
     def rows_of(out):
         return sorted(tuple(r) for r in out.collect())
 
-    auto = pages_flagship(spark, p, skew_safe=None, heavy_hitter_threshold=50)
-    plain = pages_flagship(spark, p, skew_safe=False)
-    forced = pages_flagship(spark, p, skew_safe=True)
+    auto = pages_flagship(spark, p, heavy_hitter_threshold=50)
+    plain = pages_flagship(spark, p)
+    forced = pages_flagship(spark, p, heavy_hitter_threshold=1)
     r_auto, r_plain, r_forced = rows_of(auto), rows_of(plain), rows_of(forced)
     assert r_auto == r_plain == r_forced
     assert len(r_auto) > 0
@@ -467,8 +493,8 @@ def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
 
     p = str(tmp_path / "pages")
     df.write.parquet(p)
-    plain = pages_flagship(spark, p, skew_safe=False)
-    safe = pages_flagship(spark, p, skew_safe=True)
+    plain = pages_flagship(spark, p)
+    safe = pages_flagship(spark, p, heavy_hitter_threshold=1)
     plan = safe._jdf.queryExecution().optimizedPlan().toString()
     # "Window [exprs], [partition spec], [order spec]"
     specs = re.findall(r"Window \[.*\], \[([^\[\]]*)\], \[([^\[\]]*)\]$", plan, re.M)
@@ -480,6 +506,17 @@ def test_flagship_skew_path_routes_asof_join_through_split(spark, tmp_path):
         tuple(str(r[c]) for c in sorted(df_.columns)) for r in df_.collect()
     )
     assert k(plain) == k(safe)
+
+
+def _flagship(spark, path, skew):
+    """The flagship on the skew path (threshold 1: every url is hot) or
+    on the plain one (the default threshold, which no fixture here
+    reaches)."""
+    from pliers_spark.pages_pipeline import pages_flagship
+
+    if skew:
+        return pages_flagship(spark, path, heavy_hitter_threshold=1)
+    return pages_flagship(spark, path)
 
 
 def _bits(df):
@@ -495,8 +532,8 @@ def _assert_skew_flagship_bit_equal(spark, path):
     doubles compared bit for bit."""
     from pliers_spark.pages_pipeline import pages_flagship
 
-    plain = pages_flagship(spark, path, skew_safe=False)
-    forced = pages_flagship(spark, path, skew_safe=True)
+    plain = pages_flagship(spark, path)
+    forced = pages_flagship(spark, path, heavy_hitter_threshold=1)
     assert forced.schema == plain.schema
     want, got = _bits(plain), _bits(forced)
     assert len(want) > 0
@@ -566,13 +603,11 @@ def test_skew_flagship_bit_equal_when_lag2_spans_two_buckets(spark, tmp_path):
 def test_flagship_duplicate_snapshot_one_row_per_spine_point(spark, tmp_path):
     """Hostile input: one (url, warc_ts) snapshot of the hot url appears
     twice. Both paths still return exactly one row per spine point, on
-    the same (url, t) keys — the skew path's attach join fans the
-    duplicate out, and its groupBy(url, t) must fold it back."""
+    the same (url, t) keys: only the first row of the duplicated run
+    emits spine points."""
     import datetime as dt
 
     import pyspark.sql.functions as F
-
-    from pliers_spark.pages_pipeline import pages_flagship
 
     df = _write_hot_pages(spark, str(tmp_path / "hot_pages"))
     dup = df.where(
@@ -584,7 +619,7 @@ def test_flagship_duplicate_snapshot_one_row_per_spine_point(spark, tmp_path):
     df.unionByName(dup).write.parquet(p)
     keys = {}
     for skew in (False, True):
-        got = [(r.url, r.t) for r in pages_flagship(spark, p, skew_safe=skew).collect()]
+        got = [(r.url, r.t) for r in _flagship(spark, p, skew).collect()]
         assert len(got) == len(set(got)) > 0, skew
         keys[skew] = sorted(got)
     assert keys[False] == keys[True]
@@ -684,12 +719,12 @@ def _assert_flagship_zone_free(spark, path, ts_type):
         for session_tz in ("UTC", "America/New_York"):
             spark.conf.set("spark.sql.session.timeZone", session_tz)
             for skew in (False, True):
-                got = pages_flagship(spark, path, skew_safe=skew)
+                got = _flagship(spark, path, skew)
                 leaks = got.where(F.col("matched_ts") > F.col("t")).count()
                 assert leaks == 0, (ts_type, session_tz, skew)
                 out[session_tz, skew] = _bits(got)
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        utc = pages_flagship(spark, path, skew_safe=False).select(
+        utc = pages_flagship(spark, path).select(
             "url", "session_id", *[F.col(c).cast("string").alias(c) for c in ("t", "matched_ts")]
         ).collect()
     finally:

@@ -61,11 +61,12 @@ def test_windowed_stage_single_shuffle(spark, pages):
 
 
 def test_skew_safe_windowed_stage_one_carry_pass(spark, pages):
-    """The skew-safe stage computes session and both lags in ONE
-    time-bucket carry pass: one self-join, so the Arrow extraction runs
-    twice (rows and bucket tails), and four exchanges: one (url, bucket)
-    shuffle per side, the bucket frame's shuffle on url and the carry
-    join's broadcast."""
+    """The skew-safe per-row table runs the flagship's window step in
+    ONE time-bucket carry pass: one self-join, and four exchanges: one
+    (url, bucket) shuffle per side, the bucket frame's shuffle on url
+    and the carry join's broadcast. The table reads two fields of the
+    lagged struct, so pruning narrows the bucket-tail side and the
+    Arrow extraction runs twice (rows and bucket tails)."""
     plan = plan_of(windowed_page_features(extract_page_features_arrow(pages), skew_safe=True))
     assert plan.count("MapInArrow") == 2, plan
     assert plan.count("Exchange hashpartitioning") == 3, plan
@@ -77,7 +78,7 @@ def test_plain_flagship_one_shuffle_no_join(spark, pages_path):
     snapshot emits the spine points it decides in a narrow explode after
     the url's one window pass. One scan, one Arrow stage, one
     hashpartitioning Exchange on url, no Join operator."""
-    plan = plan_of(pages_flagship(spark, pages_path, skew_safe=False))
+    plan = plan_of(pages_flagship(spark, pages_path))
     assert plan.count("FileScan") == 1, plan
     assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange") == plan.count("Exchange hashpartitioning") == 1, plan
@@ -105,7 +106,7 @@ def test_skew_safe_flagship_extracts_once(spark, pages_path):
     spine point (url, t)."""
     import re
 
-    plan = final_plan(pages_flagship(spark, pages_path, skew_safe=True))
+    plan = final_plan(pages_flagship(spark, pages_path, heavy_hitter_threshold=1))
     assert plan.count("FileScan") == 1, plan
     assert plan.count("MapInArrow") == 1, plan
     assert plan.count("ReusedExchange") >= 1, plan
@@ -116,13 +117,15 @@ def test_skew_safe_flagship_extracts_once(spark, pages_path):
 
 
 def test_flagship_build_py4j_budget(spark, pages_path, monkeypatch):
-    """Building (not running) either flagship plan stays within a budget
-    of py4j commands sent to the JVM, about 1.25x the count with
-    PySpark's per-call call-site capture off (plain 516, skew-safe 853
-    on this fixture). With the capture on, every ``F.col`` /
-    ``withColumns`` call also walks the Python stack and sends it to the
-    JVM: 1,166 and 2,113 commands. Proxy releases (``m d`` commands) are
-    not counted: they follow the timing of Python's garbage collector."""
+    """Building (not running) either flagship plan, the heavy-hitter
+    census included, stays within a budget of py4j commands sent to the
+    JVM, about 1.15-1.2x the count with PySpark's per-call call-site
+    capture off (plain path at the default threshold 564, skew path at
+    threshold 1 896 on this fixture). With the capture on, every
+    ``F.col`` / ``withColumns`` call also walks the Python stack and
+    sends it to the JVM, about twice the commands. Proxy releases
+    (``m d`` commands) are not counted: they follow the timing of
+    Python's garbage collector."""
     import pyspark.errors.utils
 
     # a fresh process reads the setting from the session on its first
@@ -137,13 +140,13 @@ def test_flagship_build_py4j_budget(spark, pages_path, monkeypatch):
             sent.append(command)
         return send(command, *args, **kwargs)
 
-    for skew_safe, budget in ((False, 650), (True, 1070)):
-        pages_flagship(spark, pages_path, skew_safe=skew_safe)  # warm-up
+    for threshold, budget in ((1_000_000, 650), (1, 1070)):
+        pages_flagship(spark, pages_path, heavy_hitter_threshold=threshold)  # warm-up
         sent.clear()
         monkeypatch.setattr(client, "send_command", counting)
-        pages_flagship(spark, pages_path, skew_safe=skew_safe)
+        pages_flagship(spark, pages_path, heavy_hitter_threshold=threshold)
         monkeypatch.setattr(client, "send_command", send)
-        assert len(sent) <= budget, (skew_safe, len(sent))
+        assert len(sent) <= budget, (threshold, len(sent))
 
 
 def test_dictionary_join_is_broadcast(spark):
@@ -719,7 +722,7 @@ def test_flagship_paths_scale_lint_clean(spark, pages_path):
     from pliers_spark.plans.scale_lint import assert_scale_safe
 
     assert_scale_safe(pages_flagship(spark, pages_path))
-    assert_scale_safe(pages_flagship(spark, pages_path, skew_safe=True))
+    assert_scale_safe(pages_flagship(spark, pages_path, heavy_hitter_threshold=1))
     assert_scale_safe(E.entry(spark))
 
 

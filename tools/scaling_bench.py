@@ -218,7 +218,7 @@ def main():
     valid = len(verified) >= args.min_verified
 
     result = {
-        "job": "pages_flagship (extract + windowed features + as-of join)",
+        "job": "pages_flagship (extract + window step + owned spine points)",
         "input_rows": n_pages,
         "protocol": (
             "paired alternation, persistent JVMs, per-pair capacity probe; "
