@@ -7,10 +7,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 
-def is_timestamp(df: DataFrame, col: str) -> bool:
-    return isinstance(df.schema[col].dataType, (TimestampType, TimestampNTZType))
-
-
 def ts_micros(col: Column, dtype) -> Column:
     """Exact integer epoch microseconds of a timestamp column, whatever
     the session time zone: a ``timestamp`` is an instant already, and a
@@ -36,8 +32,14 @@ def epoch_micros(df: DataFrame, col: str) -> Column:
     return micros(F.col(col), df.schema[col].dataType)
 
 
+def seconds(col: Column, dtype) -> Column:
+    """Epoch seconds as double (µs-precise) for timestamps; a cast for
+    numeric columns."""
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
+        return ts_micros(col, dtype) / F.lit(1_000_000.0)
+    return col.cast("double")
+
+
 def epoch_seconds(df: DataFrame, col: str) -> Column:
-    """Epoch seconds as double (µs-precise)."""
-    if is_timestamp(df, col):
-        return epoch_micros(df, col) / F.lit(1_000_000.0)
-    return F.col(col).cast("double")
+    """:func:`seconds` of a column of ``df``."""
+    return seconds(F.col(col), df.schema[col].dataType)

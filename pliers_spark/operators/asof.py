@@ -8,28 +8,35 @@ step-fill, which holds a value from its onset forward:
 No right row at or before ``t`` → NULLs (left-outer). The forward and
 nearest directions and a tolerance follow pandas ``merge_asof``.
 
-Two physical strategies, chosen for Spark's execution model:
+One as-of core serves every point-in-time match: ``_tag`` puts spine
+and right rows in one union, the right row packed as ONE struct ``_r``
+(so a match is row-atomic), and ``_fill`` runs over one
+``partitionBy(entity).orderBy(ts)`` sort with peer-inclusive RANGE
+frames: ``last(_r, ignorenulls)`` up to the current row's last peer,
+``first(_r, ignorenulls)`` from its first peer on. A right row at
+``t`` is a peer of the spine row, so both ties are inclusive; a spine
+row with a null timestamp matches nothing. Built on it:
 
-1. :func:`asof_join` — **union + window fill**, pure JVM, one operator
-   for the three directions (backward, forward, nearest). Tag both
-   sides, ``unionByName``, one shuffle on the entity key, sort within
-   partition by ``(ts, side)``, take the matched right row as ONE
-   struct per window frame (``last`` over the preceding frame,
-   ``first`` over the following one), then keep spine rows.
-   Properties:
-   - exactly ONE shuffle, no Python boundary, whole-stage codegen;
-   - no join explosion: cost is O((|L|+|R|) log within-partition);
-   - skew: a hot entity is one sort group, not a join blow-up; AQE
-     handles partition-level imbalance, and :func:`asof_join_split`
-     time-range splits a hot entity. :func:`detect_heavy_hitters`
-     reports the entities that need splitting; the pages flagship
-     uses it to pick ``operators/skew.py::timesplit_windows`` for its
-     window step, and runs no as-of join.
+1. :func:`asof_join` — the core plus pandas ``merge_asof`` direction
+   (backward, forward, nearest) and tolerance. ONE shuffle on the
+   entity key, one Window node, no Python boundary, no join explosion:
+   cost is O((|L|+|R|) log within-partition).
+2. :func:`asof_join_split` — the same tagged union through
+   ``operators/skew.py::timesplit_windows(..., ffill=("_r",))``: each
+   entity's timeline is split into time buckets, so a hot entity's
+   match spreads over many tasks, and each bucket carries the latest
+   right row of the buckets before it. :func:`detect_heavy_hitters`
+   reports the entities that need splitting; the pages flagship uses
+   it to pick ``timesplit_windows`` for its window step, and runs no
+   as-of join.
+3. ``temporal.interpolate_linear`` — both frames of the core plus the
+   lerp between the two bracketing right rows.
 
-2. :func:`asof_join_cogroup` — ``groupBy().cogroup().applyInPandas``
-   with a per-group ``pandas.merge_asof`` (the sort-merge formulation
-   the north rule names), backward only. Arrow-vectorized, never
-   per-row Python. The differential-testing twin of strategy 1.
+:func:`asof_join_cogroup` is the independent twin: ``groupBy().cogroup()
+.applyInPandas`` with a per-group ``pandas.merge_asof`` (the
+sort-merge formulation the north rule names), backward only,
+Arrow-vectorized, never per-row Python. Tests compare the core's
+operators against it.
 
 At 100 TB: the right side (pages) is bucketed/sorted by
 ``(entity, ts)`` at write time (see ``plans/layout.py`` notes); both
@@ -39,10 +46,87 @@ bucket schemes align.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._util import micros
+from .skew import timesplit_windows
+
+_SPINE, _RIGHT = 1, 0
+
+
+def _tag(
+    spine: DataFrame,
+    right: DataFrame,
+    entity_cols: list[str],
+    spine_ts: str,
+    right_ts: str,
+    value_cols: list[str],
+) -> tuple[DataFrame, list[str]]:
+    """The core's union: ``entity_cols``, ``_ts``, ``_side``, ``_r`` and
+    the spine's other columns (null on right rows). ``_r`` is the right
+    row as one struct ``(_rts, *value_cols)``, null on spine rows and on
+    right rows with a null timestamp, which are never matched. Returns
+    the union and the spine's other column names."""
+    spine_extra = [c for c in spine.columns if c not in entity_cols and c != spine_ts]
+    left_tagged = spine.select(
+        *entity_cols,
+        F.col(spine_ts).alias("_ts"),
+        F.lit(_SPINE).alias("_side"),
+        F.lit(None).alias("_r"),
+        *spine_extra,
+    )
+    right_tagged = right.select(
+        *entity_cols,
+        F.col(right_ts).alias("_ts"),
+        F.lit(_RIGHT).alias("_side"),
+        F.when(
+            F.col(right_ts).isNotNull(),
+            F.struct(F.col(right_ts).alias("_rts"), *value_cols),
+        ).alias("_r"),
+        *[F.lit(None).cast(spine.schema[c].dataType).alias(c) for c in spine_extra],
+    )
+    return left_tagged.unionByName(right_tagged), spine_extra
+
+
+def _spine_rows(filled: DataFrame, entity_cols: list[str], spine_extra: list[str],
+                frames: dict[str, Column]) -> DataFrame:
+    """The spine rows of a filled union with each frame's match as a
+    column; a spine row with a null timestamp matches nothing."""
+    has_ts = F.col("_ts").isNotNull()
+    return filled.select(
+        *entity_cols, "_ts", "_side", *spine_extra,
+        *[F.when(has_ts, f).alias(name) for name, f in frames.items()],
+    ).where(F.col("_side") == _SPINE).drop("_side")
+
+
+def _fill(tagged: DataFrame, entity_cols: list[str], spine_extra: list[str], *,
+          back: bool = True, fwd: bool = False) -> DataFrame:
+    """The core's fill over ONE per-entity sort: ``_b`` = the latest
+    right row at or before ``_ts``, ``_f`` = the earliest one at or
+    after it. RANGE frames include the current row's peers, so a right
+    row at exactly ``_ts`` is in both, wherever the sort put it."""
+    order = Window.partitionBy(*entity_cols).orderBy("_ts")
+    frames = {}
+    if back:
+        w_back = order.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+        frames["_b"] = F.last("_r", ignorenulls=True).over(w_back)
+    if fwd:
+        w_fwd = order.rangeBetween(Window.currentRow, Window.unboundedFollowing)
+        frames["_f"] = F.first("_r", ignorenulls=True).over(w_fwd)
+    return _spine_rows(tagged, entity_cols, spine_extra, frames)
+
+
+def _emit(matched: DataFrame, entity_cols: list[str], spine_ts: str, spine_extra: list[str],
+          value_cols: list[str], matched_ts_col: str | None, m: Column) -> DataFrame:
+    """The spine columns plus the fields of the chosen right row ``m``."""
+    picked = matched.select(*entity_cols, F.col("_ts").alias(spine_ts), *spine_extra,
+                            m.alias("_m"))
+    return picked.select(
+        *entity_cols, spine_ts, *spine_extra,
+        *[F.col("_m")[c].alias(c) for c in value_cols],
+        *([F.col("_m._rts").alias(matched_ts_col)] if matched_ts_col else []),
+    )
 
 
 def asof_join(
@@ -77,63 +161,26 @@ def asof_join(
     Returns the spine columns plus ``value_cols`` and, unless
     ``matched_ts_col`` is None, the matched right timestamp.
 
-    Physical shape: one sort per entity, ordered by ``(ts, side)``.
-    Right rows sort before spine rows at equal ts, which makes the
-    preceding frame inclusive (backward, nearest); ``forward`` flips
-    the tag, so the following frame is inclusive instead. The right
-    row is ONE struct (null on spine rows), so each frame is one
-    window function however many value columns ride along, and the
-    match is row-atomic: per-column ``last(ignorenulls)`` would
-    resurrect a column's latest NON-NULL value when the latest right
-    row carries a null there, mixing columns from different right rows
-    and disagreeing with merge_asof and the cogroup twin. ``nearest``
-    costs one extra window function over the same sort, not an extra
-    exchange.
+    Physical shape: the module's as-of core — one sort per entity,
+    ordered by ts, with the backward frame for ``backward``, the
+    forward frame for ``forward`` and both for ``nearest`` (one extra
+    window function over the same sort, not an extra exchange). The
+    right row is ONE struct, so each frame is one window function
+    however many value columns ride along, and the match is
+    row-atomic: per-column ``last(ignorenulls)`` would resurrect a
+    column's latest NON-NULL value when the latest right row carries a
+    null there, mixing columns from different right rows and
+    disagreeing with merge_asof and the cogroup twin.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction}")
-    spine_extra = [c for c in spine.columns if c not in entity_cols and c != spine_ts]
-    right_side, spine_side = (1, 0) if direction == "forward" else (0, 1)
-
-    left_tagged = spine.select(
-        *entity_cols,
-        F.col(spine_ts).alias("_ts"),
-        F.lit(spine_side).alias("_side"),
-        F.lit(None).alias("_r"),
-        *spine_extra,
-    )
-    right_tagged = right.select(
-        *entity_cols,
-        F.col(right_ts).alias("_ts"),
-        F.lit(right_side).alias("_side"),
-        F.when(
-            F.col(right_ts).isNotNull(),
-            F.struct(F.col(right_ts).alias("_rts"), *value_cols),
-        ).alias("_r"),
-        *[F.lit(None).cast(spine.schema[c].dataType).alias(c) for c in spine_extra],
-    )
-    unioned = left_tagged.unionByName(right_tagged)
-
-    # a forward spine row with a null ts sorts last, after every
-    # candidate; backward/nearest ones sort first, before every one
-    ts_order = F.col("_ts").asc_nulls_last() if direction == "forward" else F.col("_ts")
-    order = Window.partitionBy(*entity_cols).orderBy(ts_order, F.col("_side"))
-    frames = {}
-    if direction != "forward":
-        w_back = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        frames["_b"] = F.last("_r", ignorenulls=True).over(w_back)
-    if direction != "backward":
-        w_fwd = order.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        frames["_f"] = F.first("_r", ignorenulls=True).over(w_fwd)
-    filled = (
-        unioned.select(*entity_cols, "_ts", "_side", *spine_extra,
-                       *[f.alias(name) for name, f in frames.items()])
-        .where(F.col("_side") == spine_side)
-    )
+    tagged, spine_extra = _tag(spine, right, entity_cols, spine_ts, right_ts, value_cols)
+    filled = _fill(tagged, entity_cols, spine_extra,
+                   back=direction != "forward", fwd=direction != "backward")
 
     m = F.col("_f" if direction == "forward" else "_b")
     if direction == "nearest" or tolerance_seconds is not None:
-        us = micros(F.col("_ts"), unioned.schema["_ts"].dataType)
+        us = micros(F.col("_ts"), tagged.schema["_ts"].dataType)
         rts_type = right.schema[right_ts].dataType
         b_dist = us - micros(F.col("_b._rts"), rts_type)
         f_dist = micros(F.col("_f._rts"), rts_type) - us
@@ -147,14 +194,7 @@ def asof_join(
             dist <= F.lit(int(round(tolerance_seconds * 1_000_000)))
         )
         m = F.when(keep, m)
-    matched = filled.select(
-        *entity_cols, F.col("_ts").alias(spine_ts), *spine_extra, m.alias("_m")
-    )
-    return matched.select(
-        *entity_cols, spine_ts, *spine_extra,
-        *[F.col("_m")[c].alias(c) for c in value_cols],
-        *([F.col("_m._rts").alias(matched_ts_col)] if matched_ts_col else []),
-    )
+    return _emit(filled, entity_cols, spine_ts, spine_extra, value_cols, matched_ts_col, m)
 
 
 def asof_join_cogroup(
@@ -260,54 +300,18 @@ def asof_join_split(
     value_cols: list[str],
     split_seconds: float,
 ) -> DataFrame:
-    """Skew-defused as-of join for hot entities: augment the partition
-    key with a coarse time chunk so one hot entity spreads over many
-    tasks, while correctness across chunk boundaries is preserved by
-    replicating each chunk's **last row per value** into the next chunk
-    (boundary carry). Two narrow passes + one shuffle on
-    (entity, chunk) — the standard range-split pattern for windowed skew.
-    """
-    from ._util import epoch_seconds
-
-    r = right.withColumn(
-        "_chunk", F.floor(epoch_seconds(right, right_ts) / F.lit(float(split_seconds))).cast("long")
-    )
-    s = spine.withColumn(
-        "_chunk", F.floor(epoch_seconds(spine, spine_ts) / F.lit(float(split_seconds))).cast("long")
-    )
-
-    # Boundary carry, exact for arbitrarily sparse right sides: the latest
-    # right row of each (entity, chunk) — a chunk-level table ~|entities|×
-    # |chunks| rows, tiny next to the fact tables — is as-of joined to the
-    # spine's chunk set so every spine chunk knows the latest right row from
-    # any STRICTLY EARLIER chunk (availability key = chunk + 1).
-    w_last = Window.partitionBy(*entity_cols, "_chunk").orderBy(F.desc(right_ts))
-    last_per_chunk = (
-        r.withColumn("_rn", F.row_number().over(w_last)).where(F.col("_rn") == 1).drop("_rn")
-    )
-    avail = last_per_chunk.withColumn("_avail", F.col("_chunk") + 1).drop("_chunk")
-    spine_chunks = s.select(*entity_cols, "_chunk").distinct()
-    carried = asof_join(
-        spine_chunks.withColumn("_sc", F.col("_chunk")),
-        avail,
-        entity_cols,
-        "_chunk",
-        "_avail",
-        value_cols + [right_ts],
-        matched_ts_col=None,
-    )
-    carried_rows = (
-        carried.where(F.col(right_ts).isNotNull())
-        .select(*entity_cols, F.col("_sc").alias("_chunk"), F.col(right_ts), *value_cols)
-    )
-
-    r_aug = r.select(*entity_cols, "_chunk", right_ts, *value_cols).unionByName(carried_rows)
-    out = asof_join(
-        s,
-        r_aug,
-        entity_cols + ["_chunk"],
-        spine_ts,
-        right_ts,
-        value_cols,
-    )
-    return out.drop("_chunk")
+    """Skew-defused backward as-of join for hot entities, equal to
+    :func:`asof_join` (``matched_ts`` included): the core's tagged
+    union goes through ``skew.timesplit_windows(..., ffill=("_r",))``,
+    whose forward fill of the right-row struct IS the backward match.
+    Each entity's timeline is split into ``split_seconds`` buckets
+    partitioned by (entity, bucket), so one hot entity spreads over
+    many tasks, and each bucket takes the latest right row of any
+    earlier bucket from the small one-row-per-bucket carry frame —
+    exact however many empty buckets lie between a spine row and its
+    match. The in-bucket fill's RANGE frame keeps ties inclusive."""
+    tagged, spine_extra = _tag(spine, right, entity_cols, spine_ts, right_ts, value_cols)
+    filled = timesplit_windows(tagged, entity_cols, "_ts", split_seconds, ffill=("_r",))
+    matched = _spine_rows(filled, entity_cols, spine_extra, {"_b": F.col("_r_ffill")})
+    return _emit(matched, entity_cols, spine_ts, spine_extra, value_cols, "matched_ts",
+                 F.col("_b"))

@@ -19,10 +19,10 @@ only (key, salt) pre-aggregated rows. Correctness is oracle-gated
 (query ``salted_unique_tokens``: result ≡ plain count distinct).
 
 For skewed *joins* the engine relies on AQE's skew-join splitting
-(asserted live in tests/test_plans.py::test_aqe_splits_skewed_join) and
-on the time-range union-split of the as-of operator
-(``operators/asof.py::asof_join_split``) where salting would break
-sort-merge continuity.
+(asserted live in tests/test_plans.py::test_aqe_splits_skewed_join).
+A skewed *as-of join* is a window problem: salting would break its
+sort continuity, so ``operators/asof.py::asof_join_split`` runs the
+as-of core's tagged union through ``timesplit_windows`` below.
 
 For skewed *windows* (a hot entity's whole timeline in one task) the
 timeline is split into time buckets, partitioned by (entity, bucket):
@@ -101,7 +101,8 @@ def timesplit_windows(
     1. one Window pass over (entity, bucket): row number, the lags, the
        forward fills and the new-session flags (a bucket's first row
        has no in-bucket predecessor, so its flag is left to step 3)
-       with their running count;
+       with their running count. The fills' RANGE frame gives rows
+       that share a ts one fill (``asof_join_split``'s inclusive tie);
     2. one ``groupBy(entity, bucket)`` over that output — first ts,
        a ``min_by`` struct of the first row's values, a ``max_by``
        struct of the last row (its ts, row number, lag values, its
@@ -149,7 +150,8 @@ def timesplit_windows(
     inner = {"_rn": F.row_number().over(w_in)}
     inner.update({f"_lag_{c}": F.lag(c).over(w_in) for c in lagged})
     inner.update({f"_lag2_{c}": F.lag(c, 2).over(w_in) for c in lag2})
-    inner.update({f"_ff_{c}": F.last(c, ignorenulls=True).over(w_run) for c in ffill})
+    w_fill = w_in.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    inner.update({f"_ff_{c}": F.last(c, ignorenulls=True).over(w_fill) for c in ffill})
     if sess:  # null on the bucket's first row -> 0; step 3 decides that row
         gap = F.col("_s") - F.lag("_s").over(w_in)
         inner["_new"] = F.when(gap > session_gap, 1).otherwise(0)
@@ -217,8 +219,7 @@ def rolling_timesplit(
     """Skew-defused trailing time-range rolling aggregates: exactly
     ``temporal.rolling_agg`` (frame = [ts - range_seconds, ts], no
     future rows) with the hot entity's timeline split across time
-    buckets via **ghost rows** — the union-split trick of
-    ``asof.asof_join_split`` applied to windows:
+    buckets via **ghost rows**:
 
     rows in the last ``range_seconds`` of a bucket also contribute to
     the next bucket's leading rows, so each such row is duplicated into

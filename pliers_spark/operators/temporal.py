@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from ._util import epoch_micros, epoch_seconds
+from ._util import epoch_micros, epoch_seconds, seconds, ts_micros
+from .asof import _fill, _tag
 
 
 def _entity_time_window(entity_cols: list[str], ts_col: str) -> WindowSpec:
@@ -239,54 +240,29 @@ def interpolate_linear(
 ) -> DataFrame:
     """Linear interpolation of ``value_col`` onto grid timestamps:
     v(t) = v0 + (v1 - v0) * (t - t0) / (t1 - t0) between the bracketing
-    observations; NULL outside the observed range.
+    observations — the latest at or before t and the earliest at or
+    after it, each taken as a whole row, so a bracket whose value is
+    NULL gives NULL — and v0 on an observation's own instant; NULL
+    outside the observed range.
 
     Generalizes the reference ``resample``'s interp1d step
     (pliers/utils/base.py:235-239). **Reads one future point** (the
     upper bracket) by construction — offline/label use, flagged like
-    :func:`lead_features`. Single union + one shuffle; prev via
-    last-ignorenulls, next via first-ignorenulls over mirrored frames.
+    :func:`lead_features`. Both brackets are the as-of core's two frames
+    (``asof._tag`` + ``asof._fill``): one union, one shuffle, one sort.
     """
-    g = grid.select(
-        *entity_cols,
-        F.col(grid_ts).alias("_ts"),
-        F.lit(1).alias("_is_grid"),
-        F.lit(None).cast(obs.schema[value_col].dataType).alias("_v"),
+    tagged, _ = _tag(grid.select(*entity_cols, grid_ts), obs, entity_cols, grid_ts, obs_ts,
+                     [value_col])
+    filled = _fill(tagged, entity_cols, [], back=True, fwd=True)
+    obs_type = obs.schema[obs_ts].dataType
+    s = seconds(F.col("_ts"), tagged.schema["_ts"].dataType)
+    s0, s1 = seconds(F.col("_b._rts"), obs_type), seconds(F.col("_f._rts"), obs_type)
+    v0, v1 = F.col("_b")[value_col], F.col("_f")[value_col]
+    lerp = F.when(s0 == s1, v0).otherwise(v0 + (v1 - v0) * (s - s0) / (s1 - s0))
+    return filled.select(
+        *entity_cols, F.col("_ts").alias(grid_ts),
+        F.round(F.when(s0.isNotNull() & s1.isNotNull(), lerp), 6).alias(out_col),
     )
-    o = obs.select(
-        *entity_cols,
-        F.col(obs_ts).alias("_ts"),
-        F.lit(0).alias("_is_grid"),
-        F.col(value_col).alias("_v"),
-    )
-    u = g.unionByName(o)
-    secs = epoch_seconds(u, "_ts")
-    u = u.withColumn("_s", secs)
-    # obs rows sort before grid rows at equal ts → an exact-tie grid point
-    # brackets to the observation itself on both sides.
-    wb = (
-        Window.partitionBy(*entity_cols)
-        .orderBy(F.col("_s"), F.col("_is_grid"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy(*entity_cols)
-        .orderBy(F.col("_s"), -F.col("_is_grid"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    prev_v = F.last("_v", ignorenulls=True).over(wb)
-    prev_s = F.last(F.when(F.col("_is_grid") == 0, F.col("_s")), ignorenulls=True).over(wb)
-    next_v = F.first("_v", ignorenulls=True).over(wf)
-    next_s = F.first(F.when(F.col("_is_grid") == 0, F.col("_s")), ignorenulls=True).over(wf)
-    lerp = F.when(
-        prev_s == next_s, prev_v
-    ).otherwise(prev_v + (next_v - prev_v) * (F.col("_s") - prev_s) / (next_s - prev_s))
-    out = (
-        u.withColumn(out_col, F.when(prev_s.isNotNull() & next_s.isNotNull(), lerp))
-        .where(F.col("_is_grid") == 1)
-        .select(*entity_cols, F.col("_ts").alias(grid_ts), F.round(out_col, 6).alias(out_col))
-    )
-    return out
 
 
 def resample_grid(
@@ -299,15 +275,25 @@ def resample_grid(
     step: ``sequence()`` + ``explode`` (generalizes the reference
     ``resample``'s target-rate grid, ``pliers/utils/base.py:235-239``).
     Values are then attached with an as-of join (operators/asof.py) —
-    grid construction itself is one groupBy shuffle."""
-    bounds = df.groupBy(*entity_cols).agg(F.min(ts_col).alias("_t0"), F.max(ts_col).alias("_t1"))
-    grid = bounds.select(
-        *entity_cols,
-        F.explode(
-            F.sequence(F.col("_t0"), F.col("_t1"), F.expr(f"INTERVAL {int(step_seconds)} SECONDS"))
-        ).alias(ts_col),
+    grid construction itself is one groupBy shuffle.
+
+    Point k is exactly t0 + k·S µs (``_util.ts_micros``, added with
+    ``timestampadd(MICROSECOND, ...)``, which keeps the column's
+    timestamp type), whatever the session time zone: an interval step
+    would add whole days on the session zone's wall clock and step an
+    hour short or long across a DST change."""
+    step_us = int(step_seconds) * 1_000_000
+    dtype = df.schema[ts_col].dataType
+    span = ts_micros(F.col("_t1"), dtype) - ts_micros(F.col("_t0"), dtype)
+    bounds = (
+        df.groupBy(*entity_cols)
+        .agg(F.min(ts_col).alias("_t0"), F.max(ts_col).alias("_t1"))
+        .withColumn("_n", span)
     )
-    return grid
+    k = F.explode(F.sequence(F.lit(0).cast("long"), F.expr(f"_n div {step_us}")))
+    return bounds.select(*entity_cols, "_t0", k.alias("_k")).select(
+        *entity_cols, F.timestamp_add("MICROSECOND", F.col("_k") * step_us, "_t0").alias(ts_col)
+    )
 
 
 def framed_agg(

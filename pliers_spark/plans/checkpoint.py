@@ -37,8 +37,9 @@ import os
 import time
 import uuid
 from dataclasses import dataclass
+from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pliers_spark.operators.census import census_collect
@@ -47,6 +48,20 @@ MANIFEST_SCHEMA = (
     "stage_id string, partition_key int, input_snapshot_id string, "
     "partition_hash long, row_count long, wall_ms long, status string, run_id string"
 )
+
+
+def _partition_hash(df: DataFrame) -> Column:
+    """Order-free 64-bit hash of a partition's rows. Each row hashes its
+    typed columns (a ``timestamp`` as its instant, whatever the session
+    zone) and one null flag per column, since ``xxhash64`` skips nulls
+    and would hash ``("a", NULL)`` like ``(NULL, "a")``. Rows combine
+    by a sum, which equal rows cannot cancel as they would under XOR,
+    taken as decimal (a ``long`` sum overflows under ANSI mode) and
+    wrapped to a signed 64-bit value."""
+    row_hash = F.xxhash64(*df.columns, *[F.isnull(c) for c in df.columns])
+    total = F.coalesce(F.sum(row_hash.cast("decimal(38,0)")), F.lit(0))
+    wrapped = F.pmod(total, F.lit(Decimal(2**64)))
+    return F.when(wrapped >= Decimal(2**63), wrapped - Decimal(2**64)).otherwise(wrapped).cast("long")
 
 
 @dataclass
@@ -103,10 +118,7 @@ class CheckpointedRun:
             # count and hash the written files in one pass: the stage
             # itself runs once per bucket
             written = spark.read.parquet(part_dir)
-            row_hash = F.xxhash64(*[F.col(c).cast("string") for c in written.columns])
-            n, phash = written.agg(
-                F.count(F.lit(1)), F.coalesce(F.bit_xor(row_hash), F.lit(0))
-            ).first()
+            n, phash = written.agg(F.count(F.lit(1)), _partition_hash(written)).first()
             manifest_row = [
                 (self.stage_id, k, input_snapshot_id, int(phash), int(n),
                  int((time.time() - t0) * 1000), "done", run_id)

@@ -835,7 +835,9 @@ def q_lag_split(spark, sf_dir):
     """Skew-defused lag-1 (time-bucket split + boundary carry,
     operators/skew.py::timesplit_windows). The oracle IS the plain window
     lag — proving the split path bit-equal, the same pattern as
-    `salted_unique_tokens` and `asof_join_split`."""
+    `salted_unique_tokens`. `asof_join_split` runs the same carry pass
+    (a forward fill of the as-of core's right-row struct) against the
+    plain as-of oracle."""
     from pliers_spark.operators.skew import timesplit_windows
 
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")

@@ -144,9 +144,12 @@ def q_asof_join_cogroup(spark, sf_dir):
 
 @query("asof_join_split", _ASOF_SQL)
 def q_asof_join_split(spark, sf_dir):
-    """Same semantics, third physical strategy: time-range-split as-of join
-    (skew defense for hot entities — chunk the timeline, exact boundary
-    carry via a chunk-level as-of)."""
+    """Same semantics, the as-of core's skew path: the tagged union of
+    spine and events runs through one ``timesplit_windows`` carry pass
+    (7-day time buckets per entity), whose forward fill of the
+    right-row struct is the backward match — a hot entity spreads over
+    many tasks, and each bucket takes the latest event of any earlier
+    bucket from the one-row-per-bucket carry frame."""
     spine = _user_grid(spark, sf_dir, 6)
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
     out = A.asof_join_split(spine, ev, ["user_id"], "t", "ts", ["value"], split_seconds=7 * 86400.0)

@@ -71,8 +71,10 @@ def test_asof_split(fixture):
 
 def test_strategies_agree_on_pages(spark, pages):
     """Differential test at realistic shape: all three physical strategies
-    produce identical results on the Zipf-skewed pages table."""
-    spine = (
+    produce identical results on the Zipf-skewed pages table, on a
+    100-hour grid and on that grid plus every snapshot's own instant
+    (each an inclusive tie)."""
+    grid = (
         pages.groupBy("url")
         .agg(F.min("warc_ts").alias("t0"), F.max("warc_ts").alias("t1"))
         .select(
@@ -83,16 +85,17 @@ def test_strategies_agree_on_pages(spark, pages):
         )
     )
     right = pages.select("url", "warc_ts", F.length("text").alias("text_len"))
-    a = asof_join(spine, right, ["url"], "t", "warc_ts", ["text_len"], matched_ts_col=None)
-    b = asof_join_cogroup(spine, right, ["url"], "t", "warc_ts", ["text_len"])
-    c = asof_join_split(spine, right, ["url"], "t", "warc_ts", ["text_len"], split_seconds=30 * 86400.0).select(
-        "url", "t", "text_len"
-    )
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    rc = sorted(map(tuple, c.collect()))
-    assert ra == rb == rc
-    assert len(ra) > 0
+    with_ties = grid.union(right.select("url", F.col("warc_ts").alias("t"))).distinct()
+    for spine in (grid, with_ties):
+        a = asof_join(spine, right, ["url"], "t", "warc_ts", ["text_len"], matched_ts_col=None)
+        b = asof_join_cogroup(spine, right, ["url"], "t", "warc_ts", ["text_len"])
+        c = asof_join_split(spine, right, ["url"], "t", "warc_ts", ["text_len"],
+                            split_seconds=30 * 86400.0).select("url", "t", "text_len")
+        ra = sorted(map(tuple, a.collect()))
+        rb = sorted(map(tuple, b.collect()))
+        rc = sorted(map(tuple, c.collect()))
+        assert ra == rb == rc
+        assert len(ra) > 0
 
 
 def test_heavy_hitter_census(spark, pages):

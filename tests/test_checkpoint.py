@@ -67,3 +67,31 @@ def test_checkpointed_stage_runs_once_per_row(spark, pages, tmp_path):
     n = pages.count()
     assert rows_through.value == n
     assert sum(r.row_count for r in run.metrics(spark).collect()) == n
+
+
+def test_partition_hash_tells_outputs_apart(spark, tmp_path):
+    """The manifest's ``partition_hash`` differs for outputs that differ
+    and only for those: two equal rows do not cancel, a null moved to
+    another column changes the hash, and a ``timestamp`` output hashes
+    the same under any session time zone."""
+    import datetime as dt
+
+    def phash(name, rows, schema):
+        run = CheckpointedRun(name, str(tmp_path / name), num_buckets=1)
+        run.run(spark, spark.createDataFrame(rows, schema), lambda df: df, F.lit(0))
+        return run.metrics(spark).first().partition_hash
+
+    twice = phash("aa", [("a",), ("a",)], "s string"), phash("bb", [("b",), ("b",)], "s string")
+    assert twice[0] != twice[1] and 0 not in twice
+    assert (phash("an", [("a", None)], "x string, y string")
+            != phash("na", [(None, "a")], "x string, y string"))
+    ts = [(dt.datetime(2024, 3, 10, 12, tzinfo=dt.timezone.utc),)]
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        by_zone = []
+        for i, tz in enumerate(("UTC", "America/New_York")):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            by_zone.append(phash(f"ts{i}", ts, "t timestamp"))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert by_zone[0] == by_zone[1]

@@ -22,8 +22,8 @@ _spec.loader.exec_module(golden_hashes)
 
 GATED = [
     "asof_join", "asof_join_forward", "asof_join_nearest", "asof_join_cogroup",
-    "asof_join_split", "resample_ffill", "training_matrix", "lag_split",
-    "sessionize_split", "ffill_split", "vader_sentiment",
+    "asof_join_split", "resample_ffill", "resample_interpolate", "training_matrix",
+    "lag_split", "sessionize_split", "ffill_split", "vader_sentiment",
 ]
 
 

@@ -86,6 +86,70 @@ def test_resample_grid_step(ev):
     assert g1[-1] <= dt.datetime(2024, 1, 1, 8, 20)
 
 
+def test_resample_grid_independent_of_session_time_zone(spark):
+    """A weekly grid across New York's 2024 spring-forward steps exactly
+    7 days of µs under the UTC and the America/New_York session zones,
+    for an instant (``timestamp``) and a wall-clock ``timestamp_ntz``
+    column: an interval step would add whole days on the New York wall
+    clock and step 601,200 s across 2024-03-10."""
+    from pliers_spark.operators._util import ts_micros
+
+    week_us = 7 * 86400 * 1_000_000
+    t0 = dt.datetime(2024, 3, 1, 12, tzinfo=dt.timezone.utc)
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    got = {}
+    try:
+        for ts_type in ("timestamp", "timestamp_ntz"):
+            tz = dt.timezone.utc if ts_type == "timestamp" else None
+            rows = [("u", (t0 + dt.timedelta(days=d)).replace(tzinfo=tz)) for d in (0, 30)]
+            df = spark.createDataFrame(rows, f"uid string, ts {ts_type}")
+            for session_tz in ("UTC", "America/New_York"):
+                spark.conf.set("spark.sql.session.timeZone", session_tz)
+                grid = TP.resample_grid(df, ["uid"], "ts", 7 * 86400)
+                us = grid.select(ts_micros(F.col("ts"), grid.schema["ts"].dataType).alias("us"))
+                got[ts_type, session_tz] = sorted(r.us for r in us.collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    for (ts_type, _), us in got.items():
+        assert us == got[ts_type, "UTC"]
+        assert len(us) == 5 and {b - a for a, b in zip(us, us[1:])} == {week_us}, us
+
+
+def test_interpolate_linear_row_atomic_matches_oracle(spark, tmp_path):
+    """``resample_interpolate`` brackets each grid point with whole
+    observation rows, as its DuckDB oracle's two ASOF joins do: a
+    bracket whose value is NULL interpolates to NULL (no value borrowed
+    from an older or newer row), and a grid point exactly on the last
+    observation takes that observation's value. Both brackets come from
+    one Window over one sort."""
+    import duckdb
+
+    from pliers_spark.queries import ORACLES, QUERIES
+
+    h = lambda hours: dt.datetime(2024, 1, 1) + dt.timedelta(hours=hours)
+    rows = [(1, h(0), 1.0), (1, h(9), None), (1, h(18), 5.0),
+            (2, h(0), 2.0), (2, h(3), 4.0), (2, h(12), 8.0),
+            (3, h(5), 7.0)]
+    spark.createDataFrame(rows, "user_id long, ts timestamp, value double").write.parquet(
+        str(tmp_path / "events.parquet"))
+    out = QUERIES["resample_interpolate"](spark, str(tmp_path))
+    got = {(r.user_id, r.t): r.value_interp for r in out.collect()}
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet/*.parquet')")
+    want = {(r[0], r[1]): r[2] for r in
+            con.sql(f"SELECT user_id, t, value_interp FROM ({ORACLES['resample_interpolate']})")
+            .fetchall()}
+    assert got == pytest.approx(want)
+    assert got[1, h(6)] is None and got[1, h(12)] is None  # a NULL bracket
+    assert got[1, h(18)] == 5.0 and got[2, h(12)] == 8.0  # on the last observation
+    assert got[2, h(6)] == pytest.approx(4.0 + 4.0 / 3)
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # the adaptive plan that ran
+    assert len([line for line in final.splitlines() if "Window [" in line]) == 1, plan
+
+
 def test_zero_temporal_leakage(spark, pages):
     """North-rule leakage gate: recompute windowed features with all rows
     after a cutoff deleted — features at (url, ts <= cutoff) must be
