@@ -27,6 +27,15 @@ def micros(col: Column, dtype) -> Column:
     return (col.cast("double") * F.lit(1_000_000.0)).cast("long")
 
 
+def lit_micros(value, dtype) -> Column:
+    """:func:`micros` of a literal bound (e.g. ``"2024-01-01 00:00:00"``)
+    on a column of type ``dtype``: for a ``timestamp_ntz`` column a
+    wall-clock value read as UTC, as :func:`ts_micros` reads the column;
+    otherwise an instant, a string one read in the session zone."""
+    t = dtype if isinstance(dtype, TimestampNTZType) else TimestampType()
+    return ts_micros(F.lit(value).cast(t), t)
+
+
 def epoch_micros(df: DataFrame, col: str) -> Column:
     """:func:`micros` of a column of ``df``."""
     return micros(F.col(col), df.schema[col].dataType)

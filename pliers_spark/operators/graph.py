@@ -197,8 +197,8 @@ def minplus_closure(edges: DataFrame, rounds: int = 6) -> DataFrame:
     Scale note: the output is O(reachable pairs) — fine for the
     host-grain graphs this engine materializes (hosts ≪ pages), and
     for billion-NODE graphs the per-pair closure is replaced by the
-    label-propagation operators (``dedup.connected_components``,
-    ``queries.label_propagation``) which keep per-node state only.
+    label-propagation operator (``dedup.connected_components``),
+    which keeps per-node state only.
 
     Returns (src, dst, dist BIGINT), dist ≥ 1, self-pairs only when
     the graph has a cycle through the node.

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from ._util import epoch_micros, epoch_seconds, seconds, ts_micros
+from ._util import epoch_micros, epoch_seconds, lit_micros, seconds, ts_micros
 from .asof import _fill, _tag
 
 
@@ -218,14 +218,12 @@ def temporal_trim(
     subclip-[start,end] semantics (``pliers/filters/base.py:27-68``)
     lifted from one stim's sample axis to the table's event-time axis.
     ``rebase`` subtracts ``start`` (seconds) the way a subclip's frames
-    are re-onset to 0. Pure predicate → pushed to the parquet scan."""
+    are re-onset to 0, in exact µs whatever the session zone
+    (``_util.lit_micros``). Pure predicate → pushed to the parquet scan."""
     out = df.where((F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) < F.lit(end)))
     if rebase:
-        us = lambda c: F.unix_micros(c.cast("timestamp_ltz"))
-        out = out.withColumn(
-            "rel_s",
-            (us(F.col(ts_col)) - us(F.lit(start).cast("timestamp"))) / F.lit(1_000_000.0),
-        )
+        rel_us = epoch_micros(df, ts_col) - lit_micros(start, df.schema[ts_col].dataType)
+        out = out.withColumn("rel_s", rel_us / F.lit(1_000_000.0))
     return out
 
 
@@ -318,14 +316,13 @@ def framed_agg(
     10^12 rows this is a single shuffle whose width is controlled by
     the frame/hop overlap factor. Rows before ``origin`` are dropped
     (frames are anchored at the origin, matching the reference's
-    onset=i*hop indexing from clip start).
+    onset=i*hop indexing from clip start). ``origin`` is read as a value
+    of the column's type (``_util.lit_micros``), so the frame ids of a
+    ``timestamp_ntz`` column do not move with the session zone.
     """
-    from ._util import epoch_seconds
-
     aggs = aggs or {"n_events": "count", f"{value_col}_sum": "sum"}
-    off = epoch_seconds(df, ts_col) - F.unix_timestamp(
-        F.to_timestamp(F.lit(origin))
-    ).cast("double")
+    origin_s = lit_micros(origin, df.schema[ts_col].dataType) / F.lit(1_000_000.0)
+    off = epoch_seconds(df, ts_col) - origin_s
     i_max = F.floor(off / F.lit(float(hop_seconds))).cast("long")
     i_min = F.greatest(
         F.floor((off - F.lit(float(frame_seconds))) / F.lit(float(hop_seconds))).cast("long")

@@ -16,10 +16,13 @@ Design (size-oblivious, idempotent):
 - each completed partition writes its output to
   ``<out>/part=<k>/`` (overwrite-by-partition = idempotent) and then
   appends a manifest row ``(stage_id, partition_key, input_snapshot_id,
-  partition_hash, row_count, wall_ms, status)`` — output first,
-  manifest last, so a crash mid-partition re-runs that partition;
+  partition_hash, row_count, wall_ms, status, run_id, num_buckets)`` —
+  output first, manifest last, so a crash mid-partition re-runs that
+  partition;
 - on resume, completed partition keys are read from the manifest and
-  their buckets are skipped before any compute;
+  their buckets are skipped before any compute. A key names a bucket
+  only under the bucket count it was written with, so a resume with
+  another count is refused before any bucket runs;
 - lineage columns ride on the manifest, not the data (no per-row cost).
 
 The driver-side loop below iterates partition *groups* (buckets), not
@@ -46,7 +49,8 @@ from pliers_spark.operators.census import census_collect
 
 MANIFEST_SCHEMA = (
     "stage_id string, partition_key int, input_snapshot_id string, "
-    "partition_hash long, row_count long, wall_ms long, status string, run_id string"
+    "partition_hash long, row_count long, wall_ms long, status string, run_id string, "
+    "num_buckets int"
 )
 
 
@@ -74,14 +78,28 @@ class CheckpointedRun:
     def manifest_dir(self) -> str:
         return os.path.join(self.out_dir, "_manifest")
 
+    def _manifest(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_dir).where(
+            F.col("stage_id") == self.stage_id
+        )
+
     def completed_keys(self, spark: SparkSession) -> set[int]:
+        """Bucket keys already done. Raises ``ValueError`` if a done
+        bucket was written with another bucket count (or with none
+        recorded): its key names other rows under this count, so
+        skipping or re-running it would drop or duplicate rows."""
         if not os.path.exists(self.manifest_dir):
             return set()
-        m = spark.read.parquet(self.manifest_dir)
+        done = self._manifest(spark).where(F.col("status") == "done")
+        other = done.where(~F.col("num_buckets").eqNullSafe(self.num_buckets)).first()
+        if other is not None:
+            raise ValueError(
+                f"checkpoint {self.out_dir!r} (stage {self.stage_id!r}) was written with "
+                f"{other.num_buckets} buckets; this run has num_buckets={self.num_buckets}. "
+                "Resume with the recorded count or write to a new out_dir."
+            )
         rows = census_collect(
-            m.where((F.col("stage_id") == self.stage_id) & (F.col("status") == "done"))
-            .select("partition_key")
-            .distinct(),
+            done.select("partition_key").distinct(),
             self.num_buckets, "checkpoint manifest keys (bucket grain)",
         )
         return {r.partition_key for r in rows}
@@ -121,7 +139,7 @@ class CheckpointedRun:
             n, phash = written.agg(F.count(F.lit(1)), _partition_hash(written)).first()
             manifest_row = [
                 (self.stage_id, k, input_snapshot_id, int(phash), int(n),
-                 int((time.time() - t0) * 1000), "done", run_id)
+                 int((time.time() - t0) * 1000), "done", run_id, self.num_buckets)
             ]
             spark.createDataFrame(manifest_row, MANIFEST_SCHEMA).write.mode("append").parquet(
                 self.manifest_dir
@@ -134,4 +152,4 @@ class CheckpointedRun:
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """Per-partition lineage + metrics (row counts, wall time, hashes)."""
-        return spark.read.parquet(self.manifest_dir).where(F.col("stage_id") == self.stage_id)
+        return self._manifest(spark)

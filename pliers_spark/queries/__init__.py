@@ -18,8 +18,6 @@ from . import stats_04
 from . import stats_05
 from . import stats_06
 from . import stats_07
-from . import stats_08
-from . import stats_09
 from . import stats_10
 from . import stats_11
 from . import stats_12

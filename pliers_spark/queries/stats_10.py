@@ -1873,8 +1873,8 @@ def q_minmax_skipping(spark, sf_dir):
     skippable (predicate provably empty from stats alone), the TRUE
     match count, and the false-positive flag (stats couldn't skip but
     zero rows match — the clustering-quality signal: high FP rate
-    means the column needs sort/Z-order before min/max stats pay off;
-    cf. `zorder_locality`). Pure map-side census; one shuffle on the
+    means the column needs sort/Z-order before min/max stats pay
+    off). Pure map-side census; one shuffle on the
     group key.""".format(rows=_ZONE_ROWS)
     ev = _events(spark, sf_dir)
     b = ev.select(

@@ -564,8 +564,8 @@ def q_spearman_footrule(spark, sf_dir):
 def q_herfindahl_index(spark, sf_dir):
     """Herfindahl-Hirschman concentration of the corpus source mix
     (Herfindahl 1950; the antitrust-standard Σshare² that
-    `pareto_8020`'s cumulative view and `hill_numbers`' entropy view
-    both complement): raw HHI, the k-corrected normalized form
+    `pareto_8020`'s cumulative view complements): raw HHI, the
+    k-corrected normalized form
     (HHI−1/k)/(1−1/k), and the effective source count 1/HHI — the
     data-mixing diagnostic (effective_sources ≪ k means the pretrain
     mix is dominated by few crawls). Squared shares round to 1e-10
@@ -1522,7 +1522,7 @@ def q_mcc_confusion(spark, sf_dir):
     margin, MCC uses all four cells). The confusion matrix is one
     exact-integer reduce; each metric one mirrored expression with
     degenerate-margin guards. The imbalance-robust eval for the rule
-    thresholds `gini_stump`/`youden_threshold` pick."""
+    threshold `youden_threshold` picks."""
     p = _docs(spark, sf_dir).select(
         (F.col("n_chars") >= 500).cast("int").alias("pred"),
         (F.col("lang") == "en").cast("int").alias("y"),
@@ -1643,8 +1643,8 @@ def q_icc_design_effect(spark, sf_dir):
     (Fisher 1925; the ANOVA estimator with the unequal-cluster-size
     m₀ correction) and Kish's design effect DEFF = 1 + (m̄−1)·ICC —
     the number that says how much clustering deflates the effective
-    sample (`kish_weights` handles WEIGHTING deff; this is the
-    CLUSTERING deff — the other half of survey-quality accounting).
+    sample (the CLUSTERING deff; Kish's WEIGHTING deff is the other
+    half of survey-quality accounting).
     Between-cluster sums micro-round once per cluster before the
     cross-cluster sum; all other moments exact int64/int128; the
     ANOVA algebra is one mirrored expression. One user-grain reduce

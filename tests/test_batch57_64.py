@@ -1,7 +1,6 @@
 """Batches 57-64: link prediction, rank/contingency stats, bootstrap,
 k-core, Jaro-Winkler, pHash, EWMA/CUSUM, calibration/FDR/Theil,
-Benford/Delta/rules, WL/Hill/Simpson, Z-order/stump/CMH, histogram
-audit/influence/risk-coverage."""
+association rules."""
 
 import math
 import os
@@ -204,98 +203,3 @@ def test_assoc_rules_confidence_and_lift(spark, tmp_path):
     assert ab.pair_count == 20 and ab.confidence == round(20 / 30, 6)
     assert ab.lift == 1.0
     assert out[(2, 1)].confidence == 1.0
-
-
-def test_wl_colors_symmetric_triangles(spark, tmp_path):
-    """Two disjoint triangles: every node is structurally identical ->
-    one WL color with count 6."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(1, 10), (1, 20), (1, 30), (2, 40), (2, 50), (2, 60)]
-    sf = _write(spark, tmp_path, "lineitem", rows, LI)
-    out = QUERIES["wl_colors"](spark, sf).collect()
-    assert len(out) == 1 and out[0].n_nodes == 6
-
-
-def test_hill_uniform_tokens(spark, tmp_path):
-    """Uniform distribution over V tokens: q0 = q1 = q2 = V (q2 uses the
-    unbiased estimator, exact under uniformity with equal counts)."""
-    from pliers_spark.queries import QUERIES
-
-    text = " ".join(f"w{i}" for i in range(5)) + " " + " ".join(f"w{i}" for i in range(5))
-    rows = [(1, text, "en", "s", len(text))]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    r = QUERIES["hill_numbers"](spark, sf).collect()[0]
-    assert r.hill_q0 == 5
-    assert abs(r.hill_q1 - 5.0) < 0.01
-    # unbiased inverse Simpson: N(N-1)/sum c(c-1) = 10*9/(5*2) = 9
-    assert r.hill_q2 == 9.0
-
-
-def test_zorder_2x2_grid(spark, tmp_path):
-    """2x2 cell grid: both orderings traverse (0,0),(0,1),(1,0),(1,1) ->
-    total Manhattan distance 4 over 3 steps."""
-    from pliers_spark.queries import QUERIES
-
-    rows = []
-    eid = 0
-    for u in (0, 1):
-        for day in (1, 2):
-            rows.append((eid, datetime(2024, 1, day), u, "t", 1.0, ""))
-            eid += 1
-    sf = _write(spark, tmp_path, "events", rows, EVENTS)
-    out = {r.ordering: r for r in QUERIES["zorder_locality"](spark, sf).collect()}
-    for o in ("zorder", "rowmajor"):
-        assert out[o].n_steps == 3 and out[o].total_dist == 4
-        assert out[o].avg_manhattan == round(4 / 3, 6)
-
-
-def test_gini_stump_separable(spark, tmp_path):
-    """Perfectly separable: short docs 'en', long docs 'fr' -> best
-    threshold at the class boundary, gain = parent Gini = 0.5."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(i, "t", "en", "s", 10 + i) for i in range(10)]
-    rows += [(10 + i, "t", "fr", "s", 100 + i) for i in range(10)]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    r = QUERIES["gini_stump"](spark, sf).collect()[0]
-    assert r.threshold == 19  # largest 'en' length: left side pure
-    assert r.pos_left == 10 and r.pos_right == 0
-    assert r.gini_gain == 0.5
-
-
-def test_histogram_quantile_error_bounded_by_bucket(spark):
-    """Interpolation error is bounded by one bucket width."""
-    from pliers_spark.queries import QUERIES
-
-    out = QUERIES["histogram_quantile_audit"](spark, "/root/testdata/sf0.001").collect()
-    assert {r.percentile for r in out} == {50, 90}
-    import duckdb
-
-    mn, mx = duckdb.sql(
-        "select min(n_chars), max(n_chars) from '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchone()
-    width = (mx - mn + 1) / 10.0
-    assert all(r.abs_error <= width for r in out)
-
-
-def test_regression_influence_top20(spark):
-    from pliers_spark.queries import QUERIES
-
-    out = QUERIES["regression_influence"](spark, "/root/testdata/sf0.001").collect()
-    assert len(out) == 20
-    ds = [r.cooks_d for r in out]
-    assert ds == sorted(ds, reverse=True)
-    assert all(r.leverage > 0 for r in out)
-
-
-def test_risk_coverage_full_coverage_is_base_rate(spark):
-    """At coverage 1.0 the risk equals the overall error rate; AURC is
-    a mean of prefix risks so it stays within [min risk, max risk]."""
-    from pliers_spark.queries import QUERIES
-
-    out = QUERIES["risk_coverage"](spark, "/root/testdata/sf0.001").collect()
-    full = [r for r in out if r.coverage == 1.0][0]
-    assert full.errors <= full.n_kept
-    assert abs(full.risk - full.errors / full.n_kept) < 1e-6
-    assert 0.0 <= full.aurc <= 1.0

@@ -47,6 +47,24 @@ def test_resume_after_simulated_crash(spark, pages, tmp_path):
     assert run.run(spark, pages, transform, bucket_expr(n_buckets)) == 0
 
 
+def test_resume_with_another_bucket_count_is_refused(spark, pages, tmp_path):
+    """A bucket key names rows only under the bucket count it was
+    written with. Resuming 4 done buckets with 8 would skip keys 0-3 of
+    the new split and run 4-7, writing some rows twice; resuming them
+    with 2 would find more done keys than buckets. Either way the run
+    raises a ValueError naming both counts before any bucket runs."""
+    out = str(tmp_path / "out")
+    assert CheckpointedRun("textfeat", out, num_buckets=4).run(
+        spark, pages, transform, bucket_expr(4)) == 4
+    for n in (8, 2):
+        run = CheckpointedRun("textfeat", out, num_buckets=n)
+        with pytest.raises(ValueError, match=f"written with 4 buckets; this run has num_buckets={n}"):
+            run.run(spark, pages, transform, bucket_expr(n))
+    first = CheckpointedRun("textfeat", out, num_buckets=4)
+    assert sorted(r.partition_key for r in first.metrics(spark).collect()) == [0, 1, 2, 3]
+    assert first.read_output(spark).count() == pages.count()
+
+
 def test_checkpointed_stage_runs_once_per_row(spark, pages, tmp_path):
     """Every input row passes through the checkpointed stage exactly
     once: the manifest's row count and hash are read from the written

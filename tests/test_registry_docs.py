@@ -123,3 +123,29 @@ def test_keep_set_is_registered():
 
     missing = sorted((sampled | covered | llm_named | _LLM_ROWS_WITHOUT_NAMES) - set(q))
     assert not missing, f"keep-set queries not registered: {missing}"
+
+
+def test_no_citation_of_retired_queries():
+    """A retired query is not cited in the package: no name of the
+    catalog recorded in ``bench_results/full_sweep.json`` that is no
+    longer registered appears in single or double backticks under
+    ``pliers_spark/``, alone or as the last part of a dotted path
+    (``queries.<name>``). The sweep also times the ``flagship``, which
+    is not a query."""
+    q = _registry()
+    sweep = json.load(open(os.path.join(REPO, "bench_results", "full_sweep.json")))
+    retired = set(sweep["queries"]) - {"flagship"} - set(q)
+    assert len(retired) > 100, "full_sweep.json catalog not parsed"
+
+    cited = []
+    pkg = os.path.join(REPO, "pliers_spark")
+    for root, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            for n, line in enumerate(open(path, encoding="utf-8"), 1):
+                for span in re.findall(r"``?([\w.]+)``?", line):
+                    if span.rsplit(".", 1)[-1] in retired:
+                        cited.append(f"{os.path.relpath(path, REPO)}:{n}: {span}")
+    assert not cited, f"docstrings cite retired queries: {cited}"

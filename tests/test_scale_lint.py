@@ -23,8 +23,6 @@ OPAQUE_WHITELIST = {
     "bh_fdr": "windows run on the per-source p-value table: m = distinct "
     "sources of the corpus — the test count of the BH procedure itself, "
     "bounded by construction (stats_07.py, st = groupBy(source) census)",
-    "zorder_locality": "windows order the distinct (x=user%256, y=day) "
-    "grid: ≤ 256 × #days cells (stats_08.py, cell = .distinct() census)",
 }
 
 

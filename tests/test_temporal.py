@@ -115,6 +115,33 @@ def test_resample_grid_independent_of_session_time_zone(spark):
         assert len(us) == 5 and {b - a for a, b in zip(us, us[1:])} == {week_us}, us
 
 
+def test_trim_and_framed_agg_independent_of_session_time_zone(spark):
+    """On a ``timestamp_ntz`` column, ``temporal_trim``'s ``rel_s`` and
+    ``framed_agg``'s frame ids read the literal bound as a wall-clock
+    value like the column, so the America/New_York session zone gives
+    the UTC answer: 2024-03-11 is 172,800 s after 2024-03-09 across the
+    spring-forward step (reading both through ``timestamp_ltz`` gave
+    169,200), and 02:00 on day 10 after a 1-day-hop origin is in frame
+    10 (an origin read in the session zone put it in frame 9)."""
+    df = spark.createDataFrame(
+        [("u", dt.datetime(2024, 3, 11, 2), 1.0)], "uid string, ts timestamp_ntz, v double"
+    )
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    got = {}
+    try:
+        for session_tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", session_tz)
+            trim = TP.temporal_trim(df, "ts", "2024-03-09 02:00:00", "2024-03-12 00:00:00",
+                                    rebase=True)
+            frames = TP.framed_agg(df, ["uid"], "ts", "v", 86400, 86400,
+                                   origin="2024-03-01 00:00:00")
+            got[session_tz] = ([r.rel_s for r in trim.collect()],
+                               [r.frame_id for r in frames.collect()])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert got["UTC"] == got["America/New_York"] == ([172800.0], [10])
+
+
 def test_interpolate_linear_row_atomic_matches_oracle(spark, tmp_path):
     """``resample_interpolate`` brackets each grid point with whole
     observation rows, as its DuckDB oracle's two ASOF joins do: a
